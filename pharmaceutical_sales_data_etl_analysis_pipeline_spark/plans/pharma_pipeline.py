@@ -26,6 +26,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..functions.numeric import money_sum
 from ..sources.xml import read_xml, read_xml_files_ordered
@@ -35,6 +36,23 @@ from ..sources.xml import read_xml, read_xml_files_ordered
 # Stage 1: extract + load
 # ---------------------------------------------------------------------------
 
+# The record schemas the reference reads, by field name. Declaring them
+# makes stage 1 a lazy plan: no inference job parses the XML before the
+# first write. Every field is a string, as R's xmlValue returns it, so a
+# repID of `007` keeps its leading zeros; numeric fields are cast on select.
+REP_SCHEMA = T.StructType(
+    [T.StructField(f, T.StringType()) for f in ("_rID", "first_name", "last_name", "territory")]
+)
+_CUSTOMER_FIELDS = [T.StructField(f, T.StringType()) for f in ("cust", "country")]
+TXN_SCHEMA = T.StructType(
+    [T.StructField(f, T.StringType()) for f in ("txnID", "prod", "repID", "date", "amount")]
+    # `.//cust` and `.//country` (LoadXML2DB.ChatterjeeP.R:178-183) match
+    # at the record root or under the customer sub-element
+    + _CUSTOMER_FIELDS
+    + [T.StructField("customer", T.StructType(_CUSTOMER_FIELDS))]
+)
+
+
 def load_reps(spark: SparkSession, path: str) -> DataFrame:
     """pharmaReps.xml → reps dim.
 
@@ -42,25 +60,13 @@ def load_reps(spark: SparkSession, path: str) -> DataFrame:
     name (the reference reads them positionally, :78-80 — the native reader
     preserves document order, so names and positions agree).
     """
-    raw = read_xml(spark, path, "rep")
+    raw = read_xml(spark, path, "rep", REP_SCHEMA)
     return raw.select(
         F.col("_rID").alias("rep_id"),
         F.col("first_name"),
         F.col("last_name"),
         F.col("territory"),
     )
-
-
-def _txn_field(df: DataFrame, name: str):
-    """Descendant-axis access (`.//cust` etc., LoadXML2DB.ChatterjeeP.R:178-183):
-    the field may sit at the record root or nested one level down (the
-    customer sub-element carries cust+country)."""
-    if name in df.columns:
-        return F.col(name)
-    for c, dtype in df.dtypes:
-        if dtype.startswith("struct") and f"{name}:" in dtype:
-            return F.col(f"{c}.{name}")
-    raise ValueError(f"field {name} not found in txn schema: {df.dtypes}")
 
 
 def load_txns_ordered(spark: SparkSession, paths: list[str]) -> DataFrame:
@@ -70,15 +76,15 @@ def load_txns_ordered(spark: SparkSession, paths: list[str]) -> DataFrame:
     sale_date, sale_amount, file_idx, seq. Bag semantics — duplicates across
     files preserved (U1, LoadXML2DB.ChatterjeeP.R:198..452).
     """
-    raw = read_xml_files_ordered(spark, paths, "txn")
+    raw = read_xml_files_ordered(spark, paths, "txn", schema=TXN_SCHEMA)
     return raw.select(
-        _txn_field(raw, "txnID").cast("int").alias("txn_id"),
-        _txn_field(raw, "prod").alias("product_name"),
-        _txn_field(raw, "repID").cast("string").alias("rep_id_raw"),
-        _txn_field(raw, "cust").alias("customer_name"),
-        _txn_field(raw, "country").alias("country"),
-        _txn_field(raw, "date").alias("sale_date"),
-        _txn_field(raw, "amount").cast("double").alias("sale_amount"),
+        F.col("txnID").cast("int").alias("txn_id"),
+        F.col("prod").alias("product_name"),
+        F.col("repID").alias("rep_id_raw"),
+        F.coalesce("customer.cust", "cust").alias("customer_name"),
+        F.coalesce("customer.country", "country").alias("country"),
+        F.col("date").alias("sale_date"),
+        F.col("amount").cast("double").alias("sale_amount"),
         "file_idx",
         "seq",
     )
@@ -176,6 +182,7 @@ def build_rep_facts(salestxn_repaired: DataFrame, reps: DataFrame, products: Dat
 
 @dataclass
 class PharmaWarehouse:
+    txns: DataFrame               # ordered raw bag (stage-1 input of salestxn)
     reps: DataFrame
     customers: DataFrame
     products: DataFrame
@@ -187,7 +194,8 @@ class PharmaWarehouse:
 
 def run_pipeline(spark: SparkSession, reps_xml: str, txn_xmls: list[str]) -> PharmaWarehouse:
     """The full DAG, sequencing the key repair between the two fact builds
-    exactly as the reference's statement order does (SURVEY.md §7.3)."""
+    exactly as the reference's statement order does (SURVEY.md §7.3).
+    Lazy: declared record schemas mean no Spark job runs here."""
     reps = load_reps(spark, reps_xml)
     txns = load_txns_ordered(spark, txn_xmls)
     customers = build_customers(txns)
@@ -197,6 +205,7 @@ def run_pipeline(spark: SparkSession, reps_xml: str, txn_xmls: list[str]) -> Pha
     repaired = repair_rep_ids(salestxn)
     rep_facts = build_rep_facts(repaired, reps, products)               # post-repair
     return PharmaWarehouse(
+        txns=txns,
         reps=reps,
         customers=customers,
         products=products,
@@ -205,6 +214,20 @@ def run_pipeline(spark: SparkSession, reps_xml: str, txn_xmls: list[str]) -> Pha
         product_facts=product_facts,
         rep_facts=rep_facts,
     )
+
+
+def _drop_table(spark: SparkSession, database: str, name: str) -> None:
+    """DROP TABLE IF EXISTS, and also delete a directory left at the
+    table's managed location that the catalog does not know (written by
+    another process, or by another database at the same LOCATION). Spark
+    refuses to create a managed table over a non-empty directory
+    (LOCATION_ALREADY_EXISTS); the reference's DROP + CREATE replaces it."""
+    spark.sql(f"DROP TABLE IF EXISTS {database}.{name}")
+    sc = spark.sparkContext
+    path = sc._jvm.org.apache.hadoop.fs.Path(
+        f"{spark.catalog.getDatabase(database).locationUri}/{name}"
+    )
+    path.getFileSystem(sc._jsc.hadoopConfiguration()).delete(path, True)
 
 
 def persist_warehouse(
@@ -217,44 +240,62 @@ def persist_warehouse(
     real CTAS lifecycle — the reference's dbWriteTable + CREATE TABLE AS
     SELECT persistence, LoadDataWarehouse.ChatterjeeP.R:29-32,90-133).
 
-    mode("overwrite") replays the reference's DROP TABLE IF EXISTS +
-    CREATE (S10). Summary facts are partitioned by `year`: the analytics
-    queries all filter on year, so the layout turns them into
-    partition-pruned scans (cheap here, decisive at 100 TB). product_facts
-    goes through literal SQL `CREATE TABLE ... PARTITIONED BY ... AS
-    SELECT` to exercise the DDL path; the other tables use the equivalent
-    DataFrameWriter.saveAsTable. The returned warehouse is backed entirely
-    by catalog re-reads — callers can verify results survive the round-trip
-    (partition columns migrate to the end of the re-read schema; consumers
-    address columns by name).
+    Stage 2 reads the persisted star, as the reference's CTAS statements
+    read its stored tables: the dims are written first, `salestxn` is built
+    from `wh.txns` joined to the re-read dims, and `product_facts`
+    (pre-repair) and `rep_facts` (post-repair) are built from the re-read
+    `salestxn` and dims, in the reference's statement order. Spark plans
+    each write as its own query and shares no work between them; reading
+    stored tables means the XML is parsed once per table built from it and
+    no write recomputes the dims' dedup windows. Of `wh` only `txns` and
+    the three dims are evaluated.
+
+    Each table is dropped before it is written — the reference's DROP
+    TABLE IF EXISTS + CREATE (S10) — including a stale directory at its
+    location that this session's catalog does not know, so a location can
+    be reused across processes and databases. Summary facts are
+    partitioned by `year`: the analytics queries all filter on year, so the
+    layout turns them into partition-pruned scans (cheap here, decisive at
+    100 TB). product_facts goes through literal SQL `CREATE TABLE ...
+    PARTITIONED BY ... AS SELECT` to exercise the DDL path; the other
+    tables use the equivalent DataFrameWriter.saveAsTable. The returned
+    warehouse is backed entirely by catalog re-reads, apart from `txns`
+    (the stage-1 input, passed through) — callers can verify results
+    survive the round-trip (partition columns migrate to the end of the
+    re-read schema; consumers address columns by name).
     """
     loc = f" LOCATION '{location}'" if location else ""
     spark.sql(f"CREATE DATABASE IF NOT EXISTS {database}{loc}")
-    wh.reps.write.mode("overwrite").format("parquet").saveAsTable(f"{database}.reps")
-    wh.customers.write.mode("overwrite").format("parquet").saveAsTable(f"{database}.customers")
-    wh.products.write.mode("overwrite").format("parquet").saveAsTable(f"{database}.products")
-    wh.salestxn.write.mode("overwrite").format("parquet").saveAsTable(f"{database}.salestxn")
 
-    wh.product_facts.createOrReplaceTempView("__pf_src")
-    spark.sql(f"DROP TABLE IF EXISTS {database}.product_facts")
+    def save(df: DataFrame, name: str, *partition_by: str) -> DataFrame:
+        _drop_table(spark, database, name)
+        df.write.format("parquet").partitionBy(*partition_by).saveAsTable(f"{database}.{name}")
+        return spark.table(f"{database}.{name}")
+
+    reps = save(wh.reps, "reps")
+    customers = save(wh.customers, "customers")
+    products = save(wh.products, "products")
+    salestxn = save(build_salestxn(wh.txns, products, customers), "salestxn")
+
+    build_product_facts(salestxn, products, customers).createOrReplaceTempView("__pf_src")
+    _drop_table(spark, database, "product_facts")
     spark.sql(
         f"CREATE TABLE {database}.product_facts USING parquet PARTITIONED BY (year) "
         "AS SELECT product_name, quarter, region, total_sold, year FROM __pf_src"
     )
     spark.catalog.dropTempView("__pf_src")
-    wh.rep_facts.write.mode("overwrite").format("parquet").partitionBy("year").saveAsTable(
-        f"{database}.rep_facts"
-    )
+    repaired = repair_rep_ids(salestxn)
+    rep_facts = save(build_rep_facts(repaired, reps, products), "rep_facts", "year")
 
-    salestxn = spark.table(f"{database}.salestxn")
     return PharmaWarehouse(
-        reps=spark.table(f"{database}.reps"),
-        customers=spark.table(f"{database}.customers"),
-        products=spark.table(f"{database}.products"),
+        txns=wh.txns,
+        reps=reps,
+        customers=customers,
+        products=products,
         salestxn=salestxn,
-        salestxn_repaired=repair_rep_ids(salestxn),
+        salestxn_repaired=repaired,
         product_facts=spark.table(f"{database}.product_facts"),
-        rep_facts=spark.table(f"{database}.rep_facts"),
+        rep_facts=rep_facts,
     )
 
 

@@ -13,6 +13,14 @@ Fallback path (read_xml_xpath): wholetext + regex record split + built-in
 works where the native source is unavailable; fine for dimension-sized
 files, not the 100 TB path (wholetext is per-file single-split).
 
+Declared schemas: the native batch readers (`read_xml`,
+`read_xml_files_ordered`) take an optional `schema`. With one, a read is a
+lazy plan and runs no Spark job until an action — the pipeline declares
+its record schemas by field name, as the reference reads them.
+Without one, the native source infers the schema with a job that parses the
+input; `read_xml_files_ordered` then infers ONCE over all its files and
+reads each file with that one schema, instead of one inference per file.
+
 Ingest-order tagging: the reference's semantics depend on file order and
 record order within file (first-occurrence dedup A3, surrogate keys W1).
 `read_xml_files_ordered` makes that implicit order explicit as
@@ -24,16 +32,22 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
-def read_xml(spark: SparkSession, path: str, row_tag: str) -> DataFrame:
-    """Native distributed XML scan; attributes surface as `_name` columns."""
-    return (
-        spark.read.format("xml")
-        .option("rowTag", row_tag)
-        .option("attributePrefix", "_")
-        .load(path)
-    )
+def read_xml(
+    spark: SparkSession, path: str | list[str], row_tag: str, schema: T.StructType | None = None
+) -> DataFrame:
+    """Native distributed XML scan; attributes surface as `_name` columns.
+
+    With `schema` the scan parses only the declared fields (absent ones read
+    as NULL) and runs no job until an action; without it Spark infers the
+    schema from `path` (one or many files) with an eager job.
+    """
+    reader = spark.read.format("xml").option("rowTag", row_tag).option("attributePrefix", "_")
+    if schema is not None:
+        reader = reader.schema(schema)
+    return reader.load(path)
 
 
 def read_xml_xpath(
@@ -163,11 +177,16 @@ def stream_xml_files_ordered(
 
 
 def read_xml_files_ordered(
-    spark: SparkSession, paths: list[str], row_tag: str, require_single_split: bool = True
+    spark: SparkSession,
+    paths: list[str],
+    row_tag: str,
+    require_single_split: bool = True,
+    schema: T.StructType | None = None,
 ) -> DataFrame:
     """Read N XML files preserving (file order, record order) as columns.
 
-    Returns the native-reader schema plus `file_idx` (position of the file in
+    Returns the `schema` columns — when none is given, the schema inferred
+    once over all `paths` — plus `file_idx` (position of the file in
     `paths`) and `seq` (1-based record position within the file). Record
     order relies on monotonically_increasing_id being ascending in document
     order within each file — exact when a file is one split (dimension-scale
@@ -176,9 +195,11 @@ def read_xml_files_ordered(
     order, so parity mode refuses rather than silently reordering (pass
     require_single_split=False only when downstream order doesn't matter).
     """
+    if schema is None:
+        schema = read_xml(spark, paths, row_tag).schema
     parts = []
     for i, p in enumerate(paths):
-        df = read_xml(spark, p, row_tag)
+        df = read_xml(spark, p, row_tag, schema)
         if require_single_split:
             n_splits = df.rdd.getNumPartitions()
             if n_splits > 1:
