@@ -1,10 +1,10 @@
 #!/usr/bin/env python3
 """End-to-end tour of the bucket-partitioned copy-on-write table
 (streaming/partitioned_upsert.py): MERGE -> tombstones -> change data
-feed -> compaction -> zone-map summary -> pruned key-range scan ->
-re-range migration -> retention. Every step prints what the manifest
-machinery did, so the output doubles as documentation of the table
-format's behavior on plain parquet + JSON manifests.
+feed -> compaction -> zone-map summary -> pruned key-range scan -> time
+travel -> retention -> merge-on-read. Every step prints what the
+manifest machinery did, so the output doubles as documentation of the
+table format's behavior on plain parquet + JSON manifests.
 
 Deterministic, sf-independent (synthesizes its own tiny key space), and
 fast (~30 s): run with `python examples/cow_table_demo.py`.
@@ -82,10 +82,8 @@ def main() -> None:
         print(f"\nkey-range scan [295,310]: reads buckets {keep} of {len(m['buckets'])}")
         show("rows", pu.read_partitioned_state_keyrange(spark, state, 295, 310))
 
-        nb = pu.rerange_partitioned_state(spark, state, 250)
-        print(f"\nre-range migration to width 250: {nb} new buckets; "
-              "old-width commits still readable for time travel:")
-        print("   v0 rows:", pu.read_partitioned_state_version(spark, state, 0).count())
+        print("\ntime travel to v0 rows:",
+              pu.read_partitioned_state_version(spark, state, 0).count())
 
         deleted = pu.expire_partitioned_versions(spark, state, keep=2)
         print(f"\nretention (keep last 2 batches): {deleted} dirs+manifests vacuumed")

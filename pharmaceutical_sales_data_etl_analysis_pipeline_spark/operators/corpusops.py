@@ -171,6 +171,8 @@ def neardup_components(
 
     from .buildcache import corpus_key
 
+    if max_iters < 1:
+        raise ValueError(f"max_iters must be >= 1, got {max_iters}")
     ckey = corpus_key(
         documents,
         id(documents.sparkSession),
@@ -250,6 +252,13 @@ def neardup_components(
         labels = new_labels.select("node", "label")
         if changed == 0:
             break
+    else:
+        # the cap is a safety bound, not an answer: labels that are still
+        # moving are not the components (min reachable doc_id) yet
+        raise RuntimeError(
+            f"neardup_components: label propagation did not converge in "
+            f"{max_iters} rounds ({changed} labels changed in the last one)"
+        )
     out = labels.select(F.col("node").alias("doc_id"), F.col("label").alias("component"))
     if ckey is not None:
         from .buildcache import memo_put
@@ -310,16 +319,22 @@ def _word_rows(documents: DataFrame) -> DataFrame:
     )
 
 
+def _top_vocab(word_counts: DataFrame, k: int = VOCAB_K) -> DataFrame:
+    """The vocabulary ranking over per-word (word, tf, df) counts: most
+    documents first, then most occurrences, then the word; the first k.
+    vocab_topk and oov_rate both rank through here."""
+    return word_counts.orderBy(F.desc("df"), F.desc("tf"), F.asc("word")).limit(k)
+
+
 def vocab_topk(documents: DataFrame, k: int = VOCAB_K) -> DataFrame:
-    return (
+    return _top_vocab(
         _word_rows(documents)
         .groupBy("word")
         .agg(
             F.count(F.lit(1)).cast("long").alias("tf"),
             F.countDistinct("doc_id").cast("long").alias("df"),
-        )
-        .orderBy(F.desc("df"), F.desc("tf"), F.asc("word"))
-        .limit(k)
+        ),
+        k,
     )
 
 
@@ -884,16 +899,12 @@ def oov_rate(documents: DataFrame) -> DataFrame:
         F.count(F.lit(1)).cast("long").alias("tf")
     )
     tf = pin(tf, "oov_tf")
-    vocab = (
-        tf.groupBy("word")
-        .agg(
+    vocab = _top_vocab(
+        tf.groupBy("word").agg(
             F.sum("tf").cast("long").alias("tf"),
             F.count(F.lit(1)).cast("long").alias("df"),
         )
-        .orderBy(F.desc("df"), F.desc("tf"), F.asc("word"))
-        .limit(VOCAB_K)
-        .select(F.col("word").alias("vword"))
-    )
+    ).select(F.col("word").alias("vword"))
     joined = tf.join(F.broadcast(vocab), tf.word == vocab.vword, "left")
     return joined.groupBy("doc_id").agg(
         F.sum("tf").cast("long").alias("n_tokens"),

@@ -1,60 +1,34 @@
-"""Manifest commit protocol for the CoW/MoR table layer — the pluggable
-log store the module's S3 caveat named (VERDICT r6 ask #3).
+"""Manifest commit protocol for the CoW/MoR table layer
+(streaming/partitioned_upsert.py).
 
-The partitioned-state table (streaming/partitioned_upsert.py) commits by
-publishing a JSON manifest; everything else (bucket files, delta files,
-staging) is invisible until the manifest names it. Whether two writers
-can corrupt the table therefore reduces to ONE question: can a manifest
-publish be made conditional on "no commit landed since my basis"? That
-is exactly the operation production table formats externalize —
-Delta's LogStore (`org.apache.spark.sql.delta.storage.LogStore`, whose
-S3SingleDriverLogStore/ S3DynamoDBLogStore implement put-if-absent over
-S3), Iceberg's catalog `commit(base, updated)` swap, and S3's own
-conditional writes (If-None-Match PUT, GA 2024). This module carries the
-same seam:
+The partitioned-state table commits by publishing a JSON manifest;
+everything else (bucket files, delta files, staging) is invisible until
+the manifest names it. The table has ONE writer — a checkpointed stream
+or a batch job — so the commit needs exactly two properties, which the
+filesystem's atomic rename provides (the mechanism Spark's own
+streaming metadata log commits with):
 
-- `ManifestLogStore` — the interface. `commit(...)` must atomically
-  verify the manifest listing still equals the writer's basis snapshot
-  and publish the new manifest; on any interleaved foreign commit it
-  must raise `ConcurrentCommitError` WITHOUT publishing.
-- `HadoopRenameLogStore` — the default plain-FS implementation: the
-  check and the tmp-write+rename the table layer always used. On local
-  FS / HDFS the rename itself is atomic, but check-then-rename is NOT
-  one operation, so two writers can both pass the check in the same
-  instant — optimistic detection, not exclusion (the documented
-  single-writer contract's safety net). On S3A the rename is
-  copy+delete — strictly weaker; do not run multi-writer there.
-- `InProcessConditionalPutLogStore` — a conditional-put implementation
-  whose compare-and-publish IS atomic (a per-table lock held across
-  check+rename). Within one driver process this is real mutual
-  exclusion — which covers Structured Streaming's actual topology: all
-  of a query's foreachBatch commits run on ONE driver, so multiple
-  streams/threads writing the same table in one application are fully
-  serialized, same positioning as Delta's S3SingleDriverLogStore.
-  ACROSS processes it degrades to the rename store's optimism; true
-  multi-driver exclusion needs an external arbiter (DynamoDB table,
-  S3 If-None-Match, a catalog service) behind this same interface.
-- `FileLockLogStore` — cross-PROCESS exclusion where the filesystem has
-  atomic create-if-absent (local FS, HDFS, NFSv4): commits serialize
-  through a TTL-bounded, TOKEN-OWNED lock file; refuses S3 schemes
-  rather than pretending.
-- `ArbiterLogStore` — the external-arbiter deployment path, with the
-  arbiter injectable: its compare-and-swap runs inside `CommitArbiter`
-  (an in-memory, lock-serialized stand-in for a DynamoDB
-  conditional write / S3 If-None-Match endpoint, with injectable
-  latency and unavailability). The commit choreography is Delta
-  S3DynamoDBLogStore's: stage the payload under a hidden unique name,
-  CAS the commit record at the arbiter, then finalize the visible
-  rename — and readers COMPLETE any crashed commit the arbiter has
-  recorded whose finalize never ran. Swapping `CommitArbiter` for a
-  real service client is the whole deployment delta; the contract
-  tests run this store through the same racing-writer/crash matrix as
-  the others, which is the proof the interface suffices.
+- atomic publish: the manifest is written to a hidden tmp file and
+  renamed into place, so readers never observe a torn payload;
+- a successor check: a commit carries the writer's basis listing and is
+  rejected (ConcurrentCommitError, nothing published) when the listing
+  changed since, which turns a violated single-writer contract into a
+  loud error instead of a silent lost update.
 
-The contract ("reject non-successor commits, never publish on
-rejection, at most one winner per basis") is what tests/test_logstore.py
-property-tests with racing writers and injected crashes — the table
-layer above is contract-agnostic: swap the store, keep the semantics.
+The check and the rename are NOT one atomic operation, so this detects a
+second writer rather than excluding it. On S3A the rename is copy+delete
+— strictly weaker; keep one writer per table there as everywhere.
+
+`ManifestLogStore` is the interface and `HadoopRenameLogStore` the store
+every table uses; the contract is pinned in tests/test_logstore.py.
+
+`ArbiterLogStore` (below) is the one other implementation: a two-phase
+stage/CAS/finalize store over an in-process `CommitArbiter` (optionally
+journalled, optionally fault-injected). No pipeline step, registered
+query or benchmark workload selects it; it is reachable only through
+`partitioned_upsert.set_log_store`, and only its contract tests
+(tests/test_logstore.py, test_journal_arbiter.py, test_arbiter_restart.py)
+use it.
 """
 
 from __future__ import annotations
@@ -74,36 +48,7 @@ _LOG = logging.getLogger(__name__)
 
 class ConcurrentCommitError(RuntimeError):
     """A foreign commit landed on the writer's basis between snapshot
-    read and commit — the single-writer contract was violated (or two
-    conditional-put writers raced and this one lost)."""
-
-
-def is_commit_not_found(exc: BaseException) -> bool:
-    """True iff `exc` means the commit FILE is absent (vacuumed between a
-    listing and the read, or never written) — as opposed to a transport
-    or I/O failure where the file may exist but the read flaked. Callers
-    that scan manifests for a positive proof (e.g. the ambiguous-append
-    reconciliation) may SKIP a not-found manifest but must FAIL-STOP on
-    any other read error: treating a transient read failure as "vacuumed"
-    can misclassify a committed batch as lost and double-append it
-    (ADVICE r10). Matches Python's FileNotFoundError and a py4j-wrapped
-    java FileNotFoundException — by the TOP-LEVEL Java exception CLASS
-    only, never by substring matching: ANY text heuristic can be fooled
-    by a wrapper whose message interpolates another error's stringified
-    header (second r11 review), and the safe failure direction is the
-    strict one — an exotic unclassified not-found fail-stops and
-    resolves on retry/replay, while a misclassified transport error
-    opens the double-append door. If the class lookup itself flakes
-    (gateway hiccup), the answer is likewise the strict False."""
-    if isinstance(exc, FileNotFoundError):
-        return True
-    je = getattr(exc, "java_exception", None)
-    if je is not None:
-        try:
-            return str(je.getClass().getName()).endswith("FileNotFoundException")
-        except Exception:
-            return False
-    return False
+    read and commit — the single-writer contract was violated."""
 
 
 class ManifestLogStore:
@@ -117,7 +62,8 @@ class ManifestLogStore:
         `name` — that is the replay-of-a-crashed-batch path, and the
         listing check already proved the replacer saw it in its basis);
       * readers must never observe a torn payload.
-    Implementations differ only in how atomic the check+publish pair is.
+    HadoopRenameLogStore is the implementation; tests subclass it to
+    inject faults (partitioned_upsert.set_log_store).
     """
 
     def list_commits(self, spark: SparkSession, manifest_dir: str) -> list[str]:
@@ -175,7 +121,6 @@ class ManifestLogStore:
             out.close()
         _rename_overwrite(spark, jvm, fs, tmp, final)
 
-
 def _rename_overwrite(spark: SparkSession, jvm, fs, src, dst) -> None:
     """Atomic rename that REPLACES dst if present, via FileContext's
     Options.Rename.OVERWRITE (one metadata op on local FS/HDFS — no
@@ -208,8 +153,9 @@ def _rename_overwrite(spark: SparkSession, jvm, fs, src, dst) -> None:
         raise IOError(f"manifest commit failed: {dst}")
 
 
+
 class HadoopRenameLogStore(ManifestLogStore):
-    """Default store: optimistic check, then rename-publish. The two
+    """The store: optimistic check, then rename-publish. The two
     steps are NOT atomic together — a foreign commit can land in the
     gap, so this DETECTS single-writer violations rather than excluding
     them (fine on local FS/HDFS under the documented single-writer
@@ -227,288 +173,12 @@ class HadoopRenameLogStore(ManifestLogStore):
         self._publish(spark, manifest_dir, name, payload)
 
 
-class FileLockLogStore(ManifestLogStore):
-    """Cross-PROCESS conditional put on filesystems with atomic
-    create-if-absent (local FS, HDFS, NFSv4): commit serializes through
-    a lock FILE created with overwrite=False — Hadoop's
-    `FileSystem.create(path, false)` throws if the path exists, the
-    same put-if-absent primitive S3 If-None-Match provides — then
-    re-checks the basis and publishes while holding the lock. This is
-    mutual exclusion between independent driver PROCESSES sharing a
-    state dir, one step beyond InProcessConditionalPutLogStore's
-    same-process lock.
-
-    OWNERSHIP TOKEN (ADVICE r7): every acquired lock carries a unique
-    token written into the file. Acquisition is only complete once a
-    re-read returns the writer's own token, break-ins sideline the
-    stale lock via ATOMIC RENAME (of N breakers exactly one rename
-    succeeds) and verify the sidelined file's mtime matches the
-    staleness observation (a fresh lock sidelined by a racing breaker
-    is restored, not stolen), and release deletes the lock ONLY if the
-    token still matches — a writer whose commit outlived the TTL and
-    was evicted leaves the usurper's lock untouched and merely warns.
-
-    Liveness caveat (the classic lock-file trade): a writer that dies
-    holding the lock blocks all writers until the stale lock is removed;
-    LOCK_TTL_MS bounds that — a lock older than the TTL is presumed
-    orphaned and broken (logged at WARNING). A LIVE writer slower than
-    the TTL can therefore be evicted: mutual exclusion degrades to the
-    optimistic basis check for exactly that pair (detection, not
-    corruption — pinned in tests/test_logstore.py's slow-holder test).
-    Object stores without atomic create (S3A's create is not) need the
-    external-arbiter route instead; this store raises on such schemes
-    rather than pretending."""
-
-    LOCK_TTL_MS = 5 * 60 * 1000  # orphaned-lock break-in bound
-
-    def __init__(self) -> None:
-        # SPARK_GRAFT_LOCK_TTL_MS tunes the orphan break-in bound per
-        # deployment (default 5 min): it is the recovery latency after a
-        # writer dies HOLDING the lock, and the floor for how slow a
-        # LIVE holder's commit may be before eviction degrades mutual
-        # exclusion to the basis check. Read once at construction.
-        import os
-
-        ttl = os.environ.get("SPARK_GRAFT_LOCK_TTL_MS")
-        if ttl:
-            self.LOCK_TTL_MS = int(ttl)
-
-    def commit(self, spark, manifest_dir, name, payload, expected) -> None:
-        fs, _, jvm = _fs_and_path(spark, manifest_dir)
-        if fs.getScheme() in ("s3a", "s3", "s3n"):
-            raise NotImplementedError(
-                "FileLockLogStore needs atomic create-if-absent; S3A does "
-                "not provide it — use ArbiterLogStore with an external "
-                "conditional-put arbiter"
-            )
-        token = self._acquire(spark, manifest_dir, name)
-        try:
-            if expected is not None:
-                now = tuple(self.list_commits(spark, manifest_dir))
-                if now != expected:
-                    raise ConcurrentCommitError(
-                        f"conditional put of {name} rejected: basis advanced "
-                        f"by {sorted(set(now) ^ set(expected))}"
-                    )
-            self._publish(spark, manifest_dir, name, payload)
-        finally:
-            self._release(spark, manifest_dir, token)
-
-    # --- token-owned lock protocol ------------------------------------
-
-    def _lock_path(self, jvm, manifest_dir: str):
-        return jvm.org.apache.hadoop.fs.Path(f"{manifest_dir}/.commit.lock")
-
-    #: sentinel distinguishing "the lock file could not be READ" from
-    #: "the lock file is absent" — conflating them let a transient IO
-    #: error during release skip the holder's own delete silently,
-    #: stalling every writer until the TTL break-in (ADVICE r8)
-    _READ_FAILED = object()
-
-    def _read_lock_token(self, spark, manifest_dir: str):
-        """The token in the current lock file; None if the lock is
-        ABSENT; the _READ_FAILED sentinel if it exists (or may exist)
-        but could not be read."""
-        fs, _, jvm = _fs_and_path(spark, manifest_dir)
-        lock = self._lock_path(jvm, manifest_dir)
-        try:
-            if not fs.exists(lock):
-                return None
-            stream = fs.open(lock)
-            try:
-                raw = bytes(jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
-            finally:
-                stream.close()
-            return raw.decode("utf-8")
-        except Exception:
-            # exists() itself failing also lands here: "unknown", not
-            # "absent" — callers must not treat this as a free lock
-            return self._READ_FAILED
-
-    def _try_create(self, fs, lock, token: str) -> bool:
-        """Atomic create-if-absent carrying our token; False if held."""
-        try:
-            out = fs.create(lock, False)
-        except Exception:
-            return False
-        try:
-            out.write(bytearray(token.encode("utf-8")))
-        finally:
-            out.close()
-        return True
-
-    def _acquire(self, spark, manifest_dir: str, name: str) -> str:
-        """Acquire the commit lock; returns the ownership token. Every
-        failure mode raises ConcurrentCommitError (never a raw FS/Py4J
-        error) so callers see one contract exception."""
-        fs, _, jvm = _fs_and_path(spark, manifest_dir)
-        hpath = jvm.org.apache.hadoop.fs.Path
-        fs.mkdirs(hpath(manifest_dir))
-        lock = self._lock_path(jvm, manifest_dir)
-        token = uuid.uuid4().hex
-        if not self._try_create(fs, lock, token):
-            st = fs.getFileStatus(lock) if fs.exists(lock) else None
-            now_ms = jvm.java.lang.System.currentTimeMillis()
-            if st is None:
-                # holder released between our create and the stat — one retry
-                if not self._try_create(fs, lock, token):
-                    raise ConcurrentCommitError(
-                        f"commit of {name} blocked: lock at {lock} "
-                        "re-acquired by another writer"
-                    )
-            elif now_ms - st.getModificationTime() > self.LOCK_TTL_MS:
-                self._break_stale_lock(spark, fs, jvm, manifest_dir, lock, st, name)
-                if not self._try_create(fs, lock, token):
-                    raise ConcurrentCommitError(
-                        f"commit of {name} blocked: lost the post-break-in "
-                        f"retake race for {lock}"
-                    )
-            else:
-                raise ConcurrentCommitError(
-                    f"commit of {name} blocked: another writer holds "
-                    f"{lock} (a live commit is in flight, or an "
-                    f"orphan younger than {self.LOCK_TTL_MS} ms)"
-                )
-        # ownership verification: create-then-write is two ops, so a
-        # racing breaker could have sidelined our lock between them —
-        # acquisition is complete only when the lock file reads back OUR
-        # token (of N contenders exactly one sees its own token last).
-        # A transient READ failure gets one retry, same as _release
-        # (ADVICE r8): treating it as "taken over" and walking away would
-        # abandon our own lock file until the TTL break-in, stalling
-        # every writer. If the re-read still fails, best-effort release
-        # our token before raising so the stall needs a genuinely stuck
-        # filesystem, not one IO blip.
-        current = self._read_lock_token(spark, manifest_dir)
-        if current is self._READ_FAILED:
-            current = self._read_lock_token(spark, manifest_dir)  # one retry
-        if current != token:
-            if current is self._READ_FAILED:
-                self._release(spark, manifest_dir, token)
-                raise ConcurrentCommitError(
-                    f"commit of {name} blocked: lock at {lock} unreadable "
-                    "during acquisition verification (transient IO, retried "
-                    "once); released best-effort"
-                )
-            raise ConcurrentCommitError(
-                f"commit of {name} blocked: lock at {lock} was taken over "
-                "during acquisition (token mismatch)"
-            )
-        return token
-
-    def _break_stale_lock(self, spark, fs, jvm, manifest_dir, lock, st, name) -> None:
-        """Sideline a presumed-orphaned lock via atomic rename; verify
-        the sidelined file IS the stale one we observed (mtime match) —
-        if a racing breaker already replaced it with a fresh lock, put
-        it back and lose loudly."""
-        stale_mtime = st.getModificationTime()
-        _LOG.warning(
-            "breaking presumed-orphaned commit lock %s (age %d ms > TTL "
-            "%d ms) for commit of %s",
-            lock,
-            jvm.java.lang.System.currentTimeMillis() - stale_mtime,
-            self.LOCK_TTL_MS,
-            name,
-        )
-        hpath = jvm.org.apache.hadoop.fs.Path
-        aside = hpath(f"{manifest_dir}/.commit.lock.broken.{uuid.uuid4().hex}")
-        try:
-            renamed = fs.rename(lock, aside)
-        except Exception:
-            renamed = False
-        if not renamed:
-            raise ConcurrentCommitError(
-                f"commit of {name} blocked: lost the break-in race for {lock}"
-            )
-        aside_st = fs.getFileStatus(aside) if fs.exists(aside) else None
-        if aside_st is not None and aside_st.getModificationTime() != stale_mtime:
-            # we sidelined a FRESH lock (created after our staleness
-            # stat by a faster breaker) — restore it, don't steal it
-            fs.rename(aside, lock)
-            raise ConcurrentCommitError(
-                f"commit of {name} blocked: the stale lock at {lock} was "
-                "already broken and re-acquired by another writer"
-            )
-        fs.delete(aside, False)
-
-    def _release(self, spark, manifest_dir: str, token: str) -> None:
-        """Delete the lock ONLY if it still carries our token — a holder
-        evicted by a TTL break-in must not delete the usurper's lock.
-        A READ FAILURE is retried (transient IO must not turn into an
-        up-to-TTL stall for every writer, ADVICE r8); if the re-read
-        still fails the stall is logged by name so the operator knows a
-        lock this holder likely still owns is sitting there until the
-        TTL break-in."""
-        fs, _, jvm = _fs_and_path(spark, manifest_dir)
-        lock = self._lock_path(jvm, manifest_dir)
-        current = self._read_lock_token(spark, manifest_dir)
-        if current is self._READ_FAILED:
-            current = self._read_lock_token(spark, manifest_dir)  # one retry
-        if current == token:
-            fs.delete(lock, False)
-        elif current is self._READ_FAILED:
-            _LOG.warning(
-                "could not read commit lock %s during release (transient IO "
-                "failure, retried once): if it still carries this holder's "
-                "token, all writers stall until the %d ms TTL break-in",
-                lock,
-                self.LOCK_TTL_MS,
-            )
-        elif current is not None:
-            _LOG.warning(
-                "not releasing commit lock %s: it now belongs to another "
-                "writer (this holder exceeded LOCK_TTL_MS and was evicted)",
-                lock,
-            )
-
-    def list_commits(self, spark, manifest_dir):
-        # the lock file starts with '.', so the base listing skips it
-        return super().list_commits(spark, manifest_dir)
-
-
 def _qualified_dir(spark: SparkSession, manifest_dir: str) -> str:
     """Canonical per-table key: the fully qualified Hadoop path (scheme
     added, trailing slashes and relative segments resolved), so two
-    aliases of one directory share one lock (ADVICE r7)."""
+    aliases of one directory share one arbiter record table."""
     fs, path, _ = _fs_and_path(spark, manifest_dir)
     return str(fs.makeQualified(path))
-
-
-class InProcessConditionalPutLogStore(ManifestLogStore):
-    """Conditional-put store: compare-and-publish runs under a per-table
-    lock, so within one driver process losers ALWAYS raise and the
-    winner's publish is never interleaved — the semantics an external
-    conditional-put service (S3 If-None-Match, DynamoDB, a catalog
-    commit) provides across processes. One Spark driver hosting many
-    streams/threads over the same table gets true exclusion from this
-    alone (all foreachBatch commits run driver-side)."""
-
-    # NEVER evicted: an evicted-then-recreated entry would hand two
-    # threads DIFFERENT locks for one table, un-atomizing check+publish
-    # (the old cap's "evict unheld entries" raced exactly that way — a
-    # lock returned from this map is unheld until the caller enters it;
-    # ADVICE r8). Tables are few, an entry is one Lock — no cap needed.
-    _locks: dict[str, threading.Lock] = {}
-    _locks_guard = threading.Lock()
-
-    @classmethod
-    def _lock_for(cls, qualified_dir: str) -> threading.Lock:
-        with cls._locks_guard:
-            return cls._locks.setdefault(qualified_dir, threading.Lock())
-
-    def commit(self, spark, manifest_dir, name, payload, expected) -> None:
-        with self._lock_for(_qualified_dir(spark, manifest_dir)):
-            if expected is not None:
-                now = tuple(self.list_commits(spark, manifest_dir))
-                if now != expected:
-                    raise ConcurrentCommitError(
-                        f"conditional put of {name} rejected: basis advanced "
-                        f"by {sorted(set(now) ^ set(expected))}"
-                    )
-            self._publish(spark, manifest_dir, name, payload)
-
-
-# --- external-arbiter deployment path (VERDICT r7 ask #4) -----------------
 
 
 class ArbiterUnavailableError(RuntimeError):
@@ -700,11 +370,8 @@ class JournalledCommitArbiter(CommitArbiter):
     a failure while writing the tmp snapshot merely disables further
     auto-compaction and keeps serving (the real journal is untouched).
 
-    Deployment: SPARK_GRAFT_ARBITER_JOURNAL=/path selects this class in
-    the standalone HTTP arbiter service (http_arbiter.main). The file
-    must live on local disk or a filesystem with honest fsync — the
-    arbiter is one small service; its durability story is a local WAL,
-    not an object store."""
+    The journal must live on local disk or a filesystem with honest
+    fsync — its durability story is a local WAL, not an object store."""
 
     def __init__(
         self,
@@ -972,8 +639,7 @@ class FaultInjectingArbiter:
     service failure modes the server-side `fail_next` cannot — request
     LATENCY, requests lost BEFORE reaching the service, and responses
     lost AFTER the service applied the call (the ambiguous outcome a real
-    DynamoDB conditional put can produce, which forces writer-side
-    reconciliation — see partitioned_upsert._reconcile_ambiguous_append).
+    DynamoDB conditional put can produce).
     Faults are deterministic per-method budgets:
 
         FaultInjectingArbiter(inner, {
@@ -986,9 +652,7 @@ class FaultInjectingArbiter:
     (the call APPLIED server-side, the caller cannot know); `latency_s`
     sleeps before delegating (transport RTT, outside the server's
     critical section, unlike CommitArbiter.latency_s). Budgets decrement
-    under a lock so racing threads consume them deterministically.
-    Env wiring: SPARK_GRAFT_ARBITER_FAULTS (see arbiter_store_from_env)
-    lets the cross-process probes run the racing matrix under faults."""
+    under a lock so racing threads consume them deterministically."""
 
     def __init__(self, inner, faults: dict | None = None):
         self._inner = inner
@@ -1050,7 +714,7 @@ class FaultInjectingArbiter:
 
 class ArbiterLogStore(ManifestLogStore):
     """Conditional-put store whose CAS runs at an external arbiter — the
-    S3-multi-writer deployment path the FileLock store refuses. The
+    multi-writer deployment path the rename store cannot serve. The
     choreography is Delta S3DynamoDBLogStore's two-phase commit:
 
       1. STAGE: write the payload to a hidden unique file (invisible to
@@ -1131,7 +795,7 @@ class ArbiterLogStore(ManifestLogStore):
         # a SURVIVING client never re-seeds (the table key is cached in
         # self._seeded), so every CAS would compare a non-empty FS basis
         # against an empty arbiter listing and reject FOREVER (liveness
-        # bug found by examples/arbiter_restart_probe.py). Re-seeding the
+        # bug found by an arbiter-restart probe). Re-seeding the
         # basis before each CAS is truthful (every basis name is a FINAL
         # manifest on the FS), idempotent (seed never clobbers live
         # records), and one cheap RPC; a DURABLE store (DynamoDB) makes
@@ -1151,10 +815,9 @@ class ArbiterLogStore(ManifestLogStore):
             # nothing and turn the reader self-heal into a loud IOError
             # (found by the r10 fault-injection matrix). Leave it: if the
             # CAS landed, it is the recovery payload; if not, it is
-            # hidden `.staged.*` debris invisible to list_commits.
-            # Writers reconcile via partitioned_upsert.
-            # _reconcile_ambiguous_append (re-list => self-heal => check
-            # whether their attempt actually committed).
+            # hidden `.staged.*` debris invisible to list_commits. The
+            # writer fails stop; its replay re-lists (=> self-heal) and
+            # sees whether the attempt actually committed.
             raise
         self._finalize(
             spark, manifest_dir, table, name, staged_name,

@@ -55,32 +55,19 @@ attempt dirs, and republishes the v{N} manifest to the identical
 logical state; the crashed attempt's dirs are unreferenced debris for
 retention.
 
-Commit protocol at real scale: every manifest list/read/publish routes
-through a pluggable ManifestLogStore (streaming/logstore.py — the seam
-Delta's LogStore / Iceberg's catalog swap occupy). The default
-HadoopRenameLogStore is the plain-FS optimistic check-then-rename:
-atomic publish on local FS/HDFS, DETECTION (not exclusion) of
-single-writer-contract violations — each writer snapshots the manifest
-listing with its basis read and the commit rejects
-(ConcurrentCommitError) if any foreign commit appears before its own.
-InProcessConditionalPutLogStore makes the check+publish pair atomic
-(per-table lock), giving true exclusion for every topology whose
-commits share one driver process — Structured Streaming's actual
-shape; FileLockLogStore extends that across PROCESSES on filesystems
-with atomic create-if-absent (token-owned, TTL-bounded lock file);
-ArbiterLogStore carries multi-DRIVER object-store deployments — its
-compare-and-swap runs at an injectable external arbiter (the
-S3 If-None-Match / DynamoDB / catalog-service seam), two-phase with
-reader-side recovery. On S3A do not run the rename store multi-writer:
-its rename is copy+delete. (See logstore.py; contract property-tested
-across all four stores in tests/test_logstore.py.)
+Commit protocol: the table has ONE writer. Every manifest list/read/
+publish routes through HadoopRenameLogStore (streaming/logstore.py),
+the plain-FS optimistic check-then-rename: atomic publish on local
+FS/HDFS, DETECTION (not exclusion) of single-writer-contract violations
+— each writer snapshots the manifest listing with its basis read and
+the commit rejects (ConcurrentCommitError) if any foreign commit
+appears before its own. On S3A the rename is copy+delete.
 
 Same read boundary as upsert.py: DECIMAL(18,2) in state, DOUBLE out.
 
 Beyond MERGE + time travel + retention, the module carries the remaining
 primitives a production table format pairs with copy-on-write — each one
-manifest-pruned so its cost scales with the CHANGE, not the table
-(except re-ranging, a full rewrite by contract):
+manifest-pruned so its cost scales with the CHANGE, not the table:
 
 - DELETE tombstones: a batch row with op='delete' discards the key's
   prior state; upsert rows for the same key in the same batch re-insert
@@ -112,11 +99,6 @@ manifest-pruned so its cost scales with the CHANGE, not the table
   read_partitioned_state_keyrange (point lookups and key-range scans
   read only the buckets whose zone maps overlap — GBs at 100 TB, not
   the table).
-- Re-range migration (re-clustering twin): rerange_partitioned_state
-  rewrites the latest state onto a new range width as an explicit,
-  committed, full-table operation — the loud drift error's named
-  migration path. Time travel to old-width commits keeps working;
-  crash-replay interplay is pinned safe in tests.
 - Merge-on-read (deletion-vector twin): append_delta_batch commits a
   scattered batch as a delta file — O(|batch|) bytes, ZERO bucket
   rewrites (the CoW path's measured boundary); readers fold base +
@@ -124,7 +106,7 @@ manifest-pruned so its cost scales with the CHANGE, not the table
   compact_deltas_into_base folds them in under an 'x' commit. The
   change feed is MoR-aware (each side folds its pending deltas, pruned
   to pointer-diff + one-side-delta-touched buckets); the remaining
-  base-only readers (summary/keyrange/compaction/re-range/CoW merge)
+  base-only readers (summary/keyrange/compaction/CoW merge)
   refuse loudly while deltas are pending rather than answering stale.
 """
 
@@ -138,69 +120,19 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..sources.maintenance import _fs_and_path
-from .logstore import (
-    ArbiterUnavailableError,
-    ConcurrentCommitError,
-    HadoopRenameLogStore,
-    ManifestLogStore,
-    is_commit_not_found,
-)
+from .logstore import ConcurrentCommitError, HadoopRenameLogStore, ManifestLogStore
 from .upsert import STATE_SCHEMA, _as_read_view
 
 _LOG = logging.getLogger(__name__)
 
-# once-per-table advisory warnings from the sequenced-writer fence when
-# running on the non-atomic rename store (see _require_seq_writer_fence)
-_RENAME_FENCE_WARNED: set[str] = set()
-
-# The commit-protocol seam (see logstore.py): every manifest list/read/
-# publish below routes through this store. The default is the plain-FS
-# optimistic rename; swap in InProcessConditionalPutLogStore (or an
-# external-arbiter implementation of ManifestLogStore) to make the
-# check+publish pair atomic — the table layer is contract-agnostic.
-# Deployments pick without code via SPARK_GRAFT_LOG_STORE =
-# rename | inprocess | filelock | arbiter (the same seam Delta exposes
-# as spark.delta.logStore.class).
-
-
-def _default_log_store() -> ManifestLogStore:
-    import os as _os
-
-    name = _os.environ.get("SPARK_GRAFT_LOG_STORE", "rename").lower()
-    from .logstore import (
-        FileLockLogStore,
-        InProcessConditionalPutLogStore,
-    )
-
-    if name == "arbiter":
-        # the multi-DRIVER deployment path: requires a running external
-        # arbiter endpoint (SPARK_GRAFT_ARBITER_ENDPOINT) — constructing
-        # a fresh in-memory CommitArbiter here would serialize only
-        # within this process, silently giving a deployment that chose
-        # 'arbiter' no cross-driver exclusion at all (ADVICE r8)
-        from .arbiter_server import arbiter_store_from_env
-
-        return arbiter_store_from_env()
-
-    stores = {
-        "rename": HadoopRenameLogStore,
-        "inprocess": InProcessConditionalPutLogStore,
-        "filelock": FileLockLogStore,
-    }
-    if name not in stores:
-        raise ValueError(
-            f"unknown SPARK_GRAFT_LOG_STORE={name!r}; one of "
-            f"{sorted(stores) + ['arbiter']}"
-        )
-    return stores[name]()
-
-
-_LOG_STORE: ManifestLogStore = _default_log_store()
+# every manifest list/read/publish below routes through this store
+_LOG_STORE: ManifestLogStore = HadoopRenameLogStore()
 
 
 def set_log_store(store: ManifestLogStore) -> ManifestLogStore:
-    """Install a ManifestLogStore for every subsequent commit/read;
-    returns the previous store (so tests/deployments can restore it)."""
+    """Install the store for every subsequent commit/read; returns the
+    previous one. The seam lets a test substitute a fault-injecting
+    store (a crash before publish, a stale listing)."""
     global _LOG_STORE
     prev, _LOG_STORE = _LOG_STORE, store
     return prev
@@ -553,8 +485,8 @@ def widen_value_column(
         raise ValueError(
             f"widen_value_column only widens precision at the same scale: "
             f"{values[idx][2]} -> {new_type!r} is not a widening (old files "
-            "cannot be reinterpreted; a narrowing/rescale needs the explicit "
-            "rewrite migration — rewrite_value_column_type)"
+            "cannot be reinterpreted; a narrowing/rescale would need a "
+            "full-table rewrite)"
         )
     if new_p == old_p:
         return table_schema_version(manifest)  # no-op, nothing to commit
@@ -569,27 +501,6 @@ def widen_value_column(
     _record_schema(widened, values, version, table_retired(manifest))
     _write_manifest(spark, state_dir, widened, expected=tuple(versions))
     return version
-
-
-def heartbeat_partitioned_state(spark: SparkSession, state_dir: str) -> str:
-    """Renew the sequenced-writer lease WITHOUT appending data (r12,
-    lease-TTL mode): republish the newest manifest's contents under the
-    next 'x' commit name — same logical state (readers pick the newest
-    commit per batch id), fresh file mtime, which is exactly the
-    heartbeat the TTL expiry check reads. An owner whose source goes
-    quiet for longer than the table's agreed TTL schedules this on a
-    timer (a few bytes of manifest JSON per beat — no data touched at
-    any scale). Optimistically checked like every commit, so a
-    heartbeat racing a real append simply loses and is unnecessary
-    (the append already renewed the lease). Returns the commit name."""
-    versions = _list_manifests(spark, state_dir)
-    if not versions:
-        raise ValueError(f"no committed state to heartbeat in {state_dir}")
-    manifest = _read_manifest(spark, state_dir, versions[-1])
-    beat = dict(manifest)
-    beat["compaction_seq"] = _next_compaction_seq(versions, manifest["batch_id"])
-    _write_manifest(spark, state_dir, beat, expected=tuple(versions))
-    return _manifest_name(beat)
 
 
 def rename_value_column(
@@ -648,185 +559,6 @@ def rename_value_column(
     version = table_schema_version(manifest) + 1
     _record_schema(renamed, values, version, table_retired(manifest))
     _write_manifest(spark, state_dir, renamed, expected=tuple(versions))
-    return version
-
-
-def rewrite_value_column_type(
-    spark: SparkSession,
-    state_dir: str,
-    state_col: str,
-    new_type: str,
-    allow_rounding: bool = False,
-) -> int:
-    """TYPE REWRITE migration (r12): change one value column to a
-    decimal type that old files CANNOT be reinterpreted as — narrowing
-    precision, or any scale change — by rewriting the whole table, the
-    explicit operation widen_value_column's refusal points at. This is
-    O(table) BY CONTRACT, the same shape as rerange_partitioned_state
-    (metadata-only widen covers the free direction; everything else is
-    honestly a rewrite at any scale).
-
-    Loud by doctrine, twice over:
-      - RANGE: a value that cannot fit the new type raises the curated
-        key-naming overflow error — never a silent NULL;
-      - VALUE: unless `allow_rounding=True`, a value that would CHANGE
-        under the new scale (sub-precision digits a rescale would
-        round away) raises, naming the key — the producer must opt
-        into lossiness explicitly, the same "owns the rounding"
-        discipline adoption has.
-
-    Requires a delta-free latest commit (compact first); commits the
-    rewritten state under the same batch id's next 'x' name with the
-    schema version bumped, so time travel to older commits reads the
-    OLD type from the untouched old files (Delta's semantics). Future
-    batch folds and the overflow guard use the new recorded type.
-    Returns the new schema version; a same-type call is a no-op."""
-    versions = _list_manifests(spark, state_dir)
-    if not versions:
-        raise ValueError(f"no committed state to rewrite in {state_dir}")
-    manifest = _read_manifest(spark, state_dir, versions[-1])
-    _require_no_pending_deltas(manifest, "rewrite_value_column_type")
-    values = table_values(manifest)
-    names = [v[0] for v in values]
-    if state_col not in names:
-        raise ValueError(
-            f"unknown value column {state_col!r} in {state_dir}; have {names}"
-        )
-    idx = names.index(state_col)
-    old_type = values[idx][2]
-    new_p, new_s = _decimal_params(new_type)
-    if (new_p, new_s) == _decimal_params(old_type):
-        return table_schema_version(manifest)  # no-op, nothing to commit
-    _old_p, old_s = _decimal_params(old_type)
-    phys = _vphys(values[idx])
-    width = manifest["range_width"]
-    new_values = [list(v) for v in values]
-    new_values[idx][2] = f"decimal({new_p},{new_s})"
-
-    batch_id = manifest["batch_id"]
-    seq = _next_compaction_seq(versions, batch_id)
-    vname = _attempt_name(f"v{batch_id:09d}x{seq:04d}")
-
-    if manifest["buckets"]:
-        wide = f"decimal(38,{max(old_s, new_s)})"
-        raw = F.col(phys)
-        narrowed = _narrow_total_or_raise(
-            raw, F.col("key"), f"type rewrite of {state_col!r}", new_values[idx][2]
-        )
-        if not allow_rounding:
-            narrowed = F.when(
-                raw.isNotNull()
-                & (narrowed.cast(wide) != raw.cast(wide)),
-                F.raise_error(
-                    F.concat(
-                        F.lit(
-                            f"type rewrite of {state_col!r} to "
-                            f"{new_values[idx][2]} would CHANGE the value for key "
-                        ),
-                        F.col("key").cast("string"),
-                        F.lit(" ("),
-                        raw.cast("string"),
-                        F.lit(" has digits the new scale rounds away) — pass "),
-                        F.lit("allow_rounding=True to accept the loss"),
-                    )
-                ).cast(new_values[idx][2]),
-            ).otherwise(narrowed)
-        df = (
-            spark.read.schema(_state_schema_for(values))
-            .parquet(*_bucket_paths(state_dir, manifest))
-            .select(
-                "key",
-                *[
-                    narrowed.alias(phys) if i == idx else F.col(_vphys(v))
-                    for i, v in enumerate(values)
-                ],
-                "n_rows",
-            )
-            .withColumn("bucket", bucket_of(F.col("key"), width))
-        )
-        staging = f"{state_dir}/.staging/{vname}"
-        df.repartition(F.col("bucket")).write.mode("overwrite").partitionBy(
-            "bucket"
-        ).parquet(staging)
-
-        fs, _, jvm = _fs_and_path(spark, state_dir)
-        hpath = jvm.org.apache.hadoop.fs.Path
-        new_buckets: dict[str, str] = {}
-        for b in sorted(int(k) for k in manifest["buckets"]):
-            src = hpath(f"{staging}/bucket={b}")
-            dst = hpath(f"{state_dir}/buckets/b{b}/{vname}")
-            fs.mkdirs(hpath(f"{state_dir}/buckets/b{b}"))
-            if not fs.rename(src, dst):
-                raise IOError(
-                    f"type-rewrite move failed for bucket {b}: {src} -> {dst}"
-                )
-            new_buckets[str(b)] = vname
-        fs.delete(hpath(staging), True)
-        stats = _bucket_stats(
-            spark,
-            [f"{state_dir}/buckets/b{b}/{vname}" for b in sorted(map(int, new_buckets))],
-            width,
-            new_values,
-        )
-    else:
-        new_buckets, stats = {}, {}
-
-    rewritten = {
-        "batch_id": batch_id,
-        "compaction_seq": seq,
-        "range_width": width,
-        "buckets": new_buckets,
-        "stats": {str(b): s for b, s in stats.items()},
-        **_inherit_max_seq(manifest),
-    }
-    version = table_schema_version(manifest) + 1
-    _record_schema(rewritten, new_values, version, table_retired(manifest))
-    _write_manifest(spark, state_dir, rewritten, expected=tuple(versions))
-    return version
-
-
-def rename_batch_source(
-    spark: SparkSession, state_dir: str, state_col: str, new_source: str
-) -> int:
-    """Rename the PRODUCER side of one value column's contract (r12):
-    record that batches now deliver `state_col`'s values under the
-    column `new_source`. The complement of rename_value_column (which
-    renames what READERS see): together they cover both directions of
-    the reference's rename-across-stages lineage (XML attr `rID` →
-    `rep_id`, `prod` → `product_name`). Metadata-only 'x' commit; no
-    file or state name changes. After the migration, a stale producer
-    still sending the OLD source column fails loudly (unknown column —
-    the merge_schema hint names it), and a producer that declares
-    `expected_schema_version` is fenced even earlier. Refused: unknown
-    state column, a source name already claimed by another column, and
-    reserved batch columns (key/op/seq). Returns the new schema
-    version; a no-op rename returns the current one."""
-    versions = _list_manifests(spark, state_dir)
-    if not versions:
-        raise ValueError(f"no committed state in {state_dir}")
-    manifest = _read_manifest(spark, state_dir, versions[-1])
-    values = table_values(manifest)
-    names = [v[0] for v in values]
-    if state_col not in names:
-        raise ValueError(
-            f"unknown value column {state_col!r} in {state_dir}; have {names}"
-        )
-    idx = names.index(state_col)
-    if values[idx][1] == new_source:
-        return table_schema_version(manifest)  # no-op, nothing to commit
-    other_sources = {v[1] for i, v in enumerate(values) if i != idx}
-    if new_source in other_sources or new_source in _RESERVED_BATCH_COLS:
-        raise ValueError(
-            f"cannot move {state_col!r}'s batch source to {new_source!r} "
-            f"in {state_dir}: the name is another column's source or a "
-            "reserved batch column"
-        )
-    values[idx][1] = new_source
-    moved = dict(manifest)
-    moved["compaction_seq"] = _next_compaction_seq(versions, manifest["batch_id"])
-    version = table_schema_version(manifest) + 1
-    _record_schema(moved, values, version, table_retired(manifest))
-    _write_manifest(spark, state_dir, moved, expected=tuple(versions))
     return version
 
 
@@ -1036,60 +768,16 @@ def _record_max_seq(
 
 
 def _inherit_max_seq(prev: dict) -> dict:
-    """Maintenance commits (compaction, re-range, delta fold) reproduce
-    the SAME logical state, so the sequenced-CDC high-water mark — and
-    the sequenced-writer lease (`writer_id`, see
-    _require_seq_writer_fence), the schema, and the producer-txn map —
-    of the superseded manifest carry over unchanged. One spot for the
-    idiom — it appears in every maintenance commit path, and a
-    hand-copied conditional spread is exactly the kind a fifth path
-    forgets (dropping writer_id in a compaction would silently unfence
-    the table; dropping schema would roll the table back to the legacy
-    single-column contract; dropping txns would re-admit a replayed
-    producer transaction as new)."""
-    return {
-        k: prev[k]
-        for k in ("max_seq", "writer_id", "schema", "txns")
-        if k in prev
-    }
-
-
-# --- idempotent producer transactions (r12, Delta txnAppId/txnVersion) ------
-
-
-def table_txns(manifest: dict | None) -> dict[str, int]:
-    """The producer-transaction high-water map `app_id -> last applied
-    version`, carried forward manifest to manifest (like writer_id and
-    the schema). Delta's idempotent-writes contract: a producer that
-    stamps each submission with a monotonically increasing version can
-    resubmit after ANY crash or ambiguous outcome and the table applies
-    it at most once."""
-    if manifest is None:
-        return {}
-    return {str(k): int(v) for k, v in manifest.get("txns", {}).items()}
-
-
-def _txn_already_applied(
-    prev: dict | None, producer_txn: tuple[str, int] | None
-) -> bool:
-    if producer_txn is None:
-        return False
-    app, version = producer_txn
-    if not app or not isinstance(app, str):
-        raise ValueError(f"producer_txn app_id must be a non-empty string, got {app!r}")
-    recorded = table_txns(prev).get(app)
-    return recorded is not None and recorded >= int(version)
-
-
-def _record_txns(
-    manifest: dict, prev: dict | None, producer_txn: tuple[str, int] | None
-) -> None:
-    txns = table_txns(prev)
-    if producer_txn is not None:
-        app, version = producer_txn
-        txns[app] = max(txns.get(app, int(version)), int(version))
-    if txns:
-        manifest["txns"] = txns
+    """Maintenance commits (compaction, delta fold) reproduce the SAME
+    logical state, so the sequenced-CDC high-water mark — and the
+    sequenced-writer lease (`writer_id`, see _require_seq_writer_fence)
+    and the schema — of the superseded manifest carry over unchanged.
+    One spot for the idiom — it appears in every maintenance commit
+    path, and a hand-copied conditional spread is exactly the kind a
+    new path forgets (dropping writer_id in a compaction would silently
+    unfence the table; dropping schema would roll the table back to the
+    legacy single-column contract)."""
+    return {k: prev[k] for k in ("max_seq", "writer_id", "schema") if k in prev}
 
 
 def seq_writer_id_for_checkpoint(checkpoint_dir: str) -> str:
@@ -1120,28 +808,23 @@ def _require_seq_writer_fence(
     basis_name: str | None,
     seq_bounds: tuple[int, int] | None,
     writer_id: str | None,
-    takeover: bool,
-    lease_ttl_ms: int | None = None,
 ) -> None:
     """Single-writer fence for SEQUENCED tables (called only when the
     batch carries a `seq` column). The sequenced-CDC fold depends on the
     producer's total order, so two independent writers on one table are
     a protocol error — but the per-writer guards alone cannot see each
     other: a foreign writer whose checkpointed batch ids restart at 0
+    (e.g. a second ingest started on the table with a fresh checkpoint)
     lands on the REPLAY path (same id already committed), reads a basis
     strictly older than 0 (i.e. none), sails past the max_seq monotone
     guard, and its manifest — built from an empty basis — silently drops
     every delta the real writer committed. Two fences close that:
 
     1. WRITER LEASE (when `writer_id` is given): the newest manifest's
-       recorded writer_id IS the lease. A different writer must pass
-       `takeover=True` and start a fresh batch id above the owner's
-       newest (the legal handoff; seq continuity is then enforced by the
-       monotone guard against the owner's max_seq). A fenced table also
-       rejects anonymous sequenced appends — the owner declared
-       single-writer. Fencing-token atomicity comes from the log store:
-       losing a check-then-publish race flips the expected listing, so
-       the publish fails ConcurrentCommitError rather than interleaving.
+       recorded writer_id IS the lease, and any other writer is refused.
+       A fenced table also rejects anonymous sequenced appends — the
+       owner declared single-writer. The checkpointed ingest derives its
+       writer_id from the checkpoint (seq_writer_id_for_checkpoint).
     2. REPLAY-BOUNDS TRIPWIRE (always): a same-id commit is only a legal
        replay if it reproduces the recorded max_seq high-water mark
        (same writer + same checkpoint => same batch content => same
@@ -1150,27 +833,11 @@ def _require_seq_writer_fence(
        different content is indistinguishable by construction — that
        residue is what the writer lease exists for.)
 
-    Pinned cross-process by examples/concurrent_writers_probe.py --seq
-    and tests/test_seq_writer_fence.py."""
-    if writer_id is not None and isinstance(_LOG_STORE, HadoopRenameLogStore):
-        # the fence's worst-case atomicity leans on the log store's
-        # conditional publish; the rename store's check-then-rename is
-        # NOT atomic, so two producers racing an EMPTY (or equally
-        # stale) listing can both pass this fence and silently clobber.
-        # The single checkpointed writer stays safe (no race to lose) —
-        # warn loudly instead of breaking it, once per table
-        key = f"rename-fence:{state_dir}"
-        if key not in _RENAME_FENCE_WARNED:
-            _RENAME_FENCE_WARNED.add(key)
-            _LOG.warning(
-                "sequenced-writer fence on %s is ADVISORY under the "
-                "default HadoopRenameLogStore: its publish is not atomic, "
-                "so simultaneous foreign producers racing the same stale "
-                "listing are not excluded — set "
-                "SPARK_GRAFT_LOG_STORE=filelock|arbiter for multi-writer "
-                "fencing guarantees",
-                state_dir,
-            )
+    Both checks read the listing the writer snapshotted; the rename
+    store's check-then-rename is not atomic, so two producers racing
+    the same stale listing at the same instant are detected only as far
+    as the store's successor check sees them. Pinned by
+    tests/test_seq_writer_fence.py."""
     if not listing_snapshot:
         return
     newest_name = listing_snapshot[-1]
@@ -1188,82 +855,15 @@ def _require_seq_writer_fence(
             raise ConcurrentCommitError(
                 f"sequenced table {state_dir} is fenced to writer "
                 f"{owner!r}; anonymous sequenced appends are rejected — "
-                "pass the owning writer_id (or takeover=True under a new "
-                "writer_id to claim the table)"
+                "pass the owning writer_id"
             )
     elif owner is not None and owner != writer_id:
-        if not takeover and lease_ttl_ms is not None:
-            # LEASE-TTL EXPIRY (r12, VERDICT r11 ask #6, default-off):
-            # the newest manifest's FILE MTIME is the owner's heartbeat
-            # — every commit refreshes it, and a quiet owner can renew
-            # with heartbeat_partitioned_state (a no-op 'x' commit). A
-            # foreign writer that opts into a TTL may claim the lease
-            # WITHOUT a manual takeover flag once the heartbeat is
-            # older than the TTL; below it, the claim is refused with
-            # the remaining time named. The takeover itself still obeys
-            # the manual-takeover safety rules (fresh batch id above
-            # the owner's newest + the max_seq monotone guard), and a
-            # usurped owner that wakes up later is fenced loudly on its
-            # next append — it cannot clobber the new lineage. Choose
-            # the TTL well above the owner's worst-case commit gap: an
-            # owner merely PAUSED past the TTL (GC, partition) is
-            # evicted exactly like a dead one (the classic lease
-            # trade, same as FileLockLogStore.LOCK_TTL_MS).
-            fs, _, jvm = _fs_and_path(spark, state_dir)
-            try:
-                st = fs.getFileStatus(
-                    jvm.org.apache.hadoop.fs.Path(
-                        f"{_manifest_dir(state_dir)}/{newest_name}.json"
-                    )
-                )
-            except Exception as stat_err:
-                # heartbeat UNREADABLE (concurrent vacuum of the listed
-                # manifest, or an FS hiccup): expiry cannot be PROVEN,
-                # and the safe failure direction for a lease is to
-                # refuse the claim — a retry re-lists and re-stats
-                raise ConcurrentCommitError(
-                    f"lease-TTL claim of {state_dir} by writer "
-                    f"{writer_id!r} refused: the owner's heartbeat "
-                    f"({newest_name}) could not be read ({stat_err}); "
-                    "expiry is unprovable — retry with a fresh listing"
-                ) from stat_err
-            age_ms = jvm.java.lang.System.currentTimeMillis() - st.getModificationTime()
-            if age_ms <= lease_ttl_ms:
-                raise ConcurrentCommitError(
-                    f"sequenced table {state_dir} is owned by writer "
-                    f"{owner!r} and its lease is LIVE (last heartbeat "
-                    f"{age_ms} ms ago, TTL {lease_ttl_ms} ms) — writer "
-                    f"{writer_id!r} may claim it only once the heartbeat "
-                    f"is older than the TTL (or with takeover=True after "
-                    "the owner is verifiably stopped)"
-                )
-            _LOG.warning(
-                "sequenced-writer lease on %s EXPIRED (owner %r silent "
-                "for %d ms > TTL %d ms): writer %r is claiming the "
-                "table under the takeover rules",
-                state_dir,
-                owner,
-                age_ms,
-                lease_ttl_ms,
-                writer_id,
-            )
-        elif not takeover:
-            raise ConcurrentCommitError(
-                f"sequenced table {state_dir} is owned by writer "
-                f"{owner!r}; writer {writer_id!r} must not append — a "
-                "second sequenced producer cannot preserve the log's "
-                "total order (pass takeover=True to claim the table "
-                "after the owner is stopped, or lease_ttl_ms to claim "
-                "automatically once the owner's heartbeat expires)"
-            )
-        newest_batch = _batch_id_of(newest_name)
-        if batch_id <= newest_batch:
-            raise ConcurrentCommitError(
-                f"sequenced-writer takeover of {state_dir} must start a "
-                f"new batch id above the owner's newest ({newest_batch}); "
-                f"got {batch_id} — replaying the previous owner's ids "
-                "would clobber its lineage"
-            )
+        raise ConcurrentCommitError(
+            f"sequenced table {state_dir} is owned by writer "
+            f"{owner!r}; writer {writer_id!r} must not append — a "
+            "second sequenced producer cannot preserve the log's "
+            "total order"
+        )
     same_id = [v for v in listing_snapshot if _batch_id_of(v) == batch_id]
     if same_id and seq_bounds is not None:
         existing = (
@@ -1301,8 +901,7 @@ def _require_owner_for_seqfree_append(
     silently — and the new manifest even INHERITED the owner's writer_id,
     laundering the foreign rows as the owner's). The owner itself may
     append seq-free batches (same writer_id); everyone else is rejected
-    loudly. Takeover of a fenced table stays a SEQUENCED operation (the
-    monotone guard needs seq bounds to hand the lineage over safely)."""
+    loudly."""
     if not listing_snapshot:
         return
     newest_name = listing_snapshot[-1]
@@ -1317,8 +916,7 @@ def _require_owner_for_seqfree_append(
             f"table {state_dir} is fenced to sequenced writer {owner!r}; "
             f"this seq-FREE append from writer_id={writer_id!r} is "
             "rejected — a fenced table accepts appends only from its "
-            "owner (pass the owning writer_id, or claim the lease with a "
-            "sequenced takeover batch)"
+            "owner (pass the owning writer_id)"
         )
 
 
@@ -1376,10 +974,9 @@ def _write_manifest(
     expected: tuple | None = None,
 ) -> None:
     """Publish a manifest through the installed log store. `expected` is
-    the writer's basis listing snapshot: when given, the store must
-    reject the commit (ConcurrentCommitError) if any foreign commit
-    landed since — atomically, for a conditional-put store; optimistically
-    check-then-publish for the default rename store. expected=None is the
+    the writer's basis listing snapshot: when given, the store rejects
+    the commit (ConcurrentCommitError) if any foreign commit landed
+    since (optimistic check-then-publish). expected=None is the
     unconditional publish (tests, bootstrap paths)."""
     _LOG_STORE.commit(
         spark, _manifest_dir(state_dir), _manifest_name(manifest), manifest, expected
@@ -1693,13 +1290,9 @@ def merge_batch_into_partitioned_state(
     batch_df: DataFrame,
     batch_id: int,
     range_width: int | None = None,
-    writer_id: str | None = None,
-    takeover: bool = False,
     merge_schema: bool = False,
     expected_schema_version: int | None = None,
-    lease_ttl_ms: int | None = None,
-    producer_txn: tuple[str, int] | None = None,
-) -> bool:
+) -> None:
     """foreachBatch body: copy-on-write merge of one micro-batch.
 
     Only buckets that receive at least one delta key are read, merged and
@@ -1729,7 +1322,10 @@ def merge_batch_into_partitioned_state(
     Delta/Iceberg file statistics.
 
     `merge_schema`/`expected_schema_version`: ADD-COLUMN evolution and
-    the stale-schema writer fence (see the table-schema section above)."""
+    the stale-schema writer fence (see the table-schema section above).
+
+    The merge carries no writer_id, so a table fenced by a sequenced
+    ingest rejects it (see _require_seq_writer_fence)."""
     width = range_width or RANGE_WIDTH
     # one listing serves both the merge basis and the optimistic-commit
     # snapshot, so the two cannot disagree with each other
@@ -1739,13 +1335,6 @@ def merge_batch_into_partitioned_state(
     prev = (
         None if basis_name is None else _read_manifest(spark, state_dir, basis_name)
     )
-    if _txn_already_applied(prev, producer_txn):
-        _LOG.info(
-            "skipping producer txn %s: version already applied in %s",
-            producer_txn,
-            state_dir,
-        )
-        return False
     _require_schema_version(prev, expected_schema_version, state_dir)
     retired = table_retired(prev)
     values, evolved = _evolve_values_for_batch(
@@ -1758,7 +1347,8 @@ def merge_batch_into_partitioned_state(
         # (checked BEFORE the batch aggregation runs any Spark job)
         raise ValueError(
             f"state ranged with range_width={prev['range_width']}, code has "
-            f"{width}; migrate explicitly with rerange_partitioned_state"
+            f"{width}; re-ranging is a full-table rewrite, never an "
+            "implicit merge"
         )
     if prev is not None:
         # a CoW merge on top of pending deltas would order the new batch
@@ -1776,13 +1366,11 @@ def merge_batch_into_partitioned_state(
             prev,
             basis_name,
             seq_bounds,
-            writer_id,
-            takeover,
-            lease_ttl_ms,
+            writer_id=None,
         )
     else:
         _require_owner_for_seqfree_append(
-            spark, state_dir, listing_snapshot, prev, basis_name, writer_id
+            spark, state_dir, listing_snapshot, prev, basis_name, writer_id=None
         )
     prev_buckets: dict[str, str] = dict(prev["buckets"]) if prev else {}
 
@@ -1941,10 +1529,7 @@ def merge_batch_into_partitioned_state(
     }
     _record_schema(cow_manifest, values, schema_version, retired)
     _record_max_seq(cow_manifest, prev, seq_bounds)
-    _record_txns(cow_manifest, prev, producer_txn)
-    if writer_id is not None and "seq" in batch_df.columns:
-        cow_manifest["writer_id"] = writer_id
-    elif prev and "writer_id" in prev:
+    if prev and "writer_id" in prev:
         cow_manifest["writer_id"] = prev["writer_id"]  # keep the fence intact
     _write_manifest(
         spark,
@@ -1952,7 +1537,6 @@ def merge_batch_into_partitioned_state(
         cow_manifest,
         expected=listing_snapshot,
     )
-    return True
 
 
 def _bucket_stats(
@@ -2226,9 +1810,9 @@ def expire_partitioned_versions(
     pre-compaction files too).
 
     `debris_min_age_ms` guards NEVER-referenced dirs (see
-    DEBRIS_MIN_AGE_MS above): under multi-writer optimistic appends a
-    fresh unreferenced dir may be an IN-FLIGHT attempt, so it is
-    reclaimed only once older than the horizon. Pass 0 from a context
+    DEBRIS_MIN_AGE_MS above): when retention runs while the writer is
+    staging, a fresh unreferenced dir may be its IN-FLIGHT attempt, so it
+    is reclaimed only once older than the horizon. Pass 0 from a context
     that provably has no concurrent writer (single-writer housekeeping,
     tests) to reclaim lost-race debris immediately."""
     import time as _time
@@ -2670,10 +2254,6 @@ def _bucket_data_files(fs, jvm, bucket_version_dir: str) -> tuple[int, int]:
     return n, total
 
 
-def _bucket_data_file_count(fs, jvm, bucket_version_dir: str) -> int:
-    return _bucket_data_files(fs, jvm, bucket_version_dir)[0]
-
-
 def compact_partitioned_state(
     spark: SparkSession,
     state_dir: str,
@@ -2793,116 +2373,6 @@ def compact_partitioned_state(
     return len(fragmented)
 
 
-def rerange_partitioned_state(
-    spark: SparkSession, state_dir: str, new_width: int
-) -> int:
-    """Re-range migration (liquid-reclustering twin): rewrite the LATEST
-    state onto a new range width and commit it — the explicit operation
-    the merge's range_width drift error points at. This is a full-table
-    rewrite BY CONTRACT (any key may change buckets when the width
-    does): one shuffle partitioned by the new bucket id, the same shape
-    a table format's re-clustering/OPTIMIZE FULL pays. Use it when the
-    width chosen at table creation stops matching the key domain — the
-    exact tuning the zone-map fixture derives automatically up front.
-
-    Commits like a compaction: SAME batch_id under the next 'x{seq}'
-    suffix — the identical logical state, physically re-partitioned —
-    so time travel to older batches keeps reading the OLD-width
-    manifests untouched, and retention eventually vacuums the old-width
-    bucket dirs once no kept manifest references them. Zone-map stats
-    are recomputed for every new bucket (one read-back job, same as a
-    merge's — here O(table) because the rewrite is O(table)).
-
-    Crash-replay interplay (test_replay_after_rerange): a replay of the
-    final batch with the stream's OLD width merges against its old-width
-    predecessor and recommits the plain manifest — which the re-range's
-    'x{seq}' commit supersedes (newest-per-batch wins), so the state is
-    untouched; a replay with the NEW width hits the old-width
-    predecessor and fails with the drift error. Either way, never
-    silent corruption. Returns the new bucket count."""
-    if new_width < 1:
-        raise ValueError(f"range_width must be >= 1, got {new_width}")
-    versions = _list_manifests(spark, state_dir)
-    if not versions:
-        raise ValueError(f"no committed state to re-range in {state_dir}")
-    manifest = _read_manifest(spark, state_dir, versions[-1])
-    _require_no_pending_deltas(manifest, "rerange_partitioned_state")
-    if manifest["range_width"] == new_width:
-        return len(manifest["buckets"])
-    if not manifest["buckets"]:
-        # empty table: just commit the width change
-        batch_id = manifest["batch_id"]
-        seq = _next_compaction_seq(versions, batch_id)
-        _write_manifest(
-            spark,
-            state_dir,
-            {
-                "batch_id": batch_id,
-                "compaction_seq": seq,
-                "range_width": new_width,
-                "buckets": {},
-                "stats": {},
-                **_inherit_max_seq(manifest),
-            },
-            expected=tuple(versions),
-        )
-        return 0
-
-    batch_id = manifest["batch_id"]
-    seq = _next_compaction_seq(versions, batch_id)
-    vname = _attempt_name(f"v{batch_id:09d}x{seq:04d}")
-
-    df = (
-        # evolved columns rewrite with the table (same schema note as
-        # compact_partitioned_state)
-        spark.read.schema(_state_schema_for(table_values(manifest)))
-        .parquet(*_bucket_paths(state_dir, manifest))
-        .withColumn("bucket", bucket_of(F.col("key"), new_width))
-    )
-    staging = f"{state_dir}/.staging/{vname}"
-    df.repartition(F.col("bucket")).write.mode("overwrite").partitionBy(
-        "bucket"
-    ).parquet(staging)
-
-    fs, _, jvm = _fs_and_path(spark, state_dir)
-    hpath = jvm.org.apache.hadoop.fs.Path
-    new_bucket_ids = sorted(
-        int(str(s.getPath().getName()).split("=")[1])
-        for s in fs.listStatus(hpath(staging))
-        if s.isDirectory() and str(s.getPath().getName()).startswith("bucket=")
-    )
-    new_buckets: dict[str, str] = {}
-    for b in new_bucket_ids:
-        src = hpath(f"{staging}/bucket={b}")
-        dst = hpath(f"{state_dir}/buckets/b{b}/{vname}")
-        fs.mkdirs(hpath(f"{state_dir}/buckets/b{b}"))
-        if not fs.rename(src, dst):
-            raise IOError(f"re-range move failed for bucket {b}: {src} -> {dst}")
-        new_buckets[str(b)] = vname
-    fs.delete(hpath(staging), True)
-
-    stats = _bucket_stats(
-        spark,
-        [f"{state_dir}/buckets/b{b}/{vname}" for b in new_bucket_ids],
-        new_width,
-        table_values(manifest),
-    )
-    _write_manifest(
-        spark,
-        state_dir,
-        {
-            "batch_id": batch_id,
-            "compaction_seq": seq,
-            "range_width": new_width,
-            "buckets": new_buckets,
-            "stats": {str(b): s for b, s in stats.items()},
-            **_inherit_max_seq(manifest),
-        },
-        expected=tuple(versions),
-    )
-    return len(new_buckets)
-
-
 # --- merge-on-read (deletion-vector-style scattered updates) -----------------
 #
 # The copy-on-write MERGE's measured boundary (SCALE.md): a SCATTERED
@@ -2920,7 +2390,7 @@ def rerange_partitioned_state(
 # compact_deltas_into_base folds the pending deltas into the buckets
 # they touch under a same-batch-id 'x' commit, restoring the zero-cost
 # read path. Manifest-pruned readers whose guarantees are base-only
-# (summary, keyrange, CDF, compaction, re-range) REFUSE while deltas are
+# (summary, keyrange, compaction) REFUSE while deltas are
 # pending — the honest contract, loud rather than stale.
 
 
@@ -2930,16 +2400,10 @@ def append_delta_batch(
     batch_df: DataFrame,
     batch_id: int,
     range_width: int | None = None,
-    expect_new: bool = False,
     writer_id: str | None = None,
-    takeover: bool = False,
     merge_schema: bool = False,
     expected_schema_version: int | None = None,
-    outage_retry_s: float = 0.0,
-    lease_ttl_ms: int | None = None,
-    producer_txn: tuple[str, int] | None = None,
-    stats: dict | None = None,
-) -> bool:
+) -> None:
     """Merge-on-read write path: commit one micro-batch as a DELTA file —
     no bucket is read or rewritten, so a uniformly scattered batch costs
     O(|batch|) instead of CoW's O(all touched buckets). Same replace-CDC
@@ -2948,17 +2412,7 @@ def append_delta_batch(
     manifest rewrite to the same state), same optimistic concurrency
     check at the commit point.
 
-    `expect_new=True` (the multi-writer optimistic path) turns an
-    ALREADY-COMMITTED same batch id into a loud ConcurrentCommitError
-    instead of a replay: replay idempotence assumes same id = same
-    logical content (the single checkpointed writer's guarantee), but an
-    optimistic writer allocating ids from a stale listing can collide
-    with a FOREIGN batch under the same id — the expected-listing check
-    alone cannot catch that, because by this function's own snapshot the
-    foreign manifest already exists and a replay would OVERWRITE it
-    (found live by examples/concurrent_writers_probe.py at 4 writers).
-
-    `writer_id`/`takeover`: the sequenced-table single-writer fence (see
+    `writer_id`: the sequenced-table single-writer fence (see
     _require_seq_writer_fence) — checked only when the batch carries a
     `seq` column. The checkpointed ingest passes
     seq_writer_id_for_checkpoint(checkpoint_dir) automatically.
@@ -2966,42 +2420,19 @@ def append_delta_batch(
     `merge_schema`/`expected_schema_version`: ADD-COLUMN evolution and
     the stale-schema writer fence (see the table-schema section above).
     An evolved append writes its delta under the NEW schema; older delta
-    and bucket files are never rewritten — readers back-fill NULL.
-
-    `outage_retry_s` (arbiter deployments): how long to keep retrying
-    the ambiguity RECONCILIATION when the commit outcome is unknown and
-    the arbiter is unreachable (service blip or restart). 0 = fail-stop
-    immediately (default; the checkpointed streamed writer resolves on
-    replay). See _reconcile_with_outage_retry for why the retry target
-    is the reconciliation, never the append itself."""
+    and bucket files are never rewritten — readers back-fill NULL."""
     listing_snapshot = tuple(_list_manifests(spark, state_dir))
-    if expect_new and any(_batch_id_of(v) == batch_id for v in listing_snapshot):
-        raise ConcurrentCommitError(
-            f"batch id {batch_id} already committed in {state_dir} — a "
-            "foreign writer won the id between allocation and snapshot; "
-            "reallocate from a fresh listing"
-        )
     older = [v for v in listing_snapshot if _batch_id_of(v) < batch_id]
     basis_name = older[-1] if older else None
     prev = (
         None if basis_name is None else _read_manifest(spark, state_dir, basis_name)
     )
     width = range_width or (prev["range_width"] if prev else RANGE_WIDTH)
-    if _txn_already_applied(prev, producer_txn):
-        # idempotent resubmission (Delta txnAppId/txnVersion): this
-        # producer transaction is already folded into the lineage —
-        # a crash-and-resubmit or an ambiguous outcome resolved by the
-        # producer retrying lands here and writes NOTHING
-        _LOG.info(
-            "skipping producer txn %s: version already applied in %s",
-            producer_txn,
-            state_dir,
-        )
-        return False
     if prev is not None and prev["range_width"] != width:
         raise ValueError(
             f"state ranged with range_width={prev['range_width']}, code has "
-            f"{width}; migrate explicitly with rerange_partitioned_state"
+            f"{width}; re-ranging is a full-table rewrite, never an "
+            "implicit merge"
         )
     _require_schema_version(prev, expected_schema_version, state_dir)
     retired = table_retired(prev)
@@ -3021,8 +2452,6 @@ def append_delta_batch(
             basis_name,
             seq_bounds,
             writer_id,
-            takeover,
-            lease_ttl_ms,
         )
     else:
         _require_owner_for_seqfree_append(
@@ -3061,368 +2490,11 @@ def append_delta_batch(
     }
     _record_schema(manifest, values, schema_version, retired)
     _record_max_seq(manifest, prev, seq_bounds)
-    _record_txns(manifest, prev, producer_txn)
     if writer_id is not None and "seq" in batch_df.columns:
         manifest["writer_id"] = writer_id
     elif prev and "writer_id" in prev:
         manifest["writer_id"] = prev["writer_id"]  # keep the fence intact
-    try:
-        _write_manifest(spark, state_dir, manifest, expected=listing_snapshot)
-    except ArbiterUnavailableError as err:
-        # observability (r13): an AMBIGUOUS publish (response lost; the
-        # commit may or may not have landed) that the attempt-exact
-        # reconciliation RESOLVED — either way: verified-committed
-        # (return) or verified-not-committed (the retry-safe
-        # ConcurrentCommitError). The arbiter-failover probe asserts on
-        # this counter. Unresolved ambiguities raise
-        # ArbiterUnavailableError and are NOT counted.
-        try:
-            _reconcile_with_outage_retry(
-                spark, state_dir, batch_id, vname, err, outage_retry_s
-            )
-        except ConcurrentCommitError:
-            if stats is not None:
-                stats["ambiguities_resolved"] = (
-                    stats.get("ambiguities_resolved", 0) + 1
-                )
-            raise
-        if stats is not None:
-            stats["ambiguities_resolved"] = (
-                stats.get("ambiguities_resolved", 0) + 1
-            )
-    return True
-
-
-def _reconcile_with_outage_retry(
-    spark: SparkSession,
-    state_dir: str,
-    batch_id: int,
-    vname: str,
-    err: ArbiterUnavailableError,
-    outage_retry_s: float,
-) -> None:
-    """Resolve an ambiguous publish, retrying the RECONCILIATION (never
-    the append) while the arbiter is down — the writer behavior a real
-    service blip or restart needs. Blindly re-appending after an
-    unresolved ambiguity double-appends whenever the lost attempt had in
-    fact committed (e.g. finalize ran, the mark_complete ack was lost);
-    re-running _reconcile_ambiguous_append for the EXACT attempt vname
-    is idempotent and converges to committed / retry-safe-conflict once
-    the service answers.
-
-    Terminal-unknowable verdicts (same-id compaction, vanished same-id
-    manifest, below the retention keep window) re-raise the ORIGINAL
-    error object; retrying those would re-derive the same verdict, so
-    they propagate immediately — distinguished by object identity from
-    a FRESH ArbiterUnavailableError raised by the store while the
-    reconciliation itself was reading (arbiter still down), which is
-    the retryable case."""
-    import time as _time
-
-    deadline = _time.monotonic() + outage_retry_s
-    while True:
-        try:
-            _reconcile_ambiguous_append(spark, state_dir, batch_id, vname, err)
-            return
-        except ArbiterUnavailableError as still:
-            if still is err:
-                # terminal verdict: mark it so no outer retry loop ever
-                # mistakes it for a transient read failure and re-appends
-                # a batch that may already be folded into the base
-                still.terminal_ambiguity = True
-                raise
-            if _time.monotonic() >= deadline:
-                raise
-            _LOG.warning(
-                "arbiter unavailable during ambiguity reconciliation of "
-                "batch %s in %s — retrying (%s)",
-                batch_id,
-                state_dir,
-                still,
-            )
-            _time.sleep(min(1.0, max(0.1, outage_retry_s / 30)))
-
-
-def _reconcile_ambiguous_append(
-    spark: SparkSession,
-    state_dir: str,
-    batch_id: int,
-    vname: str,
-    err: ArbiterUnavailableError,
-) -> None:
-    """Resolve an AMBIGUOUS commit outcome on the arbiter path: the
-    transport failed mid-call, so the CAS may or may not have been
-    applied server-side (a real conditional-put service can apply the
-    write and lose the response — modeled by FaultInjectingArbiter's
-    fail_after). Deleting state or blindly retrying would both be wrong;
-    instead, re-list (which runs the reader self-heal, finishing any
-    CAS-won-but-unfinalized commit — possibly OURS) and inspect the
-    manifest that actually holds this batch id:
-
-    - it exists and references OUR attempt-unique delta dir -> the commit
-      WON; return success (exactly-once, no duplicate append);
-    - it exists referencing someone else's attempt -> we definitively
-      lost to a foreign writer; ConcurrentCommitError (safe to retry
-      with a fresh basis — nothing of ours was recorded);
-    - no manifest for this batch id after self-heal -> the request never
-      reached the arbiter; ConcurrentCommitError (equally safe to
-      retry — the optimistic loop re-lists and re-attempts).
-
-    If the reconciliation read ITSELF fails (arbiter still down), the
-    original error propagates — fail-stop, resolve on the next replay.
-    That includes PER-MANIFEST reads inside the scan: only a store
-    NOT-FOUND (concurrent vacuum) may be skipped; any other read failure
-    leaves that manifest's delta list unknown — it might name our
-    attempt — so treating it as vacuumed could double-append (ADVICE
-    r10). Two more unknowable negatives fail-stop for the same reason:
-    a SAME-ID manifest that vanished between listing and read, and a
-    batch id that has fallen below the retention keep window (plain
-    manifests are deleted wholesale there, with no same-id 'x' commit
-    left to prove anything).
-
-    The positive proof scans EVERY current manifest's delta list, newest
-    first, not just the newest same-id commit: a concurrent COMPACTION
-    can supersede our won manifest with an empty-delta 'x' commit, and a
-    LATER batch's manifest inherits our delta name — either would make a
-    newest-same-id-only check misread a won commit as foreign and let
-    the optimistic loop append the batch TWICE (caught by review in
-    r10). Conversely, when same-id commits exist, none list our attempt,
-    and one is a compaction, the outcome stays unknowable (our delta may
-    be folded and its plain manifest vacuumed) — re-raise the original
-    error rather than guess."""
-    versions = _list_manifests(spark, state_dir)  # triggers self-heal
-    vanished: set[str] = set()
-    for v in reversed(versions):
-        try:
-            m = _read_manifest(spark, state_dir, v)
-        except Exception as read_err:
-            if is_commit_not_found(read_err):
-                # vacuumed between the listing and this read (concurrent
-                # retention): genuinely absent. Recorded, not ignored —
-                # a vanished SAME-ID manifest may have listed our attempt,
-                # so the negative branches below must treat it as
-                # unknowable, not as foreign
-                vanished.add(v)
-                continue
-            # ANY OTHER read failure (FS hiccup, arbiter still flaking —
-            # exactly the regime this function runs in) leaves this
-            # manifest's delta list UNKNOWN; it may reference our own
-            # attempt, so falling through to "nothing landed — retry"
-            # could publish the batch a second time (ADVICE r10).
-            # Fail-stop as a FRESH unavailability (never `raise err`
-            # itself — object identity marks TERMINAL verdicts for
-            # _reconcile_with_outage_retry, and a transient read flake is
-            # the retryable case, not a terminal one): re-running the
-            # reconciliation is idempotent and resolves once reads work.
-            raise ArbiterUnavailableError(
-                f"manifest {v} unreadable during ambiguity reconciliation "
-                f"of batch {batch_id} in {state_dir} ({read_err}); original "
-                f"ambiguity: {err}"
-            ) from read_err
-        if vname in m.get("deltas", []):
-            _LOG.warning(
-                "ambiguous arbiter outcome for batch %s in %s reconciled "
-                "as COMMITTED (own attempt %s found in manifest %s): %s",
-                batch_id,
-                state_dir,
-                vname,
-                v,
-                err,
-            )
-            return
-    same_id = [v for v in versions if _batch_id_of(v) == batch_id]
-    if same_id:
-        if any("x" in v for v in same_id) or any(v in vanished for v in same_id):
-            # a compaction already superseded this batch id (our delta may
-            # have been folded and its plain manifest vacuumed), or a
-            # same-id manifest vanished before we could read its delta
-            # list (it may have been OURS, mid-vacuum) — neither COMMITTED
-            # nor LOST is provable; fail stop
-            raise err
-        raise ConcurrentCommitError(
-            f"batch id {batch_id} in {state_dir} was committed by a "
-            f"foreign attempt while our publish failed ambiguously "
-            f"({err}); retry with a fresh basis"
-        ) from err
-    if versions and batch_id < _batch_id_of(versions[0]):
-        # the batch id has fallen OUT of the retention keep window:
-        # expire_partitioned_versions deletes plain manifests wholesale
-        # once their batch id leaves the newest-`keep` set — no same-id
-        # 'x' commit remains to route into the compaction branch above,
-        # so an empty same_id no longer proves "nothing landed"; our
-        # commit may have WON, been folded, and been vacuumed. Fail stop
-        # rather than retry into a double-append (ADVICE r10).
-        raise err
-    raise ConcurrentCommitError(
-        f"publish of batch {batch_id} in {state_dir} failed before the "
-        f"arbiter recorded it ({err}); nothing landed — retry with a "
-        "fresh basis"
-    ) from err
-
-
-def append_delta_batch_optimistic(
-    spark: SparkSession,
-    state_dir: str,
-    batch_df: DataFrame,
-    range_width: int | None = None,
-    max_attempts: int = 20,
-    stats: dict | None = None,
-    outage_retry_s: float = 0.0,
-    producer_txn: tuple[str, int] | None = None,
-) -> int | None:
-    """MULTI-WRITER merge-on-read append: allocate the next batch id from
-    the current manifest head and retry on ConcurrentCommitError — the
-    Delta-style optimistic concurrency loop (commit version = latest+1,
-    re-read the basis and try again on a lost race). Returns the batch id
-    that actually committed.
-
-    Only valid for ORDER-COMMUTATIVE batches, and the contract is checked
-    loudly up front:
-    - a `seq` column is rejected (the sequenced-CDC contract requires the
-      PRODUCER's total order; optimistic re-allocation would let a slower
-      writer commit earlier log offsets under a later batch id and trip —
-      or worse, silently violate — the max_seq high-water guard);
-    - `op='delete'` tombstones are rejected (a delete discards prior
-      state, so the fold depends on where the race lands this batch in
-      commit order; pure upserts ADD to a key's running total and
-      commute across batches).
-
-    Delivery contract: AT-LEAST-ONCE by default — there is no
-    checkpoint here, so a caller that crashes after the commit and
-    re-submits the same batch appends it twice. Pass
-    `producer_txn=(app_id, version)` for EXACTLY-ONCE (r12 — Delta's
-    txnAppId/txnVersion idempotent-writes contract): the manifest chain
-    carries a per-app high-water version map, a submission whose
-    version is <= the recorded mark is SKIPPED (returns None, nothing
-    written), and the check re-runs against the refreshed basis after
-    every lost race — so a crashed-and-resubmitted batch, or one whose
-    first attempt resolved ambiguously, applies at most once even
-    across writer processes. Versions must increase monotonically per
-    app_id; the map rides every manifest (maintenance commits inherit
-    it like the writer lease). A lost race leaves that attempt's delta dir as
-    debris — the same retention-reclaimed orphan class as a crashed
-    writer's; the committed manifest never references it. The refreshed basis on each retry is
-    what carries forward OTHER writers' delta lists, so concurrent
-    appends accumulate instead of clobbering (exercised cross-process by
-    examples/concurrent_writers_probe.py and in-process by
-    tests/test_partitioned_upsert.py)."""
-    if isinstance(_LOG_STORE, HadoopRenameLogStore):
-        # The rename store's check-then-publish is NOT atomic: two
-        # optimistic writers can both pass expect_new and the expected-
-        # listing check in the gap and publish the same v{id} manifest via
-        # overwrite-rename — the silent lost-update this API exists to
-        # prevent. Refuse up front instead of racing; the single-writer
-        # streamed path (append_delta_batch with checkpointed ids) stays
-        # valid on the rename store.
-        raise ValueError(
-            "append_delta_batch_optimistic requires an atomic commit "
-            "store; the default HadoopRenameLogStore's check-then-rename "
-            "can publish two same-id manifests under a race. Set "
-            "SPARK_GRAFT_LOG_STORE=filelock|inprocess|arbiter (or "
-            "set_log_store(...)) for multi-writer tables"
-        )
-    if "seq" in batch_df.columns:
-        raise ValueError(
-            "append_delta_batch_optimistic: sequenced-CDC batches (seq "
-            "column) need producer-ordered batch ids — use "
-            "append_delta_batch with explicit ids"
-        )
-    # one filter+take(1) job per CALL (not per retry attempt) buys the
-    # loud contract at the entry point; upsert-only batches pay a single
-    # column-pruned scan before the aggregation scans the batch anyway
-    if "op" in batch_df.columns and not batch_df.filter(
-        F.col("op") == F.lit("delete")
-    ).isEmpty():
-        raise ValueError(
-            "append_delta_batch_optimistic: delete tombstones are not "
-            "order-commutative across a lost race — commit them through "
-            "a single sequenced writer"
-        )
-    import time as _time
-
-    last_err: ConcurrentCommitError | None = None
-    deadline = _time.monotonic() + outage_retry_s
-    conflicts = 0
-    # conflicts consume max_attempts; outage retries consume ONLY the
-    # time budget — counting them against max_attempts would cap outage
-    # riding at ~max_attempts seconds regardless of outage_retry_s and
-    # then blame "commit races" that never happened
-    while conflicts < max_attempts:
-        try:
-            versions = _list_manifests(spark, state_dir)
-            if producer_txn is not None and versions:
-                newest = _read_manifest(spark, state_dir, versions[-1])
-                if _txn_already_applied(newest, producer_txn):
-                    _LOG.info(
-                        "optimistic append of producer txn %s skipped: "
-                        "already applied in %s",
-                        producer_txn,
-                        state_dir,
-                    )
-                    return None
-            next_id = max((_batch_id_of(v) for v in versions), default=-1) + 1
-            committed = append_delta_batch(
-                spark,
-                state_dir,
-                batch_df,
-                next_id,
-                range_width,
-                expect_new=True,
-                outage_retry_s=outage_retry_s,
-                producer_txn=producer_txn,
-                stats=stats,
-            )
-            if not committed:
-                # the inner append's own (fresher) basis showed the txn
-                # already applied — a same-txn racer landed between our
-                # listing and its snapshot
-                return None
-            return next_id
-        except ConcurrentCommitError as err:
-            last_err = err
-            conflicts += 1
-            if stats is not None:  # observability for probes/deployments
-                stats["conflicts"] = stats.get("conflicts", 0) + 1
-            # Randomized exponential backoff on a LOST RACE (r13): with
-            # no delay, N writers re-list and re-CAS in lockstep and the
-            # writer with the slowest retry cycle can starve — observed
-            # live in the concurrent-writers probe as one writer losing
-            # all 20 attempts while only 32 commits existed. Full jitter
-            # (AWS-style: sleep ~ U[0, min(cap, base·2^k)]) desynchronizes
-            # the herd; the cap keeps the worst single wait at 1.6 s.
-            # Losing a race is DEFINITE (the arbiter answered), so the
-            # sleep risks no double-apply — it only spaces the retries.
-            # At cluster scale contention grows with writer count, which
-            # makes backoff more load-bearing, not less.
-            import random as _random
-
-            _time.sleep(_random.uniform(0.0, min(1.6, 0.05 * (2 ** min(conflicts, 5)))))
-            continue
-        except ArbiterUnavailableError as exc:
-            # Retrying here is SAFE only because the inner append already
-            # exhausted its own reconciliation-retry budget for any
-            # attempt that actually reached the arbiter (see
-            # _reconcile_with_outage_retry) — the inner deadline starts
-            # AFTER ours, so by the time an unresolved ambiguity
-            # propagates to this handler our budget is spent too and we
-            # re-raise rather than risk re-appending a maybe-committed
-            # batch. Terminal-unknowable verdicts carry an explicit
-            # marker and are never retried. What this handler actually
-            # retries is the READ-ONLY failures: the basis listing, or a
-            # commit the store raised on before anything was recorded.
-            if (
-                getattr(exc, "terminal_ambiguity", False)
-                or outage_retry_s <= 0
-                or _time.monotonic() >= deadline
-            ):
-                raise
-            if stats is not None:
-                stats["outage_retries"] = stats.get("outage_retries", 0) + 1
-            _time.sleep(min(1.0, max(0.1, outage_retry_s / 30)))
-            continue
-    raise ConcurrentCommitError(
-        f"lost {max_attempts} consecutive commit races in {state_dir}"
-    ) from last_err
+    _write_manifest(spark, state_dir, manifest, expected=listing_snapshot)
 
 
 def compact_deltas_into_base(spark: SparkSession, state_dir: str) -> int:
@@ -3522,54 +2594,3 @@ def _require_no_pending_deltas(manifest: dict, op: str) -> None:
             f"{manifest['deltas']}); run compact_deltas_into_base first"
         )
 
-
-def maintain_partitioned_state(
-    spark: SparkSession,
-    state_dir: str,
-    max_pending_deltas: int = 8,
-    max_files_per_bucket: int = 4,
-    keep_versions: int = 3,
-    debris_min_age_ms: int = DEBRIS_MIN_AGE_MS,
-) -> dict:
-    """The table's housekeeping loop, composed in the only safe order —
-    what a production deployment schedules between (or inside quiet
-    windows of) the write stream, the way OPTIMIZE + VACUUM run against
-    a Delta table:
-
-      1. fold pending MoR deltas into the base once they exceed
-         `max_pending_deltas` (bounds read-fold latency: each pending
-         delta adds rows to every reader's sequenced fold);
-      2. compact buckets fragmented past `max_files_per_bucket`
-         (bounds file-count metadata + open costs; runs only on a
-         delta-free latest commit, which step 1 just guaranteed when it
-         ran);
-      3. expire unreferenced versions beyond `keep_versions` LAST —
-         retention after the maintenance commits, so the newly
-         superseded plain commits and folded delta files become
-         vacuumable in the same pass.
-
-    Every step is individually optimistic-concurrency-checked and
-    crash-replayable (same-batch 'x' commits), so a maintenance crash
-    leaves the table readable at the prior commit. Thresholds are
-    per-table policy knobs, not derived: they trade write amplification
-    against read latency and the right point depends on the workload's
-    read/write ratio — the caller owns that trade. Returns the work
-    done: {"deltas_folded": buckets, "buckets_compacted": n,
-    "versions_expired": n}."""
-    if max_pending_deltas < 1:
-        raise ValueError(f"max_pending_deltas must be >= 1, got {max_pending_deltas}")
-    out = {"deltas_folded": 0, "buckets_compacted": 0, "versions_expired": 0}
-    versions = _list_manifests(spark, state_dir)
-    if not versions:
-        return out
-    latest = _read_manifest(spark, state_dir, versions[-1])
-    if len(latest.get("deltas", [])) >= max_pending_deltas:
-        out["deltas_folded"] = compact_deltas_into_base(spark, state_dir)
-    if not _latest_manifest(spark, state_dir).get("deltas"):
-        out["buckets_compacted"] = compact_partitioned_state(
-            spark, state_dir, max_files=max_files_per_bucket
-        )
-    out["versions_expired"] = expire_partitioned_versions(
-        spark, state_dir, keep=keep_versions, debris_min_age_ms=debris_min_age_ms
-    )
-    return out

@@ -1,124 +1,24 @@
-"""Remote-arbiter transport-fault matrix (r10, VERDICT ask #3).
+"""Arbiter transport faults at the store level.
 
-The r9 arbiter service proved cross-process mutual exclusion on a clean
-transport; a real conditional-put service (DynamoDB, S3 If-None-Match)
-also fails in transit: requests lost before the service sees them,
-responses lost AFTER the service applied the call, and plain latency.
-FaultInjectingArbiter models those client-side with deterministic
-budgets; these tests pin the writer-side doctrine for each:
-
-- response lost after CAS  -> ambiguous; the writer reconciles by
-  re-listing (reader self-heal finishes its own pending commit) and
-  returns success without a duplicate append;
-- request lost before CAS  -> nothing landed; reconciliation converts it
-  to a retry-safe ConcurrentCommitError and the optimistic loop lands
-  the batch exactly once;
-- response lost after mark_complete -> the commit is already durable;
-  reconciliation reports success;
-- latency under racing writers -> the contract matrix stays one-winner-
-  per-basis.
-
-The matrix also found (and this round fixed) a live bug: commit() used
-to DELETE its staged file on ArbiterUnavailableError, stranding a
-CAS-won record on nothing and turning the reader self-heal into a loud
-IOError. Cross-process twin: concurrent_writers_probe arbiter leg with
-SPARK_GRAFT_ARBITER_FAULTS set.
+A real conditional-put service (DynamoDB, S3 If-None-Match) also fails in
+transit: a response can be lost AFTER the service applied the call.
+FaultInjectingArbiter models that client-side with deterministic
+budgets. An ambiguous CAS must leave the staged payload in place, so the
+reader self-heal can finish a commit that in fact won: commit() used to
+DELETE its staged file on ArbiterUnavailableError, stranding a CAS-won
+record on nothing and turning the self-heal into a loud IOError.
 """
 
 from __future__ import annotations
 
-import threading
-
 import pytest
 
-from pyspark.sql import functions as F
-
-from pharmaceutical_sales_data_etl_analysis_pipeline_spark.streaming import (
-    partitioned_upsert as pu,
-)
 from pharmaceutical_sales_data_etl_analysis_pipeline_spark.streaming.logstore import (
     ArbiterLogStore,
     ArbiterUnavailableError,
     CommitArbiter,
-    ConcurrentCommitError,
     FaultInjectingArbiter,
 )
-
-
-def _df(spark, rows):
-    return spark.createDataFrame(rows, "key long, amount double")
-
-
-def _fold(spark, state):
-    return {
-        r["key"]: (r["total"], r["n_rows"])
-        for r in pu.read_latest_partitioned_state(spark, state).collect()
-    }
-
-
-def _store(faults: dict) -> tuple[ArbiterLogStore, CommitArbiter]:
-    server = CommitArbiter()
-    return ArbiterLogStore(FaultInjectingArbiter(server, faults)), server
-
-
-def test_response_lost_after_cas_reconciles_as_committed(spark, tmp_path):
-    """THE ambiguous case: the CAS applied server-side, the response died
-    in transit. The writer must neither crash the pipeline nor append
-    twice: reconciliation re-lists (self-heal finishes its own pending
-    commit from the staged file the r10 fix now preserves) and returns
-    success. Exactly-once is checked on the fold."""
-    store, server = _store({"cas": {"fail_after": 1}})
-    prev = pu.set_log_store(store)
-    try:
-        state = str(tmp_path / "state")
-        pu.append_delta_batch(spark, state, _df(spark, [(1, 1.0)]), 0, range_width=16)
-        # this commit's CAS lands but the response is lost -> reconciled
-        pu.append_delta_batch(spark, state, _df(spark, [(2, 2.0)]), 1, range_width=16)
-        assert _fold(spark, state) == {1: (1.0, 1), 2: (2.0, 1)}
-        # the arbiter record was healed to complete by the reconciliation
-        assert all(v is None for v in server._tables[next(iter(server._tables))].values())
-    finally:
-        pu.set_log_store(prev)
-
-
-def test_request_lost_before_cas_retries_exactly_once(spark, tmp_path):
-    """A request that never reached the arbiter lands nothing; the
-    reconciliation proves that by re-listing and raises the retry-safe
-    conflict, so the optimistic loop commits the batch exactly once."""
-    store, _server = _store({})
-    prev = pu.set_log_store(store)
-    try:
-        state = str(tmp_path / "state")
-        pu.append_delta_batch(spark, state, _df(spark, [(1, 1.0)]), 0, range_width=16)
-        store.arbiter._faults["cas"] = {"fail_before": 1}  # after setup
-        stats: dict = {}
-        bid = pu.append_delta_batch_optimistic(
-            spark, state, _df(spark, [(2, 2.0)]), range_width=16, stats=stats
-        )
-        assert bid == 1
-        assert stats["conflicts"] == 1  # the lost request, converted
-        assert _fold(spark, state) == {1: (1.0, 1), 2: (2.0, 1)}
-    finally:
-        pu.set_log_store(prev)
-
-
-def test_response_lost_after_mark_complete_is_still_durable(spark, tmp_path):
-    """A timeout between finalize and the mark_complete ack: the manifest
-    file is already on the FS, so the commit is durable — reconciliation
-    reports success and a later list marks the record complete."""
-    store, server = _store({"mark_complete": {"fail_after": 1}})
-    prev = pu.set_log_store(store)
-    try:
-        state = str(tmp_path / "state")
-        pu.append_delta_batch(spark, state, _df(spark, [(1, 1.0)]), 0, range_width=16)
-        pu.append_delta_batch(spark, state, _df(spark, [(2, 2.0)]), 1, range_width=16)
-        assert _fold(spark, state) == {1: (1.0, 1), 2: (2.0, 1)}
-        store.list_commits(spark, f"{state}/manifests")
-        assert all(
-            v is None for v in server._tables[next(iter(server._tables))].values()
-        )
-    finally:
-        pu.set_log_store(prev)
 
 
 def test_store_level_ambiguous_cas_preserves_staged_for_self_heal(
@@ -139,246 +39,3 @@ def test_store_level_ambiguous_cas_preserves_staged_for_self_heal(
     healed = healthy.list_commits(spark, mdir)
     assert healed == ["v000000000", "v000000001"]
     assert healthy.read_commit(spark, mdir, "v000000001")["batch_id"] == 1
-
-
-def test_latency_matrix_one_winner_per_basis(spark, tmp_path):
-    """The racing-writer contract holds under injected transport latency:
-    every slice commits exactly once through the optimistic loop while
-    each CAS pays an RTT."""
-    store, _server = _store({"cas": {"latency_s": 0.05}})
-    prev = pu.set_log_store(store)
-    try:
-        state = str(tmp_path / "state")
-        pu.append_delta_batch(spark, state, _df(spark, [(1, 1.0)]), 0, range_width=16)
-        slices = [_df(spark, [(10 + j, float(j))]) for j in range(4)]
-        committed: list[int] = []
-        errors: list[Exception] = []
-        guard = threading.Lock()
-
-        def writer(my):
-            try:
-                for df in my:
-                    bid = pu.append_delta_batch_optimistic(
-                        spark, state, df, range_width=16
-                    )
-                    with guard:
-                        committed.append(bid)
-            except Exception as exc:
-                errors.append(exc)
-
-        ts = [
-            threading.Thread(target=writer, args=(slices[0::2],)),
-            threading.Thread(target=writer, args=(slices[1::2],)),
-        ]
-        for t in ts:
-            t.start()
-        for t in ts:
-            t.join()
-        assert not errors, errors
-        assert sorted(committed) == [1, 2, 3, 4]
-        got = _fold(spark, state)
-        assert got[1] == (1.0, 1) and len(got) == 5
-    finally:
-        pu.set_log_store(prev)
-
-
-def test_cross_process_matrix_under_faults(spark, tmp_path):
-    """The r9 cross-process arbiter service under transport faults: two
-    driver clients connect through real manager proxies; one suffers an
-    ambiguous CAS (response lost), the other heals it; racing commits
-    from one basis under client latency still admit exactly one winner."""
-    from pharmaceutical_sales_data_etl_analysis_pipeline_spark.streaming.arbiter_server import (
-        connect_arbiter,
-        start_arbiter_server,
-    )
-
-    mgr, addr = start_arbiter_server()
-    try:
-        flaky = ArbiterLogStore(
-            FaultInjectingArbiter(connect_arbiter(addr), {"cas": {"fail_after": 1}})
-        )
-        healthy = ArbiterLogStore(
-            FaultInjectingArbiter(connect_arbiter(addr), {"cas": {"latency_s": 0.02}})
-        )
-        mdir = str(tmp_path / "state" / "manifests")
-        flaky.commit(spark, mdir, "v000000000", {"batch_id": 0}, expected=None)
-        basis = tuple(flaky.list_commits(spark, mdir))
-        with pytest.raises(ArbiterUnavailableError):
-            flaky.commit(spark, mdir, "v000000001", {"batch_id": 1}, expected=basis)
-        healed = healthy.list_commits(spark, mdir)
-        assert "v000000001" in healed  # cross-process self-heal
-
-        outcomes: list[str] = []
-        guard = threading.Lock()
-
-        def racer(k: int, store: ArbiterLogStore) -> None:
-            try:
-                store.commit(
-                    spark,
-                    mdir,
-                    f"v00000000{k}",
-                    {"batch_id": k},
-                    expected=tuple(healed),
-                )
-                with guard:
-                    outcomes.append("ok")
-            except ConcurrentCommitError:
-                with guard:
-                    outcomes.append("rejected")
-
-        ts = [
-            threading.Thread(target=racer, args=(k, healthy if k % 2 else flaky))
-            for k in range(2, 6)
-        ]
-        for t in ts:
-            t.start()
-        for t in ts:
-            t.join()
-        assert outcomes.count("ok") == 1, outcomes
-    finally:
-        mgr.shutdown()
-
-
-def test_env_fault_spec_parsing(monkeypatch, tmp_path):
-    """SPARK_GRAFT_ARBITER_FAULTS wraps the env-wired client proxy so the
-    cross-process probes can run the racing matrix under faults."""
-    from pharmaceutical_sales_data_etl_analysis_pipeline_spark.streaming.arbiter_server import (
-        arbiter_store_from_env,
-        start_arbiter_server,
-    )
-
-    mgr, (host, port) = start_arbiter_server()
-    try:
-        monkeypatch.setenv("SPARK_GRAFT_ARBITER_ENDPOINT", f"{host}:{port}")
-        monkeypatch.setenv(
-            "SPARK_GRAFT_ARBITER_FAULTS",
-            "cas:latency_s:0.01;cas:fail_after:2;mark_complete:fail_before:1",
-        )
-        store = arbiter_store_from_env()
-        arb = store.arbiter
-        assert isinstance(arb, FaultInjectingArbiter)
-        assert arb._faults == {
-            "cas": {"latency_s": 0.01, "fail_after": 2},
-            "mark_complete": {"fail_before": 1},
-        }
-    finally:
-        mgr.shutdown()
-
-
-def test_reconciliation_fail_stops_on_transient_manifest_read_error(
-    spark, tmp_path, monkeypatch
-):
-    """ADVICE r10 (medium): the reconcile scan used to swallow ALL read
-    exceptions as 'vacuumed', so a transient FS/arbiter hiccup while
-    reading the manifest that references OUR OWN delta fell through to
-    'nothing landed — retry', and the retry double-appended the batch.
-    Now only a store not-found is skippable; any other read failure
-    re-raises the ORIGINAL ambiguity (fail-stop, resolve on replay)."""
-    store, _server = _store({})
-    prev = pu.set_log_store(store)
-    try:
-        state = str(tmp_path / "state")
-        pu.append_delta_batch(spark, state, _df(spark, [(1, 1.0)]), 0, range_width=16)
-        pu.append_delta_batch(spark, state, _df(spark, [(2, 2.0)]), 1, range_width=16)
-        versions = pu._list_manifests(spark, state)
-        m1 = pu._read_manifest(spark, state, versions[-1])
-        (vname,) = [d for d in m1["deltas"] if d.startswith("v000000001")]
-        err = ArbiterUnavailableError("simulated lost response")
-
-        real_read = pu._read_manifest
-
-        def flaky_read(spark_, state_, version):
-            raise IOError("connection reset by peer")
-
-        monkeypatch.setattr(pu, "_read_manifest", flaky_read)
-        # the manifest naming our attempt is unreadable -> fail-stop on
-        # the ORIGINAL error, never the retry-safe conflict
-        with pytest.raises(ArbiterUnavailableError, match="lost response"):
-            pu._reconcile_ambiguous_append(spark, state, 1, vname, err)
-
-        # a genuine not-found is still skippable: fail only the NEWEST
-        # manifest's read; the attempt also appears in no older manifest,
-        # and the same-id name vanished -> unknowable -> fail-stop too
-        def vanished_read(spark_, state_, version):
-            if version == versions[-1]:
-                raise FileNotFoundError(f"{version}.json")
-            return real_read(spark_, state_, version)
-
-        monkeypatch.setattr(pu, "_read_manifest", vanished_read)
-        with pytest.raises(ArbiterUnavailableError, match="lost response"):
-            pu._reconcile_ambiguous_append(spark, state, 1, vname, err)
-        # but a vanished FOREIGN-id manifest does not poison the positive
-        # proof: batch 0's manifest vanishing leaves batch 1's readable
-        # manifest to prove our attempt committed
-        def vanished_other(spark_, state_, version):
-            if version == versions[0]:
-                raise FileNotFoundError(f"{version}.json")
-            return real_read(spark_, state_, version)
-
-        monkeypatch.setattr(pu, "_read_manifest", vanished_other)
-        pu._reconcile_ambiguous_append(spark, state, 1, vname, err)
-    finally:
-        pu.set_log_store(prev)
-
-
-def test_reconciliation_fail_stops_below_retention_window(spark, tmp_path):
-    """ADVICE r10 (medium), second leg: retention deletes plain manifests
-    WHOLESALE once their batch id leaves the keep window — no same-id 'x'
-    commit survives to prove anything. An ambiguous append whose batch id
-    has fallen below the window must fail-stop (its commit may have won,
-    been folded, and been vacuumed), never conclude 'nothing landed'."""
-    store, _server = _store({})
-    prev = pu.set_log_store(store)
-    try:
-        state = str(tmp_path / "state")
-        for i in range(4):
-            pu.append_delta_batch(
-                spark, state, _df(spark, [(i, float(i))]), i, range_width=16
-            )
-        # fold + vacuum: batches 0/1 leave the keep window entirely
-        assert pu.compact_deltas_into_base(spark, state) > 0
-        pu.expire_partitioned_versions(spark, state, keep=2, debris_min_age_ms=0)
-        versions = pu._list_manifests(spark, state)
-        assert pu._batch_id_of(versions[0]) >= 2, versions
-        err = ArbiterUnavailableError("simulated lost response")
-        with pytest.raises(ArbiterUnavailableError, match="lost response"):
-            pu._reconcile_ambiguous_append(
-                spark, state, 0, "v000000000-deadbeef", err
-            )
-    finally:
-        pu.set_log_store(prev)
-
-
-def test_reconciliation_survives_concurrent_compaction(spark, tmp_path):
-    """The r10 review catch: a maintenance process can compact the table
-    between a writer's ambiguous CAS and its reconciliation re-list. The
-    newest same-id commit is then an 'x' compaction whose delta list is
-    EMPTY — a newest-only check would misread the writer's WON commit as
-    foreign and let the optimistic loop append the batch twice. The
-    reconciler must scan every manifest for its attempt name."""
-    store, _server = _store({})
-    prev = pu.set_log_store(store)
-    try:
-        state = str(tmp_path / "state")
-        pu.append_delta_batch(spark, state, _df(spark, [(1, 1.0)]), 0, range_width=16)
-        pu.append_delta_batch(spark, state, _df(spark, [(2, 2.0)]), 1, range_width=16)
-        # batch 1's delta attempt name, from the committed manifest
-        versions = pu._list_manifests(spark, state)
-        m1 = pu._read_manifest(spark, state, versions[-1])
-        (vname,) = [d for d in m1["deltas"] if d.startswith("v000000001")]
-        # a maintenance pass compacts: newest same-id commit now has
-        # deltas=[] (v000000001x0001) while the plain v000000001 remains
-        assert pu.compact_deltas_into_base(spark, state) > 0
-        err = ArbiterUnavailableError("simulated lost response")
-        # reconcile must find the attempt in the superseded plain
-        # manifest and report committed — NOT raise the retry-safe
-        # conflict that would double-append
-        pu._reconcile_ambiguous_append(spark, state, 1, vname, err)
-        # unknowable case: same-id compaction exists but NO manifest
-        # lists the attempt — fail-stop with the original error
-        with pytest.raises(ArbiterUnavailableError, match="lost response"):
-            pu._reconcile_ambiguous_append(
-                spark, state, 1, "v000000001-deadbeef", err
-            )
-    finally:
-        pu.set_log_store(prev)

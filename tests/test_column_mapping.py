@@ -250,7 +250,7 @@ def test_cdf_matches_by_physical_identity(spark, tmp_path):
 def test_rewrites_physically_purge_dropped_columns(spark, tmp_path):
     """DROP hides a column instantly without touching files; the bytes
     then leave storage INCREMENTALLY, for free: every rewrite-shaped
-    maintenance op (delta compaction, file compaction, re-range) writes
+    maintenance op (delta compaction, file compaction) writes
     through the CURRENT schema, which no longer contains the retired
     physical — Delta's REORG TABLE ... PURGE, without a dedicated op.
     Raw parquet reads of the bucket files prove both states."""
@@ -264,7 +264,7 @@ def test_rewrites_physically_purge_dropped_columns(spark, tmp_path):
     assert "fee" in raw.columns  # physically present pre-drop
 
     pu.drop_value_column(spark, state, "fee")
-    assert pu.rerange_partitioned_state(spark, state, 8) > 0
+    assert pu.compact_partitioned_state(spark, state, max_files=0) > 0
     m2 = pu._read_manifest(spark, state, pu._list_manifests(spark, state)[-1])
     for b, vname in m2["buckets"].items():
         raw2 = spark.read.parquet(f"{state}/buckets/b{b}/{vname}")

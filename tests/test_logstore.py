@@ -1,10 +1,12 @@
-"""Commit-protocol contract tests for streaming/logstore.py (VERDICT r6
-ask #3): the conditional-put store must admit EXACTLY ONE winner per
-basis under racing writers, the rename store must reject non-successor
-commits without publishing, and a writer that crashes between data-file
-writes and manifest publish must leave the table replayable to the
-clean result (torn attempts are invisible — the manifest IS the
-commit)."""
+"""Commit-protocol contract tests for streaming/logstore.py.
+
+The rename store (every table's store) must reject non-successor commits
+without publishing, and a writer that crashes between data-file writes
+and manifest publish must leave the table replayable to the clean result
+(torn attempts are invisible — the manifest IS the commit). The arbiter
+store, reachable only through `partitioned_upsert.set_log_store`, must
+admit EXACTLY ONE winner per basis under racing writers and self-heal a
+commit that won its CAS but crashed before the finalize rename."""
 
 from __future__ import annotations
 
@@ -14,10 +16,11 @@ import pytest
 
 import pharmaceutical_sales_data_etl_analysis_pipeline_spark.streaming.partitioned_upsert as pu
 from pharmaceutical_sales_data_etl_analysis_pipeline_spark.streaming.logstore import (
+    ArbiterLogStore,
     ConcurrentCommitError,
     HadoopRenameLogStore,
-    InProcessConditionalPutLogStore,
 )
+
 
 
 @pytest.fixture(autouse=True)
@@ -35,44 +38,6 @@ def restore_store():
 def _payload(batch_id: int, **extra) -> dict:
     return {"batch_id": batch_id, "range_width": 16, "buckets": {}, "stats": {},
             **extra}
-
-
-def test_conditional_put_admits_one_winner_per_basis(spark, tmp_path):
-    """N racing writers, all holding the SAME basis snapshot: exactly one
-    commit lands; every loser raises ConcurrentCommitError and publishes
-    nothing. This is the linearizability clause an external
-    conditional-put service provides — here backed by the per-table
-    lock, exercised by real threads against the real FS."""
-    store = InProcessConditionalPutLogStore()
-    mdir = str(tmp_path / "state" / "manifests")
-    store.commit(spark, mdir, "v000000000", _payload(0), expected=None)
-    basis = tuple(store.list_commits(spark, mdir))
-
-    outcomes: list[tuple[int, str]] = []
-    lock = threading.Lock()
-
-    def writer(k: int) -> None:
-        try:
-            store.commit(spark, mdir, f"v00000000{k}", _payload(k), expected=basis)
-            with lock:
-                outcomes.append((k, "ok"))
-        except ConcurrentCommitError:
-            with lock:
-                outcomes.append((k, "rejected"))
-
-    threads = [threading.Thread(target=writer, args=(k,)) for k in range(1, 9)]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join()
-
-    winners = [k for k, o in outcomes if o == "ok"]
-    assert len(winners) == 1
-    assert len([k for k, o in outcomes if o == "rejected"]) == 7
-    # the listing holds the base plus exactly the winner — no torn extras
-    assert store.list_commits(spark, mdir) == sorted(
-        ["v000000000", f"v00000000{winners[0]}"]
-    )
 
 
 def test_rename_store_rejects_nonsuccessor_without_publishing(spark, tmp_path):
@@ -139,132 +104,11 @@ def test_crash_during_commit_is_invisible_and_replayable(
     assert got1 == {1: 12.0, 17: 5.0, 33: 7.0}
 
 
-def test_concurrent_merges_serialize_under_conditional_put(
-    spark, tmp_path, restore_store
-):
-    """Two full merges (distinct batch ids) racing on one table under the
-    conditional-put store: every outcome is a serialization — either
-    both commit (the slower one read the faster one's commit as basis)
-    or the loser raises and publishes nothing. The final state always
-    equals the reference fold of batch 0 plus exactly the batches that
-    committed; repeated to sample schedules."""
-    b0_rows = [(1, 10.0), (17, 5.0), (33, 1.0)]
-    batch_rows = {1: [(1, 2.0), (49, 4.0)], 2: [(17, 3.0), (65, 8.0)]}
-
-    for trial in range(3):
-        state = str(tmp_path / f"state{trial}")
-        pu.set_log_store(InProcessConditionalPutLogStore())
-        pu.merge_batch_into_partitioned_state(
-            spark,
-            state,
-            spark.createDataFrame(b0_rows, "key long, amount double"),
-            0,
-        )
-        results: dict[int, str] = {}
-        lock = threading.Lock()
-
-        def writer(bid: int) -> None:
-            try:
-                pu.merge_batch_into_partitioned_state(
-                    spark,
-                    state,
-                    spark.createDataFrame(batch_rows[bid], "key long, amount double"),
-                    bid,
-                )
-                with lock:
-                    results[bid] = "ok"
-            except ConcurrentCommitError:
-                with lock:
-                    results[bid] = "rejected"
-
-        threads = [threading.Thread(target=writer, args=(bid,)) for bid in (1, 2)]
-        for t in threads:
-            t.start()
-        for t in threads:
-            t.join()
-
-        committed = sorted(
-            {pu._batch_id_of(v) for v in pu._list_manifests(spark, state)}
-        )
-        # commits on disk == writers that reported success (plus batch 0)
-        assert committed == sorted(
-            [0] + [bid for bid, o in results.items() if o == "ok"]
-        )
-        expected: dict[int, float] = {}
-        for bid in [0] + [b for b in (1, 2) if results.get(b) == "ok"]:
-            rows = b0_rows if bid == 0 else batch_rows[bid]
-            for k, v in rows:
-                expected[k] = expected.get(k, 0.0) + v
-        got = {r["key"]: r["total"]
-               for r in pu.read_latest_partitioned_state(spark, state).collect()}
-        assert got == expected
-        assert "rejected" not in results.values() or len(committed) == 2
-
-
-def test_filelock_store_cross_process_semantics(spark, tmp_path):
-    """FileLockLogStore: commits serialize through an atomic
-    create-if-absent lock file — a held (fresh) lock rejects loudly, a
-    stale lock past the TTL is broken and the commit proceeds, the lock
-    never leaks after success or rejection, and the basis check still
-    rejects non-successors while holding the lock."""
-    import os
-
-    from pharmaceutical_sales_data_etl_analysis_pipeline_spark.streaming.logstore import (
-        FileLockLogStore,
-    )
-
-    store = FileLockLogStore()
-    mdir = str(tmp_path / "state" / "manifests")
-    store.commit(spark, mdir, "v000000000", _payload(0), expected=None)
-    assert not os.path.exists(os.path.join(mdir, ".commit.lock"))  # released
-
-    # a FRESH foreign lock blocks (a live commit is in flight)
-    lock_path = os.path.join(mdir, ".commit.lock")
-    open(lock_path, "w").close()
-    basis = tuple(store.list_commits(spark, mdir))
-    with pytest.raises(ConcurrentCommitError, match="another writer holds"):
-        store.commit(spark, mdir, "v000000001", _payload(1), expected=basis)
-    assert "v000000001" not in store.list_commits(spark, mdir)
-    assert os.path.exists(lock_path)  # the foreign lock was NOT stolen
-
-    # a STALE lock (mtime older than the TTL) is presumed orphaned: broken
-    old = (os.path.getmtime(lock_path) - (store.LOCK_TTL_MS / 1000.0) - 60)
-    os.utime(lock_path, (old, old))
-    store.commit(spark, mdir, "v000000001", _payload(1), expected=basis)
-    assert "v000000001" in store.list_commits(spark, mdir)
-    assert not os.path.exists(lock_path)
-
-    # basis check still enforced inside the lock
-    with pytest.raises(ConcurrentCommitError, match="basis advanced"):
-        store.commit(spark, mdir, "v000000002", _payload(2), expected=basis)
-    assert not os.path.exists(lock_path)  # released after rejection too
-
-
-# --- r8: unified conditional-put matrix + arbiter + slow-holder ------------
-
-
-def _conditional_stores():
-    from pharmaceutical_sales_data_etl_analysis_pipeline_spark.streaming.logstore import (
-        ArbiterLogStore,
-        FileLockLogStore,
-    )
-
-    return [
-        ("inprocess", InProcessConditionalPutLogStore),
-        ("filelock", FileLockLogStore),
-        ("arbiter", ArbiterLogStore),
-    ]
-
-
-@pytest.mark.parametrize(
-    "store_cls", [c for _, c in _conditional_stores()], ids=[n for n, _ in _conditional_stores()]
-)
+@pytest.mark.parametrize("store_cls", [ArbiterLogStore], ids=["arbiter"])
 def test_conditional_put_matrix_one_winner_per_basis(spark, tmp_path, store_cls):
-    """Every conditional-put store — in-process lock, cross-process lock
-    file, external arbiter — admits EXACTLY ONE winner per basis under
-    racing writers; losers raise ConcurrentCommitError and publish
-    nothing (the FileLock store may reject a loser at the lock rather
-    than the basis check; both are the same contract exception)."""
+    """The conditional-put store admits EXACTLY ONE winner per basis
+    under racing writers; losers raise ConcurrentCommitError and publish
+    nothing."""
     store = store_cls()
     mdir = str(tmp_path / "state" / "manifests")
     store.commit(spark, mdir, "v000000000", _payload(0), expected=None)
@@ -293,49 +137,6 @@ def test_conditional_put_matrix_one_winner_per_basis(spark, tmp_path, store_cls)
     assert store.list_commits(spark, mdir) == sorted(
         ["v000000000", f"v00000000{winners[0]}"]
     )
-
-
-def test_filelock_slow_holder_evicted_does_not_delete_usurper(
-    spark, tmp_path, caplog
-):
-    """The TTL trade, pinned (VERDICT r7 'worth recording'): a live
-    holder slower than LOCK_TTL_MS is evicted — the breaker logs a
-    WARNING, acquires with its own token, and the evicted holder's
-    release must NOT delete the usurper's lock (ownership token check),
-    only warn. Both writers then race the basis check — detection, not
-    corruption."""
-    import logging
-    import os
-
-    from pharmaceutical_sales_data_etl_analysis_pipeline_spark.streaming.logstore import (
-        FileLockLogStore,
-    )
-
-    store = FileLockLogStore()
-    mdir = str(tmp_path / "state" / "manifests")
-    store.commit(spark, mdir, "v000000000", _payload(0), expected=None)
-    lock_path = os.path.join(mdir, ".commit.lock")
-
-    token_a = store._acquire(spark, mdir, "v000000001")
-    assert os.path.exists(lock_path)
-    # holder A stalls past the TTL (simulated: backdate the lock mtime)
-    old = os.path.getmtime(lock_path) - (store.LOCK_TTL_MS / 1000.0) - 60
-    os.utime(lock_path, (old, old))
-
-    with caplog.at_level(logging.WARNING):
-        token_b = store._acquire(spark, mdir, "v000000002")
-    assert token_a != token_b
-    assert any("breaking presumed-orphaned" in r.message for r in caplog.records)
-
-    caplog.clear()
-    with caplog.at_level(logging.WARNING):
-        store._release(spark, mdir, token_a)  # evicted holder wakes up
-    assert os.path.exists(lock_path), "usurper's lock must survive A's release"
-    assert store._read_lock_token(spark, mdir) == token_b
-    assert any("not releasing" in r.message for r in caplog.records)
-
-    store._release(spark, mdir, token_b)
-    assert not os.path.exists(lock_path)
 
 
 def test_arbiter_store_crash_between_cas_and_finalize_self_heals(spark, tmp_path):
@@ -431,8 +232,8 @@ def test_full_merges_serialize_under_arbiter_store(spark, tmp_path, restore_stor
     """The table layer end-to-end over the arbiter store: two racing
     merges (distinct batch ids) — every outcome is a serialization and
     the final state equals the fold of exactly the committed batches
-    (same contract the in-process store proves; this pins that the
-    SWAP of stores changes nothing above the seam)."""
+    (this pins that the SWAP of stores changes nothing above the
+    seam)."""
     from pharmaceutical_sales_data_etl_analysis_pipeline_spark.streaming.logstore import (
         ArbiterLogStore,
     )
@@ -475,59 +276,6 @@ def test_full_merges_serialize_under_arbiter_store(spark, tmp_path, restore_stor
     assert got == expected
 
 
-def test_filelock_ttl_env_knob(monkeypatch):
-    """SPARK_GRAFT_LOCK_TTL_MS (r13) tunes the orphaned-lock break-in
-    bound per deployment — the recovery latency after a writer dies
-    HOLDING the lock (the producer-replay probe runs it at 10 s so a
-    SIGKILL-while-holding resolves inside the probe budget). Read at
-    construction; absent -> the 5-minute default."""
-    from pharmaceutical_sales_data_etl_analysis_pipeline_spark.streaming.logstore import (
-        FileLockLogStore,
-    )
-
-    monkeypatch.delenv("SPARK_GRAFT_LOCK_TTL_MS", raising=False)
-    assert FileLockLogStore().LOCK_TTL_MS == 5 * 60 * 1000
-    monkeypatch.setenv("SPARK_GRAFT_LOCK_TTL_MS", "1234")
-    assert FileLockLogStore().LOCK_TTL_MS == 1234
-    # the class default is untouched (instance attribute override)
-    assert FileLockLogStore.LOCK_TTL_MS == 5 * 60 * 1000
-
-
-def test_default_log_store_env_selection(monkeypatch):
-    """SPARK_GRAFT_LOG_STORE picks the commit-protocol implementation
-    without code (the deployment seam Delta exposes as
-    spark.delta.logStore.class); unknown names fail loudly."""
-    from pharmaceutical_sales_data_etl_analysis_pipeline_spark.streaming.logstore import (
-        ArbiterLogStore,
-        FileLockLogStore,
-    )
-
-    monkeypatch.delenv("SPARK_GRAFT_LOG_STORE", raising=False)
-    assert isinstance(pu._default_log_store(), HadoopRenameLogStore)
-    for name, cls in [
-        ("inprocess", InProcessConditionalPutLogStore),
-        ("filelock", FileLockLogStore),
-        ("RENAME", HadoopRenameLogStore),
-    ]:
-        monkeypatch.setenv("SPARK_GRAFT_LOG_STORE", name)
-        assert isinstance(pu._default_log_store(), cls)
-    monkeypatch.setenv("SPARK_GRAFT_LOG_STORE", "dynamo")
-    with pytest.raises(ValueError, match="unknown SPARK_GRAFT_LOG_STORE"):
-        pu._default_log_store()
-    # 'arbiter' is the multi-DRIVER deployment path: selecting it without
-    # an external endpoint must fail LOUDLY — a per-process in-memory
-    # arbiter would give the deployment no cross-driver exclusion at all
-    # (ADVICE r8); with a live endpoint it connects (see the
-    # cross-process matrix test for the env-wired round trip)
-    monkeypatch.setenv("SPARK_GRAFT_LOG_STORE", "arbiter")
-    monkeypatch.delenv("SPARK_GRAFT_ARBITER_ENDPOINT", raising=False)
-    with pytest.raises(ValueError, match="SPARK_GRAFT_ARBITER_ENDPOINT"):
-        pu._default_log_store()
-    monkeypatch.setenv("SPARK_GRAFT_ARBITER_ENDPOINT", "not-host-port")
-    with pytest.raises(ValueError, match="not host:port"):
-        pu._default_log_store()
-
-
 def test_arbiter_same_name_replay_vs_stale_basis_racer():
     """CommitArbiter.cas's same-name rule: re-recording is legal ONLY
     when the caller's basis CONTAINS the name (idempotent replay of a
@@ -537,8 +285,8 @@ def test_arbiter_same_name_replay_vs_stale_basis_racer():
     then caught a LIVE foreign writer entering through that window
     (winner CAS'd, not yet finalized) and replacing the winner's record.
     A genuinely crashed finalize is recovered by the reader self-heal
-    (test_arbiter_crash_between_cas_and_finalize_heals + the cross-
-    process matrix), after which the crashed writer's own replay lists
+    (test_arbiter_store_crash_between_cas_and_finalize_self_heals),
+    after which the crashed writer's own replay lists
     the healed name into its basis and takes the replay clause."""
     from pharmaceutical_sales_data_etl_analysis_pipeline_spark.streaming.logstore import (
         CommitArbiter,
@@ -559,8 +307,8 @@ def test_arbiter_same_name_replay_vs_stale_basis_racer():
 
 @pytest.mark.parametrize(
     "store_cls",
-    [HadoopRenameLogStore] + [c for _, c in _conditional_stores()],
-    ids=["rename"] + [n for n, _ in _conditional_stores()],
+    [HadoopRenameLogStore, ArbiterLogStore],
+    ids=["rename", "arbiter"],
 )
 def test_same_name_stale_basis_racer_never_replaces_winner(
     spark, tmp_path, store_cls
@@ -589,120 +337,6 @@ def test_same_name_stale_basis_racer_never_replaces_winner(
         expected=replay_basis,
     )
     assert store.read_commit(spark, mdir, "v000000001")["marker"] == "winner"
-
-
-def test_arbiter_cross_process_contract_matrix(spark, tmp_path, monkeypatch):
-    """The racing-writer contract proven across a REAL process boundary
-    (VERDICT r8 ask #3): the arbiter runs in a child process behind a
-    multiprocessing manager; two independent ArbiterLogStore clients
-    (two 'drivers', each with its own connection) race commits from one
-    basis — exactly one wins, losers raise ConcurrentCommitError, a
-    same-name stale-basis racer loses, a crash between CAS and finalize
-    on one client self-heals from the OTHER client's read, an injected
-    outage fails stop, and the env-wired deployment path
-    (SPARK_GRAFT_LOG_STORE=arbiter + SPARK_GRAFT_ARBITER_ENDPOINT)
-    connects to the same server. This is mutual exclusion where
-    FileLockLogStore's TTL trade-off does not apply; swapping the
-    manager transport for a DynamoDB client is config, not code."""
-    from pharmaceutical_sales_data_etl_analysis_pipeline_spark.streaming.arbiter_server import (
-        connect_arbiter,
-        start_arbiter_server,
-    )
-    from pharmaceutical_sales_data_etl_analysis_pipeline_spark.streaming.logstore import (
-        ArbiterLogStore,
-        ArbiterUnavailableError,
-        _qualified_dir,
-    )
-
-    mgr, addr = start_arbiter_server()
-    try:
-        driver_a = ArbiterLogStore(connect_arbiter(addr))
-        driver_b = ArbiterLogStore(connect_arbiter(addr))
-        mdir = str(tmp_path / "state" / "manifests")
-        driver_a.commit(spark, mdir, "v000000000", _payload(0), expected=None)
-        # driver B sees A's commit through the server-side arbiter
-        basis = tuple(driver_b.list_commits(spark, mdir))
-        assert basis == ("v000000000",)
-
-        outcomes: list[tuple[int, str]] = []
-        guard = threading.Lock()
-
-        def writer(k: int, store: ArbiterLogStore) -> None:
-            try:
-                store.commit(
-                    spark, mdir, f"v00000000{k}", _payload(k), expected=basis
-                )
-                with guard:
-                    outcomes.append((k, "ok"))
-            except ConcurrentCommitError:
-                with guard:
-                    outcomes.append((k, "rejected"))
-
-        threads = [
-            threading.Thread(
-                target=writer, args=(k, driver_a if k % 2 else driver_b)
-            )
-            for k in range(1, 7)
-        ]
-        for t in threads:
-            t.start()
-        for t in threads:
-            t.join()
-        winners = [k for k, o in outcomes if o == "ok"]
-        assert len(winners) == 1, outcomes
-        listing = driver_a.list_commits(spark, mdir)
-        assert listing == sorted(["v000000000", f"v00000000{winners[0]}"])
-
-        # same-name stale-basis racer across processes
-        with pytest.raises(ConcurrentCommitError):
-            driver_b.commit(
-                spark, mdir, f"v00000000{winners[0]}",
-                _payload(9, marker="racer"), expected=basis,
-            )
-
-        # crash between CAS and finalize on driver A; driver B heals it
-        def crash(*a, **kw):
-            raise IOError("injected crash before finalize")
-
-        monkeypatch.setattr(driver_a, "_finalize", crash)
-        crash_basis = tuple(driver_a.list_commits(spark, mdir))
-        with pytest.raises(IOError, match="injected crash"):
-            driver_a.commit(
-                spark, mdir, "v000000007", _payload(7), expected=crash_basis
-            )
-        table = _qualified_dir(spark, mdir)
-        assert driver_b.arbiter.records(table)["v000000007"]  # pending
-        healed = driver_b.list_commits(spark, mdir)
-        assert "v000000007" in healed
-        assert driver_b.read_commit(spark, mdir, "v000000007")["batch_id"] == 7
-        assert driver_b.arbiter.records(table)["v000000007"] is None
-
-        # outage injected via one client fails the OTHER client's commit
-        # stop (shared server state), publishing nothing
-        driver_a.arbiter.fail_next(1)
-        with pytest.raises(ArbiterUnavailableError):
-            driver_b.commit(
-                spark, mdir, "v000000008", _payload(8),
-                expected=tuple(healed),
-            )
-        assert "v000000008" not in driver_b.list_commits(spark, mdir)
-
-        # env-wired deployment path connects to the same server
-        host, port = addr
-        monkeypatch.setenv("SPARK_GRAFT_LOG_STORE", "arbiter")
-        monkeypatch.setenv("SPARK_GRAFT_ARBITER_ENDPOINT", f"{host}:{port}")
-        monkeypatch.setenv(
-            "SPARK_GRAFT_ARBITER_AUTHKEY", "spark-graft-arbiter"
-        )
-        env_store = pu._default_log_store()
-        assert isinstance(env_store, ArbiterLogStore)
-        env_store.commit(
-            spark, mdir, "v000000009", _payload(9),
-            expected=tuple(env_store.list_commits(spark, mdir)),
-        )
-        assert "v000000009" in driver_a.list_commits(spark, mdir)
-    finally:
-        mgr.shutdown()
 
 
 def test_arbiter_double_finalize_race_is_idempotent(spark, tmp_path):
@@ -758,48 +392,3 @@ def test_arbiter_finalize_raises_when_both_files_missing(spark, tmp_path):
     table = _qualified_dir(spark, mdir)
     with pytest.raises(IOError, match="points at nothing"):
         store._finalize(spark, mdir, table, "v000000009", ".staged.gone.json")
-
-
-def test_filelock_acquire_read_failure_retries_then_releases(spark, tmp_path):
-    """Transient IO during the acquire-side token verification must not
-    strand the writer's own lock until the TTL break-in: one failed read
-    is retried (commit proceeds); a persistent verification failure
-    raises the contract error AND best-effort releases the writer's own
-    lock so other writers aren't stalled."""
-    import os as _os
-
-    from pharmaceutical_sales_data_etl_analysis_pipeline_spark.streaming.logstore import (
-        FileLockLogStore,
-    )
-
-    mdir = str(tmp_path / "state" / "manifests")
-    lock_path = _os.path.join(mdir, ".commit.lock")
-
-    class FlakyReadStore(FileLockLogStore):
-        def __init__(self, fail_reads: int):
-            self.fail_reads = fail_reads
-
-        def _read_lock_token(self, spark_, manifest_dir):
-            if self.fail_reads > 0:
-                self.fail_reads -= 1
-                return self._READ_FAILED
-            return super()._read_lock_token(spark_, manifest_dir)
-
-    # one transient failure: the retry sees the token, commit lands
-    store = FlakyReadStore(fail_reads=1)
-    store.commit(spark, mdir, "v000000000", _payload(0), expected=None)
-    store.commit(spark, mdir, "v000000001", _payload(1), expected=("v000000000",))
-    assert store.list_commits(spark, mdir) == ["v000000000", "v000000001"]
-    assert not _os.path.exists(lock_path)
-
-    # persistent verification failure (both acquire reads fail; the
-    # release's reads then succeed): loud contract error, nothing
-    # published, and the writer's own lock is GONE — not a TTL stall
-    store = FlakyReadStore(fail_reads=2)
-    with pytest.raises(ConcurrentCommitError, match="unreadable"):
-        store.commit(
-            spark, mdir, "v000000002", _payload(2),
-            expected=("v000000000", "v000000001"),
-        )
-    assert "v000000002" not in store.list_commits(spark, mdir)
-    assert not _os.path.exists(lock_path), "own lock must be released"

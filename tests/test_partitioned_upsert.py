@@ -620,78 +620,6 @@ def test_cow_merge_matches_reference_fold(spark, tmp_path_factory, batches, n_ap
     assert_state_is_model()
 
 
-def test_rerange_migration(spark, tmp_path):
-    """rerange_partitioned_state rewrites the latest state onto a new
-    width: same logical state, re-derived buckets + zone maps, keyrange
-    pruning under the new arithmetic, time travel to pre-migration
-    batches untouched, and the drift error now names a migration path."""
-    state = str(tmp_path / "state")
-    rows = [(k, float(k)) for k in (1, 2, 17, 21, 40, 63)]
-    b0 = spark.createDataFrame(rows, "key long, amount double")
-    merge_batch_into_partitioned_state(spark, state, b0, 0)
-    b1 = spark.createDataFrame([(2, 1.0)], "key long, amount double")
-    merge_batch_into_partitioned_state(spark, state, b1, 1)
-    before = {r["key"]: (r["total"], r["n_rows"])
-              for r in read_latest_partitioned_state(spark, state).collect()}
-
-    n = pu.rerange_partitioned_state(spark, state, 8)
-    m = pu._latest_manifest(spark, state)
-    assert m["range_width"] == 8 and n == len(m["buckets"])
-    # width 8: keys {1,2}->b0, 17->b2, 21->b2, 40->b5, 63->b7
-    assert set(m["buckets"]) == {"0", "2", "5", "7"}
-    assert m["stats"]["2"]["n_keys"] == 2  # recomputed under new width
-    after = {r["key"]: (r["total"], r["n_rows"])
-             for r in read_latest_partitioned_state(spark, state).collect()}
-    assert after == before
-    assert pu.keyrange_bucket_ids(m, 40, 40) == ["5"]
-    got = {r["key"] for r in
-           pu.read_partitioned_state_keyrange(spark, state, 16, 21).collect()}
-    assert got == {17, 21}
-    # time travel to batch 0 reads the OLD-width commit untouched
-    v0 = {r["key"]: r["n_rows"]
-          for r in read_partitioned_state_version(spark, state, 0).collect()}
-    assert v0 == {k: 1 for k, _ in rows}
-    # summary survives the migration (manifest-only, new stats)
-    assert pu.partitioned_state_summary(spark, state).first()["n_keys"] == 6
-
-    # same-width re-range is a no-op; merges must now use the new width
-    assert pu.rerange_partitioned_state(spark, state, 8) == len(m["buckets"])
-    b2 = spark.createDataFrame([(63, 1.0)], "key long, amount double")
-    with pytest.raises(ValueError, match="range_width"):
-        merge_batch_into_partitioned_state(spark, state, b2, 2)  # old default 16
-    merge_batch_into_partitioned_state(spark, state, b2, 2, range_width=8)
-    assert read_latest_partitioned_state(spark, state).filter(
-        F.col("key") == 63).first()["total"] == 64.0
-
-
-def test_replay_after_rerange(spark, tmp_path):
-    """Crash-replay of the final batch after a re-range: with the OLD
-    width it recommits a plain manifest that the re-range commit
-    supersedes (newest-per-batch wins — state unchanged); with the NEW
-    width the predecessor's width mismatches and it fails loudly. Either
-    way, never silent corruption."""
-    state = str(tmp_path / "state")
-    b0 = spark.createDataFrame([(1, 1.0), (40, 2.0)], "key long, amount double")
-    merge_batch_into_partitioned_state(spark, state, b0, 0)
-    b1 = spark.createDataFrame([(1, 3.0)], "key long, amount double")
-    merge_batch_into_partitioned_state(spark, state, b1, 1)
-    pu.rerange_partitioned_state(spark, state, 8)
-    want = {r["key"]: (r["total"], r["n_rows"])
-            for r in read_latest_partitioned_state(spark, state).collect()}
-
-    # replay with the stream's old width: superseded commit, state intact
-    merge_batch_into_partitioned_state(spark, state, b1, 1)
-    m = pu._latest_manifest(spark, state)
-    assert m["range_width"] == 8  # the re-range commit still wins
-    got = {r["key"]: (r["total"], r["n_rows"])
-           for r in read_latest_partitioned_state(spark, state).collect()}
-    assert got == want
-
-    # replay with the new width: loud drift error (predecessor is old-width)
-    with pytest.raises(ValueError, match="range_width"):
-        merge_batch_into_partitioned_state(spark, state, b1, 1, range_width=8)
-
-
 def test_concurrent_commit_detected(spark, tmp_path, monkeypatch):
     """A foreign manifest landing between the merge's basis snapshot and
     its commit aborts the commit loudly (ConcurrentCommitError) instead
@@ -764,7 +692,6 @@ def test_mor_append_and_fold(spark, tmp_path):
     for fn, args in [
         (pu.partitioned_state_summary, (spark, state)),
         (pu.read_partitioned_state_keyrange, (spark, state, 0, 50)),
-        (pu.rerange_partitioned_state, (spark, state, 8)),
         (compact_partitioned_state, (spark, state)),
         # and a CoW merge on top of pending deltas would misorder them
         (merge_batch_into_partitioned_state, (spark, state, b2, 3)),
@@ -1030,53 +957,6 @@ def test_next_compaction_seq_survives_retention():
     assert pu._next_compaction_seq(["v000000001x0005"], 1) == 6
     # other batches' compactions don't leak into this batch's seq
     assert pu._next_compaction_seq(["v000000000x0003", "v000000001"], 1) == 1
-
-
-def test_maintain_partitioned_state_housekeeping(spark, tmp_path):
-    """The composed housekeeping loop: folds pending deltas only past the
-    threshold, compacts only delta-free fragmented buckets, expires
-    last; state is value-identical before and after, and a maintained
-    table's read no longer pays the delta fold."""
-    state = str(tmp_path / "state")
-    b0 = spark.createDataFrame(
-        [(1, 10.0), (17, 5.0), (40, 2.0)], "key long, amount double"
-    )
-    merge_batch_into_partitioned_state(spark, state, b0, 0)
-    pu.append_delta_batch(
-        spark, state, spark.createDataFrame([(1, 1.0)], "key long, amount double"), 1
-    )
-    want = {1: (11.0, 2), 17: (5.0, 1), 40: (2.0, 1)}
-
-    # below the delta threshold: nothing folds, deltas stay pending
-    r1 = pu.maintain_partitioned_state(spark, state, max_pending_deltas=2)
-    assert r1["deltas_folded"] == 0
-    assert pu._latest_manifest(spark, state).get("deltas")  # still pending
-    # compaction refused to run over pending deltas (not crashed):
-    assert r1["buckets_compacted"] == 0
-
-    pu.append_delta_batch(
-        spark, state, spark.createDataFrame([(17, 3.0)], "key long, amount double"), 2
-    )
-    want[17] = (8.0, 2)
-    # at the threshold: fold, then compact, then expire - one pass
-    r2 = pu.maintain_partitioned_state(
-        spark, state, max_pending_deltas=2, max_files_per_bucket=1, keep_versions=2
-    )
-    assert r2["deltas_folded"] > 0
-    assert not pu._latest_manifest(spark, state).get("deltas")
-    got = {r["key"]: (r["total"], r["n_rows"])
-           for r in read_latest_partitioned_state(spark, state).collect()}
-    assert got == want
-    # retention ran last: only keep_versions distinct batch ids survive
-    batches = {pu._batch_id_of(v) for v in pu._list_manifests(spark, state)}
-    assert len(batches) <= 2
-    # a second maintenance pass is a no-op (idempotent housekeeping)
-    r3 = pu.maintain_partitioned_state(
-        spark, state, max_pending_deltas=2, max_files_per_bucket=1, keep_versions=2
-    )
-    assert r3 == {"deltas_folded": 0, "buckets_compacted": 0, "versions_expired": 0}
-    with pytest.raises(ValueError, match="max_pending_deltas"):
-        pu.maintain_partitioned_state(spark, state, max_pending_deltas=0)
 
 
 def test_stream_cow_ingest_with_ops(spark, tmp_path):
@@ -1575,169 +1455,3 @@ def test_delta_compaction_loses_cleanly_to_concurrent_append(spark, tmp_path):
         for r in read_latest_partitioned_state(spark, state).collect()
     }
     assert got == want
-
-
-def test_optimistic_append_multi_writer_threads(spark, tmp_path):
-    """Two writers race append_delta_batch_optimistic on one table through
-    the atomic in-process store: every slice must commit exactly once
-    under a distinct batch id (lost races retry with a refreshed basis,
-    which is what carries forward the OTHER writer's delta list), and the
-    final fold must equal the one-shot aggregate of all rows — no lost
-    updates, no clobbered lineage. Cross-process twin:
-    examples/concurrent_writers_probe.py (FileLock store)."""
-    import threading
-
-    from pharmaceutical_sales_data_etl_analysis_pipeline_spark.streaming.logstore import (
-        InProcessConditionalPutLogStore,
-    )
-    from pharmaceutical_sales_data_etl_analysis_pipeline_spark.streaming.partitioned_upsert import (
-        append_delta_batch_optimistic,
-        set_log_store,
-    )
-
-    state = str(tmp_path / "state")
-    b0 = spark.createDataFrame(
-        [(k, 1.0) for k in range(1, 41)], "key long, amount double"
-    )
-    merge_batch_into_partitioned_state(spark, state, b0, 0)
-
-    # 6 upsert slices, writer A gets evens, writer B odds
-    slices = [
-        spark.createDataFrame(
-            [(k, float(10 * (j + 1))) for k in range(1 + j, 41, 7)],
-            "key long, amount double",
-        )
-        for j in range(6)
-    ]
-    committed: list[int] = []
-    errors: list[Exception] = []
-    guard = threading.Lock()
-
-    def writer(my_slices):
-        try:
-            for df in my_slices:
-                bid = append_delta_batch_optimistic(spark, state, df)
-                with guard:
-                    committed.append(bid)
-        except Exception as exc:  # surfaced after join
-            errors.append(exc)
-
-    prev_store = set_log_store(InProcessConditionalPutLogStore())
-    try:
-        ts = [
-            threading.Thread(target=writer, args=(slices[0::2],)),
-            threading.Thread(target=writer, args=(slices[1::2],)),
-        ]
-        for t in ts:
-            t.start()
-        for t in ts:
-            t.join()
-    finally:
-        set_log_store(prev_store)
-
-    assert not errors, errors
-    assert sorted(committed) == [1, 2, 3, 4, 5, 6]  # distinct ids, all landed
-
-    import functools
-
-    all_rows = functools.reduce(lambda a, b: a.unionByName(b), slices, b0)
-    want = {
-        (r["key"], r["total"], r["n_rows"])
-        for r in all_rows.groupBy("key")
-        .agg(
-            F.sum(F.col("amount").cast("decimal(18,2)")).cast("double").alias("total"),
-            F.count(F.lit(1)).alias("n_rows"),
-        )
-        .collect()
-    }
-    got = {
-        (r["key"], r["total"], r["n_rows"])
-        for r in read_latest_partitioned_state(spark, state).collect()
-    }
-    assert got == want
-
-
-def test_optimistic_append_rejects_noncommutative_batches(spark, tmp_path):
-    """The optimistic path's contract checks are loud: sequenced batches
-    and tombstone-bearing batches cannot be re-ordered by a lost race."""
-    from pharmaceutical_sales_data_etl_analysis_pipeline_spark.streaming.logstore import (
-        InProcessConditionalPutLogStore,
-    )
-    from pharmaceutical_sales_data_etl_analysis_pipeline_spark.streaming.partitioned_upsert import (
-        append_delta_batch_optimistic,
-        set_log_store,
-    )
-
-    state = str(tmp_path / "state")
-    prev_store = set_log_store(InProcessConditionalPutLogStore())
-    try:
-        seq_batch = spark.createDataFrame(
-            [(1, 1.0, "upsert", 7)], "key long, amount double, op string, seq long"
-        )
-        with pytest.raises(ValueError, match="seq"):
-            append_delta_batch_optimistic(spark, state, seq_batch)
-        del_batch = spark.createDataFrame(
-            [(1, 0.0, "delete")], "key long, amount double, op string"
-        )
-        with pytest.raises(ValueError, match="tombstone"):
-            append_delta_batch_optimistic(spark, state, del_batch)
-        # upsert-only frames with an op column pass the guard
-        ok = spark.createDataFrame(
-            [(1, 2.0, "upsert")], "key long, amount double, op string"
-        )
-        assert append_delta_batch_optimistic(spark, state, ok) == 0
-    finally:
-        set_log_store(prev_store)
-
-
-def test_optimistic_append_refuses_rename_store(spark, tmp_path):
-    """Multi-writer safety starts at store selection: the default
-    HadoopRenameLogStore's check-then-rename publish is not atomic, so
-    two optimistic writers could both commit the same v{id} manifest —
-    the entry point must refuse it loudly instead of racing (ADVICE r9).
-    The single-writer append_delta_batch path stays valid on rename."""
-    from pharmaceutical_sales_data_etl_analysis_pipeline_spark.streaming.logstore import (
-        HadoopRenameLogStore,
-    )
-    from pharmaceutical_sales_data_etl_analysis_pipeline_spark.streaming.partitioned_upsert import (
-        append_delta_batch_optimistic,
-        set_log_store,
-    )
-
-    state = str(tmp_path / "state")
-    ok = spark.createDataFrame([(1, 2.0)], "key long, amount double")
-    prev_store = set_log_store(HadoopRenameLogStore())
-    try:
-        with pytest.raises(ValueError, match="atomic commit store"):
-            append_delta_batch_optimistic(spark, state, ok)
-    finally:
-        set_log_store(prev_store)
-
-
-def test_expect_new_turns_same_id_replay_into_conflict(spark, tmp_path):
-    """The id-allocation clobber found live by the 4-writer probe: an
-    optimistic writer whose id came from a stale listing lands on a
-    batch id a FOREIGN writer already committed; plain append treats the
-    existing same-name manifest as its own replay and would overwrite
-    it. expect_new=True must raise instead; the default replay path
-    stays idempotent for the checkpointed single writer."""
-    from pharmaceutical_sales_data_etl_analysis_pipeline_spark.streaming.logstore import (
-        ConcurrentCommitError,
-    )
-
-    state = str(tmp_path / "state")
-    foreign = spark.createDataFrame([(1, 10.0)], "key long, amount double")
-    pu.append_delta_batch(spark, state, foreign, 0)
-
-    mine = spark.createDataFrame([(2, 99.0)], "key long, amount double")
-    with pytest.raises(ConcurrentCommitError, match="already committed"):
-        pu.append_delta_batch(spark, state, mine, 0, expect_new=True)
-    # the foreign commit is untouched
-    got = {r["key"]: r["total"]
-           for r in read_latest_partitioned_state(spark, state).collect()}
-    assert got == {1: 10.0}
-    # same-id replay WITHOUT expect_new stays the single-writer contract
-    pu.append_delta_batch(spark, state, foreign, 0)
-    got2 = {r["key"]: r["total"]
-            for r in read_latest_partitioned_state(spark, state).collect()}
-    assert got2 == {1: 10.0}

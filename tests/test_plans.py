@@ -297,6 +297,27 @@ def test_neardup_components_partitioning_scales_with_edges(spark, sf_dir):
     assert sorted(map(tuple, fanned.collect())) == sorted(map(tuple, default.collect()))
 
 
+def test_neardup_components_raises_at_its_round_cap(spark, monkeypatch):
+    """A near-dup chain 0-1-...-63 has diameter 63: hooking plus pointer
+    jumping needs about six rounds to reach and confirm the fixpoint, so a
+    cap of 2 rounds must raise instead of returning labels that are still
+    moving. Under the default cap the chain is one component labelled 0.
+    The LSH candidate step is replaced by the fixed chain so the graph's
+    diameter is exact."""
+    from pharmaceutical_sales_data_etl_analysis_pipeline_spark.operators import corpusops
+
+    n = 64
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(n - 1)], "doc_a long, doc_b long"
+    ).withColumn("est_jaccard", F.lit(1.0))
+    monkeypatch.setattr(corpusops, "minhash_lsh_candidates", lambda documents: chain)
+    docs = spark.createDataFrame([(i, "") for i in range(n)], "doc_id long, text string")
+    with pytest.raises(RuntimeError, match=r"did not converge in 2 rounds \(\d+ labels"):
+        corpusops.neardup_components(docs, max_iters=2)
+    got = {r["doc_id"]: r["component"] for r in corpusops.neardup_components(docs).collect()}
+    assert got == {i: 0 for i in range(n)}
+
+
 def test_kmeans_assignment_is_zero_shuffle_projection(spark, sf_dir):
     """The clustering assignment pass compiles centroids into literals:
     the final plan must be scan + projection — no join, no shuffle. (The
@@ -326,15 +347,19 @@ def test_semdedup_pairs_join_is_within_cluster(spark, sf_dir):
     assert "SortMergeJoin" not in plan  # the old pair self-join is gone
 
 
-def test_r14_optimization_plan_shapes(spark, sf_dir):
+def test_r14_optimization_plan_shapes(spark, sf_dir, monkeypatch):
     """Pin the r14 plan shapes (OPTIMIZATION_r14.md) so a future round
-    cannot silently regress them:
+    cannot silently regress them (under the default localCheckpoint pin
+    mode, set here rather than inherited from the environment — a
+    table-mode pin reads its scratch parquet back, so the plans then
+    carry `Scan parquet` nodes by design):
     - cosine_topk streams the corpus through ONE Arrow pass (queries ride
       the closure) — no pair join, no interpreted fold plan;
     - simhash_near_dups reads its PINNED signature proxy, never re-deriving
       the tokenize/signature chain per self-join side (was 4 parquet scans);
     - training_corpus attaches survivors via an ANTI join against the drop
       set instead of a second full documents scan (4 scans -> 2)."""
+    monkeypatch.setenv("SPARK_GRAFT_PIN", "local")
     qs = all_queries()
     plan = _plan(qs["cosine_topk"](spark, sf_dir))
     assert "MapInPandas" in plan

@@ -232,9 +232,9 @@ def test_cow_merge_evolves_and_folds_nulls_correctly(spark, tmp_path):
 
 
 def test_maintenance_carries_schema_and_values(spark, tmp_path):
-    """Compaction (delta fold), bucket compaction and re-range all carry
-    the schema field AND the evolved column values — a maintenance op
-    that read the legacy schema would silently drop the column from the
+    """Compaction (delta fold) and bucket compaction both carry the
+    schema field AND the evolved column values — a maintenance op that
+    read the legacy schema would silently drop the column from the
     rewritten files."""
     state = str(tmp_path / "state")
     pu.append_delta_batch(spark, state, _df(spark, [(1, 10.0)]), 0, range_width=16)
@@ -254,8 +254,8 @@ def test_maintenance_carries_schema_and_values(spark, tmp_path):
     after, cols = _read(spark, state)
     assert cols == ["key", "total", "fee", "n_rows"]
     assert after == before
-    # re-range: full rewrite keeps the evolved column
-    assert pu.rerange_partitioned_state(spark, state, 8) > 0
+    # bucket compaction: rewriting every bucket keeps the evolved column
+    assert pu.compact_partitioned_state(spark, state, max_files=0) > 0
     after2, _ = _read(spark, state)
     assert after2 == before
     # summary still answers from stats (primary column) on the evolved table
@@ -655,73 +655,3 @@ def test_per_row_input_overflow_raises_not_drops(spark, tmp_path):
     pu.append_delta_batch(spark, state2, _df(spark, [(9, too_big)]), 1, range_width=16)
     rows2, _ = _read(spark, state2)
     assert rows2 == [(9, 1.0 + too_big, 2)]
-
-def test_rewrite_value_column_type_migration(spark, tmp_path):
-    """r12: the explicit rewrite migration widen_value_column's refusal
-    points at — scale changes and precision narrowing rewrite the whole
-    table (O(table) by contract, like re-range). Loud twice over: a
-    value that cannot FIT the new type raises the curated overflow, and
-    a rescale that would CHANGE a value raises unless the caller passes
-    allow_rounding=True. Time travel reads the old type untouched."""
-    state = str(tmp_path / "state")
-    pu.append_delta_batch(
-        spark, state, _df(spark, [(1, 10.25), (40, 7.5)]), 0, range_width=16
-    )
-    pu.compact_deltas_into_base(spark, state)
-
-    # value-preserving RESCALE UP (18,2)->(20,4): exact, no opt-in needed
-    v = pu.rewrite_value_column_type(spark, state, "total", "decimal(20,4)")
-    assert v == 2
-    m = pu._read_manifest(spark, state, pu._list_manifests(spark, state)[-1])
-    assert m["schema"]["values"] == [["total", "amount", "decimal(20,4)"]]
-    rows, _ = _read(spark, state)
-    assert rows == [(1, 10.25, 1), (40, 7.5, 1)]
-    # no-op call commits nothing
-    n = len(pu._list_manifests(spark, state))
-    assert pu.rewrite_value_column_type(spark, state, "total", "decimal(20,4)") == 2
-    assert len(pu._list_manifests(spark, state)) == n
-
-    # RESCALE DOWN with sub-cent digits: refused, then opt-in rounds
-    # 0.0001 is exact at the rewritten scale 4 (the fold input-casts to
-    # the RECORDED type), so key 1's total becomes 10.2501
-    pu.append_delta_batch(
-        spark, state, _df(spark, [(1, 0.0001)]), 1, range_width=16
-    )
-    pu.compact_deltas_into_base(spark, state)
-    with pytest.raises(Exception, match="would CHANGE the value for key 1"):
-        pu.rewrite_value_column_type(spark, state, "total", "decimal(18,2)")
-    v = pu.rewrite_value_column_type(
-        spark, state, "total", "decimal(18,2)", allow_rounding=True
-    )
-    assert v == 3
-    rows, _ = _read(spark, state)
-    assert rows == [(1, 10.25, 2), (40, 7.5, 1)]  # 10.2501 rounded back
-
-    # NARROWING below a stored value: the overflow guard names the key
-    state2 = str(tmp_path / "narrow")
-    big = 5_000_000_000_000_000.0  # fits (28,2), not (18,2) when doubled
-    pu.append_delta_batch(spark, state2, _df(spark, [(7, big)]), 0, range_width=16)
-    pu.append_delta_batch(spark, state2, _df(spark, [(7, big)]), 1, range_width=16)
-    pu.widen_value_column(spark, state2, "total", "decimal(28,2)")
-    pu.compact_deltas_into_base(spark, state2)
-    with pytest.raises(Exception, match="type rewrite of 'total' for key 7"):
-        pu.rewrite_value_column_type(spark, state2, "total", "decimal(18,2)")
-    # but a narrowing every value fits is legal and future-guarded
-    v = pu.rewrite_value_column_type(spark, state2, "total", "decimal(20,2)")
-    m2 = pu._read_manifest(spark, state2, pu._list_manifests(spark, state2)[-1])
-    assert m2["schema"]["values"][0][2] == "decimal(20,2)"
-    rows2, _ = _read(spark, state2)
-    assert rows2 == [(7, 2 * big, 2)]
-
-    # refusals: unknown column, pending deltas
-    with pytest.raises(ValueError, match="unknown value column"):
-        pu.rewrite_value_column_type(spark, state2, "nope", "decimal(10,0)")
-    pu.append_delta_batch(spark, state2, _df(spark, [(8, 1.0)]), 9, range_width=16)
-    with pytest.raises(ValueError, match="delta-free"):
-        pu.rewrite_value_column_type(spark, state2, "total", "decimal(22,2)")
-
-    # time travel to the pre-rewrite commit reads the OLD type's values
-    v0 = pu.read_partitioned_state_version(spark, state, 0)
-    assert sorted(tuple(r) for r in v0.collect()) == [
-        (1, 10.25, 1), (40, 7.5, 1),
-    ]

@@ -8,8 +8,7 @@ basis, passed the max_seq monotone guard, and published a manifest that
 dropped every delta the real writer had committed. These tests pin the
 two fences that close it (_require_seq_writer_fence): the writer lease
 (newest manifest's writer_id) and the replay-bounds tripwire (a same-id
-commit must reproduce the recorded max_seq). Cross-process twin:
-examples/concurrent_writers_probe.py --seq (two racing driver processes).
+commit must reproduce the recorded max_seq).
 """
 
 from __future__ import annotations
@@ -23,7 +22,6 @@ from pharmaceutical_sales_data_etl_analysis_pipeline_spark.streaming import (
 )
 from pharmaceutical_sales_data_etl_analysis_pipeline_spark.streaming.logstore import (
     ConcurrentCommitError,
-    InProcessConditionalPutLogStore,
 )
 
 
@@ -110,98 +108,6 @@ def test_replay_bounds_tripwire_on_anonymous_lineage(spark, tmp_path):
         )
 
 
-def test_takeover_requires_fresh_batch_id_and_moves_the_lease(spark, tmp_path):
-    """The legal handoff: a new writer claims the table with takeover=True
-    starting ABOVE the owner's newest batch id (seq continuity is then
-    the monotone guard's job); afterwards the OLD owner is fenced out —
-    fencing-token semantics, the stale writer cannot resurrect."""
-    state = str(tmp_path / "state")
-    pu.append_delta_batch(
-        spark,
-        state,
-        _seq_df(spark, [(1, 1.0, "upsert", 1)]),
-        0,
-        range_width=16,
-        writer_id="writer-A",
-    )
-    # takeover replaying the owner's id space is refused
-    with pytest.raises(ConcurrentCommitError, match="takeover"):
-        pu.append_delta_batch(
-            spark,
-            state,
-            _seq_df(spark, [(2, 2.0, "upsert", 5)]),
-            0,
-            range_width=16,
-            writer_id="writer-B",
-            takeover=True,
-        )
-    # takeover at newest+1 with seq above the high-water mark succeeds
-    pu.append_delta_batch(
-        spark,
-        state,
-        _seq_df(spark, [(2, 2.0, "upsert", 5)]),
-        1,
-        range_width=16,
-        writer_id="writer-B",
-        takeover=True,
-    )
-    # ... and the lease MOVED: the previous owner is now the foreigner
-    with pytest.raises(ConcurrentCommitError, match="owned by writer"):
-        pu.append_delta_batch(
-            spark,
-            state,
-            _seq_df(spark, [(3, 3.0, "upsert", 9)]),
-            2,
-            range_width=16,
-            writer_id="writer-A",
-        )
-    assert _fold(spark, state) == {1: (1.0, 1), 2: (2.0, 1)}
-    # takeover seq must still clear the recorded high-water mark
-    with pytest.raises(ValueError, match="order violation"):
-        pu.append_delta_batch(
-            spark,
-            state,
-            _seq_df(spark, [(4, 4.0, "upsert", 2)]),
-            2,
-            range_width=16,
-            writer_id="writer-C",
-            takeover=True,
-        )
-
-
-def test_cow_merge_path_carries_the_same_fence(spark, tmp_path):
-    """Both write paths share the fence: a foreign sequenced CoW merge is
-    rejected exactly like the MoR append."""
-    state = str(tmp_path / "state")
-    pu.merge_batch_into_partitioned_state(
-        spark,
-        state,
-        _seq_df(spark, [(1, 1.0, "upsert", 1)]),
-        0,
-        range_width=16,
-        writer_id="writer-A",
-    )
-    with pytest.raises(ConcurrentCommitError, match="owned by writer"):
-        pu.merge_batch_into_partitioned_state(
-            spark,
-            state,
-            _seq_df(spark, [(2, 2.0, "upsert", 5)]),
-            1,
-            range_width=16,
-            writer_id="writer-B",
-        )
-    # same-writer continuation stays legal on the merge path
-    pu.merge_batch_into_partitioned_state(
-        spark,
-        state,
-        _seq_df(spark, [(2, 2.0, "upsert", 5)]),
-        1,
-        range_width=16,
-        writer_id="writer-A",
-    )
-    assert _fold(spark, state) == {1: (1.0, 1), 2: (2.0, 1)}
-
-
 def test_seqfree_append_cannot_bypass_the_fence(spark, tmp_path):
     """ADVICE r10: the fence used to run only when the batch carried a
     `seq` column, so a misconfigured foreign writer appending seq-FREE
@@ -241,10 +147,11 @@ def test_seqfree_append_cannot_bypass_the_fence(spark, tmp_path):
 
 
 def test_seqfree_cow_merge_cannot_bypass_the_fence(spark, tmp_path):
-    """The CoW merge path shares the seq-free fence: a foreign writer's
-    plain merge onto a fenced table is rejected before any bucket moves."""
+    """The CoW merge path shares the seq-free fence: a plain merge (which
+    carries no writer_id) onto a fenced table is rejected before any
+    bucket moves."""
     state = str(tmp_path / "state")
-    pu.merge_batch_into_partitioned_state(
+    pu.append_delta_batch(
         spark,
         state,
         _seq_df(spark, [(1, 1.0, "upsert", 1)]),
@@ -252,17 +159,15 @@ def test_seqfree_cow_merge_cannot_bypass_the_fence(spark, tmp_path):
         range_width=16,
         writer_id="writer-A",
     )
+    # fold the delta so the merge's delta-free precondition holds; the
+    # compaction commit carries the lease
+    assert pu.compact_deltas_into_base(spark, state) > 0
     plain = spark.createDataFrame([(9, 9.0)], "key long, amount double")
     with pytest.raises(ConcurrentCommitError, match="seq-FREE"):
         pu.merge_batch_into_partitioned_state(
             spark, state, plain, 1, range_width=16
         )
     assert _fold(spark, state) == {1: (1.0, 1)}
-    # owner continues seq-free on the merge path too
-    pu.merge_batch_into_partitioned_state(
-        spark, state, plain, 1, range_width=16, writer_id="writer-A"
-    )
-    assert _fold(spark, state) == {1: (1.0, 1), 9: (9.0, 1)}
 
 
 def test_maintenance_inherits_the_lease(spark, tmp_path):
@@ -301,9 +206,7 @@ def test_ingest_derives_checkpoint_writer_id_and_fences_second_stream(
     """run_partitioned_mor_ingest(with_seq=True) stamps the lineage with
     the checkpoint-derived writer id; a SECOND sequenced stream with its
     OWN checkpoint (a genuinely different logical writer whose batch ids
-    restart at 0) fails loudly instead of clobbering — the in-process pin
-    of the cross-process probe (examples/concurrent_writers_probe.py
-    --seq)."""
+    restart at 0) fails loudly instead of clobbering."""
     import os as _os
 
     rows = [(k, float(k), "upsert", k) for k in range(1, 11)]
@@ -348,44 +251,6 @@ def test_ingest_derives_checkpoint_writer_id_and_fences_second_stream(
     assert _fold(spark, state) == before  # lineage untouched
 
 
-def test_fence_under_atomic_store_cross_writer_race_window(spark, tmp_path):
-    """The fence's driver-side check plus the store's expected-listing CAS
-    leave no silent window: simulate the worst interleaving — writer B
-    lists BEFORE A's commit lands (sees an empty table, so the fence has
-    nothing to check) and publishes AFTER it — by pre-committing A
-    between B's would-be listing and B's append. B's publish must fail
-    the CAS loudly. (Cross-process timing twin lives in the probe.)"""
-    prev_store = pu.set_log_store(InProcessConditionalPutLogStore())
-    try:
-        state = str(tmp_path / "state")
-        a = _seq_df(spark, [(1, 1.0, "upsert", 1)])
-        b = _seq_df(spark, [(2, 2.0, "upsert", 2)])
-        real_write = pu._write_manifest
-        hits = {"n": 0}
-
-        def delayed_write(spark_, state_dir, manifest, expected=None):
-            # first publish through this shim is B's: sneak A's commit in
-            # first, against the listing B snapshotted
-            if hits["n"] == 0:
-                hits["n"] = 1
-                pu.append_delta_batch(
-                    spark, state, a, 0, range_width=16, writer_id="writer-A"
-                )
-            return real_write(spark_, state_dir, manifest, expected=expected)
-
-        pu._write_manifest = delayed_write
-        try:
-            with pytest.raises(ConcurrentCommitError):
-                pu.append_delta_batch(
-                    spark, state, b, 0, range_width=16, writer_id="writer-B"
-                )
-        finally:
-            pu._write_manifest = real_write
-        assert _fold(spark, state) == {1: (1.0, 1)}
-    finally:
-        pu.set_log_store(prev_store)
-
-
 def test_checkpoint_writer_id_is_spelling_stable(tmp_path):
     """The same LOCAL checkpoint spelled relatively vs absolutely hashes
     to the same writer id (a replay must not fence itself out); URI
@@ -407,84 +272,3 @@ def test_checkpoint_writer_id_is_spelling_stable(tmp_path):
     assert pu.seq_writer_id_for_checkpoint(
         "hdfs://nn/ck"
     ) != pu.seq_writer_id_for_checkpoint("hdfs://nn/other")
-
-def test_lease_ttl_expiry_takeover(spark, tmp_path):
-    """r12 (VERDICT r11 ask #6): the default-off lease-TTL mode. The
-    newest manifest's file mtime is the owner's heartbeat; a foreign
-    writer passing lease_ttl_ms claims the table WITHOUT a manual
-    takeover flag once the heartbeat is older than the TTL — under the
-    same safety rules as manual takeover (fresh batch id above the
-    owner's newest, max_seq monotone) — and is refused, with the
-    remaining time named, while the lease is live. A heartbeat commit
-    renews the lease without appending data, and the usurped owner is
-    fenced loudly when it wakes up. Owner silence is simulated by
-    BACKDATING the newest manifest's mtime (deterministic — wall-clock
-    sleeps would race Spark job latency inside the append)."""
-    import os
-    import time
-
-    state = str(tmp_path / "state")
-    ttl = 60_000
-
-    def backdate(age_ms):
-        mdir = f"{state}/manifests"
-        newest = sorted(
-            f for f in os.listdir(mdir)
-            if f.endswith(".json") and not f.startswith(".")
-        )[-1]
-        old = time.time() - age_ms / 1000
-        os.utime(f"{mdir}/{newest}", (old, old))
-
-    pu.append_delta_batch(
-        spark, state,
-        _seq_df(spark, [(1, 10.0, "upsert", 1), (2, 20.0, "upsert", 2)]),
-        0, range_width=16, writer_id="owner",
-    )
-
-    # live lease: the TTL claim is refused and names the TTL
-    with pytest.raises(ConcurrentCommitError, match="lease is LIVE"):
-        pu.append_delta_batch(
-            spark, state,
-            _seq_df(spark, [(3, 30.0, "upsert", 10)]),
-            1, range_width=16, writer_id="usurper", lease_ttl_ms=ttl,
-        )
-
-    # the owner goes silent past the TTL, then HEARTBEATS: the beat is
-    # a no-op 'x' commit (no data touched) whose fresh mtime renews the
-    # lease, so the claim is refused again
-    backdate(2 * ttl)
-    beat = pu.heartbeat_partitioned_state(spark, state)
-    assert "x" in beat  # same-batch-id maintenance commit
-    assert _fold(spark, state) == {1: (10.0, 1), 2: (20.0, 1)}
-    with pytest.raises(ConcurrentCommitError, match="lease is LIVE"):
-        pu.append_delta_batch(
-            spark, state,
-            _seq_df(spark, [(3, 30.0, "upsert", 10)]),
-            1, range_width=16, writer_id="usurper", lease_ttl_ms=ttl,
-        )
-
-    # heartbeat silent past the TTL: the claim succeeds with no manual
-    # flag — but still under the fresh-batch-id takeover rule
-    backdate(2 * ttl)
-    with pytest.raises(ConcurrentCommitError, match="new batch id above"):
-        pu.append_delta_batch(
-            spark, state,
-            _seq_df(spark, [(3, 30.0, "upsert", 10)]),
-            0, range_width=16, writer_id="usurper", lease_ttl_ms=ttl,
-        )
-    backdate(2 * ttl)  # the refused attempt did not commit; re-silence
-    pu.append_delta_batch(
-        spark, state,
-        _seq_df(spark, [(3, 30.0, "upsert", 10)]),
-        1, range_width=16, writer_id="usurper", lease_ttl_ms=ttl,
-    )
-    assert _fold(spark, state) == {1: (10.0, 1), 2: (20.0, 1), 3: (30.0, 1)}
-
-    # the usurped owner wakes up: fenced loudly, lineage intact
-    with pytest.raises(ConcurrentCommitError, match="owned by writer 'usurper'"):
-        pu.append_delta_batch(
-            spark, state,
-            _seq_df(spark, [(9, 9.0, "upsert", 20)]),
-            2, range_width=16, writer_id="owner",
-        )
-    assert _fold(spark, state) == {1: (10.0, 1), 2: (20.0, 1), 3: (30.0, 1)}

@@ -650,49 +650,6 @@ def test_stream_mor_ingest_equals_batch_fold(spark, sf_dir, monkeypatch):
     ) == ["v000000000", "v000000001"]
 
 
-def test_streamed_mor_ingest_under_arbiter_store(spark, tmp_path, monkeypatch):
-    """End-to-end: the streamed MoR ingest commits through the
-    external-arbiter conditional-put store selected by the
-    SPARK_GRAFT_LOG_STORE env seam — the full S3-multi-writer
-    deployment wiring (env -> endpoint -> remote-arbiter two-phase CAS
-    commit) under a real Structured Streaming drain, held to the exact
-    batch fold. r9: the env seam requires a REAL endpoint (an in-memory
-    arbiter would give a multi-driver deployment no cross-driver
-    exclusion — ADVICE r8), so the test runs the arbiter in a child
-    process behind the multiprocessing-manager transport."""
-    import pharmaceutical_sales_data_etl_analysis_pipeline_spark.streaming.partitioned_upsert as pu
-    from pharmaceutical_sales_data_etl_analysis_pipeline_spark.streaming.arbiter_server import (
-        start_arbiter_server,
-    )
-    from pharmaceutical_sales_data_etl_analysis_pipeline_spark.streaming.logstore import (
-        ArbiterLogStore,
-    )
-
-    mgr, (host, port) = start_arbiter_server()
-    monkeypatch.setenv("SPARK_GRAFT_LOG_STORE", "arbiter")
-    monkeypatch.setenv("SPARK_GRAFT_ARBITER_ENDPOINT", f"{host}:{port}")
-    prev = pu.set_log_store(pu._default_log_store())
-    try:
-        assert isinstance(pu._LOG_STORE, ArbiterLogStore)
-        monkeypatch.setattr(pu, "RANGE_WIDTH", 16)
-        src = str(tmp_path / "src")
-        rows = [(k, float(k % 7 + 1), "upsert") for k in range(120)]
-        df = spark.createDataFrame(rows, "key long, amount double, op string")
-        df.repartition(3).write.mode("overwrite").parquet(src)
-        report = pu.run_partitioned_mor_ingest(
-            spark, src, str(tmp_path / "state"), str(tmp_path / "ckpt"),
-            max_files_per_trigger=2,
-        )
-        assert len(report["batches"]) >= 2  # multi-file micro-batches
-        got = {r["key"]: (r["total"], r["n_rows"])
-               for r in pu.read_latest_partitioned_state(
-                   spark, str(tmp_path / "state")).collect()}
-        assert got == {k: (float(k % 7 + 1), 1) for k in range(120)}
-    finally:
-        pu.set_log_store(prev)
-        mgr.shutdown()
-
-
 def test_gap_sessions_matches_batch_sessionization(spark, tmp_path):
     """Streamed gap sessionization (applyInPandasWithState with
     ProcessingTimeTimeout, r10) equals the batch boundary-cumsum
