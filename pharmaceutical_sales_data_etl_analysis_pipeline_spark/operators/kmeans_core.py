@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .dimfold import sqdist_block
+
 MIN_CLUSTERS = 8
 TARGET_CLUSTER_SIZE = 125
 K_SQRT_CAP = 16           # K <= 16*sqrt(n): FAISS's nlist guidance band
@@ -109,10 +111,7 @@ def _assign(quant: DataFrame, centroids: list[tuple[int, list[float]]]) -> DataF
             for lo in range(0, len(pdf), 4096):
                 chunk = pdf.iloc[lo : lo + 4096]
                 Q = np.stack(chunk["qe"].to_numpy()).astype(np.float64)  # (N, DIM)
-                dists = np.zeros((len(chunk), len(ids)), dtype=np.float64)
-                for i in range(Q.shape[1]):  # dim order = the fold order
-                    diff = Q[:, i : i + 1] - C[:, i][None, :]
-                    dists = dists + diff * diff
+                dists = sqdist_block(Q, C)
                 best = np.argmin(dists, axis=1)
                 yield pd.DataFrame(
                     {
@@ -187,12 +186,8 @@ def _train_spaces(
                 Qf = Qi.astype(np.float64)
                 out_space, out_cluster, out_pos, out_s, out_c = [], [], [], [], []
                 for si, (lo, dim, cids, C) in enumerate(mats):
-                    Qs = Qf[:, lo : lo + dim]
                     # dim-sequential (N, K) accumulation — the _assign fold
-                    dists = np.zeros((len(chunk), len(cids)), dtype=np.float64)
-                    for i in range(dim):
-                        diff = Qs[:, i : i + 1] - C[:, i][None, :]
-                        dists = dists + diff * diff
+                    dists = sqdist_block(Qf[:, lo : lo + dim], C)
                     best = np.argmin(dists, axis=1)  # first min = lowest cid
                     Qw = Qi[:, lo : lo + dim]
                     for bi in np.unique(best):

@@ -30,12 +30,16 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..functions.numeric import round_half_up
+from .dimfold import cosine_grid, dot_block, dots, grid, sqdist_block
 
 N_QUERIES = 5     # vec_id < 5 are the query vectors
 TOP_K = 10
 DIM = 64          # embedding dimensionality (testdata contract)
 
 LSH_PLANES = 8    # sign-LSH signature bits
+# cosine_topk ships its query block in every task closure: at most this
+# many rows are collected (512 KiB of float64 at DIM 64)
+MAX_TOPK_QUERIES = 1024
 
 
 def _fold(terms: Column) -> Column:
@@ -51,8 +55,8 @@ def _fold(terms: Column) -> Column:
 # blow past the JVM's JIT HugeMethodLimit and run in the bytecode
 # interpreter (1.7 MB task binaries). Keep the HOF fold; where the
 # candidate count makes it the bottleneck, use an Arrow-vectorized verify
-# (dim-ordered numpy accumulation — same IEEE op order, see
-# embedding_near_dups) instead of widening the JVM expression.
+# (the dim-ordered numpy accumulation in dimfold.py — same IEEE op
+# order) instead of widening the JVM expression.
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -78,6 +82,11 @@ def cosine_topk(embeddings: DataFrame, n_queries: int = N_QUERIES, k: int = TOP_
     # Interleaved A/B at sf0.1: 0.76 -> 0.50 s (0.65x), bit-EQUAL. This is
     # also the form that survives a large corpus: payload crosses once,
     # the only shuffle is the per-query top-k window.
+    if n_queries > MAX_TOPK_QUERIES:
+        raise ValueError(
+            f"cosine_topk: n_queries={n_queries} exceeds MAX_TOPK_QUERIES="
+            f"{MAX_TOPK_QUERIES} (the query block is collected to the driver)"
+        )
     qrows = sorted(
         (int(r["vec_id"]), [float(x) for x in r["embedding"]])
         for r in embeddings.filter(F.col("vec_id") < n_queries).collect()
@@ -91,24 +100,15 @@ def cosine_topk(embeddings: DataFrame, n_queries: int = N_QUERIES, k: int = TOP_
 
         Q = np.asarray(qmat, dtype=np.float64)  # (nq, DIM)
         ids = np.asarray(qids, dtype=np.int64)
-        # query norms: dim-sequential fold of squares then sqrt — _norm
-        qn = np.zeros(len(ids))
-        for i in range(Q.shape[1]):
-            qn = qn + Q[:, i] * Q[:, i]
-        qn = np.sqrt(qn)
+        qn = np.sqrt(dots(Q, Q))  # the _norm fold
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             X = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
             d_id = pdf["vec_id"].to_numpy().astype(np.int64)
             n = len(pdf)
-            dn = np.zeros(n)
-            D = np.zeros((n, len(ids)))
-            for i in range(X.shape[1]):  # dim order = the fold order
-                dn = dn + X[:, i] * X[:, i]
-                D = D + X[:, i][:, None] * Q[:, i][None, :]
-            dn = np.sqrt(dn)
-            cos = np.floor(D / (qn[None, :] * dn[:, None]) * 1e9 + 0.5) / 1e9
+            dn = np.sqrt(dots(X, X))
+            cos = cosine_grid(dot_block(X, Q), qn[None, :], dn[:, None])
             out_q = np.repeat(ids[None, :], n, axis=0).ravel()
             out_d = np.repeat(d_id, len(ids))
             out_c = cos.ravel()
@@ -218,12 +218,10 @@ def _arrow_sign_codes(
             if len(pdf) == 0:
                 continue
             X = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)  # (N, DIM)
+            proj = dot_block(X, W)  # (N, P)
             code = np.zeros(len(pdf), dtype=np.int64)
             for p in range(W.shape[0]):
-                acc = np.zeros(len(pdf), dtype=np.float64)
-                for i in range(W.shape[1]):  # dim order = the fold order
-                    acc = acc + W[p, i] * X[:, i]
-                code = code | ((acc > 0).astype(np.int64) << p)
+                code = code | ((proj[:, p] > 0).astype(np.int64) << p)
             yield pd.DataFrame({"vec_id": pdf["vec_id"].to_numpy(), out_col: code})
 
     return embeddings.select("vec_id", "embedding").mapInPandas(
@@ -260,15 +258,9 @@ def _arrow_pair_cosine(pairs: DataFrame, keep: list[tuple[str, str]]) -> DataFra
                 continue
             va = np.stack(pdf["emb_a"].to_numpy()).astype(np.float64)
             vb = np.stack(pdf["emb_b"].to_numpy()).astype(np.float64)
-            n = len(pdf)
-            dot = np.zeros(n)
-            na = np.zeros(n)
-            nb = np.zeros(n)
-            for i in range(va.shape[1]):  # dim order = the fold order
-                dot = dot + va[:, i] * vb[:, i]
-                na = na + va[:, i] * va[:, i]
-                nb = nb + vb[:, i] * vb[:, i]
-            cos = np.floor(dot / (np.sqrt(na) * np.sqrt(nb)) * 1e9 + 0.5) / 1e9
+            cos = cosine_grid(
+                dots(va, vb), np.sqrt(dots(va, va)), np.sqrt(dots(vb, vb))
+            )
             out = {c: pdf[c].to_numpy().astype(dt) for c, dt in keep}
             out["cosine"] = cos
             yield pd.DataFrame(out)
@@ -611,15 +603,9 @@ def embedding_near_dups(embeddings: DataFrame, n_override: int | None = None) ->
                 continue
             va = np.stack(pdf["emb_a"].to_numpy()).astype(np.float64)
             vb = np.stack(pdf["emb_b"].to_numpy()).astype(np.float64)
-            n = len(pdf)
-            dot = np.zeros(n)
-            na = np.zeros(n)
-            nb = np.zeros(n)
-            for i in range(va.shape[1]):  # dim order = the oracle's fold order
-                dot = dot + va[:, i] * vb[:, i]
-                na = na + va[:, i] * va[:, i]
-                nb = nb + vb[:, i] * vb[:, i]
-            cos = np.floor(dot / (np.sqrt(na) * np.sqrt(nb)) * 1e9 + 0.5) / 1e9
+            cos = cosine_grid(
+                dots(va, vb), np.sqrt(dots(va, va)), np.sqrt(dots(vb, vb))
+            )
             keep = cos >= NEARDUP_MIN_COS
             out = pdf.loc[keep, ["vec_a", "vec_b"]].copy()
             out["cosine"] = cos[keep]
@@ -947,18 +933,9 @@ def ivf_assignments(embeddings: DataFrame, cents: DataFrame | None = None) -> Da
             for lo in range(0, len(pdf), 4096):     # bound the (rows, K) block
                 chunk = pdf.iloc[lo : lo + 4096]
                 Q = np.stack(chunk["embedding"].to_numpy()).astype(np.float64)
-                # v_norm: dim-sequential fold of squares then sqrt — the
-                # _norm op order exactly
-                acc = np.zeros(len(chunk))
-                for i in range(Q.shape[1]):
-                    acc = acc + Q[:, i] * Q[:, i]
-                vn = np.sqrt(acc)
-                # dot(q, c_j) for ALL centroids at once, still summing in
-                # dim order: D[r, j] accumulates q_i * c_j_i for i = 0..63
-                D = np.zeros((len(chunk), len(ids)))
-                for i in range(Q.shape[1]):
-                    D = D + Q[:, i : i + 1] * C[:, i][None, :]
-                cos = np.floor(D / (vn[:, None] * CN[None, :]) * 1e9 + 0.5) / 1e9
+                vn = np.sqrt(dots(Q, Q))  # the _norm fold
+                # dot(q, c_j) for ALL centroids at once, in dim order
+                cos = cosine_grid(dot_block(Q, C), vn[:, None], CN[None, :])
                 best = np.argmax(cos, axis=1)       # first max -> lowest c_id
                 yield pd.DataFrame(
                     {
@@ -1160,17 +1137,28 @@ def embedding_quantize(embeddings: DataFrame) -> DataFrame:
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            e = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            scale = np.abs(e).max(axis=1) / 127.0
-            # zero-vector guard: divide by 1 instead (codes come out 0,
-            # the reported scale stays 0, reconstruction 0*0 is exact)
-            div = np.where(scale == 0.0, 1.0, scale)
-            codes = np.floor(e / div[:, None] + 0.5).astype(np.int64)
-            err = np.abs(codes * scale[:, None] - e).max(axis=1)
+            # the math is per row: stack one row length at a time, so a
+            # batch mixing lengths (the SQL twin accepts it) keeps working
+            embs = pdf["embedding"].to_numpy()
+            lens = np.array([len(v) for v in embs])
+            scale = np.empty(len(pdf))
+            err = np.empty(len(pdf))
+            codes = np.empty(len(pdf), dtype=object)
+            for dim in np.unique(lens):
+                rows = np.flatnonzero(lens == dim)
+                e = np.stack(embs[rows]).astype(np.float64)
+                sc = np.abs(e).max(axis=1) / 127.0
+                # zero-vector guard: divide by 1 instead (codes come out 0,
+                # the reported scale stays 0, reconstruction 0*0 is exact)
+                div = np.where(sc == 0.0, 1.0, sc)
+                q = np.floor(e / div[:, None] + 0.5).astype(np.int64)
+                scale[rows] = sc
+                err[rows] = np.abs(q * sc[:, None] - e).max(axis=1)
+                codes[rows] = [",".join(str(int(c)) for c in row) for row in q]
             out = pdf[["vec_id"]].copy()
-            out["scale"] = np.floor(scale * 1e9 + 0.5) / 1e9
-            out["codes"] = [",".join(str(int(c)) for c in row) for row in codes]
-            out["max_abs_err"] = np.floor(err * 1e9 + 0.5) / 1e9
+            out["scale"] = grid(scale)
+            out["codes"] = codes
+            out["max_abs_err"] = grid(err)
             yield out
 
     return embeddings.mapInPandas(quantize, schema=_QUANTIZE_OUT)
@@ -1351,18 +1339,11 @@ def pq_codes(
             out = {"vec_id": pdf["vec_id"].to_numpy()}
             total = np.zeros(len(pdf))
             for mi, (ids, C) in enumerate(mats):
-                Qs = Q[:, mi * PQ_SUBDIM : (mi + 1) * PQ_SUBDIM]
-                dists = np.empty((len(pdf), len(ids)))
-                for j in range(len(ids)):
-                    d = Qs - C[j]
-                    acc = np.zeros(len(pdf))
-                    for i in range(d.shape[1]):  # dim order = the fold order
-                        acc = acc + d[:, i] * d[:, i]
-                    dists[:, j] = acc
+                dists = sqdist_block(Q[:, mi * PQ_SUBDIM : (mi + 1) * PQ_SUBDIM], C)
                 best = np.argmin(dists, axis=1)
                 out[f"code{mi}"] = ids[best].astype(np.int32)
                 total = total + dists[np.arange(len(pdf)), best]
-            out["recon_err"] = np.floor(total / _QUANT2 * 1e6 + 0.5) / 1e6
+            out["recon_err"] = grid(total / _QUANT2, 1e6)
             yield pd.DataFrame(out)
 
     out = _quantized(embeddings).mapInPandas(encode, _PQ_OUT)

@@ -318,6 +318,23 @@ def test_neardup_components_raises_at_its_round_cap(spark, monkeypatch):
     assert got == {i: 0 for i in range(n)}
 
 
+def test_cosine_topk_bounds_its_query_collect(spark, sf_dir, monkeypatch):
+    """cosine_topk collects its query block to the driver and ships it in
+    every task closure, so the query count has a stated bound: one over it
+    raises before any job runs; at the bound the block is collected."""
+    from pharmaceutical_sales_data_etl_analysis_pipeline_spark.operators import similarity
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    limit = similarity.MAX_TOPK_QUERIES
+    with pytest.raises(ValueError, match="MAX_TOPK_QUERIES"):
+        similarity.cosine_topk(emb, n_queries=limit + 1)
+    monkeypatch.setattr(similarity, "MAX_TOPK_QUERIES", 3)
+    with pytest.raises(ValueError, match="n_queries=4"):
+        similarity.cosine_topk(emb, n_queries=4)
+    got = {r["q_id"] for r in similarity.cosine_topk(emb, n_queries=3, k=1).collect()}
+    assert got == {0, 1, 2}
+
+
 def test_kmeans_assignment_is_zero_shuffle_projection(spark, sf_dir):
     """The clustering assignment pass compiles centroids into literals:
     the final plan must be scan + projection — no join, no shuffle. (The
