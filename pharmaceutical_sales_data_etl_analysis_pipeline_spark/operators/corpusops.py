@@ -9,15 +9,19 @@ a fixpoint); its oracle is a DuckDB recursive CTE computing min reachable
 node — one of the few genuinely non-single-query ops, still oracle-checked.
 
 At 100 TB: scrub/sample/shard are narrow zero-shuffle projections (sharding
-is exactly how a corpus gets split for distributed training jobs); label
-propagation does one self-join shuffle per iteration and converges in
-O(graph diameter) rounds — for billion-edge dedup graphs switch to the
-large-star/small-star variant (same join primitive, fewer rounds).
+is exactly how a corpus gets split for distributed training jobs). Label
+propagation runs where the candidate graph fits: a graph of at most
+EDGE_ROWS_PER_PARTITION edge rows (one partition by `_graph_partitions`)
+is collected once and solved in one driver pass, the same rounds in
+numpy; a larger graph runs the distributed loop, one self-join shuffle
+per round, converging in O(log diameter) rounds with pointer jumping —
+for billion-edge dedup graphs switch to the large-star/small-star
+variant (same join primitive, fewer rounds).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
@@ -124,7 +128,8 @@ GROUP BY 1
 # Near-dup clustering: connected components of the LSH candidate graph
 # (est_jaccard >= 0.5), component id = min doc_id in the component.
 # Iterative min-label propagation with a driver-side convergence check —
-# the Pregel shape. Oracle: DuckDB recursive CTE (min reachable node).
+# the Pregel shape — run on the driver for a one-partition graph and as
+# Spark joins otherwise. Oracle: DuckDB recursive CTE (min reachable node).
 # ---------------------------------------------------------------------------
 
 EDGE_ROWS_PER_PARTITION = 500_000  # ~tens of MB of (long, long) rows
@@ -188,16 +193,79 @@ def neardup_components(
     )
     # Undirected edge list, both directions, pinned (pin.py: parquet table
     # under SPARK_GRAFT_PIN=table, else localCheckpoint): every iteration
-    # re-reads the graph, and the one count() that sizes the partitioning
-    # is nearly free on the materialized copy (narrow re-sizes then stack
-    # on it without a second materialization).
+    # re-reads the graph. The edge count that sizes the partitioning is
+    # observed inside the pin's own job (an Observation fires through both
+    # localCheckpoint and the parquet write), not by a separate count().
+    n_obs = Observation()
     edges = pin(
         pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
         .unionByName(pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
-        .distinct(),
+        .distinct()
+        .observe(n_obs, F.count(F.lit(1)).alias("n")),
         "neardup_edges",
     )
-    n_parts = _graph_partitions(edges.count(), rows_per_partition)
+    n_parts = _graph_partitions(n_obs.get["n"], rows_per_partition)
+    if n_parts == 1:
+        # A one-partition graph (at most rows_per_partition edge rows — the
+        # stated bound of this collect) runs the same rounds on the driver:
+        # one collect instead of an init checkpoint plus, per round, one
+        # job per adaptive stage and a count(). Larger graphs keep the
+        # distributed loop below.
+        out = _components_on_driver(edges, max_iters)
+    else:
+        out = _components_distributed(edges, n_parts, max_iters)
+    if ckey is not None:
+        from .buildcache import memo_put
+
+        memo_put(_COMPONENTS_CACHE, ckey, out)
+    return out
+
+
+def _not_converged(max_iters: int, changed: int) -> RuntimeError:
+    # the cap is a safety bound, not an answer: labels that are still
+    # moving are not the components (min reachable doc_id) yet
+    return RuntimeError(
+        f"neardup_components: label propagation did not converge in "
+        f"{max_iters} rounds ({changed} labels changed in the last one)"
+    )
+
+
+def _components_on_driver(edges: DataFrame, max_iters: int) -> DataFrame:
+    """The distributed loop's rounds, step for step, in numpy over the
+    collected edge list: the same init, hook, pointer jump and changed
+    count, so the labels and the round at which max_iters raises are the
+    loop's. Nodes are renumbered densely in doc_id order, which keeps
+    every min a min."""
+    import numpy as np
+    import pandas as pd
+
+    pdf = edges.toPandas()
+    src = pdf["src"].to_numpy(dtype=np.int64)
+    dst = pdf["dst"].to_numpy(dtype=np.int64)
+    nodes = np.unique(src)  # edges are symmetric: every node is a src
+    s = np.searchsorted(nodes, src)
+    d = np.searchsorted(nodes, dst)
+    # init: label = least(src, min(dst)) per src
+    label = np.arange(len(nodes))
+    np.minimum.at(label, s, d)
+    for _ in range(max_iters):
+        # hook: min over neighbour labels, then pointer jump
+        hooked = label.copy()
+        np.minimum.at(hooked, s, label[d])
+        new = hooked[hooked]
+        changed = int(np.count_nonzero(new != label))
+        label = new
+        if changed == 0:
+            break
+    else:
+        raise _not_converged(max_iters, changed)
+    return edges.sparkSession.createDataFrame(
+        pd.DataFrame({"doc_id": nodes, "component": nodes[label]}),
+        "doc_id long, component long",
+    )
+
+
+def _components_distributed(edges: DataFrame, n_parts: int, max_iters: int) -> DataFrame:
     edges = _sized(edges, n_parts, "dst")
     # r13 (fewer fixed-latency jobs per round, same fixpoint — the loop's
     # cost at any scale is rounds x per-round barriers, guide §1.2/§2.4):
@@ -253,18 +321,8 @@ def neardup_components(
         if changed == 0:
             break
     else:
-        # the cap is a safety bound, not an answer: labels that are still
-        # moving are not the components (min reachable doc_id) yet
-        raise RuntimeError(
-            f"neardup_components: label propagation did not converge in "
-            f"{max_iters} rounds ({changed} labels changed in the last one)"
-        )
-    out = labels.select(F.col("node").alias("doc_id"), F.col("label").alias("component"))
-    if ckey is not None:
-        from .buildcache import memo_put
-
-        memo_put(_COMPONENTS_CACHE, ckey, out)
-    return out
+        raise _not_converged(max_iters, changed)
+    return labels.select(F.col("node").alias("doc_id"), F.col("label").alias("component"))
 
 
 def q_neardup_components(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -19,7 +19,7 @@ Reference parity: exact dedup generalizes LoadXML2DB.ChatterjeeP.R:112-135
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
@@ -601,13 +601,18 @@ def _sim64_hamming() -> Column:
 
 
 def simhash_near_dups(documents: DataFrame, n_override: int | None = None) -> DataFrame:
-    """EAGER at build: one count() round-trip derives the block partition
-    (the kmeans_clusters pattern — registry eager-exec note). The OUTPUT
-    contract (Hamming <= 3 pairs) is block-independent, so the all-pairs
-    oracle needs no derivation twin; only the physical plan moves with
-    the corpus. `n_override` exists for tests exercising a specific
-    derivation rung on a tiny corpus."""
-    n = documents.count() if n_override is None else n_override
+    """EAGER at build: the document count derives the block partition
+    (the kmeans_clusters pattern — registry eager-exec note). It is
+    observed on the documents input inside the signature pin's job, not
+    counted by a job of its own, and not taken from the signature rows: a
+    document with fewer than 3 words has no shingle and so no signature,
+    but still counts. The OUTPUT contract (Hamming <= 3 pairs) is
+    block-independent, so the all-pairs oracle needs no derivation twin;
+    only the physical plan moves with the corpus. `n_override` exists for
+    tests exercising a specific derivation rung on a tiny corpus."""
+    if n_override is None:
+        n_obs = Observation()
+        documents = documents.observe(n_obs, F.count(F.lit(1)).alias("n"))
     # opt r14 (guide §2.4 / §8): the block self-join consumes `keys` on
     # BOTH sides, and Spark re-derives common subtrees per consumer — the
     # un-pinned plan scanned documents and recomputed the full 64-vote
@@ -617,6 +622,7 @@ def simhash_near_dups(documents: DataFrame, n_override: int | None = None) -> Da
     # re-expanded per side. Interleaved A/B 0.91x at sf0.1; at scale this
     # halves the dominant cost (two full corpus passes -> one).
     sig = pin(simhash64(documents), "sim64_sig")
+    n = n_obs.get["n"] if n_override is None else n_override
     keys = simhash64_blocks(sig, derive_sim_blocks(n))
     a, b = keys.alias("a"), keys.alias("b")
     return (

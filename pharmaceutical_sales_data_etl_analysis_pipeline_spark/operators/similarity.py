@@ -1633,12 +1633,14 @@ def ann_recall_eval(embeddings: DataFrame, n_queries: int = N_QUERIES,
         cosine_topk(embeddings, n_queries, k).select("q_id", "d_id", "rnk"),
         "ann_exact",
     )
+    # the IVF-PQ probe trains its codebooks at build: built once, it
+    # serves both the ivf_pq row and the hybrid row's dense side
+    pq = ivf_pq_probe_topk(embeddings, n_queries, k, IVF_NPROBE, cents=cents)
     variants = [
         ("ivf_flat", 1, ivf_probe_topk(embeddings, n_queries, k, 1, cents)),
         ("ivf_flat", IVF_NPROBE,
          ivf_probe_topk(embeddings, n_queries, k, IVF_NPROBE, cents)),
-        ("ivf_pq", IVF_NPROBE,
-         ivf_pq_probe_topk(embeddings, n_queries, k, IVF_NPROBE, cents=cents)),
+        ("ivf_pq", IVF_NPROBE, pq),
     ]
     def _recall_row(name: str, nprobe: int, approx: DataFrame, truth: DataFrame):
         hits = approx.select("q_id", "d_id").join(
@@ -1668,7 +1670,8 @@ def ann_recall_eval(embeddings: DataFrame, n_queries: int = N_QUERIES,
         # fusion — BM25 fused with the IVF-PQ probe — against the same
         # fusion over the exact dense ranking. The lexical side is ONE
         # plan reused by both fusions (bm25_scored pins its tf); the
-        # exact-dense side reuses the pinned ground truth above; the
+        # exact-dense side reuses the pinned ground truth above and the
+        # approximate side the IVF-PQ probe of the ivf_pq row; the
         # fused-exact set pins because it serves as both semi-join side
         # and denominator (k x n_queries rows).
         lex = _hybrid_lex_ranks(documents)
@@ -1678,9 +1681,7 @@ def ann_recall_eval(embeddings: DataFrame, n_queries: int = N_QUERIES,
             ).select("q_id", "d_id"),
             "hybrid_exact",
         )
-        dense_ann = ivf_pq_probe_topk(
-            embeddings, n_queries, k, IVF_NPROBE, cents=cents
-        ).select("q_id", "d_id", F.col("rnk").alias("dense_rnk"))
+        dense_ann = pq.select("q_id", "d_id", F.col("rnk").alias("dense_rnk"))
         fused_ann = _hybrid_rrf_fuse(dense_ann, lex).select("q_id", "d_id")
         parts.append(
             _recall_row("hybrid_rrf_pq", IVF_NPROBE, fused_ann, fused_exact)

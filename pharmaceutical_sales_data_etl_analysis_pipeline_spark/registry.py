@@ -25,16 +25,22 @@ bm25_topk_terms, hybrid_retrieval_rrf, hybrid_retrieval_rrf_ann
 (whose IVF-PQ dense side also derives codebooks/centroids from the
 corpus), term_lift_pairs, pagerank_fixedpoint,
 graph_triangle_stats, tfidf_topk_terms, neardup_components and its
-dependents training_corpus/dedup_survivors/dedup_rate_by_source) and queries whose
-parameters derive from the data via driver round-trips (kmeans_clusters,
-semdedup_candidates, ivf_*: corpus count / seeds / centroid sums;
-simhash_near_dups / embedding_near_dups and their _planted variants:
-one count() that picks the corpus-derived LSH partition — block count /
-mask width / table count; the oracle re-derives the same integers from
-count(*), or is block-independent (simhash's all-pairs contract);
+dependents training_corpus/dedup_survivors/quality_filter_funnel — for
+a one-partition candidate graph the chain runs the LSH edge pin plus one
+collect of the edges, and propagation then runs on the driver; larger
+graphs run the distributed loop, jobs per round)
+and queries whose parameters derive from the data via driver round-trips
+(kmeans_clusters, semdedup_candidates, ivf_*: corpus count / seeds /
+centroid sums; embedding_near_dups and its _planted variant: one count()
+that picks the corpus-derived LSH partition — mask width / table count;
+simhash_near_dups and its _planted variant: the block count, from a
+document count observed inside the signature pin's job; the oracle
+re-derives the same integers from count(*), or is block-independent
+(simhash's all-pairs contract);
 histogram_quantile_calibration: 3-scalar extent + 64-row histogram for
 the two-phase exact-selection comparator; ann_recall_eval: the pinned
-brute-force ground-truth pass it ranks every ANN variant against;
+brute-force ground-truth pass it ranks every ANN variant against, and
+one IVF-PQ probe build shared by its ivf_pq and hybrid rows;
 graph_triangle_stats: one pair-bound agg that derives the broadcast-vs-
 shuffle join strategy — the unconditional edge broadcast failed at the
 r6 sf10 rung); and the ingest-fixture queries that stage files and
@@ -101,10 +107,20 @@ MODULE_ORDER = [
 # staleness fills (the remaining r8-cohort rows, then the r9 cohort in
 # name order — ranking recomputed from CORRECTNESS_r01..r13).
 PRIORITY = [
-    # (a) every query whose PHYSICAL PLAN or kernel changed in the r14
-    # optimization pass — plan-changed outranks staleness per the
-    # rotation invariant; name order (17 rows)
+    # (0) build changed by the one-partition driver pass of the near-dup
+    # chain, the single IVF-PQ probe of ann_recall_eval and the observed
+    # document count of simhash_near_dups (and its planted variant):
+    # plan-changed outranks staleness per the rotation invariant; name
+    # order (7 rows)
     "ann_recall_eval",
+    "dedup_survivors",
+    "neardup_components",
+    "quality_filter_funnel",
+    "simhash_near_dups",
+    "simhash_near_dups_planted",
+    "training_corpus",
+    # (a) every query whose PHYSICAL PLAN or kernel changed in the r14
+    # optimization pass, less those in (0); name order (13 rows)
     "cluster_label_purity",
     "cosine_topk",
     "hybrid_retrieval_rrf",
@@ -118,9 +134,6 @@ PRIORITY = [
     "oov_rate",
     "pq_codes",
     "semdedup_candidates",
-    "simhash_near_dups",
-    "simhash_near_dups_planted",
-    "training_corpus",
     # (b) staleness fill to 50: the r8-cohort remainder (last driver
     # row r8), name order (17 rows)
     "hourly_anomalies",
@@ -140,7 +153,7 @@ PRIORITY = [
     "udtf_sentences",
     "weighted_sample",
     "xml_stream_ingest",
-    # (c) r9-cohort head (last driver row r9), name order (16 rows)
+    # (c) r9-cohort head (last driver row r9), name order (13 rows)
     "array_agg_per_brand",
     "array_functions",
     "cheapest_supplier_per_part",
@@ -154,12 +167,10 @@ PRIORITY = [
     "histogram_quantile_calibration",
     "hll_users_per_event_type",
     "holt_linear_forecast",
-    "id_gap_analysis",
-    "json_extract_props",
-    "k_anonymity_audit",
 ]
 # r15 PRIORITY candidates (staleness head after the r14 sweep): the
-# r9-cohort remainder in name order (key_skew_report, lang_id_confusion,
+# r9-cohort remainder in name order (id_gap_analysis, json_extract_props,
+# k_anonymity_audit, key_skew_report, lang_id_confusion,
 # leakage_safe_split, map_functions, math_functions,
 # multi_touch_attribution, pagerank_fixedpoint, ...), then the r10
 # cohort. Queries ADDED or PLAN-CHANGED during r15 must be PREPENDED

@@ -1,8 +1,9 @@
 """r6: corpus-derived LSH contract parameters (the r5 verdict's design
 debt, ask #2). Both near-dup families now derive their index shape from
-one count() round-trip — simhash_near_dups picks the Manku block config
-B(n), embedding_near_dups picks (planes, kbits, ntables, masks) — the
-way kmeans_clusters derives K. These tests pin the derivation ladder:
+the corpus count — simhash_near_dups picks the Manku block config B(n)
+(n observed inside its signature pin's job), embedding_near_dups picks
+(planes, kbits, ntables, masks) from one count() round-trip — the way
+kmeans_clusters derives K. These tests pin the derivation ladder:
 
 1. the driver-sf rung reproduces the r5 literals EXACTLY (so 246 green
    driver rows stay meaningful — the contract only moves where the
@@ -168,6 +169,30 @@ def test_blocked_simhash_equals_allpairs_at_forced_b6(spark, sf_dir):
     exact = sorted(map(tuple, simhash_near_dups_allpairs(docs).collect()))
     assert derive_sim_blocks(5_200_000) == 6
     assert blocked == exact and len(blocked) > 0
+
+
+@pytest.mark.parametrize("pin_mode", ["local", "table"])
+def test_simhash_block_derivation_counts_docs_without_signatures(
+    spark, sf_dir, monkeypatch, pin_mode
+):
+    """The block count derives from the number of DOCUMENTS, observed on
+    the input inside the signature pin's job. A document with fewer than 3
+    words has no shingle, so no signature row, and must still count."""
+    from pharmaceutical_sales_data_etl_analysis_pipeline_spark.operators import dedup
+
+    monkeypatch.setenv("SPARK_GRAFT_PIN", pin_mode)
+    seen = []
+    derive = dedup.derive_sim_blocks
+    monkeypatch.setattr(dedup, "derive_sim_blocks", lambda n: seen.append(n) or derive(n))
+    docs = load_table(spark, sf_dir, "documents")
+    short = spark.createDataFrame(
+        [(10**9, "two words", "en", "x", 9), (10**9 + 1, "", "en", "x", 0)], docs.schema
+    )
+    docs = docs.unionByName(short)
+    dedup.simhash_near_dups(docs).collect()
+    n = docs.count()
+    assert seen == [n]
+    assert dedup.simhash64(docs).count() <= n - 2
 
 
 def test_wide_planes_embedding_tier_matches_oracle(spark, sf_dir):

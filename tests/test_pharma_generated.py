@@ -11,13 +11,12 @@ the reference's pharma.db, and pins how many Spark jobs each layer runs.
 
 from __future__ import annotations
 
-import uuid
-from contextlib import contextmanager
 from dataclasses import dataclass
 
 import pytest
 
 from perfbench import xmlgen
+from tests.conftest import count_jobs, session_conf
 from pharmaceutical_sales_data_etl_analysis_pipeline_spark.plans import pharma_pipeline as pp
 from pharmaceutical_sales_data_etl_analysis_pipeline_spark.sources.xml import (
     read_xml_files_ordered,
@@ -32,35 +31,6 @@ JOB_CONF = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
 }
-
-
-@contextmanager
-def session_conf(spark, conf: dict[str, str]):
-    old = {k: spark.conf.get(k, None) for k in conf}
-    for k, v in conf.items():
-        spark.conf.set(k, v)
-    try:
-        yield
-    finally:
-        for k, v in old.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
-
-
-def count_jobs(spark, fn):
-    """(fn(), number of Spark jobs fn ran), read from a job group."""
-    sc = spark.sparkContext
-    group = f"pharma-gen-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def analytics(wh: pp.PharmaWarehouse) -> dict:

@@ -318,6 +318,66 @@ def test_neardup_components_raises_at_its_round_cap(spark, monkeypatch):
     assert got == {i: 0 for i in range(n)}
 
 
+def _random_graph(seed: int, n_nodes: int, n_edges: int) -> list[tuple[int, int]]:
+    """Seeded random edges over sparse, unordered doc ids (so the driver
+    path's dense renumbering is exercised), both orientations mixed."""
+    import random
+
+    rng = random.Random(seed)
+    ids = rng.sample(range(10, 10_000), n_nodes)
+    return [tuple(rng.sample(ids, 2)) for _ in range(n_edges)]
+
+
+@pytest.mark.parametrize(
+    "edges",
+    [
+        [(i, i + 1) for i in range(63)],                    # 64-chain
+        [(10, j) for j in list(range(10)) + list(range(11, 21))],  # star, hub not the min
+        [(1, 2), (2, 3), (3, 1), (7, 8), (8, 9), (9, 40)],  # two disjoint components
+        [(5, 3)],                                           # single edge
+        _random_graph(1, 40, 36),
+        _random_graph(2, 60, 45),
+        _random_graph(3, 30, 60),
+    ],
+    ids=["chain64", "star", "two_components", "single_edge", "random1", "random2", "random3"],
+)
+def test_neardup_components_driver_and_distributed_paths_agree(spark, monkeypatch, edges):
+    """A graph that fits one partition is solved on the driver; the same
+    graph with rows_per_partition below its edge-row count (each edge is
+    two rows) runs the distributed loop over more than one partition. Both
+    must give the same rows, and the same smallest max_iters that does not
+    raise: the driver rounds are the loop's rounds, step for step, so the
+    cap fires at the same round on both paths. (rows_per_partition=1 would
+    test the same thing over one partition per edge row, several times
+    slower.)"""
+    from pharmaceutical_sales_data_etl_analysis_pipeline_spark.operators import corpusops
+
+    pairs = spark.createDataFrame(edges, "doc_a long, doc_b long").withColumn(
+        "est_jaccard", F.lit(1.0)
+    )
+    monkeypatch.setattr(corpusops, "minhash_lsh_candidates", lambda documents: pairs)
+    docs = spark.createDataFrame([(0, "")], "doc_id long, text string")
+
+    def first_converging_cap(**kw) -> int:
+        for cap in range(1, 20):
+            try:
+                corpusops.neardup_components(docs, max_iters=cap, **kw)
+            except RuntimeError:
+                continue
+            return cap
+        raise AssertionError("no cap below 20 converged")
+
+    cap = first_converging_cap()
+    fanned = {"rows_per_partition": len(edges)}
+    if cap > 1:
+        with pytest.raises(RuntimeError, match=f"did not converge in {cap - 1} rounds"):
+            corpusops.neardup_components(docs, max_iters=cap - 1, **fanned)
+    distributed = corpusops.neardup_components(docs, max_iters=cap, **fanned)
+    assert distributed.rdd.getNumPartitions() > 1
+    driver = corpusops.neardup_components(docs)
+    assert sorted(map(tuple, driver.collect())) == sorted(map(tuple, distributed.collect()))
+
+
 def test_cosine_topk_bounds_its_query_collect(spark, sf_dir, monkeypatch):
     """cosine_topk collects its query block to the driver and ships it in
     every task closure, so the query count has a stated bound: one over it
