@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..functions.numeric import money_sum, money_sum_sql, round_half_up
+from .pyworker import ready
 
 VAL_DEC = "decimal(28,10)"
 N_SALT = 8
@@ -776,6 +777,7 @@ def skyline_parts(part: DataFrame) -> DataFrame:
     # property for the plan walker (phase-1 emits per-partition skylines,
     # <= |skyline| rows each).
     def skyline_local_reduce(it):
+        ready()
         import numpy as np
         import pandas as pd
 

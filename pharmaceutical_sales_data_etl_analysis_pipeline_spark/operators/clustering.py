@@ -46,6 +46,7 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..functions.numeric import round_half_up
 from .dimfold import cosine_grid, dot_block, dots
+from .pyworker import ready
 from .kmeans_core import (  # noqa: F401  (re-exported for tests/callers)
     KMEANS_DIM,
     MIN_CLUSTERS,
@@ -106,6 +107,7 @@ def semdedup_candidates(
     # m x m block stays small at any corpus scale; accumulation is blocked
     # over rows to bound memory for outlier clusters.
     def cluster_topk(pdf):
+        ready()
         import numpy as np
         import pandas as pd
 

@@ -196,11 +196,12 @@ def neardup_components(
     # re-reads the graph. The edge count that sizes the partitioning is
     # observed inside the pin's own job (an Observation fires through both
     # localCheckpoint and the parquet write), not by a separate count().
+    # No distinct: the candidates are distinct pairs with doc_a < doc_b,
+    # so each direction is duplicate-free and the two cannot collide.
     n_obs = Observation()
     edges = pin(
         pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
         .unionByName(pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
-        .distinct()
         .observe(n_obs, F.count(F.lit(1)).alias("n")),
         "neardup_edges",
     )

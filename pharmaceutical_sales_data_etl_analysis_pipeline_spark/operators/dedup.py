@@ -134,6 +134,28 @@ GROUP BY 1
 # min() over strings is order-independent → deterministic at any parallelism.
 # ---------------------------------------------------------------------------
 
+# The signature and its estimator are SQL text, one expr() each: every
+# Column function and Python lambda is a Py4J round trip, and the LSH
+# chain is built again at each evaluation of the near-dup queries.
+_MINHASH_AGGS = [
+    f"min(substring(md5(concat('{k // 4}|', shingle)), {1 + 8 * (k % 4)}, 8)) AS h{k}"
+    for k in range(N_HASHES)
+]
+_SIG_ARRAY = "array(" + ", ".join(f"h{k}" for k in range(N_HASHES)) + ") AS sig"
+
+
+def _est_jaccard(sig_a: str, sig_b: str) -> Column:
+    """Fraction of equal signature components, half-up to 4 places
+    (functions.numeric.round_half_up)."""
+    matches = (
+        f"aggregate(zip_with({sig_a}, {sig_b}, (x, y) -> CAST(x = y AS INT)), "
+        "0, (acc, x) -> acc + x)"
+    )
+    return F.expr(
+        f"floor(CAST({matches} AS DOUBLE) / {N_HASHES} * 10000.0D + 0.5D) / 10000.0D"
+    ).alias("est_jaccard")
+
+
 def minhash_signatures(documents: DataFrame) -> DataFrame:
     """Explode + hash-aggregate: map-side partial min reduces the shuffle to
     one row per doc per partition. Hash budget: each md5 digest yields FOUR
@@ -145,18 +167,9 @@ def minhash_signatures(documents: DataFrame) -> DataFrame:
     higher-order functions are interpreted, codegen wins for hash-heavy
     inner loops; subexpression elimination computes each seed's md5 once
     across its four min() aggregates.)"""
-    sh = with_shingles(documents)
-    aggs = [
-        F.min(
-            F.substring(
-                F.md5(F.concat(F.lit(f"{k // 4}|"), F.col("shingle"))),
-                1 + 8 * (k % 4),
-                8,
-            )
-        ).alias(f"h{k}")
-        for k in range(N_HASHES)
-    ]
-    return sh.groupBy("doc_id").agg(*aggs)
+    return with_shingles(documents).groupBy("doc_id").agg(
+        *[F.expr(a) for a in _MINHASH_AGGS]
+    )
 
 
 def q_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -206,9 +219,7 @@ def minhash_lsh_candidates(documents: DataFrame) -> DataFrame:
     # the cheap 2-md5/shingle chain never dominates the join+distinct.
     # Contrast simhash_near_dups, whose 64-vote chain is heavy enough that
     # the same pin measured 0.91x — these two decisions are a matched pair.
-    sig = minhash_signatures(documents).select(
-        "doc_id", F.array(*[F.col(f"h{k}") for k in range(N_HASHES)]).alias("sig")
-    )
+    sig = minhash_signatures(documents).select("doc_id", F.expr(_SIG_ARRAY))
     band_exprs = ", ".join(
         f"{b} , md5(concat(sig[{b * 2}], sig[{b * 2 + 1}]))" for b in range(N_BANDS)
     )
@@ -216,22 +227,18 @@ def minhash_lsh_candidates(documents: DataFrame) -> DataFrame:
         "doc_id", "sig", F.expr(f"stack({N_BANDS}, {band_exprs}) AS (band_idx, band_key)")
     )
     a, b = bands.alias("a"), bands.alias("b")
-    matches = F.aggregate(
-        F.zip_with(F.col("a.sig"), F.col("b.sig"), lambda x, y: (x == y).cast("int")),
-        F.lit(0),
-        lambda acc, x: acc + x,
-    )
     return (
         a.join(
             b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
+            F.expr(
+                "a.band_idx = b.band_idx AND a.band_key = b.band_key "
+                "AND a.doc_id < b.doc_id"
+            ),
         )
         .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            round_half_up(matches.cast("double") / N_HASHES, 4).alias("est_jaccard"),
+            F.expr("a.doc_id AS doc_a"),
+            F.expr("b.doc_id AS doc_b"),
+            _est_jaccard("a.sig", "b.sig"),
         )
         .distinct()
     )
@@ -289,9 +296,7 @@ def incremental_neardup(documents: DataFrame, split: int = INCR_SPLIT) -> DataFr
     # corpus/batch signature fetches) — un-pinned, the signature chain ran
     # four times per evaluation. Same proxy-pin as minhash_lsh_candidates.
     sig = pin(
-        minhash_signatures(documents).select(
-            "doc_id", F.array(*[F.col(f"h{k}") for k in range(N_HASHES)]).alias("sig")
-        ),
+        minhash_signatures(documents).select("doc_id", F.expr(_SIG_ARRAY)),
         "minhash_sig_incr",
     )
     band_exprs = ", ".join(
@@ -330,11 +335,6 @@ def incremental_neardup(documents: DataFrame, split: int = INCR_SPLIT) -> DataFr
     corpus_sigs = sig.filter(F.col("doc_id") < split).select(
         F.col("doc_id").alias("dup_of"), F.col("sig").alias("c_sig")
     )
-    matches = F.aggregate(
-        F.zip_with(F.col("n_sig"), F.col("c_sig"), lambda x, y: (x == y).cast("int")),
-        F.lit(0),
-        lambda acc, x: acc + x,
-    )
     return (
         corpus_sigs.join(
             F.broadcast(pairs.join(F.broadcast(batch_sigs), "new_doc")), "dup_of"
@@ -342,7 +342,7 @@ def incremental_neardup(documents: DataFrame, split: int = INCR_SPLIT) -> DataFr
         .select(
             "new_doc",
             "dup_of",
-            round_half_up(matches.cast("double") / N_HASHES, 4).alias("est_jaccard"),
+            _est_jaccard("n_sig", "c_sig"),
         )
     )
 

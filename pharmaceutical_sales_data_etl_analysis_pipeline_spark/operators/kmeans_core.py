@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .dimfold import sqdist_block
+from .pyworker import ready
 
 MIN_CLUSTERS = 8
 TARGET_CLUSTER_SIZE = 125
@@ -96,6 +97,7 @@ def _assign(quant: DataFrame, centroids: list[tuple[int, list[float]]]) -> DataF
     cmat = [ce for _, ce in cents]
 
     def assign_batches(batches):
+        ready()
         import numpy as np
         import pandas as pd
 
@@ -170,6 +172,7 @@ def _train_spaces(
     ]
 
     def sums_kernel(batches):
+        ready()
         import numpy as np
         import pandas as pd
 

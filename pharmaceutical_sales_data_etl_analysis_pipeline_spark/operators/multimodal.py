@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..catalog import load_table
+from .pyworker import ready
 
 
 def with_binary_payload(documents: DataFrame) -> DataFrame:
@@ -87,6 +88,7 @@ def extract_features(binary_df: DataFrame) -> DataFrame:
     (the driver process may have it on sys.path only)."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        ready()
         def fake_decode_meta(payload: bytes) -> tuple[int, int, int, float]:
             # Deterministic stand-in for a real decoder (PIL/ffmpeg). A real
             # impl would PIL.Image.open(io.BytesIO(payload)) and raise
@@ -160,6 +162,7 @@ def sample_frames(binary_df: DataFrame) -> DataFrame:
     n_frames = 1 + n_bytes % 4. Self-contained closure (worker pickling)."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        ready()
         import hashlib
 
         for pdf in batches:
@@ -222,6 +225,7 @@ def resize_payloads(binary_df: DataFrame) -> DataFrame:
     must not require this package on the executor's sys.path)."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        ready()
         import hashlib
 
         def resize(payload: bytes) -> tuple[int, int, int, str, str]:

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..catalog import load_table
+from .pyworker import ready
 
 TOPK_PER_TYPE = 3
 
@@ -37,6 +38,7 @@ def pandas_normalized_text(documents: DataFrame) -> DataFrame:
 
         @pandas_udf("string")
         def norm(s: pd.Series) -> pd.Series:
+            ready()
             # strip(' ') not strip(): bare strip removes tabs/newlines too,
             # while the oracle's trim(text) removes only spaces
             return s.str.lower().str.strip(" ").str.replace(r"\s+", " ", regex=True)
@@ -82,6 +84,7 @@ TOPK_SCHEMA = T.StructType(
 def grouped_pandas_topk(events: DataFrame, k: int = TOPK_PER_TYPE) -> DataFrame:
     def build_fn(k: int):
         def topk(pdf):
+            ready()
             import pandas as pd  # noqa: F401
 
             out = pdf.sort_values(
@@ -147,6 +150,7 @@ def udtf_sentences(spark: SparkSession, documents: DataFrame) -> DataFrame:
         """eval() is called per input row; yields (sent_idx, sentence)."""
 
         def eval(self, text):  # noqa: ANN001 - UDTF protocol
+            ready()
             import re
 
             # ASCII whitespace class spelled out: Python's \s is
@@ -225,14 +229,17 @@ def grouped_agg_pandas(events: DataFrame) -> DataFrame:
 
         @pandas_udf("long")
         def sum_cents(c: pd.Series) -> int:
+            ready()
             return int(c.to_numpy(dtype=np.int64).sum())
 
         @pandas_udf("long")
         def max_cents(c: pd.Series) -> int:
+            ready()
             return int(c.to_numpy(dtype=np.int64).max())
 
         @pandas_udf("long")
         def n_rows(c: pd.Series) -> int:
+            ready()
             return int(len(c))
 
         return sum_cents, max_cents, n_rows

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..functions.numeric import round_half_up
 from .dimfold import cosine_grid, dot_block, dots, grid, sqdist_block
+from .pyworker import ready
 
 N_QUERIES = 5     # vec_id < 5 are the query vectors
 TOP_K = 10
@@ -95,6 +96,7 @@ def cosine_topk(embeddings: DataFrame, n_queries: int = N_QUERIES, k: int = TOP_
     qmat = [e for _, e in qrows]
 
     def kernel(batches):
+        ready()
         import numpy as np
         import pandas as pd
 
@@ -210,6 +212,7 @@ def _arrow_sign_codes(
     wmat = [[float(v) for v in row] for row in weights]
 
     def kernel(batches):
+        ready()
         import numpy as np
         import pandas as pd
 
@@ -250,6 +253,7 @@ def _arrow_pair_cosine(pairs: DataFrame, keep: list[tuple[str, str]]) -> DataFra
     )
 
     def kernel(batches):
+        ready()
         import numpy as np
         import pandas as pd
 
@@ -596,6 +600,7 @@ def embedding_near_dups(embeddings: DataFrame, n_override: int | None = None) ->
     pairs = cand.join(ea, "vec_a").join(eb, "vec_b")
 
     def verify(batches):
+        ready()
         import numpy as np
 
         for pdf in batches:
@@ -921,6 +926,7 @@ def ivf_assignments(embeddings: DataFrame, cents: DataFrame | None = None) -> Da
     cnorms = [n for _, _, n in cl]
 
     def assign(batches):
+        ready()
         import numpy as np
         import pandas as pd
 
@@ -1132,6 +1138,7 @@ _QUANTIZE_OUT = "vec_id long, scale double, codes string, max_abs_err double"
 
 def embedding_quantize(embeddings: DataFrame) -> DataFrame:
     def quantize(batches):
+        ready()
         import numpy as np
 
         for pdf in batches:
@@ -1325,6 +1332,7 @@ def pq_codes(
         return embeddings.sparkSession.read.parquet(_PQ_CODES_MEMO[ckey])
 
     def encode(batches):
+        ready()
         import numpy as np
         import pandas as pd
 

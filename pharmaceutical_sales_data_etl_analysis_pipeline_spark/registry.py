@@ -103,29 +103,34 @@ MODULE_ORDER = [
 # bit-identical (old-vs-new compares + oracle parity at sf0.01/sf0.1,
 # pin modes where applicable — OPTIMIZATION_r14.md), but plan/kernel-
 # changed queries need FRESH driver rows per the rotation invariant,
-# and they outrank staleness. Window: the 17 changed names, then 33
-# staleness fills (the remaining r8-cohort rows, then the r9 cohort in
-# name order — ranking recomputed from CORRECTNESS_r01..r13).
+# and they outrank staleness. Window: the changed names of groups (0),
+# (0') and (a), 22 in all, then 28 staleness fills (the remaining
+# r8-cohort rows, then the r9 cohort in name order — ranking recomputed
+# from CORRECTNESS_r01..r13).
 PRIORITY = [
-    # (0) build changed by the one-partition driver pass of the near-dup
-    # chain, the single IVF-PQ probe of ann_recall_eval and the observed
-    # document count of simhash_near_dups (and its planted variant):
-    # plan-changed outranks staleness per the rotation invariant; name
-    # order (7 rows)
-    "ann_recall_eval",
+    # (0) plan changed by the LSH chain diet: the edge pin of the near-dup
+    # chain lost its redundant distinct, and the MinHash signature and
+    # est_jaccard are built from SQL text (same operators, new lambda
+    # variable names); name order (7 rows)
     "dedup_survivors",
+    "incremental_neardup",
+    "minhash_calibration",
+    "minhash_lsh_candidates",
     "neardup_components",
     "quality_filter_funnel",
+    "training_corpus",
+    # (0') build changed by the single IVF-PQ probe of ann_recall_eval and
+    # the observed document count of simhash_near_dups (and its planted
+    # variant); name order (3 rows)
+    "ann_recall_eval",
     "simhash_near_dups",
     "simhash_near_dups_planted",
-    "training_corpus",
     # (a) every query whose PHYSICAL PLAN or kernel changed in the r14
-    # optimization pass, less those in (0); name order (13 rows)
+    # optimization pass, less those in (0); name order (12 rows)
     "cluster_label_purity",
     "cosine_topk",
     "hybrid_retrieval_rrf",
     "hybrid_retrieval_rrf_ann",
-    "incremental_neardup",
     "ivf_list_sizes",
     "ivf_pq_probe_topk",
     "ivf_probe2_topk",
@@ -153,7 +158,7 @@ PRIORITY = [
     "udtf_sentences",
     "weighted_sample",
     "xml_stream_ingest",
-    # (c) r9-cohort head (last driver row r9), name order (13 rows)
+    # (c) r9-cohort head (last driver row r9), name order (11 rows)
     "array_agg_per_brand",
     "array_functions",
     "cheapest_supplier_per_part",
@@ -165,11 +170,10 @@ PRIORITY = [
     "gopher_quality_flags",
     "grouped_agg_pandas",
     "histogram_quantile_calibration",
-    "hll_users_per_event_type",
-    "holt_linear_forecast",
 ]
 # r15 PRIORITY candidates (staleness head after the r14 sweep): the
-# r9-cohort remainder in name order (id_gap_analysis, json_extract_props,
+# r9-cohort remainder in name order (hll_users_per_event_type,
+# holt_linear_forecast, id_gap_analysis, json_extract_props,
 # k_anonymity_audit, key_skew_report, lang_id_confusion,
 # leakage_safe_split, map_functions, math_functions,
 # multi_touch_attribution, pagerank_fixedpoint, ...), then the r10

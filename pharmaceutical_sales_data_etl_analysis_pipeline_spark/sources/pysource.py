@@ -21,6 +21,8 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
+from ..operators.pyworker import ready
+
 SYNTH_FORMAT = "synth_docs"
 
 
@@ -48,6 +50,7 @@ def make_synth_docs_source():
             ] or [InputPartition((0, 0))]
 
         def read(self, partition):
+            ready()
             import hashlib
 
             lo, hi = partition.value

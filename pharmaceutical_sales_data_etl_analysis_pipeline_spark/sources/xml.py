@@ -34,6 +34,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..operators.pyworker import ready
+
 
 def read_xml(
     spark: SparkSession, path: str | list[str], row_tag: str, schema: T.StructType | None = None
@@ -83,6 +85,7 @@ def write_xml_shards(df: DataFrame, out_dir: str, n_files: int, root_tag: str = 
     col = df.columns[0]
 
     def with_root(it):
+        ready()
         yield f"<{root_tag}>"
         for row in it:
             yield row[col]

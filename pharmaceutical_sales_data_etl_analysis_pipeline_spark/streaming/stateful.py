@@ -18,6 +18,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupStateTimeout
 
+from ..operators.pyworker import ready
+
 RUNNING_TOTALS_SCHEMA = T.StructType(
     [
         T.StructField("user_id", T.LongType()),
@@ -62,6 +64,7 @@ def running_user_totals_cents(events_stream: DataFrame) -> DataFrame:
     """
 
     def update(key, pdfs, state):
+        ready()
         import pandas as pd
 
         n, total = state.get if state.exists else (0, 0)
@@ -147,6 +150,7 @@ def gap_sessions(
     plus that batch's expired keys."""
 
     def update(key, pdfs, state):
+        ready()
         import pandas as pd
 
         out: list[tuple] = []
@@ -272,6 +276,7 @@ def event_time_sessions(
     windowed-agg operators — state is O(keys inside the gap horizon)."""
 
     def update(key, pdfs, state):
+        ready()
         import pandas as pd
 
         out: list[tuple] = []
@@ -343,6 +348,7 @@ def running_user_totals(events_stream: DataFrame) -> DataFrame:
     """
 
     def update(key, pdfs, state):
+        ready()
         import pandas as pd
 
         n, total = state.get if state.exists else (0, 0.0)

@@ -8,7 +8,7 @@ off and adaptive execution on, so a new hidden round trip in one of these
 builders fails here; a count that falls lowers its budget.
 
 The near-dup chain (`neardup_components` and the three queries built on
-it) solves a one-partition candidate graph in one driver pass: 5 jobs for
+it) solves a one-partition candidate graph in one driver pass: 4 jobs for
 the LSH edge pin and 1 collect. Before that it ran 18 (a separate edge
 count, an init checkpoint, 7 jobs per round and a changed-label count).
 `ann_recall_eval` ran 33 jobs when it trained the IVF-PQ probe twice, and
@@ -24,10 +24,10 @@ from pharmaceutical_sales_data_etl_analysis_pipeline_spark.registry import all_q
 from tests.conftest import count_jobs, session_conf
 
 BUILD_JOB_BUDGET = {
-    "neardup_components": 6,
-    "dedup_survivors": 6,
-    "training_corpus": 6,
-    "quality_filter_funnel": 6,
+    "neardup_components": 5,
+    "dedup_survivors": 5,
+    "training_corpus": 5,
+    "quality_filter_funnel": 5,
     "ann_recall_eval": 29,
     "simhash_near_dups": 3,
 }

@@ -2,7 +2,8 @@
 Derby database via spark.write.format('jdbc'), read it back via
 spark.read.format('jdbc'), and require equality with the XML-path dim —
 the reference's SQLite→MySQL hop mapped onto Spark's JDBC connector.
-Derby's jars ship inside pyspark, so the test needs no extra driver."""
+Derby's jars ship inside pyspark, so the test needs no extra driver. The
+reps XML is the seeded one of `perfbench/xmlgen.py`."""
 
 from __future__ import annotations
 
@@ -10,6 +11,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from perfbench import xmlgen
 from pharmaceutical_sales_data_etl_analysis_pipeline_spark.plans import pharma_pipeline as pp
 from pharmaceutical_sales_data_etl_analysis_pipeline_spark.sources.jdbc import (
     DERBY_DRIVER,
@@ -17,12 +19,10 @@ from pharmaceutical_sales_data_etl_analysis_pipeline_spark.sources.jdbc import (
     write_jdbc,
 )
 
-from .pharma_fixtures import synth_xml_fixtures
-
 
 def test_jdbc_roundtrip_reps_equals_xml_dim(spark, tmp_path):
-    reps_xml, _ = synth_xml_fixtures(tmp_path / "xml")
-    reps = pp.load_reps(spark, reps_xml)
+    truth = xmlgen.generate(tmp_path / "xml", seed=11, n_txns=100)
+    reps = pp.load_reps(spark, truth.paths["reps"])
     url = f"jdbc:derby:{tmp_path}/derbydb;create=true"
 
     write_jdbc(reps, url, "reps", DERBY_DRIVER)
@@ -32,7 +32,7 @@ def test_jdbc_roundtrip_reps_equals_xml_dim(spark, tmp_path):
     got = sorted(tuple(r) for r in back.select(*reps.columns).collect())
     want = sorted(tuple(r) for r in reps.collect())
     assert got == want
-    assert len(got) == 8
+    assert len(got) == len(truth.reps)
 
 
 def test_jdbc_partitioned_read(spark, tmp_path):

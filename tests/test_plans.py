@@ -297,6 +297,28 @@ def test_neardup_components_partitioning_scales_with_edges(spark, sf_dir):
     assert sorted(map(tuple, fanned.collect())) == sorted(map(tuple, default.collect()))
 
 
+def test_neardup_edges_have_no_duplicate_pairs(spark, sf_dir, monkeypatch):
+    """The edge pin unions both directions of the LSH candidates with no
+    distinct: the candidates are distinct pairs with doc_a < doc_b, so no
+    (src, dst) may appear twice among the pinned edges."""
+    from pharmaceutical_sales_data_etl_analysis_pipeline_spark.operators import corpusops
+
+    pinned, real_pin = {}, corpusops.pin
+
+    def recording_pin(df, name):
+        pinned[name] = out = real_pin(df, name)
+        return out
+
+    monkeypatch.setenv("SPARK_GRAFT_BUILD_CACHE", "0")
+    monkeypatch.setattr(corpusops, "pin", recording_pin)
+    corpusops.neardup_components(load_table(spark, sf_dir, "documents"))
+    edges = pinned["neardup_edges"]
+    n = edges.count()
+    assert n > 0
+    assert edges.select("src", "dst").distinct().count() == n
+    assert edges.filter(F.col("src") == F.col("dst")).count() == 0
+
+
 def test_neardup_components_raises_at_its_round_cap(spark, monkeypatch):
     """A near-dup chain 0-1-...-63 has diameter 63: hooking plus pointer
     jumping needs about six rounds to reach and confirm the fixpoint, so a
