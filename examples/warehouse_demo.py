@@ -2,12 +2,13 @@
 """Incremental-warehouse demo: the daily-batch lifecycle a production
 deployment runs on top of the engine (SURVEY.md §Warehouse maintenance):
 
-  1. CDC ingest: stream order batches, fold each into versioned state
-     via foreachBatch MERGE (streaming/upsert.py)
+  1. CDC ingest: stream order batches, fold each into the bucketed
+     copy-on-write state via foreachBatch MERGE
+     (streaming/partitioned_upsert.py; at the default RANGE_WIDTH the
+     sf0.001 custkeys 0-149 all fall into one bucket)
   2. time travel: read the state as of an earlier batch
-  3. retention: expire old snapshots (keep the latest)
-  4. maintenance: compact the append debris into right-sized files
-  5. analytics over the merged state: MERGE upsert + SCD2 + OHLC views
+  3. maintenance: compact the append debris into right-sized files
+  4. analytics over the merged state: MERGE upsert + SCD2 + OHLC views
 
 Usage:
   python examples/warehouse_demo.py [sf_dir]   (default /root/testdata/sf0.001)
@@ -29,11 +30,10 @@ from pharmaceutical_sales_data_etl_analysis_pipeline_spark.session import get_sp
 from pharmaceutical_sales_data_etl_analysis_pipeline_spark.sources.maintenance import (
     compact_parquet,
 )
-from pharmaceutical_sales_data_etl_analysis_pipeline_spark.streaming.upsert import (
-    expire_state_versions,
-    read_latest_state,
-    read_state_version,
-    run_incremental_merge,
+from pharmaceutical_sales_data_etl_analysis_pipeline_spark.streaming.partitioned_upsert import (
+    read_latest_partitioned_state,
+    read_partitioned_state_version,
+    run_partitioned_incremental_merge,
 )
 
 
@@ -54,24 +54,21 @@ def main() -> None:
             os.path.join(src, f"day{day}.parquet"), index=False
         )
     state = os.path.join(work, "state")
-    run_incremental_merge(spark, src, state, os.path.join(work, "ckpt"))
-    latest = read_latest_state(spark, state)
+    run_partitioned_incremental_merge(spark, src, state, os.path.join(work, "ckpt"))
+    latest = read_latest_partitioned_state(spark, state)
     print(f"state after 3 batches: {latest.count()} keys")
 
     # 2. time travel
-    v0 = read_state_version(spark, state, 0)
+    v0 = read_partitioned_state_version(spark, state, 0)
     print(f"VERSION AS OF batch 0: {v0.count()} keys")
 
-    # 3. retention
-    print(f"expired {expire_state_versions(spark, state, keep=1)} old snapshots")
-
-    # 4. compaction of fragmented appends
+    # 3. compaction of fragmented appends
     frag = os.path.join(work, "frag")
     orders.repartition(16).write.parquet(frag)
     before, after = compact_parquet(spark, frag, target_file_bytes=1 << 30)
     print(f"compacted {before} files -> {after}")
 
-    # 5. analytics views over the corpus
+    # 4. analytics views over the corpus
     q = all_queries()
     print("merge_upsert actions:")
     q["merge_upsert"](spark, sf_dir).groupBy("merge_action").count().show()

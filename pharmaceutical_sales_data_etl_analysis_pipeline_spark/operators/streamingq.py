@@ -14,7 +14,7 @@ backfill pattern); the aggregation runs in `complete` mode and foreachBatch
 overwrites one parquet result per epoch — the final epoch IS the full
 rollup, and overwrite makes replays idempotent. At 100 TB the identical
 topology runs unbounded with `update` mode + MERGE upsert
-(streaming/upsert.py); the rollup itself is the same exact-decimal
+(streaming/partitioned_upsert.py); the rollup itself is the same exact-decimal
 map-side-combined aggregation as the batch `tumbling_hourly`
 (operators/eventsops.py — shared code, single source of truth).
 """
@@ -73,7 +73,7 @@ ORACLES = {"stream_tumbling_hourly": SQL_TUMBLING_HOURLY}
 # dropDuplicates whose surviving ROW depends on arrival order. Same
 # availableNow/complete/foreachBatch topology as stream_tumbling_hourly;
 # unbounded operation would switch to update mode + MERGE (the
-# streaming/upsert.py path) with the identical aggregation.
+# streaming/partitioned_upsert.py path) with the identical aggregation.
 # ---------------------------------------------------------------------------
 
 
@@ -444,16 +444,26 @@ def cow_manifest_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     return partitioned_state_summary(spark, _build_cow_spend_state(spark, sf_dir))
 
 
-# key range for the lookup: three fixture buckets' worth of customers
-COW_LOOKUP_LO, COW_LOOKUP_HI = 250, 549
+# key range for the lookup: the second fifth of the key domain [0,
+# max(o_custkey)], so it is populated at every SF and, with the fixture's
+# ~16 buckets, reads a strict subset of them. SQL_COW_KEYRANGE_LOOKUP
+# applies the same rule.
+def cow_lookup_range(max_key: int) -> tuple[int, int]:
+    return max_key // 5, 2 * max_key // 5
 
 
 def cow_keyrange_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming.partitioned_upsert import read_partitioned_state_keyrange
-
-    return read_partitioned_state_keyrange(
-        spark, _build_cow_spend_state(spark, sf_dir), COW_LOOKUP_LO, COW_LOOKUP_HI
+    from ..streaming.partitioned_upsert import (
+        _latest_manifest,
+        read_partitioned_state_keyrange,
     )
+
+    state = _build_cow_spend_state(spark, sf_dir)
+    # the fixture holds every customer with orders, so its zone maps'
+    # largest key is max(o_custkey), read from the manifest without a scan
+    stats = _latest_manifest(spark, state)["stats"].values()
+    lo, hi = cow_lookup_range(max(int(s["max_key"]) for s in stats))
+    return read_partitioned_state_keyrange(spark, state, lo, hi)
 
 
 SQL_COW_MANIFEST_SUMMARY = """
@@ -469,12 +479,13 @@ SELECT CAST(COUNT(*) AS BIGINT) AS n_keys,
 FROM st
 """
 
-SQL_COW_KEYRANGE_LOOKUP = f"""
+SQL_COW_KEYRANGE_LOOKUP = """
 SELECT o_custkey AS key,
        CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total,
        CAST(COUNT(*) AS BIGINT) AS n_rows
 FROM orders
-WHERE o_custkey BETWEEN {COW_LOOKUP_LO} AND {COW_LOOKUP_HI}
+WHERE o_custkey BETWEEN (SELECT MAX(o_custkey) FROM orders) // 5
+                    AND 2 * (SELECT MAX(o_custkey) FROM orders) // 5
 GROUP BY 1
 """
 
@@ -1247,11 +1258,11 @@ def stream_session_expiry(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ring-capped and the idle batches would evict the data batches'
     # entries) and stop once every published row has been processed —
     # the flush batch's emissions land in that same batch, so the append
-    # log is complete.
-    import time as _time
+    # log is complete. Every file is published before start and read one
+    # per trigger, so drain bounds the batches on the file count.
+    from ..streaming.progress import ProgressLog, drain
 
-    from ..streaming.progress import ProgressLog
-
+    n_files = SESSION_SPLIT_MOD + 1
     n_expected = ev.count() + flushes.count()
     counter = ProgressLog()
     spark.streams.addListener(counter)
@@ -1264,19 +1275,7 @@ def stream_session_expiry(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         try:
-            qid = str(q.id)
-            deadline = _time.monotonic() + 300
-            seen = 0
-            while _time.monotonic() < deadline:
-                seen = counter.input_rows(qid)
-                if seen >= n_expected:
-                    break
-                _time.sleep(0.3)
-            if seen < n_expected:
-                raise RuntimeError(
-                    f"session stream drained only {seen}/{n_expected} input "
-                    "rows within 300s — fixture delivery stalled"
-                )
+            drain(q, counter, n_expected, n_files, "stream_session_expiry")
         finally:
             q.stop()
         q.awaitTermination()
@@ -1382,10 +1381,11 @@ def stream_session_event_expiry(spark: SparkSession, sf_dir: str) -> DataFrame:
     # reserved id: user -1 must not exist in the live domain, or its
     # row would merge into that key's state while the read-back filter
     # dropped the sessions the oracle keeps
-    lo, hi, min_uid = ev.agg(
+    lo, hi, min_uid, n_events = ev.agg(
         F.min(F.unix_micros("ts")),
         F.max(F.unix_micros("ts")),
         F.min("user_id"),
+        F.count(F.lit(1)),
     ).first()
     if min_uid < 0:
         raise ValueError(
@@ -1422,23 +1422,32 @@ def stream_session_event_expiry(spark: SparkSession, sf_dir: str) -> DataFrame:
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
         batch_df.write.mode("append").parquet(out_dir)
 
-    q = (
-        sessions.writeStream.outputMode("append")
-        .foreachBatch(write_batch)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    # self-termination is an ENGINE property (one extra batch per
-    # watermark advance) — bound the wait anyway so a version/config
-    # drift surfaces as a named error, not a wedged driver sweep
-    if not q.awaitTermination(300):
-        q.stop()
-        raise RuntimeError(
-            "stream_session_event_expiry did not self-terminate within "
-            "300s — the availableNow + EventTimeTimeout termination "
-            "contract no longer holds on this engine"
+    # self-termination is an ENGINE property (one data batch per file,
+    # at most one extra batch per watermark advance) — bound the drain
+    # on that contract so a version/config drift surfaces as a named
+    # error, not a wedged driver sweep
+    from ..streaming.progress import ProgressLog, drain
+
+    n_files = EVENT_SESSION_SLICES + 1
+    counter = ProgressLog()
+    spark.streams.addListener(counter)
+    try:
+        q = (
+            sessions.writeStream.outputMode("append")
+            .foreachBatch(write_batch)
+            .option("checkpointLocation", ckpt_dir)
+            .trigger(availableNow=True)
+            .start()
         )
+        try:
+            drain(
+                q, counter, n_events + 1, n_files, "stream_session_event_expiry",
+                until_terminated=True,
+            )
+        finally:
+            q.stop()
+    finally:
+        spark.streams.removeListener(counter)
 
     emitted = (
         spark.read.parquet(out_dir)

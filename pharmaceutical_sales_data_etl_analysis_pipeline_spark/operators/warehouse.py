@@ -369,8 +369,9 @@ ORACLES = {
 
 # ---------------------------------------------------------------------------
 # Snapshot diff: added / removed / changed rows between two table versions
-# (the audit step after any incremental load; pairs with streaming/upsert's
-# versioned snapshots). One full-outer join on the key comparing row
+# (the audit step after any incremental load; for the versioned CoW table
+# in streaming/partitioned_upsert.py, partitioned_state_changes is the
+# manifest-pruned twin). One full-outer join on the key comparing row
 # hashes — |A| + |B| shuffle, the minimum any diff does. Versions are
 # derived deterministically from orders: A = pre-1997 orders, B = pre-1998
 # with a deterministic subset "amended" (totalprice + 1).
@@ -981,7 +982,8 @@ def incremental_agg_maintenance(events: DataFrame) -> DataFrame:
     """Materialized-view maintenance without recompute: an hourly rollup
     held as a snapshot is advanced by aggregating ONLY the delta batch and
     merging — the core of every incremental warehouse pipeline (the
-    foreachBatch MERGE in streaming/upsert.py is the streaming twin).
+    foreachBatch MERGE in streaming/partitioned_upsert.py is the
+    streaming twin).
 
     The oracle is NOT a translation of this plan: it recomputes the rollup
     from scratch over base ∪ delta. Equality therefore PROVES the

@@ -108,6 +108,9 @@ MODULE_ORDER = [
 # r8-cohort rows, then the r9 cohort in name order — ranking recomputed
 # from CORRECTNESS_r01..r13).
 PRIORITY = [
+    # (00) key range now derived from the key domain (it was empty at
+    # sf0.001), so the plan reads other buckets (1 row)
+    "cow_keyrange_lookup",
     # (0) plan changed by the LSH chain diet: the edge pin of the near-dup
     # chain lost its redundant distinct, and the MinHash signature and
     # est_jaccard are built from SQL text (same operators, new lambda
@@ -158,7 +161,7 @@ PRIORITY = [
     "udtf_sentences",
     "weighted_sample",
     "xml_stream_ingest",
-    # (c) r9-cohort head (last driver row r9), name order (11 rows)
+    # (c) r9-cohort head (last driver row r9), name order (10 rows)
     "array_agg_per_brand",
     "array_functions",
     "cheapest_supplier_per_part",
@@ -169,10 +172,10 @@ PRIORITY = [
     "fk_integrity_audit",
     "gopher_quality_flags",
     "grouped_agg_pandas",
-    "histogram_quantile_calibration",
 ]
 # r15 PRIORITY candidates (staleness head after the r14 sweep): the
-# r9-cohort remainder in name order (hll_users_per_event_type,
+# r9-cohort remainder in name order (histogram_quantile_calibration,
+# hll_users_per_event_type,
 # holt_linear_forecast, id_gap_analysis, json_extract_props,
 # k_anonymity_audit, key_skew_report, lang_id_confusion,
 # leakage_safe_split, map_functions, math_functions,
@@ -211,3 +214,18 @@ def all_oracles() -> dict[str, str]:
 # non-SQL-expressible ops → rows-only check (currently none: even the
 # mapInPandas feature extraction has a byte-arithmetic DuckDB twin)
 NO_ORACLE: set[str] = set()
+
+# queries whose result is empty on the tier-1 corpus (sf0.001), each with
+# the reason; tests/test_oracle_parity.py fails any OTHER query whose
+# Spark and oracle results are both empty (two empty results agree
+# whatever the query computes)
+EMPTY_AT_TEST_SCALE: dict[str, str] = {
+    "tpch_q2": "no part of type STANDARD and size 14 exists at sf0.001",
+    "tpch_q7": "no supplier is in NATION_1 or NATION_2 at sf0.001",
+    "tpch_q11": "no supplier is in NATION_7 at sf0.001",
+    "customers_without_orders": "every customer has an order at sf0.001",
+    "embedding_near_dups": (
+        "no embedding pair is a near duplicate in the test corpus; its LSH "
+        "and verify path is exercised only by embedding_near_dups_planted"
+    ),
+}

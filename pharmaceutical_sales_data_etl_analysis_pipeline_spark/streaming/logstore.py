@@ -77,10 +77,6 @@ class ManifestLogStore:
             stream.close()
         return json.loads(raw.decode("utf-8"))
 
-    def delete_commit(self, spark: SparkSession, manifest_dir: str, name: str) -> None:
-        fs, _, jvm = _fs_and_path(spark, manifest_dir)
-        fs.delete(jvm.org.apache.hadoop.fs.Path(f"{manifest_dir}/{name}.json"), False)
-
     def commit(
         self,
         spark: SparkSession,

@@ -1,11 +1,12 @@
-"""Bucket-partitioned copy-on-write MERGE: the 100 TB-shaped successor to
-streaming/upsert.py's whole-table snapshots.
+"""Bucket-partitioned copy-on-write MERGE: the streaming twin of
+operators/warehouse.merge_upsert, and the engine's one table-format write
+path. Each micro-batch of change rows is folded into a persistent keyed
+state table via foreachBatch.
 
-upsert.py's versioned-snapshot MERGE is correct but rewrites the ENTIRE
-state table every micro-batch — the one component the r5 scale audit
-flagged as not surviving 100 TB unmodified (SCALE.md "table formats"
-decision). This module implements the fix its own docstring prescribed:
-partition the state by key so a batch only rewrites touched partitions.
+A whole-table versioned snapshot rewrites the ENTIRE state every
+micro-batch — the one design the r5 scale audit flagged as not surviving
+100 TB unmodified (SCALE.md "table formats" decision). This module
+partitions the state by key so a batch only rewrites touched partitions.
 
 Layout (plain parquet + a JSON manifest, no Delta/Iceberg jars):
 
@@ -40,20 +41,20 @@ up-front declaration. Each micro-batch:
      winning attempt's dirs. The new manifest inherits every untouched
      bucket's version pointer unchanged, so untouched data is never
      read, shuffled, or rewritten. A crashed or losing attempt's dirs
-     are unreferenced debris, reclaimed ONLY by retention once newer
-     manifests supersede them (expire_partitioned_versions).
+     are unreferenced debris that no reader ever lists.
 
 Per-batch cost is |batch| + |touched buckets|, not |state| + |batch|:
 with B buckets and a batch touching t of them, the rewrite amplification
 is t/B of the table instead of 1.0. At 100 TB with B sized so a bucket
 is a few GB, a point-update batch rewrites GBs, not the table.
 
-Replay idempotence matches upsert.py: a re-run of batch N merges into
-the newest manifest STRICTLY OLDER than N (its own half-applied output
-is invisible — the manifest commit never happened), writes FRESH
-attempt dirs, and republishes the v{N} manifest to the identical
-logical state; the crashed attempt's dirs are unreferenced debris for
-retention.
+Replay is idempotent: a re-run of batch N merges into the newest
+manifest STRICTLY OLDER than N (its own half-applied output is
+invisible — the manifest commit never happened), writes FRESH attempt
+dirs, and republishes the v{N} manifest to the identical logical state;
+the crashed attempt's dirs are unreferenced debris. The streaming
+checkpoint ties batch ids to source offsets, so a replayed batch is the
+same rows.
 
 Commit protocol: the table has ONE writer. Every manifest list/read/
 publish routes through HadoopRenameLogStore (streaming/logstore.py),
@@ -63,9 +64,9 @@ FS/HDFS, DETECTION (not exclusion) of single-writer-contract violations
 the commit rejects (ConcurrentCommitError) if any foreign commit
 appears before its own. On S3A the rename is copy+delete.
 
-Same read boundary as upsert.py: DECIMAL(18,2) in state, DOUBLE out.
+Read boundary: DECIMAL(18,2) in state, DOUBLE out.
 
-Beyond MERGE + time travel + retention, the module carries the remaining
+Beyond MERGE + time travel, the module carries the remaining
 primitives a production table format pairs with copy-on-write — each one
 manifest-pruned so its cost scales with the CHANGE, not the table:
 
@@ -85,12 +86,6 @@ manifest-pruned so its cost scales with the CHANGE, not the table:
   100 TB a point-update CDC feed reads GBs, not the table (the generic
   snapshot diff, operators/warehouse.table_diff, must scan both full
   snapshots; this is its manifest-pruned successor).
-- Compaction (OPTIMIZE): many small per-task files accumulate in a hot
-  bucket's versions; compact_partitioned_state rewrites only
-  over-fragmented buckets to one file each and commits a manifest with
-  the SAME batch_id (suffix 'x{seq}' — logically the identical state,
-  physically fewer files), so replay and time-travel semantics are
-  untouched.
 - Zone-map stats (file statistics): each commit records per-bucket
   n_keys / exact decimal sum / min-max of key and total, computed by one
   read-back job over only the touched buckets. They power
@@ -103,10 +98,12 @@ manifest-pruned so its cost scales with the CHANGE, not the table:
   scattered batch as a delta file — O(|batch|) bytes, ZERO bucket
   rewrites (the CoW path's measured boundary); readers fold base +
   pending deltas in batch order with one key-partitioned shuffle, and
-  compact_deltas_into_base folds them in under an 'x' commit. The
+  compact_deltas_into_base folds them in under an 'x' commit (the
+  SAME batch_id, suffix 'x{seq}' — the identical logical state, so
+  replay and time-travel semantics are untouched). The
   change feed is MoR-aware (each side folds its pending deltas, pruned
   to pointer-diff + one-side-delta-touched buckets); the remaining
-  base-only readers (summary/keyrange/compaction/CoW merge)
+  base-only readers (summary/keyrange/CoW merge)
   refuse loudly while deltas are pending rather than answering stale.
 """
 
@@ -121,7 +118,6 @@ from pyspark.sql import types as T
 
 from ..sources.maintenance import _fs_and_path
 from .logstore import ConcurrentCommitError, HadoopRenameLogStore, ManifestLogStore
-from .upsert import STATE_SCHEMA, _as_read_view
 
 _LOG = logging.getLogger(__name__)
 
@@ -149,6 +145,19 @@ def set_log_store(store: ManifestLogStore) -> ManifestLogStore:
 # data-skip on key ranges and reach for deletion vectors, not hashes,
 # for update locality. Size so one bucket ~ a few GB at 100 TB.
 RANGE_WIDTH = 1_000_000
+
+# State totals are stored as DECIMAL(18,2), not DOUBLE: the state is
+# folded batch-over-batch, and a double accumulator would pick up
+# batch-boundary-dependent FP error for keys updated across many
+# micro-batches (the repo's money-sum discipline is exact decimal sums,
+# double only at the read boundary, _as_partitioned_read_view).
+STATE_SCHEMA = T.StructType(
+    [
+        T.StructField("key", T.LongType()),
+        T.StructField("total", T.DecimalType(18, 2)),
+        T.StructField("n_rows", T.LongType()),
+    ]
+)
 
 _BUCKETED_SCHEMA = T.StructType(
     list(STATE_SCHEMA.fields) + [T.StructField("bucket", T.LongType())]
@@ -311,8 +320,7 @@ def _as_partitioned_read_view(
 ) -> DataFrame | None:
     """Read boundary for the (possibly evolved) partitioned state: every
     decimal value column casts to DOUBLE; column order is key, values in
-    recorded order, n_rows — identical to upsert._as_read_view for the
-    legacy single-column table. This is ALSO the column-mapping
+    recorded order, n_rows. This is ALSO the column-mapping
     boundary: files carry physical names, readers see logical names —
     the one alias that makes RENAME metadata-only."""
     if df is None:
@@ -768,7 +776,7 @@ def _record_max_seq(
 
 
 def _inherit_max_seq(prev: dict) -> dict:
-    """Maintenance commits (compaction, delta fold) reproduce the SAME
+    """Maintenance commits (delta fold, schema ops) reproduce the SAME
     logical state, so the sequenced-CDC high-water mark — and the
     sequenced-writer lease (`writer_id`, see _require_seq_writer_fence)
     and the schema — of the superseded manifest carry over unchanged.
@@ -949,8 +957,8 @@ def _read_manifest(spark: SparkSession, state_dir: str, version: str) -> dict:
 def _manifest_name(manifest: dict) -> str:
     """Commit name for a manifest. Zero-padded 'x' suffix: every consumer
     picks "the newest commit per batch id" by LEXICOGRAPHIC order, and an
-    unpadded x10 would sort before x2. Ordering is load-bearing (readers,
-    retention, replay all pick the lexicographic max per batch), so a seq
+    unpadded x10 would sort before x2. Ordering is load-bearing (readers
+    and replay pick the lexicographic max per batch), so a seq
     past the pad width must be a loud error — 'x10000' would sort BEFORE
     'x9999' and silently roll every consumer back to the pre-compaction
     state."""
@@ -985,11 +993,11 @@ def _write_manifest(
 
 def _next_compaction_seq(versions: list[str], batch_id: int) -> int:
     """Next 'x{seq}' suffix for a same-batch-id maintenance commit:
-    max existing seq + 1, NOT a count of existing 'x' names — after
-    retention vacuums superseded compactions (keeping only the newest
-    per batch), a count would regress below the survivor and the new
-    commit's name would sort BEFORE it, making the maintenance op a
-    silent no-op (newest-per-batch readers would keep the old
+    max existing seq + 1, NOT a count of existing 'x' names — if a
+    batch's commits were ever not contiguous from x0001, a count would
+    regress below the newest and the new commit's name would sort
+    BEFORE it, making the maintenance op a silent no-op
+    (newest-per-batch readers would keep the old
     pointers)."""
     return 1 + max(
         (
@@ -1038,7 +1046,7 @@ def _attempt_name(base: str) -> str:
     batch id (the one interleaving the commit-time listing check could
     not protect, r7's documented clobber window) each land their own
     dirs and the log-store commit picks exactly one winner; the loser's
-    dirs are unreferenced debris for retention. The manifest name keeps
+    dirs are unreferenced debris. The manifest name keeps
     the plain v{batch}[x{seq}] form (replay/ordering semantics live
     there); only the DATA dir names carry the attempt suffix."""
     return f"{base}-{uuid.uuid4().hex[:8]}"
@@ -1150,9 +1158,8 @@ def read_partitioned_state_version(
 ) -> DataFrame | None:
     """Time travel: the state exactly as committed by micro-batch batch_id
     (manifests, like bucket versions, are immutable once committed). A
-    compaction of that batch's state is the same logical state with fewer
-    files — the newest commit for the batch_id wins, so time travel keeps
-    working after the plain commit is vacuumed. Time travel to a
+    maintenance commit of that batch ('x' suffix) is the same logical
+    state — the newest commit for the batch_id wins. Time travel to a
     pre-evolution commit reads with THAT commit's schema (the column
     simply doesn't exist yet — Delta's semantics)."""
     names = [v for v in _list_manifests(spark, state_dir) if _batch_id_of(v) == batch_id]
@@ -1493,7 +1500,7 @@ def merge_batch_into_partitioned_state(
         elif "op" in batch_df.columns:
             # tombstones emptied the whole bucket: the range holds no keys
             # any more, so the manifest drops its pointer (the old version
-            # dir stays for time travel until retention removes it)
+            # dir stays for time travel)
             new_buckets.pop(str(b), None)
         else:
             # without tombstones an empty touched bucket cannot happen
@@ -1773,122 +1780,6 @@ def run_partitioned_mor_ingest(
     }
 
 
-# In-flight guard for retention: a dir that NO manifest has ever
-# referenced is either a lost-race/crashed attempt (safe to reclaim) or a
-# CONCURRENT writer's staged attempt whose manifest commit is seconds
-# away — indistinguishable by listing alone. Deleting the latter would
-# let the writer publish a manifest pointing at a vanished dir (its
-# snapshot check only sees MANIFEST changes; retention that dooms no
-# manifest changes none). So never-referenced dirs are reclaimed only
-# past this age horizon — the same reason Delta's VACUUM refuses to
-# delete young unreferenced files. Dirs referenced by a DOOMED manifest
-# are committed history and vacuum immediately as before.
-DEBRIS_MIN_AGE_MS = 60 * 60 * 1000  # 1 hour
-
-
-def expire_partitioned_versions(
-    spark: SparkSession,
-    state_dir: str,
-    keep: int = 3,
-    debris_min_age_ms: int = DEBRIS_MIN_AGE_MS,
-) -> int:
-    """Retention (VACUUM twin): keep the newest `keep` manifests plus every
-    bucket version any of them references; delete the rest. Returns the
-    number of deleted directories+manifests.
-
-    keep clamps to >= 2 for the same replay-idempotence reason as
-    upsert.expire_state_versions: a replayed latest batch must still find
-    its strictly-older predecessor.
-
-    `keep` counts DISTINCT batch ids, not manifest files: a compaction
-    commit shares its source batch's id, and keeping [vN, vNx1] while
-    dropping vN-1 would leave a replayed batch N with no strictly-older
-    predecessor — it would silently merge as an initial load. Within a
-    kept batch only the newest commit survives (readers always pick the
-    newest commit per batch id, so a plain manifest superseded by its
-    compaction is unreachable — vacuuming it frees the fragmented
-    pre-compaction files too).
-
-    `debris_min_age_ms` guards NEVER-referenced dirs (see
-    DEBRIS_MIN_AGE_MS above): when retention runs while the writer is
-    staging, a fresh unreferenced dir may be its IN-FLIGHT attempt, so it
-    is reclaimed only once older than the horizon. Pass 0 from a context
-    that provably has no concurrent writer (single-writer housekeeping,
-    tests) to reclaim lost-race debris immediately."""
-    import time as _time
-
-    versions = _list_manifests(spark, state_dir)
-    keep = max(keep, 2)
-    newest_per_batch: dict[int, str] = {}
-    for v in versions:  # lexicographic == (batch_id, compaction_seq) order
-        newest_per_batch[_batch_id_of(v)] = v
-    kept_batch_ids = sorted(newest_per_batch)[-keep:]
-    kept_manifests = [newest_per_batch[b] for b in kept_batch_ids]
-    doomed_manifests = [v for v in versions if v not in set(kept_manifests)]
-    live: set[str] = set()  # "bucket/version" pairs a KEPT manifest references
-    live_deltas: set[str] = set()  # delta commits a kept manifest still folds
-    ever_referenced: set[str] = set()  # referenced by ANY current manifest
-    for v in versions:
-        m = _read_manifest(spark, state_dir, v)
-        refs = {f"b{int(b)}/{bv}" for b, bv in m["buckets"].items()}
-        deltas = set(m.get("deltas", []))
-        ever_referenced |= refs | deltas
-        if v in set(kept_manifests):
-            live |= refs
-            live_deltas |= deltas
-
-    fs, _, jvm = _fs_and_path(spark, state_dir)
-    hpath = jvm.org.apache.hadoop.fs.Path
-    # Derive "now" from the FILESYSTEM's clock, not the driver's: the
-    # mtimes compared below are stamped by the FS (HDFS/NFS), so driver
-    # clock skew would silently shrink the in-flight horizon and reclaim
-    # a live writer's fresh attempt dir early (Delta VACUUM shares the
-    # caveat). Touch a probe file and read its mtime back; fall back to
-    # driver wall-clock only if the probe itself fails (read-only FS).
-    probe = hpath(f"{state_dir}/_clock_probe")
-    try:
-        fs.create(probe, True).close()
-        now_ms = fs.getFileStatus(probe).getModificationTime()
-        fs.delete(probe, False)
-    except Exception:
-        now_ms = int(_time.time() * 1000)
-
-    def _reclaimable(ref: str, mtime_ms: int) -> bool:
-        if ref in ever_referenced:
-            return True  # committed history being vacuumed
-        return now_ms - mtime_ms >= debris_min_age_ms  # possible in-flight
-    deleted = 0
-    broot = hpath(f"{state_dir}/buckets")
-    if fs.exists(broot):
-        for bstat in fs.listStatus(broot):
-            if not bstat.isDirectory():
-                continue
-            bname = str(bstat.getPath().getName())
-            for vstat in fs.listStatus(bstat.getPath()):
-                vname = str(vstat.getPath().getName())
-                ref = f"{bname}/{vname}"
-                if ref not in live and _reclaimable(
-                    ref, vstat.getModificationTime()
-                ):
-                    fs.delete(vstat.getPath(), True)
-                    deleted += 1
-    droot = hpath(f"{state_dir}/deltas")
-    if fs.exists(droot):
-        for dstat in fs.listStatus(droot):
-            dname = str(dstat.getPath().getName())
-            if (
-                dstat.isDirectory()
-                and dname not in live_deltas
-                and _reclaimable(dname, dstat.getModificationTime())
-            ):
-                fs.delete(dstat.getPath(), True)
-                deleted += 1
-    for v in doomed_manifests:
-        _LOG_STORE.delete_commit(spark, _manifest_dir(state_dir), v)
-        deleted += 1
-    return deleted
-
-
 # --- change data feed (manifest-pruned) --------------------------------------
 
 
@@ -1920,8 +1811,8 @@ def partitioned_state_changes(
     O(touched buckets), never O(|state|). (Contrast
     operators/warehouse.table_diff, the generic two-full-snapshot diff.)
     A rewritten bucket can still contain untouched keys (a batch updates
-    one key of a thousand in its range; compaction rewrites with zero
-    changes) — those fall out of the per-key comparison below.
+    one key of a thousand in its range; a maintenance commit rewrites
+    with zero changes) — those fall out of the per-key comparison below.
 
     MoR-aware (r7): a commit with PENDING DELTAS is a first-class side —
     each side folds base + its pending deltas (the same sequenced fold
@@ -2119,7 +2010,7 @@ def partitioned_state_summary(
     Buckets whose manifest entry predates zone-map stats (or a whole
     pre-stats manifest) fall back to ONE scan job over just those
     buckets, so the cost tracks the un-statted fraction — and a later
-    commit or compaction of those buckets heals them forward."""
+    commit or delta fold of those buckets heals them forward."""
     from decimal import Decimal
 
     manifest = (
@@ -2238,141 +2129,6 @@ def read_partitioned_state_keyrange(
     )
 
 
-# --- compaction (OPTIMIZE twin) ----------------------------------------------
-
-
-def _bucket_data_files(fs, jvm, bucket_version_dir: str) -> tuple[int, int]:
-    """(parquet file count, total parquet bytes) of a bucket-version dir."""
-    p = jvm.org.apache.hadoop.fs.Path(bucket_version_dir)
-    if not fs.exists(p):
-        return 0, 0
-    n = total = 0
-    for s in fs.listStatus(p):
-        if s.isFile() and str(s.getPath().getName()).endswith(".parquet"):
-            n += 1
-            total += int(s.getLen())
-    return n, total
-
-
-def compact_partitioned_state(
-    spark: SparkSession,
-    state_dir: str,
-    max_files: int = 1,
-    target_file_bytes: int = 128 * 1024 * 1024,
-) -> int:
-    """OPTIMIZE twin: rewrite every bucket whose latest version holds more
-    than `max_files` parquet data files down to ~`target_file_bytes`
-    files, and commit a manifest with the SAME batch_id suffixed
-    'x{seq}' — the identical logical state, physically defragmented.
-    Untouched buckets keep their pointers; replay/time-travel semantics
-    are unchanged because _batch_id_of treats the compaction as its
-    source batch.
-
-    BIN-PACKING (r7): a bucket at production width is a few GB — one
-    file per bucket (the old contract) makes multi-GB parquet files
-    that kill scan parallelism and retry granularity. The rewrite now
-    targets `target_file_bytes` per output file, the real OPTIMIZE
-    contract: bytes-per-row is measured from the fragmented buckets'
-    own files (fixed schema → uniform rows), converted to ONE global
-    maxRecordsPerFile, so each bucket lands ceil(bucket_rows / rpf)
-    files — exactly 1 at test scale, ~bucket_bytes/target at 100 TB —
-    without any per-bucket salting machinery.
-
-    Returns the number of buckets compacted. Scale shape: the read is
-    pruned to the fragmented buckets; one repartition(bucket) shuffle
-    gives one writing task per bucket, maxRecordsPerFile splits within."""
-    versions = _list_manifests(spark, state_dir)
-    if not versions:
-        return 0
-    latest_name = versions[-1]
-    manifest = _read_manifest(spark, state_dir, latest_name)
-    _require_no_pending_deltas(manifest, "compact_partitioned_state")
-    fs, _, jvm = _fs_and_path(spark, state_dir)
-    fragmented: list[int] = []
-    frag_bytes = 0
-    for b, v in manifest["buckets"].items():
-        n, nbytes = _bucket_data_files(fs, jvm, f"{state_dir}/buckets/b{int(b)}/{v}")
-        if n > max_files:
-            fragmented.append(int(b))
-            frag_bytes += nbytes
-    if not fragmented:
-        return 0
-    fragmented.sort()
-
-    batch_id = manifest["batch_id"]
-    seq = _next_compaction_seq(versions, batch_id)
-    vname = _attempt_name(f"v{batch_id:09d}x{seq:04d}")
-
-    src_paths = [
-        f"{state_dir}/buckets/b{b}/{manifest['buckets'][str(b)]}" for b in fragmented
-    ]
-    df = (
-        # the manifest's (possibly evolved) schema: a compaction that read
-        # the legacy narrow schema would silently DROP evolved columns
-        # from the rewritten buckets
-        spark.read.schema(_state_schema_for(table_values(manifest)))
-        .parquet(*src_paths)
-        .withColumn("bucket", bucket_of(F.col("key"), manifest["range_width"]))
-    )
-    # rows in the fragmented set: prefer the manifest's zone-map stats
-    # (free); scan-count only buckets predating stats
-    stats = manifest.get("stats", {})
-    frag_rows = 0
-    unstatted = [b for b in fragmented if str(b) not in stats]
-    for b in fragmented:
-        if str(b) in stats:
-            frag_rows += int(stats[str(b)]["n_keys"])
-    if unstatted:
-        frag_rows += (
-            spark.read.schema(_state_schema_for(table_values(manifest)))
-            .parquet(
-                *[f"{state_dir}/buckets/b{b}/{manifest['buckets'][str(b)]}" for b in unstatted]
-            )
-            .count()
-        )
-    # measured bytes/row over the set -> global records-per-file target
-    # (parquet re-encodes, but same schema+codec => same-order sizes)
-    bytes_per_row = max(1.0, frag_bytes / max(frag_rows, 1))
-    rpf = max(1, int(target_file_bytes / bytes_per_row))
-    staging = f"{state_dir}/.staging/{vname}"
-    # repartition BY bucket -> each bucket's rows land in exactly one task;
-    # maxRecordsPerFile bin-packs within the task
-    df.repartition(F.col("bucket")).write.mode("overwrite").option(
-        "maxRecordsPerFile", rpf
-    ).partitionBy("bucket").parquet(staging)
-
-    hpath = jvm.org.apache.hadoop.fs.Path
-    new_buckets = dict(manifest["buckets"])
-    for b in fragmented:
-        src = hpath(f"{staging}/bucket={b}")
-        dst = hpath(f"{state_dir}/buckets/b{b}/{vname}")
-        fs.mkdirs(hpath(f"{state_dir}/buckets/b{b}"))
-        if not fs.exists(src) or not fs.rename(src, dst):
-            raise IOError(f"compaction move failed for bucket {b}: {src} -> {dst}")
-        new_buckets[str(b)] = vname
-    fs.delete(hpath(staging), True)
-
-    _write_manifest(
-        spark,
-        state_dir,
-        {
-            "batch_id": batch_id,
-            "compaction_seq": seq,
-            "range_width": manifest["range_width"],
-            "buckets": new_buckets,
-            # identical logical state -> stats carry over byte-for-byte
-            # (a pre-stats manifest compacts to a pre-stats manifest;
-            # partitioned_state_summary scan-falls-back per bucket)
-            "stats": dict(manifest.get("stats", {})),
-            # identical logical state -> the sequenced-CDC high-water
-            # mark carries over too (same for every maintenance commit)
-            **_inherit_max_seq(manifest),
-        },
-        expected=tuple(versions),
-    )
-    return len(fragmented)
-
-
 # --- merge-on-read (deletion-vector-style scattered updates) -----------------
 #
 # The copy-on-write MERGE's measured boundary (SCALE.md): a SCATTERED
@@ -2390,7 +2146,7 @@ def compact_partitioned_state(
 # compact_deltas_into_base folds the pending deltas into the buckets
 # they touch under a same-batch-id 'x' commit, restoring the zero-cost
 # read path. Manifest-pruned readers whose guarantees are base-only
-# (summary, keyrange, compaction) REFUSE while deltas are
+# (summary, keyrange, CoW merge) REFUSE while deltas are
 # pending — the honest contract, loud rather than stale.
 
 
@@ -2460,7 +2216,7 @@ def append_delta_batch(
 
     # attempt-unique delta dir: a replay (or same-batch-id racer) writes
     # a fresh dir instead of overwriting — the committed manifest names
-    # the winner; losers/orphans are retention debris
+    # the winner; losers/orphans are unreferenced debris
     vname = _attempt_name(f"v{batch_id:09d}")
     delta = _aggregate_batch(batch_df, width, values)
     # SUM widened the fold; store at each column's recorded state width
@@ -2504,8 +2260,7 @@ def compact_deltas_into_base(spark: SparkSession, state_dir: str) -> int:
     readers work again. Cost is O(delta rows + touched buckets) — the
     amortization that makes merge-on-read pay: N scattered batches cost
     N appends plus ONE fold instead of N full-spread rewrites. Delta
-    files stay on disk for older-manifest time travel until retention
-    vacuums them. Returns the number of buckets rewritten."""
+    files stay on disk for older-manifest time travel. Returns the number of buckets rewritten."""
     versions = _list_manifests(spark, state_dir)
     if not versions:
         return 0

@@ -250,9 +250,9 @@ def test_cdf_matches_by_physical_identity(spark, tmp_path):
 def test_rewrites_physically_purge_dropped_columns(spark, tmp_path):
     """DROP hides a column instantly without touching files; the bytes
     then leave storage INCREMENTALLY, for free: every rewrite-shaped
-    maintenance op (delta compaction, file compaction) writes
-    through the CURRENT schema, which no longer contains the retired
-    physical — Delta's REORG TABLE ... PURGE, without a dedicated op.
+    write (delta fold, CoW merge) goes through the CURRENT schema, which
+    no longer contains the retired physical — Delta's REORG TABLE ...
+    PURGE, without a dedicated op.
     Raw parquet reads of the bucket files prove both states."""
     state = _evolved_state(spark, tmp_path)
     assert pu.compact_deltas_into_base(spark, state) > 0
@@ -264,8 +264,13 @@ def test_rewrites_physically_purge_dropped_columns(spark, tmp_path):
     assert "fee" in raw.columns  # physically present pre-drop
 
     pu.drop_value_column(spark, state, "fee")
-    assert pu.compact_partitioned_state(spark, state, max_files=0) > 0
+    # rewrite every bucket with a CoW merge: keys 1-3 share bucket 0, and
+    # a tombstone for the absent key 15 (also bucket 0) changes no value
+    assert list(m["buckets"]) == ["0"]
+    tomb = _df(spark, [(15, None, "delete")], "key long, amount double, op string")
+    pu.merge_batch_into_partitioned_state(spark, state, tomb, 2, range_width=16)
     m2 = pu._read_manifest(spark, state, pu._list_manifests(spark, state)[-1])
+    assert m2["buckets"]["0"] != m["buckets"]["0"]
     for b, vname in m2["buckets"].items():
         raw2 = spark.read.parquet(f"{state}/buckets/b{b}/{vname}")
         assert "fee" not in raw2.columns  # bytes purged by the rewrite

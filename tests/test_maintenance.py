@@ -1,4 +1,4 @@
-"""Small-file compaction and snapshot time-travel/retention tests."""
+"""Small-file compaction tests."""
 
 from __future__ import annotations
 
@@ -49,62 +49,6 @@ def test_compact_recovers_from_mid_swap_crash(spark, sf_dir, tmp_path):
     assert not os.path.exists(p + "._compact_old")
     back = spark.read.parquet(p)
     assert back.count() == n and _money_sum(back, "o_totalprice") == s
-
-
-def test_state_time_travel_and_retention(spark, sf_dir, tmp_path):
-    from pharmaceutical_sales_data_etl_analysis_pipeline_spark.streaming.upsert import (
-        expire_state_versions,
-        read_latest_state,
-        read_state_version,
-        run_incremental_merge,
-    )
-
-    orders = load_table(spark, sf_dir, "orders").select(
-        F.col("o_custkey").alias("key"), F.col("o_totalprice").alias("amount")
-    )
-    src = tmp_path / "batches"
-    src.mkdir()
-    for i in range(3):
-        orders.filter(F.col("key") % 3 == i).toPandas().to_parquet(
-            str(src / f"b{i}.parquet"), index=False
-        )
-    state = str(tmp_path / "state")
-    run_incremental_merge(spark, str(src), state, str(tmp_path / "ckpt"))
-
-    # each snapshot is a prefix-fold: row counts grow monotonically and
-    # version 2 equals the latest
-    counts = [read_state_version(spark, state, b).count() for b in range(3)]
-    assert counts[0] <= counts[1] <= counts[2]
-    assert counts[2] == read_latest_state(spark, state).count()
-    assert read_state_version(spark, state, 99) is None
-
-    # keep=1 is clamped to 2: replay idempotence needs the predecessor of a
-    # possibly-uncommitted latest batch, so only v0 may be expired here
-    n_dropped = expire_state_versions(spark, state, keep=1)
-    assert n_dropped == 1
-    assert read_state_version(spark, state, 0) is None
-    assert read_state_version(spark, state, 1) is not None
-    assert read_latest_state(spark, state).count() == counts[2]
-
-
-def test_merge_replay_is_idempotent(spark, sf_dir, tmp_path):
-    """A crashed-then-replayed micro-batch (same batch_id, state already
-    written) must produce the identical snapshot, not double-apply the
-    delta — merge reads the latest version STRICTLY OLDER than the batch."""
-    from pharmaceutical_sales_data_etl_analysis_pipeline_spark.streaming.upsert import (
-        merge_batch_into_state,
-        read_state_version,
-    )
-
-    orders = load_table(spark, sf_dir, "orders").select(
-        F.col("o_custkey").alias("key"), F.col("o_totalprice").alias("amount")
-    )
-    state = str(tmp_path / "state")
-    merge_batch_into_state(spark, state, orders, 0)
-    once = {(r["key"], r["total"], r["n_rows"]) for r in read_state_version(spark, state, 0).collect()}
-    merge_batch_into_state(spark, state, orders, 0)  # replay of batch 0
-    twice = {(r["key"], r["total"], r["n_rows"]) for r in read_state_version(spark, state, 0).collect()}
-    assert once == twice
 
 
 def test_compact_empty_dir_is_noop(spark, tmp_path):

@@ -5,7 +5,7 @@ from __future__ import annotations
 
 import pytest
 
-from .oracle_harness import run_all
+from .oracle_harness import CompareResult, run_all
 
 
 def _names():
@@ -14,10 +14,35 @@ def _names():
     return sorted(entrymod.queries().keys())
 
 
+def _check(res) -> None:
+    from pharmaceutical_sales_data_etl_analysis_pipeline_spark.registry import (
+        EMPTY_AT_TEST_SCALE,
+    )
+
+    assert res.ok, f"{res.name}: {res.detail}"
+    assert (res.spark_rows, res.oracle_rows) != (0, 0) or res.name in EMPTY_AT_TEST_SCALE, (
+        f"{res.name}: Spark and oracle are both empty, so parity checks nothing; "
+        "fix the query's inputs or declare it in registry.EMPTY_AT_TEST_SCALE"
+    )
+
+
 @pytest.mark.parametrize("name", _names())
 def test_oracle_parity(spark, sf_dir, name):
-    res = run_all(spark, sf_dir, only=[name])[0]
-    assert res.ok, f"{res.name}: {res.detail}"
+    _check(run_all(spark, sf_dir, only=[name])[0])
+
+
+def test_empty_results_fail_unless_declared():
+    import __spark_entry__ as entrymod
+
+    from pharmaceutical_sales_data_etl_analysis_pipeline_spark.registry import (
+        EMPTY_AT_TEST_SCALE,
+    )
+
+    assert set(EMPTY_AT_TEST_SCALE) <= set(entrymod.queries())
+    with pytest.raises(AssertionError, match="both empty"):
+        _check(CompareResult("cow_keyrange_lookup", True, "", 0, 0))
+    _check(CompareResult("tpch_q7", True, "", 0, 0))
+    _check(CompareResult("cow_keyrange_lookup", True, "", 31, 31))
 
 
 def test_every_query_has_oracle_or_is_declared():

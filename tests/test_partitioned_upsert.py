@@ -1,7 +1,7 @@
 """Bucket-partitioned copy-on-write MERGE (streaming/partitioned_upsert):
 equivalence with the batch aggregate AND the scale property itself — a
 micro-batch rewrites ONLY the buckets its keys land in, verified at the
-file-system level, plus replay idempotence, time travel, and retention."""
+file-system level, plus replay idempotence and time travel."""
 
 from __future__ import annotations
 
@@ -16,8 +16,6 @@ import pharmaceutical_sales_data_etl_analysis_pipeline_spark.streaming.partition
 from pharmaceutical_sales_data_etl_analysis_pipeline_spark.streaming.partitioned_upsert import (
     bucket_of,
     changed_bucket_ids,
-    compact_partitioned_state,
-    expire_partitioned_versions,
     merge_batch_into_partitioned_state,
     partitioned_state_changes,
     read_latest_partitioned_state,
@@ -149,35 +147,6 @@ def test_time_travel_reads_each_committed_fold(spark, sf_dir, tmp_path):
     assert read_partitioned_state_version(spark, state, 7) is None
 
 
-def test_retention_keeps_referenced_bucket_versions(spark, sf_dir, tmp_path):
-    """After expiry, the kept manifests' union of bucket references is
-    intact (latest state still readable and correct); unreferenced bucket
-    versions and old manifests are gone."""
-    orders = _orders_kv(spark, sf_dir)
-    state = str(tmp_path / "state")
-    for i in range(4):
-        merge_batch_into_partitioned_state(
-            spark, state, orders.filter(F.col("key") % 4 == i), i
-        )
-    deleted = expire_partitioned_versions(spark, state, keep=2)
-    assert deleted > 0
-    manifests = _manifest_files(state)
-    assert manifests == ["v000000002.json", "v000000003.json"]
-    _assert_state_equals(read_latest_partitioned_state(spark, state), _expected(orders))
-    # every surviving bucket version is referenced by a kept manifest
-    import json as _json
-
-    live = set()
-    for m in manifests:
-        with open(os.path.join(state, "manifests", m)) as f:
-            doc = _json.load(f)
-        for b, v in doc["buckets"].items():
-            live.add((f"b{int(b)}", v))
-    for b, versions in _bucket_versions(state).items():
-        for v in versions:
-            assert (b, v) in live
-
-
 def test_delete_tombstones_replace_semantics(spark, tmp_path):
     """op='delete' discards prior state; same-batch upserts re-insert from
     zero; a fully-emptied bucket loses its manifest pointer; deleting an
@@ -251,98 +220,6 @@ def test_change_feed_classifies_and_prunes(spark, tmp_path):
         partitioned_state_changes(spark, state, 0, 7)
 
 
-def test_compaction_defragments_without_changing_state(spark, sf_dir, tmp_path):
-    """OPTIMIZE twin: fragmented buckets (one file per writing task) are
-    rewritten to one file each under a same-batch_id 'x' commit; the
-    logical state, time travel, replay, and the change feed all carry on
-    as if nothing happened — because logically nothing did."""
-    orders = _orders_kv(spark, sf_dir)
-    state = str(tmp_path / "state")
-    # AQE would coalesce the tiny shuffle to one task (one file per
-    # bucket); disable it for the write so buckets really fragment
-    old_aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        merge_batch_into_partitioned_state(spark, state, orders, 0)
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", old_aqe)
-
-    def files_per_bucket():
-        m = pu._latest_manifest(spark, state)
-        out = {}
-        for b, v in m["buckets"].items():
-            d = os.path.join(state, "buckets", f"b{int(b)}", v)
-            out[b] = sum(1 for f in os.listdir(d) if f.endswith(".parquet"))
-        return out
-
-    before = files_per_bucket()
-    assert any(n > 1 for n in before.values()), f"expected fragmentation, got {before}"
-
-    n = compact_partitioned_state(spark, state, max_files=1)
-    assert n == sum(1 for c in before.values() if c > 1)
-    assert all(c == 1 for c in files_per_bucket().values())
-    assert compact_partitioned_state(spark, state, max_files=1) == 0  # idempotent
-
-    expected = _expected(orders)
-    _assert_state_equals(read_latest_partitioned_state(spark, state), expected)
-    # time travel resolves batch 0 to its compaction (same logical state)
-    _assert_state_equals(read_partitioned_state_version(spark, state, 0), expected)
-    assert "v000000000x0001.json" in _manifest_files(state)
-
-    # a later merge keys off the compacted pointers and the change feed
-    # across (merge 0 .. merge 1) sees exactly the delta key
-    some_key = int(orders.select("key").first()["key"])
-    delta = spark.createDataFrame([(some_key, 10.0)], "key long, amount double")
-    merge_batch_into_partitioned_state(spark, state, delta, 1)
-    _assert_state_equals(
-        read_latest_partitioned_state(spark, state),
-        _expected(orders.unionByName(delta)),
-    )
-    feed = partitioned_state_changes(spark, state, 0, 1).collect()
-    assert [r["key"] for r in feed] == [some_key]
-    assert feed[0]["change_type"] == "update"
-
-
-def test_retention_counts_batches_not_manifests(spark, sf_dir, tmp_path):
-    """Compaction x retention interplay: keep=2 means two DISTINCT batch
-    ids. The naive last-2-manifests cut would keep [v2, v2x1] (one
-    logical batch twice) and drop v1 — after which a replayed batch 2
-    finds no strictly-older predecessor and silently merges as an
-    initial load. Also: within a kept batch, the plain manifest
-    superseded by its compaction is unreachable and must be vacuumed
-    along with its fragmented files."""
-    orders = _orders_kv(spark, sf_dir)
-    state = str(tmp_path / "state")
-    b0 = orders.filter(F.col("key") % 3 == 0)
-    b1 = orders.filter(F.col("key") % 3 == 1)
-    b2 = orders.filter(F.col("key") % 3 == 2)
-    merge_batch_into_partitioned_state(spark, state, b0, 0)
-    merge_batch_into_partitioned_state(spark, state, b1, 1)
-    old_aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        merge_batch_into_partitioned_state(spark, state, b2, 2)
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", old_aqe)
-    assert compact_partitioned_state(spark, state, max_files=1) > 0
-    assert _manifest_files(state) == [
-        "v000000000.json",
-        "v000000001.json",
-        "v000000002.json",
-        "v000000002x0001.json",
-    ]
-
-    expire_partitioned_versions(spark, state, keep=2)
-    # batches 1 and 2 survive; batch 2's plain commit (superseded by its
-    # compaction) is vacuumed, batch 0 ages out
-    assert _manifest_files(state) == ["v000000001.json", "v000000002x0001.json"]
-
-    # the replay-idempotence contract holds THROUGH retention+compaction:
-    # a replayed batch 2 merges against batch 1's manifest again
-    merge_batch_into_partitioned_state(spark, state, b2, 2)
-    _assert_state_equals(read_latest_partitioned_state(spark, state), _expected(orders))
-
-
 def test_range_width_drift_fails_loudly(spark, sf_dir, tmp_path, monkeypatch):
     orders = _orders_kv(spark, sf_dir)
     state = str(tmp_path / "state")
@@ -359,9 +236,8 @@ def test_range_width_drift_fails_loudly(spark, sf_dir, tmp_path, monkeypatch):
 def test_zone_map_stats_follow_pointer_semantics(spark, tmp_path):
     """Each commit's manifest carries per-bucket zone-map stats that are
     exact vs a direct recompute; untouched buckets INHERIT their stats
-    entry (pointer semantics), tombstone-emptied buckets drop it, and a
-    compaction carries the whole dict byte-for-byte (same logical
-    state). (RANGE_WIDTH=16: keys 1,2 -> bucket 0; 17 -> 1; 40 -> 2.)"""
+    entry (pointer semantics) and tombstone-emptied buckets drop it.
+    (RANGE_WIDTH=16: keys 1,2 -> bucket 0; 17 -> 1; 40 -> 2.)"""
     state = str(tmp_path / "state")
     b0 = spark.createDataFrame(
         [(1, 10.0), (2, 20.5), (17, 5.0), (17, 7.0), (40, 1.0)],
@@ -387,10 +263,6 @@ def test_zone_map_stats_follow_pointer_semantics(spark, tmp_path):
     assert m1["stats"]["0"] == m0["stats"]["0"]  # untouched: inherited
     assert m1["stats"]["1"]["sum_total"] == "13.00"  # rewritten: recomputed
     assert "2" not in m1["stats"] and "2" not in m1["buckets"]  # emptied
-    compacted = compact_partitioned_state(spark, state, max_files=0)
-    assert compacted >= 1
-    mx = pu._latest_manifest(spark, state)
-    assert mx.get("compaction_seq") and mx["stats"] == m1["stats"]
 
 
 def test_manifest_summary_is_metadata_only(spark, sf_dir, tmp_path):
@@ -692,7 +564,6 @@ def test_mor_append_and_fold(spark, tmp_path):
     for fn, args in [
         (pu.partitioned_state_summary, (spark, state)),
         (pu.read_partitioned_state_keyrange, (spark, state, 0, 50)),
-        (compact_partitioned_state, (spark, state)),
         # and a CoW merge on top of pending deltas would misorder them
         (merge_batch_into_partitioned_state, (spark, state, b2, 3)),
     ]:
@@ -726,20 +597,6 @@ def test_mor_append_and_fold(spark, tmp_path):
     got3 = {r["key"]: (r["total"], r["n_rows"])
             for r in read_latest_partitioned_state(spark, state).collect()}
     assert got3 == want
-    # retention vacuums delta files once no kept manifest references them:
-    # kept v1 still folds deltas/v000000001 (so it survives); the replayed
-    # plain v2 manifest is superseded by the compaction, so deltas/v...2
-    # is unreferenced and goes (age 0: single-writer scenario — the
-    # default horizon would hold the replay's never-referenced fresh
-    # attempt dir back as possible in-flight debris)
-    assert expire_partitioned_versions(spark, state, keep=2, debris_min_age_ms=0) > 0
-    remaining = sorted(
-        e.name for e in os.scandir(os.path.join(state, "deltas")) if e.is_dir()
-    )
-    assert len(remaining) == 1 and remaining[0].startswith("v000000001-")
-    got4 = {r["key"]: (r["total"], r["n_rows"])
-            for r in read_latest_partitioned_state(spark, state).collect()}
-    assert got4 == want
 
 
 def test_mor_append_writes_no_buckets(spark, sf_dir, tmp_path):
@@ -946,13 +803,13 @@ def test_compaction_seq_overflow_is_loud(spark, tmp_path):
 
 
 def test_next_compaction_seq_survives_retention():
-    """The next 'x' seq is max+1, not count+1: after retention vacuums
-    superseded compactions (keeping only the newest per batch), a count
-    would regress below the survivor and the new maintenance commit's
-    name would sort BEFORE it — a silently ineffective commit."""
+    """The next 'x' seq is max+1, not count+1: where a batch's history
+    holds only its newest compaction, a count would regress below the
+    survivor and the new maintenance commit's name would sort BEFORE it
+    — a silently ineffective commit."""
     # full history: count+1 == max+1, both fine
     assert pu._next_compaction_seq(["v000000001", "v000000001x0001"], 1) == 2
-    # post-vacuum: only the newest compaction survives; count+1 would be
+    # only the newest compaction present; count+1 would be
     # 2 ('x0002' < 'x0005' -> silent no-op), max+1 is right
     assert pu._next_compaction_seq(["v000000001x0005"], 1) == 6
     # other batches' compactions don't leak into this batch's seq
@@ -982,72 +839,14 @@ def test_stream_cow_ingest_with_ops(spark, tmp_path):
     assert got == {1: (10.0, 1), 33: (7.0, 1)}
 
 
-def test_compaction_bin_packs_to_target_file_size(spark, tmp_path):
-    """r7 OPTIMIZE contract: compaction targets `target_file_bytes` per
-    output file instead of one (potentially multi-GB) file per bucket.
-    With a target sized to ~half a bucket's bytes, each compacted bucket
-    lands ~2 files; with the default 128 MB target, tiny buckets land
-    exactly 1 (the old behavior, preserved at test scale). State is
-    value-identical either way."""
-    state = str(tmp_path / "state")
-    rows = [(k, float(k)) for k in range(0, 48)]  # buckets 0,1,2 (width 16)
-    b0 = spark.createDataFrame(rows, "key long, amount double")
-    # fragment the buckets: with AQE off, every shuffle task writes its
-    # own file into each bucket dir (same trick as the defrag test)
-    old_aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        merge_batch_into_partitioned_state(spark, state, b0, 0)
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", old_aqe)
-    before = {r["key"]: (r["total"], r["n_rows"])
-              for r in read_latest_partitioned_state(spark, state).collect()}
-
-    # measure a bucket's bytes to pick a ~half-bucket target
-    m = pu._latest_manifest(spark, state)
-    fs, _, jvm = __import__(
-        "pharmaceutical_sales_data_etl_analysis_pipeline_spark.sources.maintenance",
-        fromlist=["_fs_and_path"],
-    )._fs_and_path(spark, state)
-    bsizes = {
-        int(b): pu._bucket_data_files(fs, jvm, f"{state}/buckets/b{int(b)}/{v}")
-        for b, v in m["buckets"].items()
-    }
-    assert all(n >= 1 for n, _ in bsizes.values())
-    total_rows = sum(1 for _ in rows)
-    total_bytes = sum(nb for _, nb in bsizes.values())
-    # target ~ bytes of half a bucket's rows -> ceil(16/8)=2 files/bucket
-    target = int(total_bytes / total_rows * 8)
-    n = compact_partitioned_state(spark, state, target_file_bytes=target)
-    assert n == 3
-    m2 = pu._latest_manifest(spark, state)
-    counts = {
-        int(b): pu._bucket_data_files(fs, jvm, f"{state}/buckets/b{int(b)}/{v}")[0]
-        for b, v in m2["buckets"].items()
-    }
-    assert counts == {0: 2, 1: 2, 2: 2}
-    after = {r["key"]: (r["total"], r["n_rows"])
-             for r in read_latest_partitioned_state(spark, state).collect()}
-    assert after == before
-
-    # default target: tiny buckets compact to exactly one file each
-    merge_batch_into_partitioned_state(
-        spark, state, spark.createDataFrame([(1, 1.0)], "key long, amount double"), 2
-    )
-    assert compact_partitioned_state(spark, state) >= 1
-    m3 = pu._latest_manifest(spark, state)
-    for b, v in m3["buckets"].items():
-        assert pu._bucket_data_files(fs, jvm, f"{state}/buckets/b{int(b)}/{v}")[0] == 1
-
-
 def test_same_batch_id_loser_never_touches_winner_files(spark, tmp_path):
     """The r7 clobber window, closed structurally (r8): version dirs are
     attempt-unique and no write path deletes or replaces an existing
     dir, so a concurrent writer racing the SAME batch id whose basis
     predates the winner's commit (1) raises ConcurrentCommitError at the
     manifest, and (2) leaves every one of the winner's committed data
-    files byte-identical — its own attempt dirs are unreferenced debris
-    that the next retention pass reclaims."""
+    files byte-identical — its own attempt dirs are unreferenced
+    debris."""
     import hashlib
 
     from pharmaceutical_sales_data_etl_analysis_pipeline_spark.streaming.logstore import (
@@ -1104,20 +903,9 @@ def test_same_batch_id_loser_never_touches_winner_files(spark, tmp_path):
            for r in read_latest_partitioned_state(spark, state).collect()}
     assert got == {1: 12.0, 17: 5.0}
 
-    # the loser's attempt dirs are debris only retention reclaims
+    # the loser's attempt dirs are unreferenced debris
     orphans = set(after) - set(committed)
     assert orphans, "loser should have staged attempt dirs before losing"
-    # default horizon PROTECTS fresh never-referenced dirs — under
-    # multi-writer appends they may be an IN-FLIGHT attempt (the Delta
-    # VACUUM in-flight guard); committed state must be untouched either way
-    expire_partitioned_versions(spark, state, keep=2)
-    assert orphans <= set(inventory()), "fresh debris reclaimed inside horizon"
-    # a context that provably has no concurrent writer reclaims immediately
-    expire_partitioned_versions(spark, state, keep=2, debris_min_age_ms=0)
-    final = inventory()
-    assert set(final) == set(committed)
-    assert {r["key"]: r["total"]
-            for r in read_latest_partitioned_state(spark, state).collect()} == got
 
 
 # --- sequenced CDC (r9): tombstones under uncontrolled batch boundaries ----

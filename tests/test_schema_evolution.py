@@ -232,10 +232,9 @@ def test_cow_merge_evolves_and_folds_nulls_correctly(spark, tmp_path):
 
 
 def test_maintenance_carries_schema_and_values(spark, tmp_path):
-    """Compaction (delta fold) and bucket compaction both carry the
-    schema field AND the evolved column values — a maintenance op that
-    read the legacy schema would silently drop the column from the
-    rewritten files."""
+    """The delta fold carries the schema field AND the evolved column
+    values — a maintenance op that read the legacy schema would silently
+    drop the column from the rewritten files."""
     state = str(tmp_path / "state")
     pu.append_delta_batch(spark, state, _df(spark, [(1, 10.0)]), 0, range_width=16)
     pu.append_delta_batch(
@@ -254,10 +253,6 @@ def test_maintenance_carries_schema_and_values(spark, tmp_path):
     after, cols = _read(spark, state)
     assert cols == ["key", "total", "fee", "n_rows"]
     assert after == before
-    # bucket compaction: rewriting every bucket keeps the evolved column
-    assert pu.compact_partitioned_state(spark, state, max_files=0) > 0
-    after2, _ = _read(spark, state)
-    assert after2 == before
     # summary still answers from stats (primary column) on the evolved table
     s = pu.partitioned_state_summary(spark, state).first()
     assert s["n_keys"] == 2 and s["sum_total"] == 16.0

@@ -430,47 +430,6 @@ def test_stream_dedup_within_watermark_bounded_state(spark, sf_dir, tmp_path):
     assert spark.table("t_sdedup_wm").count() == n_unique
 
 
-def test_stream_incremental_merge_equals_batch_aggregate(spark, sf_dir, tmp_path):
-    """foreachBatch MERGE: streaming order batches folded into versioned
-    state equal the one-shot batch aggregate over all the data, and one
-    snapshot exists per micro-batch."""
-    from pharmaceutical_sales_data_etl_analysis_pipeline_spark.streaming.upsert import (
-        read_latest_state,
-        run_incremental_merge,
-    )
-
-    orders = load_table(spark, sf_dir, "orders").select(
-        F.col("o_custkey").alias("key"), F.col("o_totalprice").alias("amount")
-    )
-    src = tmp_path / "batches"
-    src.mkdir()
-    # three disjoint single-file batches (split by key mod) at the source
-    # root — the file stream delivers one micro-batch per file
-    for i in range(3):
-        orders.filter(F.col("key") % 3 == i).toPandas().to_parquet(
-            str(src / f"b{i}.parquet"), index=False
-        )
-    run_incremental_merge(
-        spark, str(src), str(tmp_path / "state"), str(tmp_path / "ckpt_merge")
-    )
-    import os
-
-    versions = sorted(
-        d for d in os.listdir(tmp_path / "state") if d.startswith("v")
-    )
-    assert len(versions) == 3  # one immutable snapshot per micro-batch
-    got = read_latest_state(spark, str(tmp_path / "state"))
-    expected = orders.groupBy("key").agg(
-        F.sum(F.col("amount").cast("decimal(18,2)")).cast("double").alias("total"),
-        F.count(F.lit(1)).cast("long").alias("n_rows"),
-    )
-    assert got.count() == expected.count()
-    diff = got.alias("g").join(expected.alias("e"), "key").filter(
-        (F.col("g.total") != F.col("e.total")) | (F.col("g.n_rows") != F.col("e.n_rows"))
-    )
-    assert diff.count() == 0
-
-
 def test_stream_outer_attribution_emits_unmatched_after_watermark(spark, tmp_path):
     """LEFT OUTER stream-stream join: a click with a purchase in the band
     emits joined; a click with no purchase emits with NULLs once the
@@ -951,3 +910,86 @@ def test_event_time_sessions_deterministic_watermark_close(spark, tmp_path):
         # user2's events arrived in DIFFERENT batches -> one session
         (2, 1, 2, 2_000_000, 3_000_000, "watermark"),
     }
+
+
+class _FakeRun:
+    """A stream of 4 files seen through drain(): it stands in for the
+    query, the progress log and the clock. Each sleep advances the clock
+    by `step_s` and completes the next scripted batch (its input rows)."""
+
+    id = "q"
+
+    def __init__(self, rows_per_batch, step_s, stops_after=None):
+        self.script, self.step_s, self.stops_after = list(rows_per_batch), step_s, stops_after
+        self.done: list[dict] = []
+        self.now = 0.0
+
+    @property
+    def isActive(self):
+        return self.stops_after is None or len(self.done) < self.stops_after
+
+    def awaitTermination(self, timeout=None):
+        return True
+
+    def batches(self, qid):
+        return list(self.done)
+
+    def wait_terminated(self, qid, timeout_s):
+        return True
+
+    def monotonic(self):
+        return self.now
+
+    def sleep(self, _s):
+        self.now += self.step_s
+        if self.script:
+            self.done.append({"input_rows": self.script.pop(0)})
+
+
+def test_drain_caps_on_progress_not_wall_time(monkeypatch):
+    """A slow stream that keeps delivering rows drains however long it
+    takes (a 300 s deadline raised here); a stream whose batches stop
+    adding rows, overrun the batch budget, stop early or stop completing
+    raises StreamStalled (a RuntimeError)."""
+    import pytest
+
+    from pharmaceutical_sales_data_etl_analysis_pipeline_spark.streaming import progress
+
+    def drain(run, n_expected, **kw):
+        monkeypatch.setattr(progress, "time", run)
+        progress.drain(run, run, n_expected, 4, "fake", **kw)
+
+    slow = _FakeRun([10, 10, 10, 10], step_s=400.0)
+    drain(slow, 40)
+    assert slow.now >= 1200.0
+    # self-terminating: trailing no-data batches after the rows are fine
+    ends = _FakeRun([10, 10, 0, 0, 0, 0], step_s=400.0, stops_after=6)
+    drain(ends, 20, until_terminated=True)
+    assert len(ends.done) == 6
+    cases = [
+        (_FakeRun([10, 0, 0, 0, 0, 0, 10], step_s=1.0), "consecutive micro-batches"),
+        (_FakeRun([1] * 20, step_s=1.0), "termination contract"),
+        (_FakeRun([10, 10], step_s=1.0, stops_after=2), "stopped before"),
+        (_FakeRun([10], step_s=700.0), "no micro-batch completed"),
+    ]
+    for run, msg in cases:
+        with pytest.raises(progress.StreamStalled, match=msg):
+            drain(run, 40)
+    assert issubclass(progress.StreamStalled, RuntimeError)
+
+
+def test_cow_keyrange_lookup_prunes_to_a_strict_bucket_subset(spark, sf_dir, monkeypatch):
+    """The lookup's key range comes from the key domain: it is populated
+    at the test scale, and the fixture buckets it reads are a strict
+    subset of the table's."""
+    import pharmaceutical_sales_data_etl_analysis_pipeline_spark.operators.streamingq as sq
+    import pharmaceutical_sales_data_etl_analysis_pipeline_spark.streaming.partitioned_upsert as pu
+
+    monkeypatch.setattr(sq, "_COW_STATE_MEMO", {})
+    rows = sq.cow_keyrange_lookup(spark, sf_dir).collect()
+    max_key = load_table(spark, sf_dir, "orders").agg(F.max("o_custkey")).first()[0]
+    lo, hi = sq.cow_lookup_range(max_key)
+    assert rows and all(lo <= r["key"] <= hi for r in rows)
+    manifest = pu._latest_manifest(spark, sq._build_cow_spend_state(spark, sf_dir))
+    read = pu.keyrange_bucket_ids(manifest, lo, hi)
+    assert read and set(read) < set(manifest["buckets"])
