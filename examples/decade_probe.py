@@ -32,7 +32,6 @@ from pharmaceutical_sales_data_etl_analysis_pipeline_spark.session import get_sp
 
 
 def main() -> None:
-    os.environ.setdefault("SPARK_GRAFT_BUILD_CACHE", "0")
     sf_dir, names = sys.argv[1], sys.argv[2:]
     spark = get_spark("decade-probe")
     spark.sparkContext.setLogLevel("ERROR")

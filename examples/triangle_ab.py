@@ -27,8 +27,6 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-os.environ.setdefault("SPARK_GRAFT_BUILD_CACHE", "0")
-
 from pharmaceutical_sales_data_etl_analysis_pipeline_spark.operators import graphops
 from pharmaceutical_sales_data_etl_analysis_pipeline_spark.session import get_spark
 

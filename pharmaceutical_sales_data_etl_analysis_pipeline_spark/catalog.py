@@ -333,10 +333,6 @@ def load_table(
     return _with_scan_floor(spark, df, path, spread)
 
 
-def load_tables(spark: SparkSession, sf_dir: str, names: list[str] | None = None) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in (names or TPCH_TABLES)}
-
-
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every corpus table as a temp view for spark.sql paths."""
     for n in TPCH_TABLES:

@@ -45,11 +45,6 @@ def money_sum_sql(expr: str, alias: str) -> str:
     )
 
 
-def bigint_sum(col: Column | str, alias: str) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return F.sum(c.cast("long")).cast("long").alias(alias)
-
-
 def round_half_up(col: Column, digits: int) -> Column:
     """Engine-portable rounding: floor(x*10^d + 0.5)/10^d.
 

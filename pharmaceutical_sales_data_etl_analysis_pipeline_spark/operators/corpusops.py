@@ -156,38 +156,13 @@ def _sized(df: DataFrame, n_parts: int, key: str) -> DataFrame:
     return df
 
 
-# DataFrame-valued build memo (buildcache.py keying): four registered
-# queries (this one, dedup_survivors, training_corpus,
-# quality_filter_funnel) each re-ran the full LSH + label-propagation
-# chain at build time. The labels are a pure function of the corpus bytes
-# and the listed parameters; the key additionally pins the SparkSession
-# (a DataFrame is session-tied) and the pin mode (so a local-vs-table
-# comparison run really executes both paths). SPARK_GRAFT_BUILD_CACHE=0
-# disables.
-_COMPONENTS_CACHE: dict = {}
-
-
 def neardup_components(
     documents: DataFrame,
     max_iters: int = 50,
     rows_per_partition: int = EDGE_ROWS_PER_PARTITION,
 ) -> DataFrame:
-    import os
-
-    from .buildcache import corpus_key
-
     if max_iters < 1:
         raise ValueError(f"max_iters must be >= 1, got {max_iters}")
-    ckey = corpus_key(
-        documents,
-        id(documents.sparkSession),
-        max_iters,
-        rows_per_partition,
-        COMPONENT_MIN_J,
-        os.environ.get("SPARK_GRAFT_PIN", "local"),
-    )
-    if ckey is not None and ckey in _COMPONENTS_CACHE:
-        return _COMPONENTS_CACHE[ckey]
     pairs = minhash_lsh_candidates(documents).filter(
         F.col("est_jaccard") >= COMPONENT_MIN_J
     )
@@ -212,14 +187,8 @@ def neardup_components(
         # one collect instead of an init checkpoint plus, per round, one
         # job per adaptive stage and a count(). Larger graphs keep the
         # distributed loop below.
-        out = _components_on_driver(edges, max_iters)
-    else:
-        out = _components_distributed(edges, n_parts, max_iters)
-    if ckey is not None:
-        from .buildcache import memo_put
-
-        memo_put(_COMPONENTS_CACHE, ckey, out)
-    return out
+        return _components_on_driver(edges, max_iters)
+    return _components_distributed(edges, n_parts, max_iters)
 
 
 def _not_converged(max_iters: int, changed: int) -> RuntimeError:

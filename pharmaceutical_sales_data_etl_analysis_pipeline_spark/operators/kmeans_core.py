@@ -129,19 +129,6 @@ def _assign(quant: DataFrame, centroids: list[tuple[int, list[float]]]) -> DataF
     )
 
 
-# Process-level training memo (see buildcache.py for the keying rules).
-# Before this, every IVF/clustering query build re-ran the identical
-# 3-round-trip training (6+ builds per sweep at ~1 s each). Kill switch:
-# SPARK_GRAFT_BUILD_CACHE=0.
-_CENTROID_CACHE: dict = {}
-
-
-def _corpus_key(embeddings: DataFrame):
-    from .buildcache import corpus_key
-
-    return corpus_key(embeddings)
-
-
 def _train_spaces(
     quant: DataFrame, jobs: list[tuple[int, int, list[tuple[int, list[float]]]]]
 ) -> list[list[tuple[int, list[float]]]]:
@@ -244,31 +231,14 @@ def kmeans_centroids(
     seeds = first k vectors, one exact-integer recompute step. Three driver
     round-trips (corpus count for derived K, seeds, K x DIM sums) — the
     standard iterative-clustering driver pattern; every distributed pass is
-    one scan with map-side partial aggregation. Memoized per backing file
-    set (see _CENTROID_CACHE note)."""
-    ckey = _corpus_key(embeddings)
+    one scan with map-side partial aggregation."""
     if k is None:
-        if ckey is not None and (ckey, "n") in _CENTROID_CACHE:
-            n = _CENTROID_CACHE[(ckey, "n")]
-        else:
-            n = embeddings.count()
-            if ckey is not None:
-                from .buildcache import memo_put
-
-                memo_put(_CENTROID_CACHE, (ckey, "n"), n)
-        k = derive_k(n)
-    if ckey is not None and (ckey, k) in _CENTROID_CACHE:
-        return _CENTROID_CACHE[(ckey, k)]
+        k = derive_k(embeddings.count())
     quant = _quantized(embeddings)
     seeds = quant.filter(F.col("vec_id") < k).collect()
     c0 = sorted((int(r["vec_id"]), [float(v) for v in r["qe"]]) for r in seeds)
     dim = len(c0[0][1]) if c0 else 0
-    out = _train_spaces(quant, [(0, dim, c0)])[0]
-    if ckey is not None:
-        from .buildcache import memo_put
-
-        memo_put(_CENTROID_CACHE, (ckey, k), out)
-    return out
+    return _train_spaces(quant, [(0, dim, c0)])[0]
 
 
 def kmeans_centroids_spaces(
@@ -280,63 +250,27 @@ def kmeans_centroids_spaces(
     quantizer, every one a full corpus scan).
 
     spaces: [(lo, dim, k)] — dim None = full width (resolved from the
-    seed rows), k None = derive_k(count) (full-width spaces only; the
-    count memo/job is shared with kmeans_centroids). Each space's result
-    is bit-identical to kmeans_centroids on the corresponding slice, and
-    is memoized under the SAME key that slice would use — so this trainer
-    and the per-space one interoperate through one cache."""
-    from .buildcache import memo_put
-
-    ckey_full = _corpus_key(embeddings)
-    # resolve derived K once (full-width spaces only, by construction)
+    seed rows), k None = derive_k(count) (full-width spaces only; one
+    count job however many spaces derive K). Each space's result is
+    bit-identical to kmeans_centroids on the corresponding slice."""
     ks: list[int] = []
     n: int | None = None
     for lo, dim, k in spaces:
         if k is None:
             assert lo == 0 and dim is None, "derived K is full-width only"
             if n is None:
-                if ckey_full is not None and (ckey_full, "n") in _CENTROID_CACHE:
-                    n = _CENTROID_CACHE[(ckey_full, "n")]
-                else:
-                    n = embeddings.count()
-                    if ckey_full is not None:
-                        memo_put(_CENTROID_CACHE, (ckey_full, "n"), n)
+                n = embeddings.count()
             k = derive_k(n)
         ks.append(int(k))
-    # memo lookup per space, under the exact key the sliced-df path uses
-    keys = []
+    quant = _quantized(embeddings)
+    seeds = quant.filter(F.col("vec_id") < max(ks)).collect()
+    rows = sorted((int(r["vec_id"]), [float(v) for v in r["qe"]]) for r in seeds)
+    full_dim = len(rows[0][1]) if rows else 0
+    jobs = []
     for (lo, dim, _), k in zip(spaces, ks):
-        if dim is None:
-            keys.append((ckey_full, k) if ckey_full is not None else None)
-        else:
-            sub = embeddings.select(
-                "vec_id", F.slice(F.col("embedding"), lo + 1, dim).alias("embedding")
-            )
-            skey = _corpus_key(sub)
-            keys.append((skey, k) if skey is not None else None)
-    results: list = [
-        _CENTROID_CACHE[key] if key is not None and key in _CENTROID_CACHE else None
-        for key in keys
-    ]
-    missing = [i for i, r in enumerate(results) if r is None]
-    if missing:
-        quant = _quantized(embeddings)
-        maxk = max(ks[i] for i in missing)
-        seeds = quant.filter(F.col("vec_id") < maxk).collect()
-        rows = sorted((int(r["vec_id"]), [float(v) for v in r["qe"]]) for r in seeds)
-        full_dim = len(rows[0][1]) if rows else 0
-        jobs = []
-        for i in missing:
-            lo, dim, _ = spaces[i]
-            dim = full_dim if dim is None else dim
-            c0 = [(vid, qe[lo : lo + dim]) for vid, qe in rows if vid < ks[i]]
-            jobs.append((lo, dim, c0))
-        trained = _train_spaces(quant, jobs)
-        for i, out in zip(missing, trained):
-            results[i] = out
-            if keys[i] is not None:
-                memo_put(_CENTROID_CACHE, keys[i], out)
-    return results
+        dim = full_dim if dim is None else dim
+        jobs.append((lo, dim, [(vid, qe[lo : lo + dim]) for vid, qe in rows if vid < k]))
+    return _train_spaces(quant, jobs)
 
 
 def kmeans_assignments(embeddings: DataFrame, k: int | None = None) -> DataFrame:

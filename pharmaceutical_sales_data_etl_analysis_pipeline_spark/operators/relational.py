@@ -640,27 +640,21 @@ SELECT 'open_only' AS set_op, o_custkey FROM (
 # and (b) the wholetext+xpath fallback, and aggregated. The oracle
 # computes the identical aggregate from the orders parquet — a dropped
 # record, a garbled attribute, or a mis-nested element diverges the
-# count/sum/distincts. Corpus build is memoized per (orders file set);
-# EAGER at build: one write job materializes the corpus (same class as
-# the CoW fixture builds, registry.py eager-execution note).
+# count/sum/distincts. EAGER at build: one write job materializes the
+# corpus (same class as the CoW fixture builds, registry.py
+# eager-execution note).
 # ---------------------------------------------------------------------------
-
-_XML_CORPUS_MEMO: dict = {}
 
 
 def _orders_xml_corpus(spark: SparkSession, sf_dir: str) -> str:
     import os as _os
 
     from ..sources.xml import write_xml_shards
-    from .buildcache import corpus_key, memo_put
     from .pin import scratch_dir
 
     orders = load_table(spark, sf_dir, "orders", spread=True).select(
         "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
     )
-    key = corpus_key(orders, "orders_xml_corpus")
-    if key is not None and key in _XML_CORPUS_MEMO:
-        return _XML_CORPUS_MEMO[key]
     records = orders.select(
         F.concat(
             F.lit('<txn status="'), F.col("o_orderstatus"),
@@ -673,8 +667,6 @@ def _orders_xml_corpus(spark: SparkSession, sf_dir: str) -> str:
     )
     out = _os.path.join(scratch_dir("xml_corpus_"), "txns")
     write_xml_shards(records, out, n_files=8)
-    if key is not None:
-        memo_put(_XML_CORPUS_MEMO, key, out)
     return out
 
 
@@ -730,10 +722,6 @@ SELECT CAST(COUNT(*) AS BIGINT) AS n_txns,
 FROM orders
 """
 
-# memo for the streamed-ingest sink (one stream drain per corpus; same
-# discipline as the corpus memo above)
-_XML_STREAM_SINK_MEMO: dict = {}
-
 
 def q_xml_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S5's STREAMING twin (r8): the reference's multi-file ordered
@@ -752,36 +740,26 @@ def q_xml_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import types as T
 
     from ..sources.xml import stream_xml_files_ordered
-    from .buildcache import corpus_key, memo_put
     from .pin import scratch_dir
 
     corpus = _orders_xml_corpus(spark, sf_dir)
-    orders = load_table(spark, sf_dir, "orders")
-    key = corpus_key(orders, "xml_stream_sink")
-    if key is not None and key in _XML_STREAM_SINK_MEMO:
-        sink = _XML_STREAM_SINK_MEMO[key]
-        streamed = spark.read.parquet(sink)
-    else:
-        paths = sorted(
-            _os.path.join(corpus, f)
-            for f in _os.listdir(corpus)
-            if f.startswith("part-")
-        )
-        schema = T.StructType(
-            [
-                T.StructField("_status", T.StringType()),
-                T.StructField("okey", T.LongType()),
-                T.StructField(
-                    "customer",
-                    T.StructType([T.StructField("ckey", T.LongType())]),
-                ),
-                T.StructField("price", T.StringType()),
-            ]
-        )
-        work = scratch_dir("xml_stream_")
-        streamed = stream_xml_files_ordered(spark, paths, "txn", schema, work)
-        if key is not None:
-            memo_put(_XML_STREAM_SINK_MEMO, key, _os.path.join(work, "sink"))
+    paths = sorted(
+        _os.path.join(corpus, f) for f in _os.listdir(corpus) if f.startswith("part-")
+    )
+    schema = T.StructType(
+        [
+            T.StructField("_status", T.StringType()),
+            T.StructField("okey", T.LongType()),
+            T.StructField(
+                "customer",
+                T.StructType([T.StructField("ckey", T.LongType())]),
+            ),
+            T.StructField("price", T.StringType()),
+        ]
+    )
+    streamed = stream_xml_files_ordered(
+        spark, paths, "txn", schema, scratch_dir("xml_stream_")
+    )
     return _xml_roundtrip_agg(
         streamed.select(
             F.col("_status").alias("status"),

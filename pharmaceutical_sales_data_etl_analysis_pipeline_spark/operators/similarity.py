@@ -872,12 +872,6 @@ def _centroid_topn(cents: DataFrame, vecs: DataFrame, n: int) -> DataFrame:
     )
 
 
-# scratch-parquet memo for the inverted lists (see docstring below)
-_ASSIGN_MEMO: dict = {}
-# scratch-parquet memo for the PQ code table (same discipline)
-_PQ_CODES_MEMO: dict = {}
-
-
 def ivf_assignments(embeddings: DataFrame, cents: DataFrame | None = None) -> DataFrame:
     """(vec_id, centroid_id): nearest learned centroid over the WHOLE
     corpus — Arrow-vectorized (r8).
@@ -908,19 +902,6 @@ def ivf_assignments(embeddings: DataFrame, cents: DataFrame | None = None) -> Da
         (int(r["c_id"]), [float(x) for x in r["c_emb"]], float(r["c_norm"]))
         for r in cents.collect()
     )
-    # the assignment IS the index's inverted lists — an index-build
-    # artifact a deployment stores, not per-query work. Memoize to
-    # scratch parquet per (corpus, exact centroid set) like the other
-    # index builds; SPARK_GRAFT_BUILD_CACHE=0 (bench) disables so
-    # measured builds stay cold. Custom/planted cents on synthetic DFs
-    # get corpus_key None and skip the memo.
-    from .buildcache import corpus_key, memo_put
-
-    ckey = corpus_key(
-        embeddings, "ivf_assign_" + hashlib.md5(repr(cl).encode()).hexdigest()
-    )
-    if ckey is not None and ckey in _ASSIGN_MEMO:
-        return embeddings.sparkSession.read.parquet(_ASSIGN_MEMO[ckey])
     cids = [c for c, _, _ in cl]
     cmat = [e for _, e, _ in cl]
     cnorms = [n for _, _, n in cl]
@@ -950,19 +931,9 @@ def ivf_assignments(embeddings: DataFrame, cents: DataFrame | None = None) -> Da
                     }
                 )
 
-    out = embeddings.select("vec_id", "embedding").mapInPandas(
+    return embeddings.select("vec_id", "embedding").mapInPandas(
         assign, "vec_id long, centroid_id long"
     )
-    if ckey is not None:
-        import os as _os
-
-        from .pin import scratch_dir
-
-        path = _os.path.join(scratch_dir("ivf_assign_"), "assign")
-        out.write.mode("overwrite").parquet(path)
-        memo_put(_ASSIGN_MEMO, ckey, path)
-        return embeddings.sparkSession.read.parquet(path)
-    return out
 
 
 def q_ivf_list_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1293,9 +1264,7 @@ def _pq_codebooks(
     lookup). All PQ_M sub-trainings run in ONE seeds collect + ONE sums job
     (opt r14, kmeans_centroids_spaces — was 2 jobs per subspace, each a
     full corpus scan); with_coarse=True folds the coarse quantizer's
-    derived-K training into the SAME two jobs and returns (books, coarse).
-    Results memoize under the same per-slice keys the old per-space path
-    used, so either path serves the other's cache hits."""
+    derived-K training into the SAME two jobs and returns (books, coarse)."""
     from .kmeans_core import kmeans_centroids_spaces
 
     spaces: list[tuple[int, int | None, int | None]] = [
@@ -1317,19 +1286,10 @@ def pq_codes(
     embeddings: DataFrame,
     books: list[tuple[list[int], list[list[float]]]] | None = None,
 ) -> DataFrame:
-    from .buildcache import corpus_key, memo_put
     from .kmeans_core import _QUANT2, _quantized
 
     if books is None:
         books = _pq_codebooks(embeddings)
-    # the code table is an index-build artifact (a deployment stores it
-    # next to the inverted lists); memoize per (corpus, exact codebooks),
-    # same discipline and kill switch as the assignment memo above
-    ckey = corpus_key(
-        embeddings, "pq_codes_" + hashlib.md5(repr(books).encode()).hexdigest()
-    )
-    if ckey is not None and ckey in _PQ_CODES_MEMO:
-        return embeddings.sparkSession.read.parquet(_PQ_CODES_MEMO[ckey])
 
     def encode(batches):
         ready()
@@ -1354,17 +1314,7 @@ def pq_codes(
             out["recon_err"] = grid(total / _QUANT2, 1e6)
             yield pd.DataFrame(out)
 
-    out = _quantized(embeddings).mapInPandas(encode, _PQ_OUT)
-    if ckey is not None:
-        import os as _os
-
-        from .pin import scratch_dir
-
-        path = _os.path.join(scratch_dir("pq_codes_"), "codes")
-        out.write.mode("overwrite").parquet(path)
-        memo_put(_PQ_CODES_MEMO, ckey, path)
-        return embeddings.sparkSession.read.parquet(path)
-    return out
+    return _quantized(embeddings).mapInPandas(encode, _PQ_OUT)
 
 
 def q_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:

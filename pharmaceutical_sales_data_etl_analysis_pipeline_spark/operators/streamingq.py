@@ -281,7 +281,7 @@ def cow_merge_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
         merge_batch_into_partitioned_state(spark, state, b0, 0, range_width=width)
         merge_batch_into_partitioned_state(spark, state, b1, 1, range_width=width)
 
-    state = _memoized_state(spark, sf_dir, "cow_cdf", build)
+    state = _fixture_state(spark, sf_dir, "cow_cdf", build)
     return partitioned_state_changes(spark, state, 0, 1)
 
 
@@ -354,19 +354,6 @@ ORACLES["cow_merge_changes"] = SQL_COW_MERGE_CHANGES
 COW_FIXTURE_TARGET_BUCKETS = 16
 COW_FIXTURE_MIN_WIDTH = 100  # sf0.01 floor: keeps >= ~15 buckets there
 
-# Memo for the on-disk CoW/MoR state fixtures (VERDICT r6: a 202-query
-# sweep paid the same two-merge build three times over — the most
-# expensive registered queries). The cached value is the committed state
-# DIRECTORY path — a pure function of the key: the exact orders file set
-# + semantic hash (overwritten testdata keys differently) + a fixture
-# tag, same discipline as the kmeans/components memos. The dir lives in
-# pin.scratch_dir space (reclaimed at process exit, like every lazily-
-# read query scratch), and the value holds no session reference, so any
-# in-process session can read it. SPARK_GRAFT_BUILD_CACHE=0 disables —
-# bench.py sets it, so the BUILD stays what bench measures.
-_COW_STATE_MEMO: dict = {}
-
-
 def _cow_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
@@ -391,25 +378,15 @@ def _cow_fixture_width(orders: DataFrame) -> int:
     )
 
 
-def _memoized_state(spark: SparkSession, sf_dir: str, tag: str, build) -> str:
-    """Build (or reuse) an on-disk state fixture: `build(orders, width,
-    state_dir)` commits the fixture; the committed dir is memoized per
-    (orders files, semantic hash, tag). On a hit even the width-deriving
-    driver round-trip is skipped — the width is a pure function of the
-    same file set the key pins."""
+def _fixture_state(spark: SparkSession, sf_dir: str, tag: str, build) -> str:
+    """Build an on-disk state fixture in a fresh scratch dir:
+    `build(orders, width, state_dir)` commits it; returns state_dir."""
     import os as _os
 
-    from .buildcache import corpus_key, memo_put
-
     orders = _cow_orders(spark, sf_dir)
-    key = corpus_key(orders, tag)
-    if key is not None and key in _COW_STATE_MEMO:
-        return _COW_STATE_MEMO[key]
     width = _cow_fixture_width(orders)
     state = _os.path.join(_scratch_dir(f"{tag}_"), "state")
     build(orders, width, state)
-    if key is not None:
-        memo_put(_COW_STATE_MEMO, key, state)
     return state
 
 
@@ -435,7 +412,7 @@ def _build_cow_spend_state(spark: SparkSession, sf_dir: str) -> str:
             range_width=width,
         )
 
-    return _memoized_state(spark, sf_dir, "cow_zonemap", build)
+    return _fixture_state(spark, sf_dir, "cow_zonemap", build)
 
 
 def cow_manifest_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -509,9 +486,9 @@ ORACLES["cow_keyrange_lookup"] = SQL_COW_KEYRANGE_LOOKUP
 
 
 def _mor_state(spark: SparkSession, sf_dir: str) -> str:
-    """Memoized MoR fixture: CoW initial load (batch 0) + the CDC batch
-    appended as a PENDING delta (batch 1, never compacted) — shared by
-    the fold read and the MoR-aware change feed."""
+    """MoR fixture: CoW initial load (batch 0) + the CDC batch
+    appended as a PENDING delta (batch 1, never compacted) — the builder
+    behind both the fold read and the MoR-aware change feed."""
     from ..streaming.partitioned_upsert import (
         append_delta_batch,
         merge_batch_into_partitioned_state,
@@ -522,7 +499,7 @@ def _mor_state(spark: SparkSession, sf_dir: str) -> str:
         merge_batch_into_partitioned_state(spark, state, b0, 0, range_width=width)
         append_delta_batch(spark, state, b1, 1, range_width=width)
 
-    return _memoized_state(spark, sf_dir, "mor_fold", build)
+    return _fixture_state(spark, sf_dir, "mor_fold", build)
 
 
 def mor_scattered_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -683,7 +660,7 @@ def stream_mor_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, src, state, _os.path.join(base, "ckpt"), range_width=width
         )
 
-    state = _memoized_state(spark, sf_dir, "stream_mor", build)
+    state = _fixture_state(spark, sf_dir, "stream_mor", build)
     return read_latest_partitioned_state(spark, state)
 
 
@@ -779,7 +756,7 @@ def stream_mor_tombstone_seq(spark: SparkSession, sf_dir: str) -> DataFrame:
             with_seq=True,
         )
 
-    state = _memoized_state(spark, sf_dir, "stream_mor_seq", build)
+    state = _fixture_state(spark, sf_dir, "stream_mor_seq", build)
     return read_latest_partitioned_state(spark, state)
 
 
@@ -865,7 +842,7 @@ def mor_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build(orders: DataFrame, width: int, state: str) -> None:
         _build_evolved_state(spark, sf_dir, state, width, compact=False)
 
-    state = _memoized_state(spark, sf_dir, "mor_evolve", build)
+    state = _fixture_state(spark, sf_dir, "mor_evolve", build)
     return read_latest_partitioned_state(spark, state)
 
 
@@ -921,7 +898,7 @@ def mor_schema_evolution_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build(orders: DataFrame, width: int, state: str) -> None:
         _build_evolved_state(spark, sf_dir, state, width, compact=True)
 
-    state = _memoized_state(spark, sf_dir, "mor_evolve_compacted", build)
+    state = _fixture_state(spark, sf_dir, "mor_evolve_compacted", build)
     return partitioned_state_summary(spark, state)
 
 
@@ -977,7 +954,7 @@ def mor_rename_column(spark: SparkSession, sf_dir: str) -> DataFrame:
         if v != 5:
             raise RuntimeError(f"rename fee->surcharge landed v{v}, want 5")
 
-    state = _memoized_state(spark, sf_dir, "mor_rename", build)
+    state = _fixture_state(spark, sf_dir, "mor_rename", build)
     return read_latest_partitioned_state(spark, state)
 
 
@@ -1028,7 +1005,7 @@ def mor_drop_column(spark: SparkSession, sf_dir: str) -> DataFrame:
         if v != 4:
             raise RuntimeError(f"drop fee landed v{v}, want 4")
 
-    state = _memoized_state(spark, sf_dir, "mor_drop", build)
+    state = _fixture_state(spark, sf_dir, "mor_drop", build)
     return read_latest_partitioned_state(spark, state)
 
 

@@ -45,12 +45,11 @@ graph_triangle_stats: one pair-bound agg that derives the broadcast-vs-
 shuffle join strategy — the unconditional edge broadcast failed at the
 r6 sf10 rung); and the ingest-fixture queries that stage files and
 drain a Structured Streaming query at build (stream_mor_ingest,
-xml_stream_ingest — both memoized per corpus;
-stream_stateful_user_totals — unmemoized, the 3-file fixture republish
-is cheaper than a corpus hash; stream_session_event_expiry — one
-bounded min/max round-trip sizes its time slices, then a 5-file publish
-+ self-terminating availableNow drain; stream_session_expiry — unmemoized
-4-batch publish + a listener-driven drain with explicit stop, because
+xml_stream_ingest, stream_stateful_user_totals — a 3-file fixture
+publish; stream_session_event_expiry — one bounded min/max round-trip
+sizes its time slices, then a 5-file publish + self-terminating
+availableNow drain; stream_session_expiry — a 4-batch publish + a
+listener-driven drain with explicit stop, because
 ProcessingTimeTimeout keeps the engine scheduling batches and
 availableNow would never terminate — sweep-cost budget in
 BENCH_NOTES r10).

@@ -48,15 +48,6 @@ def tumbling_counts_stream(events: DataFrame, window: str = "1 hour",
     )
 
 
-def sliding_counts_stream(events: DataFrame) -> DataFrame:
-    return (
-        events.withWatermark("ts", "2 hours")
-        .groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(F.col("w.start").alias("window_start"), "n_events")
-    )
-
-
 def session_counts_stream(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
     """Session windows with a dynamic gap — the streaming twin of the
     batch gaps-and-islands sessionization (eventsops.sessionize)."""

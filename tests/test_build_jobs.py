@@ -3,9 +3,9 @@
 Some builders run jobs before the caller's action: pins, training passes,
 derived parameters and fixed-point loops (the registry's eager-execution
 note). Each such job is a round trip that every evaluation pays. These
-budgets are the exact counts on the tier-1 corpus with the build memos
-off and adaptive execution on, so a new hidden round trip in one of these
-builders fails here; a count that falls lowers its budget.
+budgets are the exact counts on the tier-1 corpus with adaptive execution
+on, so a new hidden round trip in one of these builders fails here; a
+count that falls lowers its budget.
 
 The near-dup chain (`neardup_components` and the three queries built on
 it) solves a one-partition candidate graph in one driver pass: 4 jobs for
@@ -35,7 +35,6 @@ BUILD_JOB_BUDGET = {
 
 @pytest.mark.parametrize("name", sorted(BUILD_JOB_BUDGET))
 def test_build_jobs_within_budget(spark, sf_dir, monkeypatch, name):
-    monkeypatch.setenv("SPARK_GRAFT_BUILD_CACHE", "0")
     monkeypatch.setenv("SPARK_GRAFT_PIN", "local")
     # adaptive execution submits each query stage as its own job
     with session_conf(spark, {"spark.sql.adaptive.enabled": "true"}):

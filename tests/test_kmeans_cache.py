@@ -1,11 +1,7 @@
-"""kmeans training memo: pure-function caching keyed by (backing files,
-semantic plan hash, K) — must return identical centroids, must NOT
-collide across subspace projections of the same files, and must skip
-non-file-backed inputs entirely."""
+"""k-means training: the batched multi-space trainer agrees bit-for-bit
+with per-space training."""
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import functions as F
 
@@ -13,105 +9,16 @@ from pharmaceutical_sales_data_etl_analysis_pipeline_spark.catalog import load_t
 from pharmaceutical_sales_data_etl_analysis_pipeline_spark.operators import kmeans_core
 
 
-def test_cache_hit_returns_identical_centroids(spark, sf_dir):
-    emb = load_table(spark, sf_dir, "embeddings")
-    kmeans_core._CENTROID_CACHE.clear()
-    first = kmeans_core.kmeans_centroids(emb)
-    assert kmeans_core._CENTROID_CACHE  # populated
-    second = kmeans_core.kmeans_centroids(load_table(spark, sf_dir, "embeddings"))
-    assert first == second
-    assert second is first  # the cached object, not a retrain
-
-
-def test_projections_key_apart(spark, sf_dir):
-    """pq_codes trains per-subspace slices of the same parquet files; the
-    memo must never serve one subspace's centroids for another."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    lo = emb.select("vec_id", F.slice("embedding", 1, 8).alias("embedding"))
-    hi = emb.select("vec_id", F.slice("embedding", 9, 8).alias("embedding"))
-    kmeans_core._CENTROID_CACHE.clear()
-    c_lo = kmeans_core.kmeans_centroids(lo, 4)
-    c_hi = kmeans_core.kmeans_centroids(hi, 4)
-    assert c_lo != c_hi
-
-
 def test_spaces_trainer_matches_per_space_training(spark, sf_dir):
     """The r14 batched trainer (one seeds collect + one sums job for all
     dimension windows) must return bit-identical centroids to the
-    per-space kmeans_centroids path AND memoize under the same keys, so
-    the two trainers interoperate through one cache."""
+    per-space kmeans_centroids path."""
     emb = load_table(spark, sf_dir, "embeddings")
-    kmeans_core._CENTROID_CACHE.clear()
     batched = kmeans_core.kmeans_centroids_spaces(
         emb, [(0, 8, 4), (8, 8, 4), (0, None, None)]
     )
     lo = emb.select("vec_id", F.slice("embedding", 1, 8).alias("embedding"))
     hi = emb.select("vec_id", F.slice("embedding", 9, 8).alias("embedding"))
-    # per-space calls must be pure cache hits on the batched results
-    assert kmeans_core.kmeans_centroids(lo, 4) is batched[0]
-    assert kmeans_core.kmeans_centroids(hi, 4) is batched[1]
-    assert kmeans_core.kmeans_centroids(emb) is batched[2]
-    # and freshly trained per-space values must be identical bit-for-bit
-    kmeans_core._CENTROID_CACHE.clear()
     assert kmeans_core.kmeans_centroids(lo, 4) == batched[0]
     assert kmeans_core.kmeans_centroids(hi, 4) == batched[1]
     assert kmeans_core.kmeans_centroids(emb) == batched[2]
-
-
-def test_non_file_input_skips_cache(spark):
-    rows = [(i, [float(i % 3), float(i % 5)]) for i in range(20)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    kmeans_core._CENTROID_CACHE.clear()
-    kmeans_core.kmeans_centroids(df, 2)
-    assert not kmeans_core._CENTROID_CACHE
-
-
-def test_kill_switch(spark, sf_dir):
-    saved = os.environ.get("SPARK_GRAFT_BUILD_CACHE")
-    os.environ["SPARK_GRAFT_BUILD_CACHE"] = "0"
-    try:
-        kmeans_core._CENTROID_CACHE.clear()
-        kmeans_core.kmeans_centroids(load_table(spark, sf_dir, "embeddings"))
-        assert not kmeans_core._CENTROID_CACHE
-    finally:
-        if saved is None:
-            os.environ.pop("SPARK_GRAFT_BUILD_CACHE", None)
-        else:
-            os.environ["SPARK_GRAFT_BUILD_CACHE"] = saved
-
-
-def test_components_cache_shares_across_consumers(spark, sf_dir):
-    from pharmaceutical_sales_data_etl_analysis_pipeline_spark.operators import corpusops
-
-    corpusops._COMPONENTS_CACHE.clear()
-    docs = lambda: __import__(
-        "pharmaceutical_sales_data_etl_analysis_pipeline_spark.catalog", fromlist=["load_table"]
-    ).load_table(spark, sf_dir, "documents")
-    first = corpusops.neardup_components(docs())
-    assert len(corpusops._COMPONENTS_CACHE) == 1
-    second = corpusops.neardup_components(docs())
-    assert second is first  # cache hit, no re-propagation
-    rows1 = sorted(map(tuple, first.collect()))
-    corpusops._COMPONENTS_CACHE.clear()
-    rows2 = sorted(map(tuple, corpusops.neardup_components(docs()).collect()))
-    assert rows1 == rows2  # cached and fresh builds agree
-
-
-def test_components_cache_keys_on_pin_mode(spark, sf_dir):
-    from pharmaceutical_sales_data_etl_analysis_pipeline_spark.catalog import load_table
-    from pharmaceutical_sales_data_etl_analysis_pipeline_spark.operators import corpusops
-
-    saved = os.environ.get("SPARK_GRAFT_PIN")
-    corpusops._COMPONENTS_CACHE.clear()
-    try:
-        os.environ["SPARK_GRAFT_PIN"] = "local"
-        a = corpusops.neardup_components(load_table(spark, sf_dir, "documents"))
-        os.environ["SPARK_GRAFT_PIN"] = "table"
-        b = corpusops.neardup_components(load_table(spark, sf_dir, "documents"))
-    finally:
-        if saved is None:
-            os.environ.pop("SPARK_GRAFT_PIN", None)
-        else:
-            os.environ["SPARK_GRAFT_PIN"] = saved
-    assert b is not a  # a mode flip must rebuild, not serve the other mode
-    assert len(corpusops._COMPONENTS_CACHE) == 2

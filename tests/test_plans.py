@@ -309,7 +309,6 @@ def test_neardup_edges_have_no_duplicate_pairs(spark, sf_dir, monkeypatch):
         pinned[name] = out = real_pin(df, name)
         return out
 
-    monkeypatch.setenv("SPARK_GRAFT_BUILD_CACHE", "0")
     monkeypatch.setattr(corpusops, "pin", recording_pin)
     corpusops.neardup_components(load_table(spark, sf_dir, "documents"))
     edges = pinned["neardup_edges"]

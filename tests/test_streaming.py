@@ -533,42 +533,6 @@ def test_stream_source_handles_directory_layout(spark, sf_dir, tmp_path):
     assert directory == single
 
 
-def test_cow_fixture_memoized_per_corpus(spark, sf_dir, monkeypatch):
-    """VERDICT r6: the four CoW/MoR queries rebuilt their two-merge state
-    fixture on EVERY invocation (the most expensive registered queries in
-    a sweep). The build is now memoized per (orders file set, semantic
-    hash, tag): repeated calls return the SAME committed state dir and
-    run zero merges; SPARK_GRAFT_BUILD_CACHE=0 disables (bench measures
-    the unmemoized build)."""
-    import pharmaceutical_sales_data_etl_analysis_pipeline_spark.operators.streamingq as sq
-    import pharmaceutical_sales_data_etl_analysis_pipeline_spark.streaming.partitioned_upsert as pu
-
-    monkeypatch.setattr(sq, "_COW_STATE_MEMO", {})
-    calls = {"n": 0}
-    real_merge = pu.merge_batch_into_partitioned_state
-
-    def counting_merge(*a, **kw):
-        calls["n"] += 1
-        return real_merge(*a, **kw)
-
-    monkeypatch.setattr(pu, "merge_batch_into_partitioned_state", counting_merge)
-    # streamingq binds the function at call time via module import
-    s1 = sq._build_cow_spend_state(spark, sf_dir)
-    assert calls["n"] == 2  # the two-batch build ran once
-    s2 = sq._build_cow_spend_state(spark, sf_dir)
-    assert s2 == s1 and calls["n"] == 2  # memo hit: zero extra merges
-    # distinct fixtures (different tag) key apart and build independently
-    sq.cow_merge_changes(spark, sf_dir)
-    n_after_cdf = calls["n"]
-    assert n_after_cdf == 4
-    sq.cow_merge_changes(spark, sf_dir)
-    assert calls["n"] == n_after_cdf  # second CDF call also memo-hits
-    # kill switch: no memo, fresh dir, merges re-run
-    monkeypatch.setenv("SPARK_GRAFT_BUILD_CACHE", "0")
-    s3 = sq._build_cow_spend_state(spark, sf_dir)
-    assert s3 != s1 and calls["n"] == n_after_cdf + 2
-
-
 def test_stream_mor_ingest_equals_batch_fold(spark, sf_dir, monkeypatch):
     """End-to-end streaming merge-on-read: readStream -> foreachBatch
     delta appends -> one compaction -> base read must equal the batch
@@ -579,7 +543,13 @@ def test_stream_mor_ingest_equals_batch_fold(spark, sf_dir, monkeypatch):
 
     import pharmaceutical_sales_data_etl_analysis_pipeline_spark.operators.streamingq as sq
 
-    monkeypatch.setattr(sq, "_COW_STATE_MEMO", {})
+    states, real_fixture_state = {}, sq._fixture_state
+
+    def recording_fixture_state(spark, sf_dir, tag, build):
+        states[tag] = out = real_fixture_state(spark, sf_dir, tag, build)
+        return out
+
+    monkeypatch.setattr(sq, "_fixture_state", recording_fixture_state)
     streamed = {
         (r["key"]): (r["total"], r["n_rows"])
         for r in sq.stream_mor_ingest(spark, sf_dir).collect()
@@ -594,7 +564,7 @@ def test_stream_mor_ingest_equals_batch_fold(spark, sf_dir, monkeypatch):
     # fs-level shape: every bucket version dir is a compaction commit
     # ('x' suffix) — the streamed micro-batches themselves never rewrote
     # a bucket (the O(|batch|) hot-path claim)
-    state = sq._memoized_state(spark, sf_dir, "stream_mor", lambda *a: None)
+    state = states["stream_mor"]
     broot = os.path.join(state, "buckets")
     versions = {
         v
@@ -985,11 +955,18 @@ def test_cow_keyrange_lookup_prunes_to_a_strict_bucket_subset(spark, sf_dir, mon
     import pharmaceutical_sales_data_etl_analysis_pipeline_spark.operators.streamingq as sq
     import pharmaceutical_sales_data_etl_analysis_pipeline_spark.streaming.partitioned_upsert as pu
 
-    monkeypatch.setattr(sq, "_COW_STATE_MEMO", {})
+    states, real_build = [], sq._build_cow_spend_state
+
+    def recording_build(spark, sf_dir):
+        states.append(real_build(spark, sf_dir))
+        return states[-1]
+
+    monkeypatch.setattr(sq, "_build_cow_spend_state", recording_build)
     rows = sq.cow_keyrange_lookup(spark, sf_dir).collect()
     max_key = load_table(spark, sf_dir, "orders").agg(F.max("o_custkey")).first()[0]
     lo, hi = sq.cow_lookup_range(max_key)
     assert rows and all(lo <= r["key"] <= hi for r in rows)
-    manifest = pu._latest_manifest(spark, sq._build_cow_spend_state(spark, sf_dir))
+    [state] = states
+    manifest = pu._latest_manifest(spark, state)
     read = pu.keyrange_bucket_ids(manifest, lo, hi)
     assert read and set(read) < set(manifest["buckets"])
