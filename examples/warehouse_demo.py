@@ -2,13 +2,12 @@
 """Incremental-warehouse demo: the daily-batch lifecycle a production
 deployment runs on top of the engine (SURVEY.md §Warehouse maintenance):
 
-  1. CDC ingest: stream order batches, fold each into the bucketed
-     copy-on-write state via foreachBatch MERGE
+  1. CDC ingest: fold order batches into the bucketed copy-on-write
+     state with the MERGE body
      (streaming/partitioned_upsert.py; at the default RANGE_WIDTH the
      sf0.001 custkeys 0-149 all fall into one bucket)
   2. time travel: read the state as of an earlier batch
-  3. maintenance: compact the append debris into right-sized files
-  4. analytics over the merged state: MERGE upsert + SCD2 + OHLC views
+  3. analytics over the merged state: MERGE upsert + SCD2 + OHLC views
 
 Usage:
   python examples/warehouse_demo.py [sf_dir]   (default /root/testdata/sf0.001)
@@ -27,13 +26,10 @@ from pyspark.sql import functions as F
 from pharmaceutical_sales_data_etl_analysis_pipeline_spark.catalog import load_table
 from pharmaceutical_sales_data_etl_analysis_pipeline_spark.registry import all_queries
 from pharmaceutical_sales_data_etl_analysis_pipeline_spark.session import get_spark
-from pharmaceutical_sales_data_etl_analysis_pipeline_spark.sources.maintenance import (
-    compact_parquet,
-)
 from pharmaceutical_sales_data_etl_analysis_pipeline_spark.streaming.partitioned_upsert import (
+    merge_batch_into_partitioned_state,
     read_latest_partitioned_state,
     read_partitioned_state_version,
-    run_partitioned_incremental_merge,
 )
 
 
@@ -47,14 +43,10 @@ def main() -> None:
     orders = load_table(spark, sf_dir, "orders").select(
         F.col("o_custkey").alias("key"), F.col("o_totalprice").alias("amount")
     )
-    src = os.path.join(work, "batches")
-    os.makedirs(src)
-    for day in range(3):
-        orders.filter(F.col("key") % 3 == day).toPandas().to_parquet(
-            os.path.join(src, f"day{day}.parquet"), index=False
-        )
     state = os.path.join(work, "state")
-    run_partitioned_incremental_merge(spark, src, state, os.path.join(work, "ckpt"))
+    for day in range(3):
+        batch = orders.filter(F.col("key") % 3 == day)
+        merge_batch_into_partitioned_state(spark, state, batch, day)
     latest = read_latest_partitioned_state(spark, state)
     print(f"state after 3 batches: {latest.count()} keys")
 
@@ -62,13 +54,7 @@ def main() -> None:
     v0 = read_partitioned_state_version(spark, state, 0)
     print(f"VERSION AS OF batch 0: {v0.count()} keys")
 
-    # 3. compaction of fragmented appends
-    frag = os.path.join(work, "frag")
-    orders.repartition(16).write.parquet(frag)
-    before, after = compact_parquet(spark, frag, target_file_bytes=1 << 30)
-    print(f"compacted {before} files -> {after}")
-
-    # 4. analytics views over the corpus
+    # 3. analytics views over the corpus
     q = all_queries()
     print("merge_upsert actions:")
     q["merge_upsert"](spark, sf_dir).groupBy("merge_action").count().show()

@@ -191,13 +191,6 @@ def normalize_event_ts(df: DataFrame) -> DataFrame:
     return df.withColumn("ts", F.col("ts").cast("timestamp"))
 
 
-def events_source_schema(spark: SparkSession, path: str) -> T.StructType:
-    """Schema readStream needs for an events-shaped parquet source: the
-    actual footer schema of a sample file (ts arrives as whatever this
-    Spark version's reader produces; normalize_event_ts fixes it up)."""
-    return spark.read.parquet(path).schema
-
-
 def stream_table_source(
     spark: SparkSession, sf_dir: str, name: str, schema: T.StructType
 ) -> DataFrame:
@@ -258,9 +251,6 @@ def stream_table_source(
 # (a scan feeding a join or a light agg) and a 1.2-1.9x win for queries
 # whose pre-exchange work is heavy (md5-per-shingle, regexp-per-doc,
 # decimal-per-row pipelines). Only the measured winners opt in.
-# SPARK_GRAFT_SCAN_SPREAD forces it: "0" = off everywhere (plan tests
-# pinning the algorithmic shuffle structure), "1" = on everywhere
-# (measurement mode).
 
 _SCAN_SPREAD_MAX_BYTES = 4 * 1024**3  # redistribution cost ceiling
 _SCAN_UNITS_CACHE: dict[str, tuple[int, int]] = {}
@@ -294,10 +284,7 @@ def _parquet_scan_units(path: str) -> tuple[int, int]:
 def _with_scan_floor(
     spark: SparkSession, df: DataFrame, path: str, spread: bool
 ) -> DataFrame:
-    import os as _os
-
-    force = _os.environ.get("SPARK_GRAFT_SCAN_SPREAD", "")
-    if force == "0" or (not spread and force != "1"):
+    if not spread:
         return df
     cores = spark.sparkContext.defaultParallelism
     units, nbytes = _parquet_scan_units(path)

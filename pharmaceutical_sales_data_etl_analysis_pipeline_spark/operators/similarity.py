@@ -177,25 +177,6 @@ def _plane_weights(p: int, dim: int = DIM) -> list[float]:
     ]
 
 
-def lsh_bucket_col(emb: Column) -> Column:
-    """8-bit sign-LSH bucket code of an embedding column (pure projection)."""
-    sig = sum(
-        F.when(
-            _fold(
-                F.zip_with(
-                    emb,
-                    F.array(*[F.lit(w) for w in _plane_weights(p)]),
-                    lambda x, w: w * x.cast("double"),
-                )
-            )
-            > 0,
-            F.lit(2 ** p),
-        ).otherwise(F.lit(0))
-        for p in range(LSH_PLANES)
-    )
-    return sig.cast("int")
-
-
 def _arrow_sign_codes(
     embeddings: DataFrame, weights: list[list[float]], out_col: str = "code"
 ) -> DataFrame:
@@ -273,9 +254,7 @@ def _arrow_pair_cosine(pairs: DataFrame, keep: list[tuple[str, str]]) -> DataFra
 
 
 def lsh_buckets(embeddings: DataFrame) -> DataFrame:
-    """(vec_id, bucket): zero-shuffle signature pass (Arrow sign-code —
-    same values as the lsh_bucket_col expression form, which remains the
-    column-expression variant for in-plan composition)."""
+    """(vec_id, bucket): zero-shuffle signature pass (Arrow sign-code)."""
     w = [_plane_weights(p) for p in range(LSH_PLANES)]
     return _arrow_sign_codes(embeddings, w, out_col="bucket_code").select(
         "vec_id", F.col("bucket_code").cast("int").alias("bucket")
@@ -511,26 +490,6 @@ def derive_neardup_params(n: int) -> tuple[int, int, list[int]]:
     return planes, kbits, masks
 
 
-def neardup_code_col(emb: Column, planes: int = NEARDUP_PLANES_NARROW) -> Column:
-    """`planes`-plane sign code (long) — lsh_bucket_col's construction
-    widened; planes 0..7 coincide with the bucket ops' planes."""
-    sig = sum(
-        F.when(
-            _fold(
-                F.zip_with(
-                    emb,
-                    F.array(*[F.lit(w) for w in _plane_weights(p)]),
-                    lambda x, w: w * x.cast("double"),
-                )
-            )
-            > 0,
-            F.lit(2 ** p).cast("long"),
-        ).otherwise(F.lit(0).cast("long"))
-        for p in range(planes)
-    )
-    return sig.cast("long")
-
-
 _NEARDUP_OUT = "vec_a long, vec_b long, cosine double"
 
 
@@ -704,7 +663,7 @@ nd_masks AS (
 
 def _neardup_code_cte(src: str = "embeddings") -> str:
     """DuckDB CTEs base(vec_id, e) + codes(vec_id, code): the sign code,
-    same md5 weights and fold order as neardup_code_col. All 62 plane
+    same md5 weights and fold order as _arrow_sign_codes. All 62 plane
     projections are emitted; the wide tier (p >= 32) is gated on the
     derived planes so the narrow tier pays nothing for it, and masks
     never reference planes beyond the derived width, so a 62-bit SQL
@@ -1360,7 +1319,7 @@ ORACLES["pq_codes"] = SQL_PQ_CODES
 # centroid — the doc's raw vector is never read at this stage); only the
 # top shortlist fetches raw vectors for the exact-cosine rerank. The
 # default shortlist budget SCALES with nprobe (IVFPQ_RERANK per probed
-# list): the r9 recall rung (examples/ann_recall_rung.py) measured that
+# list): the r9 recall rung (SCALE.md) measured that
 # a FIXED window is crowded by ADC candidates as nprobe grows — recall
 # fell 0.81 -> 0.64 across nprobe 1..8 at sf10 — while the scaled
 # budget climbs 0.81 -> 0.98, restoring "more probes, better answers";

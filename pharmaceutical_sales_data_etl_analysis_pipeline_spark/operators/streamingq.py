@@ -228,9 +228,8 @@ ORACLES["stream_dedup_within_watermark"] = SQL_STREAM_DEDUP_WITHIN_WATERMARK
 # ---------------------------------------------------------------------------
 # Fifth streaming entry (r6): the bucket-partitioned copy-on-write MERGE's
 # change data feed, driver-verified. Two deterministic micro-batches fold
-# into the CoW state table (streaming/partitioned_upsert.py — the
-# foreachBatch body of run_partitioned_incremental_merge; the readStream
-# wrapper itself is exercised by tests/test_partitioned_upsert.py):
+# into the CoW state table (streaming/partitioned_upsert.py — its
+# foreachBatch merge body, merge_batch_into_partitioned_state):
 #   batch 0: per-customer 1992-1995 order spend (the initial load),
 #   batch 1: 1996+ spend as upserts PLUS delete tombstones for every
 #            batch-0 customer with custkey % 10 == 0 ("replace" CDC:
@@ -618,7 +617,7 @@ def _publish_single_file_batch(
     on filesystems with coarse timestamp granularity two back-to-back
     renames can otherwise tie and the tombstone/upsert batch order would
     be unspecified, silently inverting the CDC fold."""
-    from ..sources.maintenance import _fs_and_path
+    from ..streaming.logstore import _fs_and_path
 
     tmp = f"{src_dir}/.staging_{name}"
     df.coalesce(1).write.mode("overwrite").parquet(tmp)
@@ -1151,8 +1150,8 @@ ORACLES["stream_stateful_user_totals"] = SQL_STREAM_STATEFUL_USER_TOTALS
 # store at 100 TB: a key silent past the timeout gets one final
 # invocation that emits its open session and REMOVES its state, so the
 # store is O(active keys) under churn, never O(keys ever seen). Eviction
-# cost/size is measured in examples/stateful_expiry_rung.py; the
-# timeout-fires path is pinned in tests/test_streaming.py.
+# cost/size is measured in SCALE.md's expiry rung; the timeout-fires
+# path is pinned in tests/test_streaming.py.
 #
 # Oracle exactness despite wall-clock timeouts: each key's whole history
 # is published in ONE micro-batch (users split by user_id mod 3, pinned

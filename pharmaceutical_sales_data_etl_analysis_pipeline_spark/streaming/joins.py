@@ -19,13 +19,11 @@ from pyspark.sql import functions as F
 ATTRIBUTION_WINDOW = "30 minutes"
 
 
-def _attribution_join(events_stream: DataFrame, how: str) -> DataFrame:
-    """Shared attribution shape: click c ⋈ purchase p on user within
-    (0, 30 min] after c. Both sides carry watermarks so the join state is
-    evicted once no more matches can arrive; the band predicate bounds
-    buffering to the window. how='inner' emits matches only;
-    how='left_outer' also emits NULL-purchase rows once the watermark
-    proves the click unmatched."""
+def click_purchase_attribution(events_stream: DataFrame) -> DataFrame:
+    """Attribution shape: click c ⋈ purchase p on user within (0, 30 min]
+    after c. Both sides carry watermarks so the join state is evicted once
+    no more matches can arrive; the band predicate bounds buffering to the
+    window."""
     clicks = (
         events_stream.filter(F.col("event_type") == "click")
         .select(
@@ -50,7 +48,7 @@ def _attribution_join(events_stream: DataFrame, how: str) -> DataFrame:
         (F.col("c_user") == F.col("p_user"))
         & (F.col("purchase_ts") > F.col("click_ts"))
         & (F.col("purchase_ts") <= F.col("click_ts") + F.expr(f"INTERVAL {ATTRIBUTION_WINDOW}")),
-        how,
+        "inner",
     ).select(
         F.col("c_user").alias("user_id"),
         "click_id",
@@ -59,20 +57,6 @@ def _attribution_join(events_stream: DataFrame, how: str) -> DataFrame:
         "purchase_ts",
         "purchase_value",
     )
-
-
-def click_purchase_attribution(events_stream: DataFrame) -> DataFrame:
-    return _attribution_join(events_stream, "inner")
-
-
-def dedup_stream(events_stream: DataFrame) -> DataFrame:
-    """Streaming exact dedup on event_id. CAVEAT: with a key-only subset,
-    dropDuplicates state is NOT expired by the watermark (Spark only cleans
-    dedup state when the event-time column is part of the subset) — one
-    state entry per distinct key, forever. Correct for bounded replays and
-    exact global dedup; for unbounded streams use
-    dedup_stream_within_watermark below."""
-    return events_stream.withWatermark("ts", "1 hour").dropDuplicates(["event_id"])
 
 
 def dedup_stream_within_watermark(events_stream: DataFrame) -> DataFrame:
@@ -84,12 +68,3 @@ def dedup_stream_within_watermark(events_stream: DataFrame) -> DataFrame:
     return events_stream.withWatermark("ts", "1 hour").dropDuplicatesWithinWatermark(
         ["event_id"]
     )
-
-
-def click_purchase_attribution_outer(events_stream: DataFrame) -> DataFrame:
-    """LEFT OUTER attribution: every click emits — joined when a purchase
-    arrives inside the band, or with NULL purchase columns once the
-    watermark proves no match can still arrive (state eviction doubles as
-    the completeness signal). Latency for the NULL rows is bounded by the
-    watermark delay instead of job end."""
-    return _attribution_join(events_stream, "left_outer")

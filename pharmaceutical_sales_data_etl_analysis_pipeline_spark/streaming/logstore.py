@@ -30,9 +30,15 @@ import logging
 
 from pyspark.sql import SparkSession
 
-from ..sources.maintenance import _fs_and_path
-
 _LOG = logging.getLogger(__name__)
+
+
+def _fs_and_path(spark: SparkSession, dir_path: str):
+    """(Hadoop FileSystem, Path, JVM view) for a table directory."""
+    jvm = spark.sparkContext._jvm
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    path = jvm.org.apache.hadoop.fs.Path(dir_path)
+    return path.getFileSystem(conf), path, jvm
 
 
 class ConcurrentCommitError(RuntimeError):
@@ -52,7 +58,7 @@ class ManifestLogStore:
         listing check already proved the replacer saw it in its basis);
       * readers must never observe a torn payload.
     HadoopRenameLogStore is the implementation; tests subclass it to
-    inject faults (partitioned_upsert.set_log_store).
+    inject faults (patched in as partitioned_upsert._LOG_STORE).
     """
 
     def list_commits(self, spark: SparkSession, manifest_dir: str) -> list[str]:

@@ -116,22 +116,19 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..sources.maintenance import _fs_and_path
-from .logstore import ConcurrentCommitError, HadoopRenameLogStore, ManifestLogStore
+from .logstore import (
+    ConcurrentCommitError,
+    HadoopRenameLogStore,
+    ManifestLogStore,
+    _fs_and_path,
+)
 
 _LOG = logging.getLogger(__name__)
 
-# every manifest list/read/publish below routes through this store
+# every manifest list/read/publish below routes through this store (a
+# test substitutes a fault-injecting one: a crash before publish, a stale
+# listing)
 _LOG_STORE: ManifestLogStore = HadoopRenameLogStore()
-
-
-def set_log_store(store: ManifestLogStore) -> ManifestLogStore:
-    """Install the store for every subsequent commit/read; returns the
-    previous one. The seam lets a test substitute a fault-injecting
-    store (a crash before publish, a stale listing)."""
-    global _LOG_STORE
-    prev, _LOG_STORE = _LOG_STORE, store
-    return prev
 
 # Contract parameter: keys per bucket (RANGE partitioning, not hash).
 # The first cut of this module hash-bucketed keys, and the honest bench
@@ -1619,44 +1616,6 @@ def _bucket_stats(
     return out
 
 
-def run_partitioned_incremental_merge(
-    spark: SparkSession,
-    source_dir: str,
-    state_dir: str,
-    checkpoint_dir: str,
-    range_width: int | None = None,
-    with_ops: bool = False,
-) -> None:
-    """Stream (key, amount) parquet batch files into the bucket-partitioned
-    state table; availableNow drains pending files then stops.
-    `range_width` sizes a NEW table's ranges (and must match an existing
-    table's manifest) — same contract as the foreachBatch body.
-    `with_ops=True` reads an additional `op` string column and streams
-    replace-CDC batches (op='delete' tombstones, same orderless-within-
-    batch contract as the merge body; the MoR twin
-    run_partitioned_mor_ingest always carries ops)."""
-    fields = [T.StructField("key", T.LongType()), T.StructField("amount", T.DoubleType())]
-    if with_ops:
-        fields.append(T.StructField("op", T.StringType()))
-    src_schema = T.StructType(fields)
-    stream = (
-        spark.readStream.schema(src_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(
-            lambda df, bid: merge_batch_into_partitioned_state(
-                spark, state_dir, df, bid, range_width=range_width
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
 def run_partitioned_mor_ingest(
     spark: SparkSession,
     source_dir: str,
@@ -1669,8 +1628,8 @@ def run_partitioned_mor_ingest(
     extra_value_columns: dict[str, str] | None = None,
     merge_schema: bool = False,
 ) -> dict:
-    """Streaming merge-on-read ingest — the CDC mirror of
-    run_partitioned_incremental_merge: every micro-batch (key, amount,
+    """Streaming merge-on-read ingest — the CDC mirror of the
+    copy-on-write merge body: every micro-batch (key, amount,
     op) commits as an O(|batch|) DELTA append (zero bucket reads or
     rewrites on the hot path — the scattered-update shape CoW cannot
     afford), and after the stream drains, the pending deltas fold into

@@ -20,22 +20,6 @@ from pyspark.sql.streaming.state import GroupStateTimeout
 
 from ..operators.pyworker import ready
 
-RUNNING_TOTALS_SCHEMA = T.StructType(
-    [
-        T.StructField("user_id", T.LongType()),
-        T.StructField("n_events", T.LongType()),
-        T.StructField("total_value", T.DoubleType()),
-    ]
-)
-
-_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("n", T.LongType()),
-        T.StructField("total", T.DoubleType()),
-    ]
-)
-
-
 RUNNING_CENTS_SCHEMA = T.StructType(
     [
         T.StructField("user_id", T.LongType()),
@@ -53,8 +37,9 @@ _CENTS_STATE_SCHEMA = T.StructType(
 
 
 def running_user_totals_cents(events_stream: DataFrame) -> DataFrame:
-    """Exact-arithmetic twin of running_user_totals: the input carries a
-    pre-scaled integer `cents` column (computed JVM-side, so the float→int
+    """Cumulative per-user event count and exact total across
+    micro-batches: the input carries a pre-scaled integer `cents` column
+    (computed JVM-side, so the float→int
     quantization is one Catalyst expression shared with the SQL oracle) and
     the state accumulates int64 — order- and batch-grouping-invariant, so
     the FINAL emit per key equals the batch groupBy exactly, bit-for-bit.
@@ -133,8 +118,8 @@ def gap_sessions(
     that long gets one final invocation with hasTimedOut=True, which
     emits its open session (closed_by='timeout') and REMOVES the state —
     eviction, the property that keeps the store O(active keys) instead
-    of O(all keys ever seen) under key churn (measured in
-    examples/stateful_expiry_rung.py). Deployment caveat, stated plainly:
+    of O(all keys ever seen) under key churn (measured in SCALE.md's
+    expiry rung). Deployment caveat, stated plainly:
     processing-time expiry is only exact when a timed-out key is really
     finished (its next event would start a NEW session anyway, i.e. the
     wall silence implies an event-time gap); a key that reappears after
@@ -339,35 +324,3 @@ def event_time_sessions(
         )
     )
 
-
-def running_user_totals(events_stream: DataFrame) -> DataFrame:
-    """Cumulative per-user event count + value sum across micro-batches.
-
-    Emits one updated row per user per batch in which the user appears.
-    Use outputMode("update"); n_events/total_value are monotone per user.
-    """
-
-    def update(key, pdfs, state):
-        ready()
-        import pandas as pd
-
-        n, total = state.get if state.exists else (0, 0.0)
-        for pdf in pdfs:
-            n += len(pdf)
-            total += float(pdf["value"].sum())
-        state.update((n, total))
-        yield pd.DataFrame(
-            {"user_id": [key[0]], "n_events": [n], "total_value": [total]}
-        )
-
-    return (
-        events_stream.select("user_id", "value")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            update,
-            outputStructType=RUNNING_TOTALS_SCHEMA,
-            stateStructType=_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )

@@ -57,7 +57,7 @@ def _evolved_state(spark, tmp_path, name="state"):
 
 
 def test_rename_is_metadata_only_and_reads_new_name(spark, tmp_path):
-    from pharmaceutical_sales_data_etl_analysis_pipeline_spark.sources.maintenance import (
+    from pharmaceutical_sales_data_etl_analysis_pipeline_spark.streaming.logstore import (
         _fs_and_path,
     )
 

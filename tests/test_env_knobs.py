@@ -21,7 +21,6 @@ KNOBS = {
     "SPARK_GRAFT_CPUS",
     "SPARK_GRAFT_PIN",
     "SPARK_GRAFT_PIN_DIR",
-    "SPARK_GRAFT_SCAN_SPREAD",
     "SPARK_GRAFT_SF_DIR",
 }
 

@@ -21,13 +21,6 @@ def _small_ranges(monkeypatch):
     monkeypatch.setattr(pu, "RANGE_WIDTH", 16)
 
 
-@pytest.fixture()
-def restore_store():
-    """Restore the module default store after any test that swaps it."""
-    yield
-    pu.set_log_store(HadoopRenameLogStore())
-
-
 def _payload(batch_id: int, **extra) -> dict:
     return {"batch_id": batch_id, "range_width": 16, "buckets": {}, "stats": {},
             **extra}
@@ -71,7 +64,7 @@ class _CrashOnceStore(HadoopRenameLogStore):
 
 
 def test_crash_during_commit_is_invisible_and_replayable(
-    spark, tmp_path, restore_store
+    spark, tmp_path, monkeypatch
 ):
     """A merge that crashes between bucket renames and manifest publish
     leaves orphan bucket files but NO commit: readers still see the old
@@ -82,7 +75,7 @@ def test_crash_during_commit_is_invisible_and_replayable(
     b1 = spark.createDataFrame([(1, 2.0), (33, 7.0)], "key long, amount double")
     pu.merge_batch_into_partitioned_state(spark, state, b0, 0)
 
-    pu.set_log_store(_CrashOnceStore())
+    monkeypatch.setattr(pu, "_LOG_STORE", _CrashOnceStore())
     with pytest.raises(IOError, match="injected crash"):
         pu.merge_batch_into_partitioned_state(spark, state, b1, 1)
     # the crash is invisible: no batch-1 manifest, reads serve batch 0

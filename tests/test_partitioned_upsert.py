@@ -20,7 +20,6 @@ from pharmaceutical_sales_data_etl_analysis_pipeline_spark.streaming.partitioned
     partitioned_state_changes,
     read_latest_partitioned_state,
     read_partitioned_state_version,
-    run_partitioned_incremental_merge,
 )
 
 
@@ -76,16 +75,12 @@ def _bucket_versions(state_dir: str) -> dict[str, list[str]]:
 
 
 def test_partitioned_merge_equals_batch_aggregate(spark, sf_dir, tmp_path):
-    """End-to-end through the stream: folded state == one-shot aggregate."""
+    """Three batches folded one by one: state == one-shot aggregate."""
     orders = _orders_kv(spark, sf_dir)
-    src = tmp_path / "batches"
-    src.mkdir()
-    for i in range(3):
-        orders.filter(F.col("key") % 3 == i).toPandas().to_parquet(
-            str(src / f"b{i}.parquet"), index=False
-        )
     state = str(tmp_path / "state")
-    run_partitioned_incremental_merge(spark, str(src), state, str(tmp_path / "ckpt"))
+    for i in range(3):
+        batch = orders.filter(F.col("key") % 3 == i)
+        merge_batch_into_partitioned_state(spark, state, batch, i)
     _assert_state_equals(read_latest_partitioned_state(spark, state), _expected(orders))
     # one manifest per micro-batch (ignore the local FS's .crc sidecars)
     assert len(_manifest_files(state)) == 3
@@ -816,30 +811,7 @@ def test_next_compaction_seq_survives_retention():
     assert pu._next_compaction_seq(["v000000000x0003", "v000000001"], 1) == 1
 
 
-def test_stream_cow_ingest_with_ops(spark, tmp_path):
-    """run_partitioned_incremental_merge(with_ops=True): the CoW stream
-    carries replace-CDC batches - a tombstone in a later file discards
-    the key's earlier state through the same foreachBatch merge body."""
-    src = tmp_path / "batches"
-    src.mkdir()
-    spark.createDataFrame(
-        [(1, 10.0, "upsert"), (17, 5.0, "upsert")],
-        "key long, amount double, op string",
-    ).toPandas().to_parquet(str(src / "b0.parquet"), index=False)
-    spark.createDataFrame(
-        [(17, 0.0, "delete"), (33, 7.0, "upsert")],
-        "key long, amount double, op string",
-    ).toPandas().to_parquet(str(src / "b1.parquet"), index=False)
-    state = str(tmp_path / "state")
-    run_partitioned_incremental_merge(
-        spark, str(src), state, str(tmp_path / "ckpt"), with_ops=True
-    )
-    got = {r["key"]: (r["total"], r["n_rows"])
-           for r in read_latest_partitioned_state(spark, state).collect()}
-    assert got == {1: (10.0, 1), 33: (7.0, 1)}
-
-
-def test_same_batch_id_loser_never_touches_winner_files(spark, tmp_path):
+def test_same_batch_id_loser_never_touches_winner_files(spark, tmp_path, monkeypatch):
     """The r7 clobber window, closed structurally (r8): version dirs are
     attempt-unique and no write path deletes or replaces an existing
     dir, so a concurrent writer racing the SAME batch id whose basis
@@ -889,12 +861,9 @@ def test_same_batch_id_loser_never_touches_winner_files(spark, tmp_path):
                 spark_, manifest_dir, name, payload, expected
             )
 
-    prev_store = pu.set_log_store(StaleBasisStore())
-    try:
-        with pytest.raises(ConcurrentCommitError):
-            merge_batch_into_partitioned_state(spark, state, loser, 1)
-    finally:
-        pu.set_log_store(prev_store)
+    with monkeypatch.context() as m, pytest.raises(ConcurrentCommitError):
+        m.setattr(pu, "_LOG_STORE", StaleBasisStore())
+        merge_batch_into_partitioned_state(spark, state, loser, 1)
 
     after = inventory()
     for p, h in committed.items():
@@ -1163,7 +1132,7 @@ def test_sequenced_cdc_randomized_grouping_invariance(
     assert got == want
 
 
-def test_delta_compaction_loses_cleanly_to_concurrent_append(spark, tmp_path):
+def test_delta_compaction_loses_cleanly_to_concurrent_append(spark, tmp_path, monkeypatch):
     """Maintenance-vs-ingest conflict: a delta compaction whose basis
     snapshot predates a concurrent delta append must LOSE at the commit
     point (ConcurrentCommitError) and leave the table untouched — the
@@ -1219,12 +1188,9 @@ def test_delta_compaction_loses_cleanly_to_concurrent_append(spark, tmp_path):
 
     want = {1: (12.0, 2), 17: (6.0, 2), 33: (7.0, 1)}
 
-    prev_store = pu.set_log_store(StaleListingStore())
-    try:
-        with pytest.raises(ConcurrentCommitError):
-            pu.compact_deltas_into_base(spark, state)
-    finally:
-        pu.set_log_store(prev_store)
+    with monkeypatch.context() as m, pytest.raises(ConcurrentCommitError):
+        m.setattr(pu, "_LOG_STORE", StaleListingStore())
+        pu.compact_deltas_into_base(spark, state)
     # loser left the table untouched: batch 2's fold intact, deltas pending
     got = {
         r["key"]: (r["total"], r["n_rows"])

@@ -5,8 +5,6 @@ self-join, fixed-point iteration, component propagation)."""
 
 from __future__ import annotations
 
-import os
-
 import pytest
 
 from pharmaceutical_sales_data_etl_analysis_pipeline_spark.registry import all_queries
@@ -15,54 +13,32 @@ from pharmaceutical_sales_data_etl_analysis_pipeline_spark.registry import all_q
 @pytest.mark.parametrize(
     "name", ["basket_affinity", "pagerank_fixedpoint", "neardup_components"]
 )
-def test_pin_table_mode_matches_local(spark, sf_dir, name):
+def test_pin_table_mode_matches_local(spark, sf_dir, name, monkeypatch):
     q = all_queries()[name]
-    saved = os.environ.get("SPARK_GRAFT_PIN")
-    try:
-        os.environ["SPARK_GRAFT_PIN"] = "local"
-        local_rows = sorted(map(tuple, q(spark, sf_dir).collect()))
-        os.environ["SPARK_GRAFT_PIN"] = "table"
-        table_rows = sorted(map(tuple, q(spark, sf_dir).collect()))
-    finally:
-        if saved is None:
-            os.environ.pop("SPARK_GRAFT_PIN", None)
-        else:
-            os.environ["SPARK_GRAFT_PIN"] = saved
+    monkeypatch.setenv("SPARK_GRAFT_PIN", "local")
+    local_rows = sorted(map(tuple, q(spark, sf_dir).collect()))
+    monkeypatch.setenv("SPARK_GRAFT_PIN", "table")
+    table_rows = sorted(map(tuple, q(spark, sf_dir).collect()))
     assert local_rows == table_rows
 
 
-def test_pin_unknown_mode_raises(spark):
+def test_pin_unknown_mode_raises(spark, monkeypatch):
     """A typo'd SPARK_GRAFT_PIN must fail loudly — a silent localCheckpoint
     fallback would turn a dual-mode verification run into local-vs-local."""
     from pharmaceutical_sales_data_etl_analysis_pipeline_spark.operators.pin import pin
 
-    saved = os.environ.get("SPARK_GRAFT_PIN")
-    os.environ["SPARK_GRAFT_PIN"] = "TABLE"
-    try:
-        with pytest.raises(ValueError, match="SPARK_GRAFT_PIN"):
-            pin(spark.range(3))
-    finally:
-        if saved is None:
-            os.environ.pop("SPARK_GRAFT_PIN", None)
-        else:
-            os.environ["SPARK_GRAFT_PIN"] = saved
+    monkeypatch.setenv("SPARK_GRAFT_PIN", "TABLE")
+    with pytest.raises(ValueError, match="SPARK_GRAFT_PIN"):
+        pin(spark.range(3))
 
 
-def test_pin_dir_override_places_scratch_there(spark, tmp_path):
+def test_pin_dir_override_places_scratch_there(spark, tmp_path, monkeypatch):
     """SPARK_GRAFT_PIN_DIR (the multi-node shared-storage hook) is where
     table-mode scratch actually lands."""
-    saved = {k: os.environ.get(k) for k in ("SPARK_GRAFT_PIN", "SPARK_GRAFT_PIN_DIR")}
-    os.environ["SPARK_GRAFT_PIN"] = "table"
-    os.environ["SPARK_GRAFT_PIN_DIR"] = str(tmp_path)
-    try:
-        from pharmaceutical_sales_data_etl_analysis_pipeline_spark.operators.pin import pin
+    from pharmaceutical_sales_data_etl_analysis_pipeline_spark.operators.pin import pin
 
-        out = pin(spark.range(5), "probe")
-        assert out.count() == 5
-        assert any(p.name.startswith("probe_") for p in tmp_path.iterdir())
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                os.environ.pop(k, None)
-            else:
-                os.environ[k] = v
+    monkeypatch.setenv("SPARK_GRAFT_PIN", "table")
+    monkeypatch.setenv("SPARK_GRAFT_PIN_DIR", str(tmp_path))
+    out = pin(spark.range(5), "probe")
+    assert out.count() == 5
+    assert any(p.name.startswith("probe_") for p in tmp_path.iterdir())

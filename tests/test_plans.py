@@ -534,11 +534,9 @@ def test_scan_floor_is_conditional_and_value_neutral(spark, sf_dir):
     """The r13 scan-parallelism floor (catalog.load_table spread=True)
     must (a) engage only when the input offers fewer row groups than
     cores, (b) never change results. The sf corpus is single-row-group,
-    so spread=True plans a RoundRobinPartitioning exchange over the scan;
-    SPARK_GRAFT_SCAN_SPREAD=0 forces it off; and the two forms are
-    row-identical (order-independence is the engine's contract)."""
-    import os
-
+    so spread=True plans a RoundRobinPartitioning exchange over the scan,
+    and the two forms are row-identical (order-independence is the
+    engine's contract)."""
     from pharmaceutical_sales_data_etl_analysis_pipeline_spark.catalog import (
         _parquet_scan_units,
         load_table,
@@ -551,12 +549,6 @@ def test_scan_floor_is_conditional_and_value_neutral(spark, sf_dir):
     spread_plan = _plan(spread_df)
     assert "RoundRobinPartitioning" in spread_plan or units >= spark.sparkContext.defaultParallelism
     assert "RoundRobinPartitioning" not in _plan(plain_df)
-    os.environ["SPARK_GRAFT_SCAN_SPREAD"] = "0"
-    try:
-        forced_off = _plan(load_table(spark, sf_dir, "documents", spread=True))
-        assert "RoundRobinPartitioning" not in forced_off
-    finally:
-        os.environ.pop("SPARK_GRAFT_SCAN_SPREAD", None)
     a = sorted(map(tuple, spread_df.select("doc_id").collect()))
     b = sorted(map(tuple, plain_df.select("doc_id").collect()))
     assert a == b

@@ -225,7 +225,6 @@ def test_every_kernel_calls_ready_first():
         "operators/multimodal.py": 3,
         "operators/pythonudf.py": 6,
         "operators/similarity.py": 7,
-        "sources/pysource.py": 1,
         "sources/xml.py": 1,
-        "streaming/stateful.py": 4,
+        "streaming/stateful.py": 3,
     }

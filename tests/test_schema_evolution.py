@@ -61,7 +61,7 @@ def test_add_column_backfills_null_without_rewrite(spark, tmp_path):
     pu.append_delta_batch(
         spark, state, _df(spark, [(1, 10.0), (2, 20.0)]), 0, range_width=16
     )
-    from pharmaceutical_sales_data_etl_analysis_pipeline_spark.sources.maintenance import (
+    from pharmaceutical_sales_data_etl_analysis_pipeline_spark.streaming.logstore import (
         _fs_and_path,
     )
 

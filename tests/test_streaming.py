@@ -7,101 +7,34 @@ import json
 
 from pyspark.sql import functions as F
 
-from pharmaceutical_sales_data_etl_analysis_pipeline_spark.catalog import load_table
-from pharmaceutical_sales_data_etl_analysis_pipeline_spark.streaming import ingest, windows
-
-
-def test_tumbling_stream_matches_batch(spark, sf_dir, tmp_path):
-    ev_stream = windows.read_events_stream(spark, sf_dir)
-    got = windows.run_to_memory(
-        windows.tumbling_counts_stream(ev_stream), "t_tumbling"
-    )
-    # batch twin (oracle-checked in test_oracle_parity)
-    from pharmaceutical_sales_data_etl_analysis_pipeline_spark.operators.eventsops import (
-        q_tumbling_hourly,
-    )
-
-    batch = {
-        (r["window_start"], r["event_type"]): (r["n_events"], r["total_value"])
-        for r in q_tumbling_hourly(spark, sf_dir).collect()
-    }
-    stream = {
-        (r["window_start"], r["event_type"]): (r["n_events"], r["total_value"])
-        for r in got.collect()
-    }
-    assert stream == batch
-
-
-def test_session_stream_window_counts(spark, sf_dir):
-    ev_stream = windows.read_events_stream(spark, sf_dir)
-    got = windows.run_to_memory(
-        windows.session_counts_stream(ev_stream), "t_sessions"
-    )
-    # total events across sessions == table size; session count matches the
-    # batch gaps-and-islands sessionization
-    from pharmaceutical_sales_data_etl_analysis_pipeline_spark.operators.eventsops import (
-        q_session_stats,
-    )
-
-    n_events_total = got.agg(F.sum("n_events")).collect()[0][0]
-    assert n_events_total == load_table(spark, sf_dir, "events").count()
-    assert got.count() == q_session_stats(spark, sf_dir).count()
-
-
-def test_stream_append_ingest_bag_semantics(spark, tmp_path):
-    """Six overlapping files through the streaming appender: every row of
-    every file lands (bag), one micro-batch per file."""
-    src = tmp_path / "src"
-    src.mkdir()
-    rows_per_file = [4, 4, 3, 2, 2, 2]
-    for i, n in enumerate(rows_per_file):
-        with open(src / f"txn-{i}.json", "w") as f:
-            for j in range(n):
-                f.write(
-                    json.dumps(
-                        {
-                            "txn_id": 1000 + j,  # ids overlap across files
-                            "product_name": f"p{j}",
-                            "rep_id": "332",
-                            "customer_name": f"c{j}",
-                            "country": "USA",
-                            "sale_date": "9/8/2020",
-                            "sale_amount": 100.0 + j,
-                        }
-                    )
-                    + "\n"
-                )
-    dest = str(tmp_path / "dest")
-    n_batches = ingest.stream_append_ingest(
-        spark, str(src), dest, str(tmp_path / "ckpt")
-    )
-    out = spark.read.parquet(dest)
-    assert out.count() == sum(rows_per_file)          # duplicates preserved
-    assert out.select("txn_id").distinct().count() == 4
-    assert n_batches == len(rows_per_file)            # one file per trigger
+from pharmaceutical_sales_data_etl_analysis_pipeline_spark.catalog import (
+    load_table,
+    normalize_event_ts,
+    stream_table_source,
+)
 
 
 def test_stateful_running_totals_across_batches(spark, tmp_path):
     """applyInPandasWithState: state persists across micro-batches — the
     second batch's emitted totals include the first batch's contribution."""
     from pharmaceutical_sales_data_etl_analysis_pipeline_spark.streaming.stateful import (
-        running_user_totals,
+        running_user_totals_cents,
     )
     from pyspark.sql import types as T
 
     src = tmp_path / "ev"
     src.mkdir()
     batches = [
-        [(1, 10.0), (1, 5.0), (2, 1.0)],
-        [(1, 2.0), (3, 7.0)],
+        [(1, 1000), (1, 500), (2, 100)],
+        [(1, 200), (3, 700)],
     ]
     for i, rows in enumerate(batches):
         with open(src / f"b{i}.json", "w") as f:
             for uid, val in rows:
-                f.write(json.dumps({"user_id": uid, "value": val}) + "\n")
+                f.write(json.dumps({"user_id": uid, "cents": val}) + "\n")
 
     schema = T.StructType(
-        [T.StructField("user_id", T.LongType()), T.StructField("value", T.DoubleType())]
+        [T.StructField("user_id", T.LongType()), T.StructField("cents", T.LongType())]
     )
     stream = (
         spark.readStream.schema(schema)
@@ -109,7 +42,7 @@ def test_stateful_running_totals_across_batches(spark, tmp_path):
         .json(str(src))
     )
     q = (
-        running_user_totals(stream)
+        running_user_totals_cents(stream)
         .writeStream.format("memory")
         .queryName("t_stateful")
         .outputMode("update")
@@ -125,13 +58,13 @@ def test_stateful_running_totals_across_batches(spark, tmp_path):
     final = {}
     for r in rows:
         if r["user_id"] not in final or r["n_events"] > final[r["user_id"]][0]:
-            final[r["user_id"]] = (r["n_events"], r["total_value"])
-    assert final[1] == (3, 17.0)
-    assert final[2] == (1, 1.0)
-    assert final[3] == (1, 7.0)
+            final[r["user_id"]] = (r["n_events"], r["total_cents"])
+    assert final[1] == (3, 1700)
+    assert final[2] == (1, 100)
+    assert final[3] == (1, 700)
     # user 1 appears in both batches → emitted twice, once per micro-batch
-    u1 = [(r["n_events"], r["total_value"]) for r in rows if r["user_id"] == 1]
-    assert len(u1) == 2 and (3, 17.0) in u1
+    u1 = [(r["n_events"], r["total_cents"]) for r in rows if r["user_id"] == 1]
+    assert len(u1) == 2 and (3, 1700) in u1
 
 
 def test_last_emit_per_key_replay_idempotent(spark):
@@ -259,7 +192,8 @@ def test_stream_stream_attribution_join(spark, sf_dir):
         click_purchase_attribution,
     )
 
-    ev_stream = windows.read_events_stream(spark, sf_dir)
+    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    ev_stream = normalize_event_ts(stream_table_source(spark, sf_dir, "events", schema))
     q = (
         click_purchase_attribution(ev_stream)
         .writeStream.format("memory")
@@ -293,115 +227,12 @@ def test_stream_stream_attribution_join(spark, sf_dir):
     assert s_pairs == b_pairs
 
 
-def test_stream_dedup_drops_duplicate_ids(spark, sf_dir, tmp_path):
-    """Streaming dropDuplicates: a twice-ingested corpus dedups to one copy
-    per event_id across micro-batches."""
-    from pharmaceutical_sales_data_etl_analysis_pipeline_spark.streaming.joins import (
-        dedup_stream,
-    )
-    import shutil
-
-    src = tmp_path / "dup"
-    src.mkdir()
-    # two identical files -> every event_id seen twice, in separate batches
-    shutil.copy(f"{sf_dir}/events.parquet", src / "a.parquet")
-    shutil.copy(f"{sf_dir}/events.parquet", src / "b.parquet")
-    from pharmaceutical_sales_data_etl_analysis_pipeline_spark.catalog import (
-        events_source_schema,
-        normalize_event_ts,
-    )
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    stream = normalize_event_ts(
-        spark.readStream.schema(events_source_schema(spark, str(src / "a.parquet")))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-    )
-    q = (
-        dedup_stream(stream)
-        .writeStream.format("memory")
-        .queryName("t_sdedup")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_dedup"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    n_unique = load_table(spark, sf_dir, "events").count()
-    assert spark.table("t_sdedup").count() == n_unique
-
-
-def test_stream_corpus_gate_matches_batch(spark, sf_dir, tmp_path):
-    """Streaming corpus gate == batch signal filter: a twice-ingested
-    documents corpus (two micro-batches) dedups to one gated row per
-    unique content, and the surviving doc set equals the batch filter."""
-    import shutil
-
-    from pharmaceutical_sales_data_etl_analysis_pipeline_spark.catalog import SCHEMAS
-    from pharmaceutical_sales_data_etl_analysis_pipeline_spark.operators.corpusops import (
-        CORPUS_MIN_QUALITY,
-        CORPUS_MIN_TOKENS,
-    )
-    from pharmaceutical_sales_data_etl_analysis_pipeline_spark.operators.textops import (
-        predicted_lang_col,
-        quality_score_col,
-        ws_tokens_col,
-    )
-    from pharmaceutical_sales_data_etl_analysis_pipeline_spark.streaming.corpus import (
-        corpus_gate_stream,
-    )
-
-    src = tmp_path / "docs"
-    src.mkdir()
-    shutil.copy(f"{sf_dir}/documents.parquet", src / "a.parquet")
-    shutil.copy(f"{sf_dir}/documents.parquet", src / "b.parquet")
-    stream = (
-        spark.readStream.schema(SCHEMAS["documents"])
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-    )
-    q = (
-        corpus_gate_stream(stream)
-        .writeStream.format("memory")
-        .queryName("t_corpus_gate")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_gate"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = spark.table("t_corpus_gate")
-
-    t = F.col("text")
-    batch = (
-        load_table(spark, sf_dir, "documents")
-        .select(
-            "doc_id",
-            ws_tokens_col(t).alias("ws_tokens"),
-            quality_score_col(t).alias("quality_score"),
-            predicted_lang_col(t).alias("predicted_lang"),
-        )
-        .filter(
-            (F.col("predicted_lang") == "en")
-            & (F.col("quality_score") >= CORPUS_MIN_QUALITY)
-            & (F.col("ws_tokens") >= CORPUS_MIN_TOKENS)
-        )
-    )
-    assert got.count() == batch.count()  # dedup collapsed the double ingest
-    assert got.count() > 0
-    assert {r["doc_id"] for r in got.collect()} == {r["doc_id"] for r in batch.collect()}
-
-
 def test_stream_dedup_within_watermark_bounded_state(spark, sf_dir, tmp_path):
     """dropDuplicatesWithinWatermark: a twice-ingested corpus (both copies
     inside the watermark delay) dedups to one row per event_id, with state
     that expires — the unbounded-stream-safe dedup."""
     import shutil
 
-    from pharmaceutical_sales_data_etl_analysis_pipeline_spark.catalog import (
-        events_source_schema,
-        normalize_event_ts,
-    )
     from pharmaceutical_sales_data_etl_analysis_pipeline_spark.streaming.joins import (
         dedup_stream_within_watermark,
     )
@@ -412,7 +243,7 @@ def test_stream_dedup_within_watermark_bounded_state(spark, sf_dir, tmp_path):
     shutil.copy(f"{sf_dir}/events.parquet", src / "b.parquet")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     stream = normalize_event_ts(
-        spark.readStream.schema(events_source_schema(spark, str(src / "a.parquet")))
+        spark.readStream.schema(spark.read.parquet(str(src / "a.parquet")).schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(str(src))
     )
@@ -428,82 +259,6 @@ def test_stream_dedup_within_watermark_bounded_state(spark, sf_dir, tmp_path):
     q.awaitTermination()
     n_unique = load_table(spark, sf_dir, "events").count()
     assert spark.table("t_sdedup_wm").count() == n_unique
-
-
-def test_stream_outer_attribution_emits_unmatched_after_watermark(spark, tmp_path):
-    """LEFT OUTER stream-stream join: a click with a purchase in the band
-    emits joined; a click with no purchase emits with NULLs once the
-    watermark passes its window. Batches are mtime-ordered files (the
-    same watermark-advancement technique as the late-events test; outer
-    results emit one trigger after eviction, hence the spacer batches)."""
-    import json as _json
-    import os as _os
-    import time as _time
-
-    from pyspark.sql import types as T
-
-    from pharmaceutical_sales_data_etl_analysis_pipeline_spark.streaming.joins import (
-        click_purchase_attribution_outer,
-    )
-
-    src = tmp_path / "outer"
-    src.mkdir()
-    b0 = [  # one matched click, one destined to be unmatched
-        {"event_id": 1, "ts": "2024-01-01T10:00:00", "user_id": 7, "event_type": "click",
-         "value": 0.0},
-        {"event_id": 2, "ts": "2024-01-01T10:10:00", "user_id": 7, "event_type": "purchase",
-         "value": 9.5},
-        {"event_id": 3, "ts": "2024-01-01T10:00:00", "user_id": 8, "event_type": "click",
-         "value": 0.0},
-    ]
-    # watermark advancers: the watermark columns exist only AFTER the
-    # click/purchase filters, and the join uses min(both watermarks) — so
-    # the advancers must be clicks AND purchases (non-matching: each
-    # purchase precedes its same-batch click). They push the watermark
-    # beyond 10:00 + 30min band + 1h delay so click 3 is provably
-    # unmatched.
-    def adv(eid, hour):
-        return [
-            {"event_id": eid, "ts": f"2024-01-01T{hour}:00:00", "user_id": 1,
-             "event_type": "purchase", "value": 1.0},
-            {"event_id": eid + 1, "ts": f"2024-01-01T{hour}:01:00", "user_id": 2,
-             "event_type": "click", "value": 0.0},
-        ]
-
-    b1, b2, b3 = adv(20, 14), adv(30, 15), adv(40, 16)
-    now = _time.time()
-    for i, rows in enumerate([b0, b1, b2, b3]):
-        path = src / f"b{i}.json"
-        with open(path, "w") as f:
-            for r in rows:
-                f.write(_json.dumps(r) + "\n")
-        _os.utime(path, (now - 400 + i * 100, now - 400 + i * 100))
-    schema = T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-        ]
-    )
-    stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).json(str(src))
-    )
-    q = (
-        click_purchase_attribution_outer(stream)
-        .writeStream.format("memory")
-        .queryName("t_outer_attr")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_outer"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    rows = {r["click_id"]: r for r in spark.table("t_outer_attr").collect()}
-    assert rows[1]["purchase_id"] == 2          # matched inside the band
-    assert rows[1]["purchase_value"] == 9.5
-    assert 3 in rows and rows[3]["purchase_id"] is None  # outer NULL emitted
 
 
 def test_stream_source_handles_directory_layout(spark, sf_dir, tmp_path):
