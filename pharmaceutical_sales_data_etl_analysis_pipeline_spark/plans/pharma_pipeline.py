@@ -6,9 +6,12 @@ Stage 1 (extract/load — replaces LoadXML2DB.ChatterjeeP.R):
   joins with NULL on miss, bag-semantics union of all files).
 
 Stage 2 (warehouse — replaces LoadDataWarehouse.ChatterjeeP.R):
-  product_facts CTAS → rep_id key repair → rep_facts CTAS. The repair MUST
-  sit between the two fact builds to match the reference's statement order
-  (LoadDataWarehouse.ChatterjeeP.R:90-133); encoded here as an explicit DAG.
+  product_facts CTAS (pre-repair) and rep_id key repair → rep_facts CTAS
+  (post-repair). The reference orders this as statements
+  (LoadDataWarehouse.ChatterjeeP.R:90-133); here the repair is a data
+  dependency — rep_facts reads the repaired salestxn, product_facts the
+  unrepaired one — so the writes persist as their dependency DAG, with
+  independent writes concurrent.
 
 Stage 3 (analytics — replaces AnalyzeData.ChatterjeeP.Rmd):
   verification/analysis queries over the fact tables.
@@ -22,11 +25,14 @@ partial aggregation.
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.util import inheritable_thread_target
 
 from ..functions.numeric import money_sum
 from ..sources.xml import read_xml, read_xml_files_ordered
@@ -193,8 +199,9 @@ class PharmaWarehouse:
 
 
 def run_pipeline(spark: SparkSession, reps_xml: str, txn_xmls: list[str]) -> PharmaWarehouse:
-    """The full DAG, sequencing the key repair between the two fact builds
-    exactly as the reference's statement order does (SURVEY.md §7.3).
+    """The full DAG. The key repair is a data dependency: product_facts
+    reads salestxn as loaded, rep_facts the repaired salestxn, which is
+    what the reference's statement order achieves (SURVEY.md §7.3).
     Lazy: declared record schemas mean no Spark job runs here."""
     reps = load_reps(spark, reps_xml)
     txns = load_txns_ordered(spark, txn_xmls)
@@ -230,6 +237,18 @@ def _drop_table(spark: SparkSession, database: str, name: str) -> None:
     path.getFileSystem(sc._jsc.hadoopConfiguration()).delete(path, True)
 
 
+def _concurrently(spark: SparkSession, *writes: Callable[[], DataFrame]) -> list[DataFrame]:
+    """Run independent writes at once, one thread each, and return their
+    results in argument order. Spark's scheduler runs jobs submitted from
+    several threads concurrently. Each thread runs with a copy of the
+    caller's local properties, so its jobs stay in the caller's job group.
+    The pool is joined before this returns; the first write (in argument
+    order) that raised re-raises here."""
+    with ThreadPoolExecutor(max_workers=len(writes)) as pool:
+        futures = [pool.submit(inheritable_thread_target(spark)(w)) for w in writes]
+        return [f.result() for f in futures]
+
+
 def persist_warehouse(
     spark: SparkSession,
     wh: PharmaWarehouse,
@@ -241,14 +260,18 @@ def persist_warehouse(
     SELECT persistence, LoadDataWarehouse.ChatterjeeP.R:29-32,90-133).
 
     Stage 2 reads the persisted star, as the reference's CTAS statements
-    read its stored tables: the dims are written first, `salestxn` is built
-    from `wh.txns` joined to the re-read dims, and `product_facts`
-    (pre-repair) and `rep_facts` (post-repair) are built from the re-read
-    `salestxn` and dims, in the reference's statement order. Spark plans
-    each write as its own query and shares no work between them; reading
-    stored tables means the XML is parsed once per table built from it and
-    no write recomputes the dims' dedup windows. Of `wh` only `txns` and
-    the three dims are evaluated.
+    read its stored tables. The writes run as their dependency DAG, with
+    independent writes concurrent (one thread each, joined per level):
+    1. `reps`, `customers` and `products`, at once;
+    2. `salestxn`, built from `wh.txns` joined to the re-read dims;
+    3. `product_facts` (pre-repair) and `rep_facts` (post-repair), at once,
+       both built from the re-read `salestxn` and dims.
+    Spark plans each write as its own query and shares no work between
+    them; reading stored tables means the XML is parsed once per table
+    built from it and no write recomputes the dims' dedup windows. Of `wh`
+    only `txns` and the three dims are evaluated. Every job runs in the
+    caller's job group; a write that fails raises out of this call once
+    the other writes of its level have finished.
 
     Each table is dropped before it is written — the reference's DROP
     TABLE IF EXISTS + CREATE (S10) — including a stale directory at its
@@ -272,20 +295,28 @@ def persist_warehouse(
         df.write.format("parquet").partitionBy(*partition_by).saveAsTable(f"{database}.{name}")
         return spark.table(f"{database}.{name}")
 
-    reps = save(wh.reps, "reps")
-    customers = save(wh.customers, "customers")
-    products = save(wh.products, "products")
-    salestxn = save(build_salestxn(wh.txns, products, customers), "salestxn")
+    def save_product_facts() -> DataFrame:
+        _drop_table(spark, database, "product_facts")
+        spark.sql(
+            f"CREATE TABLE {database}.product_facts USING parquet PARTITIONED BY (year) "
+            "AS SELECT product_name, quarter, region, total_sold, year FROM {src}",
+            src=build_product_facts(salestxn, products, customers),  # pre-repair
+        )
+        return spark.table(f"{database}.product_facts")
 
-    build_product_facts(salestxn, products, customers).createOrReplaceTempView("__pf_src")
-    _drop_table(spark, database, "product_facts")
-    spark.sql(
-        f"CREATE TABLE {database}.product_facts USING parquet PARTITIONED BY (year) "
-        "AS SELECT product_name, quarter, region, total_sold, year FROM __pf_src"
+    reps, customers, products = _concurrently(
+        spark,
+        lambda: save(wh.reps, "reps"),
+        lambda: save(wh.customers, "customers"),
+        lambda: save(wh.products, "products"),
     )
-    spark.catalog.dropTempView("__pf_src")
+    salestxn = save(build_salestxn(wh.txns, products, customers), "salestxn")
     repaired = repair_rep_ids(salestxn)
-    rep_facts = save(build_rep_facts(repaired, reps, products), "rep_facts", "year")
+    product_facts, rep_facts = _concurrently(
+        spark,
+        save_product_facts,
+        lambda: save(build_rep_facts(repaired, reps, products), "rep_facts", "year"),
+    )
 
     return PharmaWarehouse(
         txns=wh.txns,
@@ -294,7 +325,7 @@ def persist_warehouse(
         products=products,
         salestxn=salestxn,
         salestxn_repaired=repaired,
-        product_facts=spark.table(f"{database}.product_facts"),
+        product_facts=product_facts,
         rep_facts=rep_facts,
     )
 

@@ -197,27 +197,36 @@ def read_xml_files_ordered(
     ids remain document-ordered but partition ids may not follow split
     order, so parity mode refuses rather than silently reordering (pass
     require_single_split=False only when downstream order doesn't matter).
+    The check plans the whole union once and compares its partition count
+    with the file count; only on a mismatch does it plan each file, to name
+    the offender. An empty file reads as no partition, so the sum alone
+    would pass a split file beside an empty one; the native source never
+    splits an XML file (tests/test_xml_sources.py pins this).
     """
     if schema is None:
         schema = read_xml(spark, paths, row_tag).schema
-    parts = []
+    out = None
     for i, p in enumerate(paths):
-        df = read_xml(spark, p, row_tag, schema)
-        if require_single_split:
-            n_splits = df.rdd.getNumPartitions()
+        df = (
+            read_xml(spark, p, row_tag, schema)
+            .withColumn("file_idx", F.lit(i))
+            .withColumn("__mono", F.monotonically_increasing_id())
+        )
+        out = df if out is None else out.unionByName(df)
+    if require_single_split and _num_partitions(out) != len(paths):
+        for p in paths:
+            n_splits = _num_partitions(read_xml(spark, p, row_tag, schema))
             if n_splits > 1:
                 raise ValueError(
                     f"parity-mode ordered XML ingest requires one split per file, "
                     f"but {p} scanned as {n_splits} splits; raise "
                     f"spark.sql.files.maxPartitionBytes or pass require_single_split=False"
                 )
-        parts.append(
-            df.withColumn("file_idx", F.lit(i)).withColumn(
-                "__mono", F.monotonically_increasing_id()
-            )
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
     w = Window.partitionBy("file_idx").orderBy("__mono")
     return out.withColumn("seq", F.row_number().over(w)).drop("__mono")
+
+
+def _num_partitions(df: DataFrame) -> int:
+    """Partitions of `df`'s physical plan, counted on the JVM side: one
+    plan, no Python RDD (`df.rdd` pays a `javaToPython` conversion)."""
+    return df._jdf.queryExecution().executedPlan().execute().getNumPartitions()

@@ -42,9 +42,36 @@ def session_conf(spark, conf: dict[str, str]):
                 spark.conf.set(k, v)
 
 
+def newest_job_id(sc) -> int:
+    """The highest job id in the status store, -1 before the first job.
+    Drain the listener bus first to see every job submitted so far."""
+    jobs = sc._jsc.sc().statusStore().jobsList(sc._jvm.java.util.ArrayList())
+    return jobs.head().jobId() if jobs.nonEmpty() else -1
+
+
+def jobs_after(sc, job_id: int) -> list:
+    """The status store's jobs (`JobData`) with an id above `job_id`,
+    newest first."""
+    jobs = sc._jsc.sc().statusStore().jobsList(sc._jvm.java.util.ArrayList())
+    out = []
+    for i in range(jobs.size()):
+        job = jobs.apply(i)
+        if job.jobId() <= job_id:
+            break
+        out.append(job)
+    return out
+
+
 def count_jobs(spark, fn):
-    """(fn(), number of Spark jobs fn ran), read from a job group."""
+    """(fn(), number of Spark jobs fn ran), read from a job group.
+
+    Fails if the status store recorded more jobs while fn ran than the
+    group holds: a job fn starts on a thread that dropped the caller's job
+    group would otherwise go uncounted and lower a pinned job budget."""
     sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    bus.waitUntilEmpty()
+    last_id = newest_job_id(sc)
     group = f"count-jobs-{uuid.uuid4().hex}"
     sc.setJobGroup(group, group)
     try:
@@ -52,5 +79,8 @@ def count_jobs(spark, fn):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+    bus.waitUntilEmpty()
+    n_group = len(sc.statusTracker().getJobIdsForGroup(group))
+    n_ran = len(jobs_after(sc, last_id))
+    assert n_ran == n_group, f"{n_ran - n_group} of the {n_ran} jobs fn ran left its job group"
+    return out, n_group

@@ -11,12 +11,17 @@ the reference's pharma.db, and pins how many Spark jobs each layer runs.
 
 from __future__ import annotations
 
+import dataclasses
+import time
 from dataclasses import dataclass
+from itertools import combinations
 
 import pytest
 
+from pyspark.sql import functions as F
+
 from perfbench import xmlgen
-from tests.conftest import count_jobs, session_conf
+from tests.conftest import count_jobs, jobs_after, newest_job_id, session_conf
 from pharmaceutical_sales_data_etl_analysis_pipeline_spark.plans import pharma_pipeline as pp
 from pharmaceutical_sales_data_etl_analysis_pipeline_spark.sources.xml import (
     read_xml_files_ordered,
@@ -141,6 +146,60 @@ def test_persist_replaces_a_table_directory_the_catalog_does_not_know(spark, loa
     finally:
         for db in dbs:
             spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
+
+
+def test_persist_writes_the_dims_at_once_and_keeps_every_job_in_the_callers_group(
+    spark, load, tmp_path, monkeypatch
+):
+    """persist_warehouse writes its dependency DAG level by level; the
+    three dims of level 1 are written at once, so at least two of their
+    jobs overlap in time. The overlap moves no job out of the caller's
+    group (count_jobs fails on one that leaves it) and drops none: all 20
+    still run."""
+    level_done_ms = []
+    concurrently = pp._concurrently
+
+    def timed(spark, *writes):
+        out = concurrently(spark, *writes)
+        level_done_ms.append(time.time() * 1000)
+        return out
+
+    monkeypatch.setattr(pp, "_concurrently", timed)
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    last_id = newest_job_id(sc)
+    db = "pharma_gen_dag"
+    try:
+        with session_conf(spark, JOB_CONF):
+            _, n_jobs = count_jobs(spark, lambda: pp.persist_warehouse(
+                spark, load.wh, database=db, location=str(tmp_path / "wh")))
+    finally:
+        spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
+    assert n_jobs == 20
+    assert len(level_done_ms) == 2  # levels 1 and 3; level 2 is one write
+    spans = [(j.submissionTime().get().getTime(), j.completionTime().get().getTime())
+             for j in jobs_after(sc, last_id)]
+    level_1 = [s for s in spans if s[1] <= level_done_ms[0]]
+    assert any(max(a[0], b[0]) < min(a[1], b[1]) for a, b in combinations(level_1, 2)), level_1
+
+
+def test_a_failed_concurrent_write_raises_out_of_persist(spark, load, tmp_path):
+    """A write that fails on a pool thread raises out of persist_warehouse,
+    after the other writes of its level finished and before the next
+    level starts."""
+    planted = F.raise_error(F.concat(F.lit("planted failure: "), "customer_name"))
+    wh = dataclasses.replace(
+        load.wh, customers=load.wh.customers.withColumn("country", planted.cast("string"))
+    )
+    db = "pharma_gen_fail"
+    try:
+        with pytest.raises(Exception, match="planted failure"):
+            pp.persist_warehouse(spark, wh, database=db, location=str(tmp_path / "wh"))
+        assert spark.catalog.tableExists(f"{db}.reps")
+        assert spark.catalog.tableExists(f"{db}.products")
+        assert not spark.catalog.tableExists(f"{db}.salestxn")
+    finally:
+        spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
 
 
 _TXN = ("<txn><txnID>{id}</txnID><prod>{prod}</prod><repID>{rep}</repID>{cust}"

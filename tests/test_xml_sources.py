@@ -9,12 +9,17 @@ so these checks need no reference database."""
 
 from __future__ import annotations
 
+import os
+import re
+
 import pytest
 
 from pyspark.sql import functions as F
 
 from perfbench import xmlgen
+from tests.conftest import session_conf
 from pharmaceutical_sales_data_etl_analysis_pipeline_spark.plans import pharma_pipeline as pp
+from pharmaceutical_sales_data_etl_analysis_pipeline_spark.sources import xml as xml_src
 from pharmaceutical_sales_data_etl_analysis_pipeline_spark.sources.xml import read_xml_xpath
 
 SEED = 11
@@ -179,3 +184,43 @@ def test_stream_xml_ordered_equals_batch(spark, tmp_path, xml_paths):
     s_rows = sorted(tuple(r) for r in streamed.select(*cols).collect())
     assert len(b_rows) == len(s_rows) > 0
     assert b_rows == s_rows
+
+
+# a split every 64 KiB, and no per-file open cost to pack files by
+_SPLIT_EVERY_64K = {
+    "spark.sql.files.maxPartitionBytes": "65536",
+    "spark.sql.files.openCostInBytes": "0",
+}
+
+
+def test_native_xml_scan_of_one_file_is_one_split(spark, tmp_path):
+    """The property the ordered reader's single-split guard relies on: the
+    native source does not split an XML file, even one many times the
+    split size, so `seq` follows document order."""
+    paths = xmlgen.generate(tmp_path, SEED, 11_060).paths["txns"]
+    assert os.path.getsize(paths[0]) > 8 * 65536
+    with session_conf(spark, _SPLIT_EVERY_64K):
+        df = xml_src.read_xml(spark, paths[0], "txn", pp.TXN_SCHEMA)
+        assert df.rdd.getNumPartitions() == 1
+        ordered = xml_src.read_xml_files_ordered(spark, paths, "txn", schema=pp.TXN_SCHEMA)
+        assert ordered.count() == 11_060
+
+
+def test_ordered_read_refuses_a_file_read_as_two_partitions(spark, truth, xml_paths, monkeypatch):
+    """Parity mode raises, naming the file, when one part of the ordered
+    union yields more than one partition."""
+    _, txn_xmls = xml_paths
+    bad = txn_xmls[1]
+    native = xml_src.read_xml
+
+    def read_xml(spark, path, row_tag, schema=None):
+        df = native(spark, path, row_tag, schema)
+        return df.repartition(2) if path == bad else df
+
+    monkeypatch.setattr(xml_src, "read_xml", read_xml)
+    with pytest.raises(ValueError, match=re.escape(f"{bad} scanned as 2 splits")):
+        xml_src.read_xml_files_ordered(spark, txn_xmls, "txn", schema=pp.TXN_SCHEMA)
+    df = xml_src.read_xml_files_ordered(
+        spark, txn_xmls, "txn", require_single_split=False, schema=pp.TXN_SCHEMA
+    )
+    assert df.count() == truth.n_txns
