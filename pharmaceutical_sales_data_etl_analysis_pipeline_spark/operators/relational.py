@@ -731,10 +731,11 @@ def q_xml_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batch, and foreachBatch appends each with (file_idx, seq)
     order columns (sources/xml.stream_xml_files_ordered). The aggregate
     over the drained sink is held to the SAME parquet oracle as the
-    batch scan: stream/batch parity IS the check (the ordered-columns
-    equivalence against read_xml_files_ordered is pinned in
-    tests/test_xml_sources.py). EAGER at build: stages files and drains
-    the stream (registry.py eager-execution note)."""
+    batch scan: stream/batch parity IS the check (equivalence with
+    read_xml_files_ordered on every field, file_idx and seq is pinned in
+    tests/test_xml_sources.py; one partition per micro-batch stands in
+    for the batch reader's per-row split check). EAGER at build: stages
+    files and drains the stream (registry.py eager-execution note)."""
     import os as _os
 
     from pyspark.sql import types as T

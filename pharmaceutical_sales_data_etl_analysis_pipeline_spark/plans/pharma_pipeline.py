@@ -19,14 +19,15 @@ Stage 3 (analytics — replaces AnalyzeData.ChatterjeeP.Rmd):
 Where the reference mutates row-by-row (rbind loops, O(n²)), every step here
 is a declarative DataFrame plan: the per-record loops collapse into selects
 with casts, the membership-checked dedup into a window filter, the six file
-loads into one ordered union — Catalyst handles broadcast selection and
-partial aggregation.
+loads into one ordered scan — Catalyst handles broadcast selection,
+partial aggregation and pruning the order columns a plan does not read.
 """
 
 from __future__ import annotations
 
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
+from functools import cached_property
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -76,11 +77,14 @@ def load_reps(spark: SparkSession, path: str) -> DataFrame:
 
 
 def load_txns_ordered(spark: SparkSession, paths: list[str]) -> DataFrame:
-    """Six pharmaSalesTxn files → one ordered bag of raw transactions.
+    """Six pharmaSalesTxn files → one ordered bag of raw transactions, read
+    by one scan.
 
     Output: txn_id, product_name, rep_id_raw, customer_name, country,
-    sale_date, sale_amount, file_idx, seq. Bag semantics — duplicates across
-    files preserved (U1, LoadXML2DB.ChatterjeeP.R:198..452).
+    sale_date, sale_amount, file_idx, pos, seq. (file_idx, pos) orders the
+    bag as the reference appends it; seq numbers each file's records 1..n.
+    Bag semantics — duplicates across files preserved (U1,
+    LoadXML2DB.ChatterjeeP.R:198..452).
     """
     raw = read_xml_files_ordered(spark, paths, "txn", schema=TXN_SCHEMA)
     return raw.select(
@@ -92,6 +96,7 @@ def load_txns_ordered(spark: SparkSession, paths: list[str]) -> DataFrame:
         F.col("date").alias("sale_date"),
         F.col("amount").cast("double").alias("sale_amount"),
         "file_idx",
+        "pos",
         "seq",
     )
 
@@ -101,18 +106,20 @@ def _first_seen_dim(txns: DataFrame, key: str, carried: list[str], id_name: str)
 
     Keeps the first sighting's carried values (country of first sighting —
     LoadXML2DB.ChatterjeeP.R:112-135) and assigns ids 1..N in first-seen
-    order (seq_len, :138,142). Window over the global (file_idx, seq) order:
-    exact parity; dimension-sized by construction (post-dedup), so the
-    single-partition ordering window is not a scale hazard.
+    order (seq_len, :138,142). Both windows order by (file_idx, pos), the
+    bag's append order — the same order as (file_idx, seq) without the
+    per-file window and its shuffle that a dense seq needs: exact parity;
+    dimension-sized by construction (post-dedup), so the single-partition
+    ordering window is not a scale hazard.
     """
-    w_first = Window.partitionBy(key).orderBy("file_idx", "seq")
+    w_first = Window.partitionBy(key).orderBy("file_idx", "pos")
     firsts = (
-        txns.select(key, *carried, "file_idx", "seq")
+        txns.select(key, *carried, "file_idx", "pos")
         .withColumn("__rn", F.row_number().over(w_first))
         .filter(F.col("__rn") == 1)
         .drop("__rn")
     )
-    w_id = Window.orderBy("file_idx", "seq")
+    w_id = Window.orderBy("file_idx", "pos")
     return (
         firsts.withColumn(id_name, F.row_number().over(w_id).cast("int"))
         .select(id_name, key, *carried)
@@ -188,38 +195,45 @@ def build_rep_facts(salestxn_repaired: DataFrame, reps: DataFrame, products: Dat
 
 @dataclass
 class PharmaWarehouse:
+    """The star and its facts. Stage 2 (`salestxn` onward) is built from
+    the dims on first access, so a caller pays only for the members it
+    reads; `persist_warehouse` sets them to its re-read tables.
+    `dataclasses.replace` builds stage 2 anew from the replaced dims."""
+
     txns: DataFrame               # ordered raw bag (stage-1 input of salestxn)
     reps: DataFrame
     customers: DataFrame
     products: DataFrame
-    salestxn: DataFrame           # as loaded (unprefixed rep_id)
-    salestxn_repaired: DataFrame  # after key repair
-    product_facts: DataFrame
-    rep_facts: DataFrame
+
+    @cached_property
+    def salestxn(self) -> DataFrame:  # as loaded (unprefixed rep_id)
+        return build_salestxn(self.txns, self.products, self.customers)
+
+    @cached_property
+    def salestxn_repaired(self) -> DataFrame:  # after key repair
+        return repair_rep_ids(self.salestxn)
+
+    @cached_property
+    def product_facts(self) -> DataFrame:  # pre-repair
+        return build_product_facts(self.salestxn, self.products, self.customers)
+
+    @cached_property
+    def rep_facts(self) -> DataFrame:  # post-repair
+        return build_rep_facts(self.salestxn_repaired, self.reps, self.products)
 
 
 def run_pipeline(spark: SparkSession, reps_xml: str, txn_xmls: list[str]) -> PharmaWarehouse:
     """The full DAG. The key repair is a data dependency: product_facts
     reads salestxn as loaded, rep_facts the repaired salestxn, which is
     what the reference's statement order achieves (SURVEY.md §7.3).
-    Lazy: declared record schemas mean no Spark job runs here."""
-    reps = load_reps(spark, reps_xml)
+    Lazy: declared record schemas mean no Spark job runs here, and stage 2
+    is planned only when read."""
     txns = load_txns_ordered(spark, txn_xmls)
-    customers = build_customers(txns)
-    products = build_products(txns)
-    salestxn = build_salestxn(txns, products, customers)
-    product_facts = build_product_facts(salestxn, products, customers)  # pre-repair
-    repaired = repair_rep_ids(salestxn)
-    rep_facts = build_rep_facts(repaired, reps, products)               # post-repair
     return PharmaWarehouse(
         txns=txns,
-        reps=reps,
-        customers=customers,
-        products=products,
-        salestxn=salestxn,
-        salestxn_repaired=repaired,
-        product_facts=product_facts,
-        rep_facts=rep_facts,
+        reps=load_reps(spark, reps_xml),
+        customers=build_customers(txns),
+        products=build_products(txns),
     )
 
 
@@ -269,9 +283,9 @@ def persist_warehouse(
     Spark plans each write as its own query and shares no work between
     them; reading stored tables means the XML is parsed once per table
     built from it and no write recomputes the dims' dedup windows. Of `wh`
-    only `txns` and the three dims are evaluated. Every job runs in the
-    caller's job group; a write that fails raises out of this call once
-    the other writes of its level have finished.
+    only `txns` and the three dims are read; its stage 2 is never built.
+    Every job runs in the caller's job group; a write that fails raises
+    out of this call once the other writes of its level have finished.
 
     Each table is dropped before it is written — the reference's DROP
     TABLE IF EXISTS + CREATE (S10) — including a stale directory at its
@@ -295,12 +309,12 @@ def persist_warehouse(
         df.write.format("parquet").partitionBy(*partition_by).saveAsTable(f"{database}.{name}")
         return spark.table(f"{database}.{name}")
 
-    def save_product_facts() -> DataFrame:
+    def save_product_facts(df: DataFrame) -> DataFrame:
         _drop_table(spark, database, "product_facts")
         spark.sql(
             f"CREATE TABLE {database}.product_facts USING parquet PARTITIONED BY (year) "
             "AS SELECT product_name, quarter, region, total_sold, year FROM {src}",
-            src=build_product_facts(salestxn, products, customers),  # pre-repair
+            src=df,
         )
         return spark.table(f"{database}.product_facts")
 
@@ -310,36 +324,35 @@ def persist_warehouse(
         lambda: save(wh.customers, "customers"),
         lambda: save(wh.products, "products"),
     )
-    salestxn = save(build_salestxn(wh.txns, products, customers), "salestxn")
-    repaired = repair_rep_ids(salestxn)
-    product_facts, rep_facts = _concurrently(
+    # stage 2 of `stored` builds from what is stored: salestxn from `txns`
+    # and the re-read dims, the facts from the re-read salestxn
+    stored = PharmaWarehouse(wh.txns, reps, customers, products)
+    stored.salestxn = save(stored.salestxn, "salestxn")
+    # planned on this thread (cached_property is not thread-safe); the pool only writes
+    product_facts, rep_facts = stored.product_facts, stored.rep_facts
+    stored.product_facts, stored.rep_facts = _concurrently(
         spark,
-        save_product_facts,
-        lambda: save(build_rep_facts(repaired, reps, products), "rep_facts", "year"),
+        lambda: save_product_facts(product_facts),
+        lambda: save(rep_facts, "rep_facts", "year"),
     )
-
-    return PharmaWarehouse(
-        txns=wh.txns,
-        reps=reps,
-        customers=customers,
-        products=products,
-        salestxn=salestxn,
-        salestxn_repaired=repaired,
-        product_facts=product_facts,
-        rep_facts=rep_facts,
-    )
+    return stored
 
 
 # ---------------------------------------------------------------------------
 # Stage 3: verification / analytics queries
 # (LoadDataWarehouse.ChatterjeeP.R:141-215; AnalyzeData.ChatterjeeP.Rmd:38-68)
 # ---------------------------------------------------------------------------
+# The sorted answers are dim-sized at any scale, so each sorts in one
+# partition: coalesce(1) above the aggregate's exchange (the partial
+# aggregate keeps the scan's parallelism) replaces the range exchange a
+# global sort plans, and its sampling job.
 
 def quarterly_totals_2020(product_facts: DataFrame) -> DataFrame:
     return (
         product_facts.filter(F.col("year") == 2020)
         .groupBy("quarter")
         .agg(F.sum(F.col("total_sold").cast("decimal(28,2)")).cast("double").alias("total"))
+        .coalesce(1)
         .orderBy("quarter")
     )
 
@@ -359,6 +372,7 @@ def rep_totals_2020(rep_facts: DataFrame) -> DataFrame:
         rep_facts.filter(F.col("year") == 2020)
         .groupBy("first_name", "last_name")
         .agg(F.sum(F.col("total_sold").cast("decimal(28,2)")).cast("double").alias("total_sales"))
+        .coalesce(1)
         .orderBy(F.desc("total_sales"))
     )
 
@@ -368,5 +382,6 @@ def rep_quarterly_sales(rep_facts: DataFrame) -> DataFrame:
     return (
         rep_facts.groupBy("year", "quarter")
         .agg(F.sum(F.col("total_sold").cast("decimal(28,2)")).cast("double").alias("total_sales"))
+        .coalesce(1)
         .orderBy("year", "quarter")
     )

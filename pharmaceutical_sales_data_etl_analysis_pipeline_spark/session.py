@@ -50,6 +50,14 @@ def get_spark(app_name: str = "pharma-spark-engine", shuffle_partitions: int | N
         # decade-probe finding, BENCH_NOTES). A periodic GC bounds that
         # debt; at 60 s it is far outside any single query's critical path.
         .config("spark.cleaner.periodicGC.interval", "60s")
+        # The compiled-class cache is keyed by generated source and holds
+        # 100 classes by default. One pharma load (run_pipeline → persist →
+        # analytics) compiles ~120, so a session that repeats it evicted
+        # each class before its next use and recompiled ~60 of them per
+        # load, on the driver, where the compile time grows with whatever
+        # else holds the CPU. With 1000 a repeated load or corpus_build pass
+        # compiles nothing.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.extraJavaOptions", "-Djava.security.manager=allow")
     )

@@ -23,9 +23,13 @@ reads each file with that one schema, instead of one inference per file.
 
 Ingest-order tagging: the reference's semantics depend on file order and
 record order within file (first-occurrence dedup A3, surrogate keys W1).
-`read_xml_files_ordered` makes that implicit order explicit as
-(file_idx, seq) columns — the parity-critical construction highlighted in
-SURVEY.md §7.3.
+`read_xml_files_ordered` makes that implicit order explicit — the
+parity-critical construction highlighted in SURVEY.md §7.3. It reads all
+files as one scan and tags each row with `file_idx` (from the row's
+`_metadata.file_path`), the order key `pos` (monotonically_increasing_id,
+exact because no file is split; every job that reads it checks that) and
+the dense per-file `seq`, a window that Catalyst prunes from any plan that
+does not select it.
 """
 
 from __future__ import annotations
@@ -123,12 +127,15 @@ def stream_xml_files_ordered(
     appended to a parquet sink by foreachBatch with the SAME order
     columns the batch reader derives: file_idx = the micro-batch id,
     seq = 1-based document order within the file. Returns the drained
-    sink. Parity mode enforces one partition per micro-batch, the exact
-    single-split guarantee read_xml_files_ordered requires for `seq` —
-    this is the dimension-scale ingest path (local staging, per-file
-    batches), not the 100 TB scan (that is read_xml's distributed
-    shred; order-tagged ingest is only meaningful where order exists).
-    Batch/stream equivalence is pinned in tests/test_xml_sources.py."""
+    sink. Parity mode enforces one partition per micro-batch: a batch is
+    one file, so one partition means the file was read whole and in
+    document order, which is what `seq` needs (the batch reader checks the
+    same per row, by each row's split offset) — this is the
+    dimension-scale ingest path (local staging, per-file batches), not the
+    100 TB scan (that is read_xml's distributed shred; order-tagged ingest
+    is only meaningful where order exists). The batch reader's `pos` key
+    has no stream twin. Batch/stream equivalence on every txn field,
+    `file_idx` and `seq` is pinned in tests/test_xml_sources.py."""
     import os
     import shutil
 
@@ -190,43 +197,70 @@ def read_xml_files_ordered(
 
     Returns the `schema` columns — when none is given, the schema inferred
     once over all `paths` — plus `file_idx` (position of the file in
-    `paths`) and `seq` (1-based record position within the file). Record
-    order relies on monotonically_increasing_id being ascending in document
-    order within each file — exact when a file is one split (dimension-scale
-    parity mode, ENFORCED below); for multi-split files the per-partition
-    ids remain document-ordered but partition ids may not follow split
-    order, so parity mode refuses rather than silently reordering (pass
-    require_single_split=False only when downstream order doesn't matter).
-    The check plans the whole union once and compares its partition count
-    with the file count; only on a mismatch does it plan each file, to name
-    the offender. An empty file reads as no partition, so the sum alone
-    would pass a split file beside an empty one; the native source never
-    splits an XML file (tests/test_xml_sources.py pins this).
+    `paths`), `pos` (a record order key, ascending in document order within
+    each file) and `seq` (1-based record position within the file).
+
+    All files are one scan. `file_idx` comes from each row's
+    `_metadata.file_path`, matched to the paths in the form Spark writes it;
+    a row of a file that is none of `paths` raises in the job. A path listed
+    twice (in any spelling) is refused: one scan reads it twice under one
+    index. `pos` is monotonically_increasing_id, exact because a scan
+    partition reads each of its files whole, in one run, in document order
+    — the native source never splits an XML file (tests/test_xml_sources.py
+    pins this). Parity mode checks that in every job that reads `pos`: a row
+    read from a split that starts past its file's first byte raises, naming
+    the file (pass require_single_split=False only when downstream order
+    doesn't matter). `seq` is a window over `pos` per file; order by
+    (file_idx, pos) where a dense number is not needed, and Catalyst prunes
+    the window from the plan.
     """
+    keys = _spark_file_paths(spark, paths)
+    first: dict[str, int] = {}
+    for i, key in enumerate(keys):
+        j = first.setdefault(key, i)
+        if j != i:
+            raise ValueError(
+                f"ordered XML read lists {paths[i]} twice (first as {paths[j]}); "
+                "one scan would read it twice under one file_idx"
+            )
     if schema is None:
         schema = read_xml(spark, paths, row_tag).schema
-    out = None
-    for i, p in enumerate(paths):
-        df = (
-            read_xml(spark, p, row_tag, schema)
-            .withColumn("file_idx", F.lit(i))
-            .withColumn("__mono", F.monotonically_increasing_id())
+    file_path = F.col("_metadata.file_path")
+    index = F.create_map(*[F.lit(x) for i, key in enumerate(keys) for x in (key, i)])
+    file_idx = F.coalesce(
+        index[file_path],
+        F.raise_error(F.concat(F.lit("ordered XML read scanned a file not in its paths: "), file_path)),
+    )
+    pos = F.monotonically_increasing_id()
+    if require_single_split:
+        pos = F.when(F.col("_metadata.file_block_start") == 0, pos).otherwise(
+            F.raise_error(F.concat(
+                F.lit("parity-mode ordered XML ingest requires one split per file, but "),
+                file_path,
+                F.lit(" was split; raise spark.sql.files.maxPartitionBytes or pass "
+                      "require_single_split=False"),
+            ))
         )
-        out = df if out is None else out.unionByName(df)
-    if require_single_split and _num_partitions(out) != len(paths):
-        for p in paths:
-            n_splits = _num_partitions(read_xml(spark, p, row_tag, schema))
-            if n_splits > 1:
-                raise ValueError(
-                    f"parity-mode ordered XML ingest requires one split per file, "
-                    f"but {p} scanned as {n_splits} splits; raise "
-                    f"spark.sql.files.maxPartitionBytes or pass require_single_split=False"
-                )
-    w = Window.partitionBy("file_idx").orderBy("__mono")
-    return out.withColumn("seq", F.row_number().over(w)).drop("__mono")
+    w = Window.partitionBy("file_idx").orderBy("pos")
+    return (
+        read_xml(spark, paths, row_tag, schema)
+        .select("*", file_idx.alias("file_idx"), pos.alias("pos"))
+        .withColumn("seq", F.row_number().over(w))
+    )
 
 
-def _num_partitions(df: DataFrame) -> int:
-    """Partitions of `df`'s physical plan, counted on the JVM side: one
-    plan, no Python RDD (`df.rdd` pays a `javaToPython` conversion)."""
-    return df._jdf.queryExecution().executedPlan().execute().getNumPartitions()
+def _spark_file_paths(spark: SparkSession, paths: list[str]) -> list[str]:
+    """Each path in the form a scan writes to `_metadata.file_path`: made
+    absolute by its file system, then re-parsed from its decoded string and
+    URL-encoded (`file:/a%20b/x.xml` for `/a b/x.xml`), as Spark's metadata
+    extractor does."""
+    jvm = spark._jvm
+    hadoop_path = jvm.org.apache.hadoop.fs.Path
+    spark_path = jvm.org.apache.spark.paths.SparkPath
+    conf = spark._jsparkSession.sessionState().newHadoopConf()
+    out = []
+    for p in paths:
+        hp = hadoop_path(p)
+        qualified = hp.getFileSystem(conf).makeQualified(hp).toString()
+        out.append(spark_path.fromPathString(qualified).toUri().toString())
+    return out

@@ -12,6 +12,7 @@ the reference's pharma.db, and pins how many Spark jobs each layer runs.
 from __future__ import annotations
 
 import dataclasses
+import re
 import time
 from dataclasses import dataclass
 from itertools import combinations
@@ -124,11 +125,66 @@ def test_in_memory_and_persisted_warehouses_agree(load):
 def test_job_budget_per_layer(load):
     """run_pipeline is a lazy plan (declared schemas, no inference);
     persist_warehouse builds stage 2 from the persisted star, so the XML is
-    parsed once per table built from it; the analytics read the
-    year-partitioned facts."""
+    parsed once per table built from it, and the dims shuffle no file_idx;
+    the analytics read the year-partitioned facts and sort in one
+    partition."""
     assert load.jobs["run_pipeline"] == 0, load.jobs
-    assert load.jobs["persist_warehouse"] <= 20, load.jobs
-    assert load.jobs["analytics"] <= 14, load.jobs
+    assert load.jobs["persist_warehouse"] <= 18, load.jobs
+    assert load.jobs["analytics"] <= 8, load.jobs
+
+
+def test_a_repeated_load_compiles_no_code(spark, load, tmp_path):
+    """The session's compiled-class cache holds a whole load, so a load
+    repeated in one session reuses every generated class. With Spark's
+    default 100 entries the load evicted its own classes and recompiled
+    dozens of them each time."""
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "1000"
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    db = "pharma_gen_repeat"
+
+    def one_load() -> int:
+        before = metrics.METRIC_COMPILATION_TIME().getCount()
+        with session_conf(spark, JOB_CONF):
+            wh = pp.run_pipeline(spark, load.truth.paths["reps"], load.truth.paths["txns"])
+            pwh = pp.persist_warehouse(spark, wh, database=db, location=str(tmp_path / "wh"))
+            analytics(pwh)
+        return metrics.METRIC_COMPILATION_TIME().getCount() - before
+
+    try:
+        one_load()
+        assert one_load() == 0
+    finally:
+        spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_txns_are_one_scan_and_the_dims_shuffle_no_file_idx(load):
+    """The six txn files are one XML scan, and the dims order by
+    (file_idx, pos), so only a plan that selects the dense `seq` pays its
+    per-file window."""
+    assert _plan(load.wh.txns).count("FileScan xml") == 1
+    for name in ("customers", "products", "salestxn"):
+        assert "hashpartitioning(file_idx" not in _plan(getattr(load.wh, name)), name
+
+
+def test_sorted_analytics_sort_in_one_partition(load):
+    """A sorted answer is dim-sized, so it sorts in one partition with no
+    range exchange. Its Coalesce sits above the aggregate's hash exchange,
+    so the partial aggregate keeps the scan's parallelism (a coalesce(1)
+    below the exchange would serialize the scan)."""
+    for df in (pp.quarterly_totals_2020(load.pwh.product_facts),
+               pp.rep_totals_2020(load.pwh.rep_facts),
+               pp.rep_quarterly_sales(load.pwh.rep_facts)):
+        plan = _plan(df)
+        assert "rangepartitioning" not in plan, plan
+        lines = plan.splitlines()
+        below = lines[next(i for i, line in enumerate(lines) if "Coalesce 1" in line) + 1:]
+        exchange = next(i for i, line in enumerate(below) if "Exchange" in line)
+        assert "Exchange hashpartitioning" in below[exchange], plan
+        assert any("partial_sum" in line for line in below[exchange + 1:]), plan
 
 
 def test_persist_replaces_a_table_directory_the_catalog_does_not_know(spark, load, tmp_path):
@@ -154,7 +210,7 @@ def test_persist_writes_the_dims_at_once_and_keeps_every_job_in_the_callers_grou
     """persist_warehouse writes its dependency DAG level by level; the
     three dims of level 1 are written at once, so at least two of their
     jobs overlap in time. The overlap moves no job out of the caller's
-    group (count_jobs fails on one that leaves it) and drops none: all 20
+    group (count_jobs fails on one that leaves it) and drops none: all 18
     still run."""
     level_done_ms = []
     concurrently = pp._concurrently
@@ -175,7 +231,7 @@ def test_persist_writes_the_dims_at_once_and_keeps_every_job_in_the_callers_grou
                 spark, load.wh, database=db, location=str(tmp_path / "wh")))
     finally:
         spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
-    assert n_jobs == 20
+    assert n_jobs == 18
     assert len(level_done_ms) == 2  # levels 1 and 3; level 2 is one write
     spans = [(j.submissionTime().get().getTime(), j.completionTime().get().getTime())
              for j in jobs_after(sc, last_id)]
@@ -253,3 +309,31 @@ def test_ordered_read_without_schema_infers_once_over_all_files(spark, tmp_path)
         (i, seq, name if i == 0 else None, None if i == 0 else name)
         for i in range(2) for seq, name in enumerate(names, start=1)
     ]
+
+
+def test_ordered_read_indexes_a_file_under_an_escaped_directory_name(spark, tmp_path):
+    """Spark writes `_metadata.file_path` URL-encoded; a file under a
+    directory whose name holds a space, `%20`, `#`, `+` and a non-ASCII
+    character still gets its own file_idx and seq 1..n. A file that is
+    none of the paths (here: read through its directory) raises in the
+    job instead of getting an index."""
+    odd = tmp_path / "a b%20c#d+é"
+    odd.mkdir()
+    paths = [_txn_file(tmp_path / "plain.xml", False), _txn_file(odd / "odd.xml", True),
+             _txn_file(tmp_path / "last.xml", False)]
+    rows = pp.load_txns_ordered(spark, paths).select("file_idx", "seq", "txn_id")
+    assert sorted(tuple(r) for r in rows.collect()) == [
+        (i, seq, r["id"]) for i in range(3) for seq, r in enumerate(_RECORDS, start=1)
+    ]
+    by_dir = read_xml_files_ordered(spark, [str(odd)], "txn", schema=pp.TXN_SCHEMA)
+    with pytest.raises(Exception, match="scanned a file not in its paths: .*odd.xml"):
+        by_dir.select("file_idx").collect()
+
+
+def test_ordered_read_refuses_a_path_listed_twice(spark, tmp_path):
+    """One scan reads a file listed twice twice, under one file_idx; the
+    reader refuses the list, in any spelling of the path."""
+    path = _txn_file(tmp_path / "twice.xml", False)
+    for again in (path, f"file:{path}"):
+        with pytest.raises(ValueError, match=re.escape(f"lists {again} twice")):
+            read_xml_files_ordered(spark, [path, again], "txn", schema=pp.TXN_SCHEMA)

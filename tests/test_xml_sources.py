@@ -179,7 +179,9 @@ def test_stream_xml_ordered_equals_batch(spark, tmp_path, xml_paths):
         "seq",
     )
 
-    cols = batch.columns
+    # every txn field and the order columns; `pos` is the batch scan's own key
+    cols = ["txn_id", "product_name", "rep_id_raw", "customer_name", "country",
+            "sale_date", "sale_amount", "file_idx", "seq"]
     b_rows = sorted(tuple(r) for r in batch.select(*cols).collect())
     s_rows = sorted(tuple(r) for r in streamed.select(*cols).collect())
     assert len(b_rows) == len(s_rows) > 0
@@ -203,24 +205,37 @@ def test_native_xml_scan_of_one_file_is_one_split(spark, tmp_path):
         df = xml_src.read_xml(spark, paths[0], "txn", pp.TXN_SCHEMA)
         assert df.rdd.getNumPartitions() == 1
         ordered = xml_src.read_xml_files_ordered(spark, paths, "txn", schema=pp.TXN_SCHEMA)
-        assert ordered.count() == 11_060
+        # `seq` reads the order, so every row passes the split guard
+        per_file = ordered.groupBy("file_idx").agg(F.count("*").alias("n"), F.max("seq").alias("m"))
+        rows = per_file.collect()
+    assert sum(r["n"] for r in rows) == 11_060
+    assert all(r["n"] == r["m"] for r in rows)
 
 
-def test_ordered_read_refuses_a_file_read_as_two_partitions(spark, truth, xml_paths, monkeypatch):
-    """Parity mode raises, naming the file, when one part of the ordered
-    union yields more than one partition."""
+def test_ordered_read_refuses_a_file_read_as_two_partitions(spark, xml_paths, monkeypatch):
+    """Parity mode raises, naming the file, in a job that reads the order
+    of a file scanned as more than one split. A text scan splits a file
+    every 64 KiB, so it stands in for a reader that splits."""
     _, txn_xmls = xml_paths
-    bad = txn_xmls[1]
-    native = xml_src.read_xml
+    split = [p for p in txn_xmls if os.path.getsize(p) > 65536]
+    assert split, "no txn file is larger than one split"
 
     def read_xml(spark, path, row_tag, schema=None):
-        df = native(spark, path, row_tag, schema)
-        return df.repartition(2) if path == bad else df
+        return spark.read.text(path)
 
     monkeypatch.setattr(xml_src, "read_xml", read_xml)
-    with pytest.raises(ValueError, match=re.escape(f"{bad} scanned as 2 splits")):
-        xml_src.read_xml_files_ordered(spark, txn_xmls, "txn", schema=pp.TXN_SCHEMA)
-    df = xml_src.read_xml_files_ordered(
-        spark, txn_xmls, "txn", require_single_split=False, schema=pp.TXN_SCHEMA
-    )
-    assert df.count() == truth.n_txns
+    n_lines = spark.read.text(txn_xmls).count()
+    with session_conf(spark, _SPLIT_EVERY_64K):
+        df = xml_src.read_xml_files_ordered(spark, txn_xmls, "txn", schema=pp.TXN_SCHEMA)
+        named = "|".join(re.escape(f"{os.path.basename(p)} was split") for p in split)
+        for order in ("seq", "pos"):
+            with pytest.raises(Exception, match=named):
+                df.select("file_idx", order).collect()
+        df = xml_src.read_xml_files_ordered(
+            spark, txn_xmls, "txn", require_single_split=False, schema=pp.TXN_SCHEMA
+        )
+        rows = df.select("file_idx", "seq").collect()
+    assert len(rows) == n_lines
+    for i in range(len(txn_xmls)):
+        seqs = sorted(r["seq"] for r in rows if r["file_idx"] == i)
+        assert seqs == list(range(1, len(seqs) + 1))
